@@ -18,6 +18,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from docling_spark.operators.batch import map_docs, url_hash
+
 CHUNK_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -45,64 +47,44 @@ def chunk_pages(
     router (operators/convert.route_to_doc) instead of assuming HTML —
     one chunking job over a mixed html/pdf/office/xml crawl, the shape
     an embedding/training pipeline actually feeds."""
-    import pandas as pd
 
-    sel = df.select("url", content_col)
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    sel = sel.repartition(num_partitions, F.xxhash64("url"))
-
-    def run(batches):
-        import sys
-
+    def per_doc(url, payload):
         from docling_spark.kernels.chunker import (
             contextualize,
             hierarchical_chunks,
             hybrid_chunks,
         )
         from docling_spark.kernels.html_kernel import HtmlExtractor
-
-        if sys.getrecursionlimit() < 20000:
-            sys.setrecursionlimit(20000)
         from docling_spark.operators.convert import route_to_doc
 
-        for pdf in batches:
-            rows = []
-            for url, payload in zip(pdf["url"], pdf[content_col]):
-                try:
-                    raw = bytes(payload) if payload is not None else b""
-                    if router:
-                        _row, doc = route_to_doc(url, raw)
-                    else:
-                        doc = HtmlExtractor(original_url=url).convert(raw)
-                    chunks = (
-                        (
-                            hybrid_chunks(doc, max_tokens=max_tokens)
-                            if mode == "hybrid"
-                            else hierarchical_chunks(doc)
-                        )
-                        if doc is not None
-                        else []
-                    )
-                except Exception:  # noqa: BLE001 — bad doc -> no chunks
-                    chunks = []
-                for i, ch in enumerate(chunks):
-                    rows.append(
-                        {
-                            "url": url,
-                            "chunk_id": i,
-                            "kind": ch.kind,
-                            "headings": ch.headings,
-                            "text": ch.text,
-                            "context_text": contextualize(ch),
-                            "n_tokens": len(ch.text.split()),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields])
+        try:
+            raw = payload or b""
+            if router:
+                _row, doc = route_to_doc(url, raw)
+            else:
+                doc = HtmlExtractor(original_url=url).convert(raw)
+            if doc is None:
+                return []
+            if mode == "hybrid":
+                chunks = hybrid_chunks(doc, max_tokens=max_tokens)
+            else:
+                chunks = hierarchical_chunks(doc)
+        except Exception:  # noqa: BLE001 — bad doc -> no chunks
+            return []
+        return [
+            {
+                "url": url,
+                "chunk_id": i,
+                "kind": ch.kind,
+                "headings": ch.headings,
+                "text": ch.text,
+                "context_text": contextualize(ch),
+                "n_tokens": len(ch.text.split()),
+            }
+            for i, ch in enumerate(chunks)
+        ]
 
-    return sel.mapInPandas(run, CHUNK_SCHEMA)
+    return map_docs(url_hash(df, ["url", content_col], num_partitions), per_doc, CHUNK_SCHEMA)
 
 
 def chunk_stats(chunks: DataFrame) -> DataFrame:

@@ -16,7 +16,6 @@ never single-format.
 
 from __future__ import annotations
 
-import sys
 import time
 
 from pyspark.sql import DataFrame, functions as F
@@ -29,6 +28,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from docling_spark.operators.batch import error_text, map_docs, raise_recursion_limit, url_hash
 from docling_spark.operators.formats import sniff_format
 
 CONVERT_SCHEMA = StructType(
@@ -48,8 +48,6 @@ CONVERT_SCHEMA = StructType(
         StructField("t_sec", DoubleType()),
     ]
 )
-
-_KERNEL_RECURSION_LIMIT = 20000
 
 # URL-extension hints for text-family formats the byte sniffer cannot
 # tell apart (a .md file with inline HTML sniffs as html; quoted CSVs
@@ -77,6 +75,20 @@ def _ext_of(url: str) -> str:
     dot = path.rfind(".")
     slash = path.rfind("/")
     return path[dot:].lower() if dot > slash else ""
+
+
+def _ended(base: dict, status: str, error: str, t0: float, **fields) -> dict:
+    """A complete result row for a document that yields no Doc."""
+    return {
+        **base,
+        **fields,
+        "status": status,
+        "error": error,
+        "md": None,
+        "txt": None,
+        "n_nodes": 0,
+        "t_sec": time.perf_counter() - t0,
+    }
 
 
 def route_to_doc(url: str, payload: bytes) -> tuple[dict, "object | None"]:
@@ -113,8 +125,7 @@ def route_to_doc(url: str, payload: bytes) -> tuple[dict, "object | None"]:
         "ocr_needed": None,
     }
     try:
-        if sys.getrecursionlimit() < _KERNEL_RECURSION_LIMIT:
-            sys.setrecursionlimit(_KERNEL_RECURSION_LIMIT)
+        raise_recursion_limit()
         if fmt == "html":
             doc = HtmlExtractor(original_url=url).convert(payload)
         elif fmt in ("xml", "xml_jats"):
@@ -142,16 +153,8 @@ def route_to_doc(url: str, payload: bytes) -> tuple[dict, "object | None"]:
                 doc, _scores = build_doc(pages, name=url)
                 base["ocr_needed"] = max(bitmap_coverage(p) for p in pages)
             except MetsError as me:
-                return {
-                    **base,
-                    "fmt": "gzip",
-                    "status": "skipped",
-                    "error": f"gzip is not a METS/GBS archive: {me}",
-                    "md": None,
-                    "txt": None,
-                    "n_nodes": 0,
-                    "t_sec": time.perf_counter() - t0,
-                }, None
+                msg = f"gzip is not a METS/GBS archive: {me}"
+                return _ended(base, "skipped", msg, t0, fmt="gzip"), None
         elif fmt == "pdf":
             from docling_spark.kernels.pdf_kernel import bitmap_coverage
 
@@ -178,15 +181,8 @@ def route_to_doc(url: str, payload: bytes) -> tuple[dict, "object | None"]:
             elif sub == "pptx":
                 doc = parse_pptx(payload, name=url)
             else:
-                return {
-                    **base,
-                    "status": "skipped",
-                    "error": f"unsupported office container: {sub}",
-                    "md": None,
-                    "txt": None,
-                    "n_nodes": 0,
-                    "t_sec": time.perf_counter() - t0,
-                }, None
+                msg = f"unsupported office container: {sub}"
+                return _ended(base, "skipped", msg, t0), None
         elif fmt == "csv":
             doc = parse_csv(payload, name=url)
         elif fmt == "json_docling":
@@ -210,15 +206,7 @@ def route_to_doc(url: str, payload: bytes) -> tuple[dict, "object | None"]:
 
             meta = parse_wav_header(payload) or parse_mp3_header(payload)
             if meta is None:
-                return {
-                    **base,
-                    "status": "failure",
-                    "error": "unparseable audio container",
-                    "md": None,
-                    "txt": None,
-                    "n_nodes": 0,
-                    "t_sec": time.perf_counter() - t0,
-                }, None
+                return _ended(base, "failure", "unparseable audio container", t0), None
             from docling_spark.kernels.doc_model import Doc
 
             doc = Doc(url)
@@ -235,27 +223,11 @@ def route_to_doc(url: str, payload: bytes) -> tuple[dict, "object | None"]:
             else:
                 doc = parse_markdown(payload, name=url)
         else:
-            return {
-                **base,
-                "status": "skipped",
-                "error": f"unsupported format: {fmt}",
-                "md": None,
-                "txt": None,
-                "n_nodes": 0,
-                "t_sec": time.perf_counter() - t0,
-            }, None
+            return _ended(base, "skipped", f"unsupported format: {fmt}", t0), None
         base["t_sec"] = time.perf_counter() - t0
         return base, doc
     except Exception as e:  # noqa: BLE001 — errors become data
-        return {
-            **base,
-            "status": "failure",
-            "error": f"{type(e).__name__}: {e}"[:500],
-            "md": None,
-            "txt": None,
-            "n_nodes": 0,
-            "t_sec": time.perf_counter() - t0,
-        }, None
+        return _ended(base, "failure", error_text(e), t0), None
 
 
 def convert_one(
@@ -303,15 +275,7 @@ def convert_one(
             "t_sec": time.perf_counter() - t0,
         }
     except Exception as e:  # noqa: BLE001 — errors become data
-        return {
-            **base,
-            "status": "failure",
-            "error": f"{type(e).__name__}: {e}"[:500],
-            "md": None,
-            "txt": None,
-            "n_nodes": 0,
-            "t_sec": time.perf_counter() - t0,
-        }
+        return _ended(base, "failure", error_text(e), t0)
 
 
 def convert_any(
@@ -322,29 +286,11 @@ def convert_any(
     want_json: bool = False,
 ) -> DataFrame:
     """(url, <content binary>) of ANY supported format -> results."""
-    import pandas as pd
 
-    sel = df.select("url", content_col)
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    sel = sel.repartition(num_partitions, F.xxhash64("url"))
+    def per_doc(url, payload):
+        return [convert_one(url, payload, want_doctags=want_doctags, want_json=want_json)]
 
-    def run(batches):
-        for pdf in batches:
-            rows = [
-                convert_one(
-                    u,
-                    bytes(p) if p is not None else b"",
-                    want_doctags=want_doctags,
-                    want_json=want_json,
-                )
-                for u, p in zip(pdf["url"], pdf[content_col])
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in CONVERT_SCHEMA.fields])
-
-    return sel.mapInPandas(run, CONVERT_SCHEMA)
+    return map_docs(url_hash(df, ["url", content_col], num_partitions), per_doc, CONVERT_SCHEMA)
 
 
 def conversion_rollup(results: DataFrame) -> DataFrame:

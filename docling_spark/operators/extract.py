@@ -6,28 +6,17 @@ and the threaded PDF stage pipeline, threaded_standard_pdf_pipeline.py)
 with Spark partition parallelism: one Arrow-batched ``mapInPandas``
 running the pure extraction kernel per document.
 
-Scale design (the part docling does not have):
+Scale design (the part docling does not have): url-hash partitioning,
+errors as data and metrics as data come from the shared batch driver
+(docling_spark.operators.batch); on top of it:
 
-* **partitioning** — explicit ``repartition(P, xxhash64(url))`` spreads
-  hot hosts and decorrelates neighboring crawl records; P defaults to
-  ``spark.sql.shuffle.partitions``;
 * **skew** — oversized documents (html length above a threshold) are
   optionally split off and processed at higher parallelism so one 5 MB
   page does not straggle a 10k-row task (AQE handles residual skew);
-* **errors as data** — per-document failures (recursion bombs, garbage
-  bytes) become ``status='failure'`` rows with the error message, never
-  task failures (reference semantics: raises_on_error=False,
-  document_converter.py:264-279);
-* **metrics as data** — per-doc wall time and byte counts are ordinary
-  columns, aggregated into a metrics table downstream
-  (reference: utils/profiling.py TimeRecorder);
 * **lineage / resume** — see docling_spark.operators.lineage.
 """
 
 from __future__ import annotations
-
-import sys
-import time
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -40,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from docling_spark.operators.batch import guarded, map_docs, partitions, url_hash
 
 RESULT_SCHEMA = StructType(
     [
@@ -69,59 +60,36 @@ RESULT_SCHEMA = StructType(
     ]
 )
 
-_KERNEL_RECURSION_LIMIT = 20000
+_FAILURE = {"md": None, "txt": None, "n_nodes": 0, "n_spans": 0, "spans": []}
 
 
-def extract_one(url, html: bytes) -> dict:
-    """Convert one document; never raises."""
+def _extract_kernel(url, html: bytes) -> dict:
     # lazy imports keep executor-side pickling cheap
     from docling_spark.kernels.html_kernel import HtmlExtractor
     from docling_spark.kernels.markdown import to_markdown
     from docling_spark.kernels.textout import text_spans, to_text
 
-    t0 = time.perf_counter()
-    n_bytes = len(html) if html is not None else 0
-    try:
-        if sys.getrecursionlimit() < _KERNEL_RECURSION_LIMIT:
-            sys.setrecursionlimit(_KERNEL_RECURSION_LIMIT)
-        doc = HtmlExtractor(original_url=url).convert(html or b"")
-        md = to_markdown(doc)
-        txt = to_text(doc)
-        spans = text_spans(doc)
-        return {
-            "status": "success",
-            "error": None,
-            "md": md,
-            "txt": txt,
-            "n_nodes": len(doc.nodes),
-            "n_spans": len(spans),
-            "spans": spans,
-            "bytes_in": n_bytes,
-            "t_sec": time.perf_counter() - t0,
-        }
-    except Exception as e:  # noqa: BLE001 — errors become data
-        return {
-            "status": "failure",
-            "error": f"{type(e).__name__}: {e}"[:500],
-            "md": None,
-            "txt": None,
-            "n_nodes": 0,
-            "n_spans": 0,
-            "spans": [],
-            "bytes_in": n_bytes,
-            "t_sec": time.perf_counter() - t0,
-        }
+    doc = HtmlExtractor(original_url=url).convert(html or b"")
+    spans = text_spans(doc)
+    return {
+        "status": "success",
+        "error": None,
+        "md": to_markdown(doc),
+        "txt": to_text(doc),
+        "n_nodes": len(doc.nodes),
+        "n_spans": len(spans),
+        "spans": spans,
+        "bytes_in": len(html) if html is not None else 0,
+    }
 
 
-def _extract_batches(batches):
-    import pandas as pd
+def extract_one(url, html: bytes) -> dict:
+    """Convert one document; never raises."""
+    return guarded(_extract_kernel, _FAILURE, url, html)
 
-    for pdf in batches:
-        rows = [extract_one(u, h) for u, h in zip(pdf["url"], pdf["html"])]
-        out = pd.DataFrame(rows)
-        out.insert(0, "url", pdf["url"].values)
-        out.insert(1, "warc_ts", pdf["warc_ts"].values)
-        yield out
+
+def _extract_row(url, warc_ts, html) -> list[dict]:
+    return [{**extract_one(url, html), "url": url, "warc_ts": warc_ts}]
 
 
 def extract_pages(
@@ -135,27 +103,23 @@ def extract_pages(
     Column pruning keeps the scan narrow (only url/warc_ts/html are
     read); the repartition by url-hash is the single shuffle.
     """
-    pages = df.select("url", "warc_ts", "html")
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    if split_big_docs:
-        # route oversized docs to their own round-robin-spread tasks so
-        # they cannot straggle a dense url-hash partition: the big side
-        # gets num_partitions extra (mostly tiny) tasks, each owning at
-        # most ceil(n_big / num_partitions) documents. The two branches
-        # re-scan the source; at crawl scale put a size bucket in the
-        # table layout (e.g. Iceberg hidden partitioning on
-        # bucket(length)) so both filters partition-prune instead.
-        is_big = F.length("html") >= big_doc_bytes
-        small = pages.filter(~is_big).repartition(num_partitions, F.xxhash64("url"))
-        big = pages.filter(is_big).repartition(num_partitions)
-        out_small = small.mapInPandas(_extract_batches, RESULT_SCHEMA)
-        out_big = big.mapInPandas(_extract_batches, RESULT_SCHEMA)
-        return out_small.unionByName(out_big)
-    pages = pages.repartition(num_partitions, F.xxhash64("url"))
-    return pages.mapInPandas(_extract_batches, RESULT_SCHEMA)
+    cols = ["url", "warc_ts", "html"]
+    if not split_big_docs:
+        return map_docs(url_hash(df, cols, num_partitions), _extract_row, RESULT_SCHEMA)
+    # route oversized docs to their own round-robin-spread tasks so
+    # they cannot straggle a dense url-hash partition: the big side
+    # gets num_partitions extra (mostly tiny) tasks, each owning at
+    # most ceil(n_big / num_partitions) documents. The two branches
+    # re-scan the source; at crawl scale put a size bucket in the
+    # table layout (e.g. Iceberg hidden partitioning on
+    # bucket(length)) so both filters partition-prune instead.
+    n = partitions(df, num_partitions)
+    is_big = F.length("html") >= big_doc_bytes
+    small = url_hash(df.filter(~is_big), cols, n)
+    big = df.filter(is_big).select(*cols).repartition(n)
+    return map_docs(small, _extract_row, RESULT_SCHEMA).unionByName(
+        map_docs(big, _extract_row, RESULT_SCHEMA)
+    )
 
 
 def status_rollup(results: DataFrame) -> DataFrame:

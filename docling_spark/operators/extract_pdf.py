@@ -25,8 +25,6 @@ Spark SQL over the per-page scores: avg + 10th-percentile.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -39,6 +37,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from docling_spark.operators.batch import guarded, map_docs, url_hash
 
 _BLOCK_FIELDS = [
     StructField("kind", StringType()),
@@ -102,65 +102,49 @@ def _doc_score(page_scores: list[float]) -> float:
 # ------------------------------------------------------- strategy A
 
 
-def extract_one_pdf(url: str, content: bytes) -> dict:
+_DOC_FAILURE = {"n_pages": 0, "md": None, "txt": None, "n_nodes": 0, "parse_score": None}
+
+
+def _pdf_doc(url: str, content: bytes) -> dict:
     from docling_spark.kernels.markdown import to_markdown
     from docling_spark.kernels.pdf_kernel import parse_pdf
     from docling_spark.kernels.pdf_layout import build_doc
     from docling_spark.kernels.textout import to_text
 
-    t0 = time.perf_counter()
-    n_bytes = len(content) if content is not None else 0
-    try:
-        pages = parse_pdf(content or b"")
-        doc, page_scores = build_doc(pages, name=url or "doc")
-        return {
-            "status": "success",
-            "error": None,
-            "n_pages": len(pages),
-            "md": to_markdown(doc),
-            "txt": to_text(doc),
-            "n_nodes": len(doc.nodes),
-            "parse_score": _doc_score(page_scores),
-            "bytes_in": n_bytes,
-            "t_sec": time.perf_counter() - t0,
-        }
-    except Exception as e:  # noqa: BLE001 — errors become data
-        return {
-            "status": "failure",
-            "error": f"{type(e).__name__}: {e}"[:500],
-            "n_pages": 0,
-            "md": None,
-            "txt": None,
-            "n_nodes": 0,
-            "parse_score": None,
-            "bytes_in": n_bytes,
-            "t_sec": time.perf_counter() - t0,
-        }
+    pages = parse_pdf(content or b"")
+    doc, page_scores = build_doc(pages, name=url or "doc")
+    return {
+        "status": "success",
+        "error": None,
+        "n_pages": len(pages),
+        "md": to_markdown(doc),
+        "txt": to_text(doc),
+        "n_nodes": len(doc.nodes),
+        "parse_score": _doc_score(page_scores),
+        "bytes_in": len(content) if content is not None else 0,
+    }
+
+
+def _pdf_doc_row(url, content) -> list[dict]:
+    return [{**guarded(_pdf_doc, _DOC_FAILURE, url, content), "url": url}]
 
 
 def extract_pdf_docs(
     df: DataFrame, content_col: str = "content", num_partitions: int | None = None
 ) -> DataFrame:
-    import pandas as pd
+    sel = url_hash(df, ["url", content_col], num_partitions)
+    return map_docs(sel, _pdf_doc_row, PDF_DOC_SCHEMA)
 
-    pages = df.select("url", content_col)
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    pages = pages.repartition(num_partitions, F.xxhash64("url"))
 
-    def run(batches):
-        for pdf in batches:
-            rows = [
-                extract_one_pdf(u, c)
-                for u, c in zip(pdf["url"], pdf[content_col])
-            ]
-            out = pd.DataFrame(rows)
-            out.insert(0, "url", pdf["url"].values)
-            yield out
+def _per_page(kernel, failure: dict):
+    """per_doc for kernels that emit one row per page: a failure is
+    one page_no=0 row, so every url keeps a status row."""
 
-    return pages.mapInPandas(run, PDF_DOC_SCHEMA)
+    def per_doc(url, content):
+        rows = guarded(kernel, failure, url, content)
+        return rows if isinstance(rows, list) else [{**rows, "url": url}]
+
+    return per_doc
 
 
 # ------------------------------------------------------- strategy B
@@ -172,71 +156,56 @@ def parse_pdf_page_rows(df: DataFrame, content_col: str = "content") -> DataFram
     Parse failures emit a single page_no=0 failure row per doc so the
     downstream regroup still produces a status row for every url.
     """
-    import pandas as pd
+    failure = {
+        "page_no": 0,
+        "width": 0.0,
+        "height": 0.0,
+        "n_cells": 0,
+        "parse_score": None,
+        "blocks": [],
+    }
+    per_doc = _per_page(_page_rows, failure)
+    return map_docs(df.select("url", content_col), per_doc, PDF_PAGE_SCHEMA)
 
+
+def _page_rows(url: str, content: bytes) -> list[dict]:
     from docling_spark.kernels.pdf_kernel import parse_pdf
-    from docling_spark.kernels.pdf_layout import (
-        page_blocks,
-        page_parse_score,
-        table_to_json as _table_to_json,
-    )
+    from docling_spark.kernels.pdf_layout import page_blocks, page_parse_score, table_to_json
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for url, content in zip(pdf["url"], pdf[content_col]):
-                try:
-                    for page in parse_pdf(bytes(content) if content is not None else b""):
-                        blocks = page_blocks(page)
-                        rows.append(
-                            {
-                                "url": url,
-                                "status": "success",
-                                "error": None,
-                                "page_no": page.page_no,
-                                "width": page.width,
-                                "height": page.height,
-                                "n_cells": len(page.cells),
-                                "parse_score": page_parse_score(
-                                    [c.text for c in page.cells]
-                                )
-                                if page.cells
-                                else None,
-                                "blocks": [
-                                    (
-                                        b.kind,
-                                        b.text,
-                                        b.level,
-                                        b.page_no,
-                                        b.l,
-                                        b.t,
-                                        b.r,
-                                        b.b,
-                                        b.size,
-                                        _table_to_json(b.table),
-                                        b.bold,
-                                    )
-                                    for b in blocks
-                                ],
-                            }
-                        )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "url": url,
-                            "status": "failure",
-                            "error": f"{type(e).__name__}: {e}"[:500],
-                            "page_no": 0,
-                            "width": 0.0,
-                            "height": 0.0,
-                            "n_cells": 0,
-                            "parse_score": None,
-                            "blocks": [],
-                        }
+    rows = []
+    for page in parse_pdf(content or b""):
+        blocks = page_blocks(page)
+        rows.append(
+            {
+                "url": url,
+                "status": "success",
+                "error": None,
+                "page_no": page.page_no,
+                "width": page.width,
+                "height": page.height,
+                "n_cells": len(page.cells),
+                "parse_score": page_parse_score([c.text for c in page.cells])
+                if page.cells
+                else None,
+                "blocks": [
+                    (
+                        b.kind,
+                        b.text,
+                        b.level,
+                        b.page_no,
+                        b.l,
+                        b.t,
+                        b.r,
+                        b.b,
+                        b.size,
+                        table_to_json(b.table),
+                        b.bold,
                     )
-            yield pd.DataFrame(rows, columns=[f.name for f in PDF_PAGE_SCHEMA.fields])
-
-    return df.select("url", content_col).mapInPandas(run, PDF_PAGE_SCHEMA)
+                    for b in blocks
+                ],
+            }
+        )
+    return rows
 
 
 ASSEMBLED_SCHEMA = StructType(
@@ -256,86 +225,62 @@ def assemble_from_pages(page_rows: DataFrame) -> DataFrame:
     """The one wide dependency of the PDF path: regroup pages per url
     (reference page-concat, standard_pdf_pipeline.py:183-201), then a
     per-doc kernel does classification + reading order + serialize."""
-    import pandas as pd
-
     grouped = page_rows.groupBy("url").agg(
         F.array_sort(
             F.collect_list(F.struct("page_no", "height", "blocks", "parse_score", "status"))
         ).alias("pages"),
     )
+    return map_docs(grouped, _assembled_row, ASSEMBLED_SCHEMA)
 
-    def run(batches):
-        from docling_spark.kernels.markdown import to_markdown
-        from docling_spark.kernels.pdf_layout import (
-            Block,
-            assemble_doc,
-            mark_page_furniture,
-            merge_continuations,
-            table_from_json,
+
+def _assemble(url: str, pages) -> dict:
+    from docling_spark.kernels.markdown import to_markdown
+    from docling_spark.kernels.pdf_layout import (
+        Block,
+        assemble_doc,
+        mark_page_furniture,
+        merge_continuations,
+        table_from_json,
+    )
+    from docling_spark.kernels.textout import to_text
+
+    statuses = {p["status"] for p in pages}
+    if statuses == {"failure"}:
+        return {**_DOC_FAILURE, "status": "failure"}
+    blocks = [
+        Block(
+            kind=b["kind"],
+            text=b["text"],
+            level=b["level"],
+            page_no=b["page_no"],
+            l=b["l"],
+            t=b["t"],
+            r=b["r"],
+            b=b["b"],
+            size=b["size"],
+            table=table_from_json(b["table_json"]),
+            bold=bool(b["bold"]),
         )
-        from docling_spark.kernels.textout import to_text
+        for p in pages
+        for b in p["blocks"]
+    ]
+    page_heights = {p["page_no"]: p["height"] for p in pages if p["height"]}
+    mark_page_furniture(blocks, page_heights)
+    blocks = merge_continuations(blocks)
+    doc = assemble_doc(blocks, name=url)
+    scores = [p["parse_score"] for p in pages if p["parse_score"] is not None]
+    return {
+        "status": "partial_success" if "failure" in statuses else "success",
+        "n_pages": len(pages),
+        "md": to_markdown(doc),
+        "txt": to_text(doc),
+        "n_nodes": len(doc.nodes),
+        "parse_score": _doc_score(scores) if scores else None,
+    }
 
-        for pdf in batches:
-            rows = []
-            for url, pages in zip(pdf["url"], pdf["pages"]):
-                statuses = {p["status"] for p in pages}
-                if statuses == {"failure"}:
-                    rows.append(
-                        {
-                            "url": url,
-                            "status": "failure",
-                            "n_pages": 0,
-                            "md": None,
-                            "txt": None,
-                            "n_nodes": 0,
-                            "parse_score": None,
-                        }
-                    )
-                    continue
-                blocks = [
-                    Block(
-                        kind=b["kind"],
-                        text=b["text"],
-                        level=b["level"],
-                        page_no=b["page_no"],
-                        l=b["l"],
-                        t=b["t"],
-                        r=b["r"],
-                        b=b["b"],
-                        size=b["size"],
-                        table=table_from_json(b["table_json"]),
-                        bold=bool(b["bold"]),
-                    )
-                    for p in pages
-                    for b in p["blocks"]
-                ]
-                page_heights = {
-                    p["page_no"]: p["height"] for p in pages if p["height"]
-                }
-                mark_page_furniture(blocks, page_heights)
-                blocks = merge_continuations(blocks)
-                doc = assemble_doc(blocks, name=url)
-                scores = [
-                    p["parse_score"] for p in pages if p["parse_score"] is not None
-                ]
-                rows.append(
-                    {
-                        "url": url,
-                        "status": "partial_success"
-                        if "failure" in statuses
-                        else "success",
-                        "n_pages": len(pages),
-                        "md": to_markdown(doc),
-                        "txt": to_text(doc),
-                        "n_nodes": len(doc.nodes),
-                        "parse_score": _doc_score(scores) if scores else None,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ASSEMBLED_SCHEMA.fields]
-            )
 
-    return grouped.mapInPandas(run, ASSEMBLED_SCHEMA)
+def _assembled_row(url, pages) -> list[dict]:
+    return [{**guarded(_assemble, _DOC_FAILURE, url, pages), "url": url}]
 
 
 def extract_pdfs_paged(df: DataFrame, content_col: str = "content") -> DataFrame:
@@ -530,50 +475,26 @@ def multimodal_pages(
     page.image tuple member (utils/export.py:107). Off by default:
     image payloads multiply the shuffle/write volume, so only datasets
     that train on pixels should pay for them."""
-    import pandas as pd
-
     schema = MULTIMODAL_PAGE_SCHEMA
     if image_scale is not None:
         schema = StructType(schema.fields + MULTIMODAL_IMAGE_FIELDS.fields)
+    # one failure row per doc keeps drops visible to lineage/audit
+    failure = {
+        "page_no": 0,
+        "width": 0.0,
+        "height": 0.0,
+        "text": None,
+        "md": None,
+        "doctags": None,
+        "cells": [],
+        "segments": [],
+        "page_image": None,
+        "img_width": 0,
+        "img_height": 0,
+    }
 
-    sel = df.select("url", content_col)
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    sel = sel.repartition(num_partitions, F.xxhash64("url"))
+    def kernel(url, content):
+        return _multimodal_rows_for_doc(url, content, image_scale=image_scale)
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for url, content in zip(pdf["url"], pdf[content_col]):
-                try:
-                    rows.extend(
-                        _multimodal_rows_for_doc(
-                            url,
-                            bytes(content) if content is not None else b"",
-                            image_scale=image_scale,
-                        )
-                    )
-                except Exception as e:  # noqa: BLE001 — errors become data
-                    # one failure row per doc so drops stay visible to
-                    # lineage/audit (same contract as convert/extract)
-                    fail = {
-                        "url": url,
-                        "status": "failure",
-                        "error": f"{type(e).__name__}: {e}"[:500],
-                        "page_no": 0,
-                        "width": 0.0,
-                        "height": 0.0,
-                        "text": None,
-                        "md": None,
-                        "doctags": None,
-                        "cells": [],
-                        "segments": [],
-                    }
-                    if image_scale is not None:
-                        fail.update(page_image=None, img_width=0, img_height=0)
-                    rows.append(fail)
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return sel.mapInPandas(run, schema)
+    sel = url_hash(df, ["url", content_col], num_partitions)
+    return map_docs(sel, _per_page(kernel, failure), schema)

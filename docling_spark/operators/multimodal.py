@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from docling_spark.operators.batch import map_docs, url_hash
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -214,46 +216,35 @@ def extract_media_features(df: DataFrame) -> DataFrame:
     decode for real; everything else falls back to the stub with
     ``decoded = false``."""
 
-    def run(batches):
-        import pandas as pd
-
+    def per_doc(mid, kind, payload):
         from docling_spark.kernels.raster import decode_image
 
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                payload = bytes(payload)
-                decoded = False
-                try:
-                    w, h, ch, samples = decode_image(payload)
-                    feat = _grid_feature_np(w, h, ch, samples)
-                    decoded = True
-                except Exception:
-                    # defense in depth beyond decode_image's typed
-                    # RasterError contract: one malformed crawl image
-                    # must become a stub row, never a task kill
-                    w, h, feat = _decode_image_stub(payload)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "kind": kind,
-                        "n_bytes": len(payload),
-                        "width": w if kind == "image" else 0,
-                        "height": h if kind == "image" else 0,
-                        "n_frames": (1 if kind == "image" else 1 + int(w) % 16),
-                        "feature": feat,
-                        "sha1": hashlib.sha1(payload).hexdigest(),
-                        "decoded": decoded,
-                    }
-                )
-            yield pd.DataFrame(rows)
+        payload = bytes(payload)
+        decoded = False
+        try:
+            w, h, ch, samples = decode_image(payload)
+            feat = _grid_feature_np(w, h, ch, samples)
+            decoded = True
+        except Exception:
+            # defense in depth beyond decode_image's typed
+            # RasterError contract: one malformed crawl image
+            # must become a stub row, never a task kill
+            w, h, feat = _decode_image_stub(payload)
+        return [
+            {
+                "media_id": mid,
+                "kind": kind,
+                "n_bytes": len(payload),
+                "width": w if kind == "image" else 0,
+                "height": h if kind == "image" else 0,
+                "n_frames": (1 if kind == "image" else 1 + int(w) % 16),
+                "feature": feat,
+                "sha1": hashlib.sha1(payload).hexdigest(),
+                "decoded": decoded,
+            }
+        ]
 
-    return df.repartition(
-        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")),
-        F.xxhash64("media_id"),
-    ).mapInPandas(run, FEATURE_SCHEMA)
+    return map_docs(url_hash(df, ["media_id", "kind", "payload"]), per_doc, FEATURE_SCHEMA)
 
 
 def media_rollup(features: DataFrame) -> DataFrame:
@@ -327,28 +318,22 @@ def extract_audio_metadata(df: DataFrame, payload_col: str = "payload") -> DataF
     MPEG frame headers); other formats yield format='unknown' rows,
     never errors."""
 
-    def run(batches):
-        import pandas as pd
+    def per_doc(mid, payload):
+        payload = payload or b""
+        meta = parse_wav_header(payload) or parse_mp3_header(payload)
+        return [
+            {
+                "media_id": mid,
+                "format": meta["format"] if meta else "unknown",
+                "sample_rate": meta["sample_rate"] if meta else 0,
+                "channels": meta["channels"] if meta else 0,
+                "bits_per_sample": meta["bits_per_sample"] if meta else 0,
+                "duration_sec": meta["duration_sec"] if meta else 0.0,
+                "n_bytes": len(payload),
+            }
+        ]
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                meta = parse_wav_header(payload) or parse_mp3_header(payload)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "format": meta["format"] if meta else "unknown",
-                        "sample_rate": meta["sample_rate"] if meta else 0,
-                        "channels": meta["channels"] if meta else 0,
-                        "bits_per_sample": meta["bits_per_sample"] if meta else 0,
-                        "duration_sec": meta["duration_sec"] if meta else 0.0,
-                        "n_bytes": len(payload),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_META_SCHEMA.fields])
-
-    return df.select("media_id", payload_col).mapInPandas(run, AUDIO_META_SCHEMA)
+    return map_docs(df.select("media_id", payload_col), per_doc, AUDIO_META_SCHEMA)
 
 
 _MP3_BITRATES_V1L3 = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320]

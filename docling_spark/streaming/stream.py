@@ -45,12 +45,18 @@ def read_pages_stream(
     return reader.parquet(input_dir)
 
 
-def extract_stream(pages_stream, num_partitions: int = 8):
-    """Same kernel, streaming plan. The url-hash repartition is a
-    stateless shuffle and is legal inside a streaming query."""
-    from docling_spark.operators.extract import extract_pages
-
-    return extract_pages(pages_stream, num_partitions=num_partitions)
+def _drain(df, out: str, ckpt: str, timeout: int) -> bool:
+    """Append ``df`` to a parquet sink: drain every currently available
+    input, checkpointed, then stop."""
+    query = (
+        df.writeStream.format("parquet")
+        .outputMode("append")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    return query.awaitTermination(timeout)
 
 
 def run_available_now(
@@ -63,28 +69,14 @@ def run_available_now(
 ) -> bool:
     """Drain all currently-available input files, then stop. Re-running
     with the same checkpoint processes only files added since the last
-    run (streaming resume semantics)."""
+    run (streaming resume semantics). The extraction operator runs
+    unchanged on the streaming frame: its url-hash repartition is a
+    stateless shuffle and is legal inside a streaming query."""
+    from docling_spark.operators.extract import extract_pages
+
     pages = read_pages_stream(spark, input_dir)
-    results = extract_stream(pages, num_partitions=num_partitions)
-    query = (
-        results.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return query.awaitTermination(timeout_sec)
-
-
-def convert_stream(pages_stream, num_partitions: int = 8):
-    """Streaming twin of operators.convert.convert_any: the unified
-    multi-format router (S4) under Structured Streaming — an
-    incremental crawl drop of mixed html/pdf/office/... bytes converts
-    exactly like the batch path (same kernels, same errors-as-data
-    rows), with checkpointed exactly-once file progress."""
-    from docling_spark.operators.convert import convert_any
-
-    return convert_any(pages_stream, num_partitions=num_partitions)
+    results = extract_pages(pages, num_partitions=num_partitions)
+    return _drain(results, output_dir, checkpoint_dir, timeout_sec)
 
 
 def run_convert_available_now(
@@ -95,17 +87,14 @@ def run_convert_available_now(
     num_partitions: int = 8,
     timeout_sec: int = 300,
 ) -> bool:
-    """Drain-and-stop multi-format conversion with streaming resume."""
+    """Drain-and-stop multi-format conversion with streaming resume: an
+    incremental crawl drop of mixed html/pdf/office/... bytes converts
+    exactly like the batch path (operators.convert.convert_any)."""
+    from docling_spark.operators.convert import convert_any
+
     pages = read_pages_stream(spark, input_dir)
-    results = convert_stream(pages, num_partitions=num_partitions)
-    query = (
-        results.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return query.awaitTermination(timeout_sec)
+    results = convert_any(pages, num_partitions=num_partitions)
+    return _drain(results, output_dir, checkpoint_dir, timeout_sec)
 
 
 # ------------------------------------------- windowed event-time rollup
@@ -156,15 +145,7 @@ def run_windowed_stream(
         ).parquet(input_dir)
     )
     agg = windowed_event_rollup(events, window=window, watermark=watermark)
-    query = (
-        agg.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return query.awaitTermination(timeout_sec)
+    return _drain(agg, output_dir, checkpoint_dir, timeout_sec)
 
 
 # ----------------------------- stateful cross-batch dedup (GroupState)
@@ -227,13 +208,4 @@ def run_dedup_stream(
     timeout_sec: int = 300,
 ) -> bool:
     pages = read_pages_stream(spark, input_dir)
-    deduped = dedup_stream(pages)
-    query = (
-        deduped.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return query.awaitTermination(timeout_sec)
+    return _drain(dedup_stream(pages), output_dir, checkpoint_dir, timeout_sec)

@@ -74,7 +74,7 @@ def run(spark, args) -> dict:
 
     from docling_spark.operators.extract import extract_pages, metrics_table
     from docling_spark.operators.formats import limits_gate
-    from docling_spark.operators.lineage import resume_filter, write_lineage
+    from docling_spark.operators.lineage import lineage_rows, resume_filter, write_lineage
 
     if args.format == "iceberg":
         pages = spark.read.format("iceberg").load(args.input)
@@ -130,12 +130,8 @@ def run(spark, args) -> dict:
     # already-recorded ones so repeated attempts do not grow the table
     n_skipped = skipped.count()
     if n_skipped:
-        skipped_lineage = skipped.select(
-            "url",
-            F.spark_partition_id().alias("partition_id"),
-            F.lit(args.attempt).alias("attempt"),
-            F.lit("skipped").alias("status"),
-            F.current_timestamp().alias("batch_ts"),
+        skipped_lineage = lineage_rows(
+            skipped.select("url", F.lit("skipped").alias("status")), args.attempt
         )
         try:
             already = (

@@ -209,7 +209,7 @@ def _our_events(raw: bytes):
     return events
 
 
-@pytest.mark.parametrize("fixture", FIXTURES, ids=lambda p: p.stem)
+@pytest.mark.parametrize("fixture", FIXTURES, ids=[p.stem for p in FIXTURES])
 def test_live_golden_reference_backend_parity(fixture):
     """Exact node-sequence parity with the reference backend, executed
     live from its own source tree on its own fixtures."""

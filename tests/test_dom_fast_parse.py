@@ -50,7 +50,7 @@ def _assert_same(raw):
     assert _outcome(_fast_tree, raw) == _outcome(parse_html_stdlib, raw)
 
 
-@pytest.mark.parametrize("fixture", REF_HTML, ids=lambda p: p.stem)
+@pytest.mark.parametrize("fixture", REF_HTML, ids=[p.stem for p in REF_HTML])
 def test_reference_fixtures_identical(fixture):
     _assert_same(fixture.read_bytes())
 

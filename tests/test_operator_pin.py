@@ -66,10 +66,11 @@ def _html_pages() -> list[tuple[str, bytes]]:
 def _pdfs() -> list[tuple[str, bytes]]:
     from docling_spark.sources.pdfgen import render_doc_pdf, render_doc_pdf_modern
 
-    docs = [(f"https://pdf.example.com/classic/{i}.pdf", render_doc_pdf(i, _text(i))) for i in range(1, 4)]
-    docs.append(("https://pdf.example.com/plain/4.pdf", render_doc_pdf(4, _text(4), compress=False)))
+    url = "https://pdf.example.com/{}/{}.pdf".format
+    docs = [(url("classic", i), render_doc_pdf(i, _text(i))) for i in range(1, 4)]
+    docs.append((url("plain", 4), render_doc_pdf(4, _text(4), compress=False)))
     docs += [
-        (f"https://pdf.example.com/modern/{i}.pdf", render_doc_pdf_modern(i, _text(i), cid=i % 2 == 1))
+        (url("modern", i), render_doc_pdf_modern(i, _text(i), cid=i % 2 == 1))
         for i in range(5, 8)
     ]
     return docs
