@@ -70,12 +70,14 @@ def _extract_kernel(url, html: bytes) -> dict:
     from docling_spark.kernels.textout import text_spans, to_text
 
     doc = HtmlExtractor(original_url=url).convert(html or b"")
+    md = to_markdown(doc)
+    txt = to_text(doc)
     spans = text_spans(doc)
     return {
         "status": "success",
         "error": None,
-        "md": to_markdown(doc),
-        "txt": to_text(doc),
+        "md": md,
+        "txt": txt,
         "n_nodes": len(doc.nodes),
         "n_spans": len(spans),
         "spans": spans,

@@ -478,7 +478,8 @@ def multimodal_pages(
     schema = MULTIMODAL_PAGE_SCHEMA
     if image_scale is not None:
         schema = StructType(schema.fields + MULTIMODAL_IMAGE_FIELDS.fields)
-    # one failure row per doc keeps drops visible to lineage/audit
+    # one failure row per doc keeps drops visible to lineage/audit;
+    # the image fields fall away when the schema has none
     failure = {
         "page_no": 0,
         "width": 0.0,
