@@ -74,10 +74,16 @@ def url_hash(df: DataFrame, cols: list[str], n: int | None = None) -> DataFrame:
     return df.select(*cols).repartition(partitions(df, n), F.xxhash64(cols[0]))
 
 
-def map_docs(df: DataFrame, per_doc, schema: StructType) -> DataFrame:
+def map_docs(
+    df: DataFrame, per_doc, schema: StructType, carry: tuple[str, ...] = ()
+) -> DataFrame:
     """The Arrow batch loop: every input row becomes
-    ``per_doc(*row) -> list[dict]``, framed in ``schema`` order."""
-    cols = df.columns
+    ``per_doc(*row) -> list[dict]``, framed in ``schema`` order.
+
+    Columns named in ``carry`` pass through column-wise instead of being
+    boxed per row: ``per_doc`` does not see them, and must then return
+    exactly one row per input row."""
+    cols = [c for c in df.columns if c not in carry]
     names = schema.fieldNames()
 
     def run(batches):
@@ -88,6 +94,9 @@ def map_docs(df: DataFrame, per_doc, schema: StructType) -> DataFrame:
             rows = []
             for row in zip(*(pdf[c] for c in cols)):
                 rows.extend(per_doc(*row))
-            yield pd.DataFrame(rows, columns=names)
+            out = pd.DataFrame(rows, columns=names)
+            for c in carry:
+                out[c] = pdf[c].values
+            yield out
 
     return df.mapInPandas(run, schema)

@@ -90,8 +90,8 @@ def extract_one(url, html: bytes) -> dict:
     return guarded(_extract_kernel, _FAILURE, url, html)
 
 
-def _extract_row(url, warc_ts, html) -> list[dict]:
-    return [{**extract_one(url, html), "url": url, "warc_ts": warc_ts}]
+def _extract_row(url, html) -> list[dict]:
+    return [{**extract_one(url, html), "url": url}]
 
 
 def extract_pages(
@@ -106,8 +106,9 @@ def extract_pages(
     read); the repartition by url-hash is the single shuffle.
     """
     cols = ["url", "warc_ts", "html"]
+    carry = ("warc_ts",)
     if not split_big_docs:
-        return map_docs(url_hash(df, cols, num_partitions), _extract_row, RESULT_SCHEMA)
+        return map_docs(url_hash(df, cols, num_partitions), _extract_row, RESULT_SCHEMA, carry)
     # route oversized docs to their own round-robin-spread tasks so
     # they cannot straggle a dense url-hash partition: the big side
     # gets num_partitions extra (mostly tiny) tasks, each owning at
@@ -119,8 +120,8 @@ def extract_pages(
     is_big = F.length("html") >= big_doc_bytes
     small = url_hash(df.filter(~is_big), cols, n)
     big = df.filter(is_big).select(*cols).repartition(n)
-    return map_docs(small, _extract_row, RESULT_SCHEMA).unionByName(
-        map_docs(big, _extract_row, RESULT_SCHEMA)
+    return map_docs(small, _extract_row, RESULT_SCHEMA, carry).unionByName(
+        map_docs(big, _extract_row, RESULT_SCHEMA, carry)
     )
 
 

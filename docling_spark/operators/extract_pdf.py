@@ -137,12 +137,20 @@ def extract_pdf_docs(
 
 
 def _per_page(kernel, failure: dict):
-    """per_doc for kernels that emit one row per page: a failure is
-    one page_no=0 row, so every url keeps a status row."""
+    """per_doc for kernels that emit one row per page. Rows emitted
+    before an exception are kept and the failure adds one page_no=0
+    row, so every url keeps a status row and a PDF that breaks on a
+    later page assembles to partial_success."""
 
     def per_doc(url, content):
-        rows = guarded(kernel, failure, url, content)
-        return rows if isinstance(rows, list) else [{**rows, "url": url}]
+        rows = []
+
+        def collect(url, content):
+            rows.extend(kernel(url, content))
+            return rows
+
+        out = guarded(collect, failure, url, content)
+        return rows if out is rows else [*rows, {**out, "url": url}]
 
     return per_doc
 
@@ -168,44 +176,40 @@ def parse_pdf_page_rows(df: DataFrame, content_col: str = "content") -> DataFram
     return map_docs(df.select("url", content_col), per_doc, PDF_PAGE_SCHEMA)
 
 
-def _page_rows(url: str, content: bytes) -> list[dict]:
+def _page_rows(url: str, content: bytes):
     from docling_spark.kernels.pdf_kernel import parse_pdf
     from docling_spark.kernels.pdf_layout import page_blocks, page_parse_score, table_to_json
 
-    rows = []
     for page in parse_pdf(content or b""):
         blocks = page_blocks(page)
-        rows.append(
-            {
-                "url": url,
-                "status": "success",
-                "error": None,
-                "page_no": page.page_no,
-                "width": page.width,
-                "height": page.height,
-                "n_cells": len(page.cells),
-                "parse_score": page_parse_score([c.text for c in page.cells])
-                if page.cells
-                else None,
-                "blocks": [
-                    (
-                        b.kind,
-                        b.text,
-                        b.level,
-                        b.page_no,
-                        b.l,
-                        b.t,
-                        b.r,
-                        b.b,
-                        b.size,
-                        table_to_json(b.table),
-                        b.bold,
-                    )
-                    for b in blocks
-                ],
-            }
-        )
-    return rows
+        yield {
+            "url": url,
+            "status": "success",
+            "error": None,
+            "page_no": page.page_no,
+            "width": page.width,
+            "height": page.height,
+            "n_cells": len(page.cells),
+            "parse_score": page_parse_score([c.text for c in page.cells])
+            if page.cells
+            else None,
+            "blocks": [
+                (
+                    b.kind,
+                    b.text,
+                    b.level,
+                    b.page_no,
+                    b.l,
+                    b.t,
+                    b.r,
+                    b.b,
+                    b.size,
+                    table_to_json(b.table),
+                    b.bold,
+                )
+                for b in blocks
+            ],
+        }
 
 
 ASSEMBLED_SCHEMA = StructType(
@@ -280,7 +284,9 @@ def _assemble(url: str, pages) -> dict:
 
 
 def _assembled_row(url, pages) -> list[dict]:
-    return [{**guarded(_assemble, _DOC_FAILURE, url, pages), "url": url}]
+    # not guarded: page failures already arrive as rows, so an exception
+    # here is a bug in the assembly kernel and fails the task
+    return [{**_assemble(url, pages), "url": url}]
 
 
 def extract_pdfs_paged(df: DataFrame, content_col: str = "content") -> DataFrame:

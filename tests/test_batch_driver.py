@@ -96,3 +96,36 @@ def test_available_now_sink_only_in_drain():
     ]
     assert calls == [("stream.py", "_drain")]
 
+
+
+def test_pdf_broken_on_a_later_page_keeps_earlier_pages(spark, monkeypatch):
+    """A page kernel that raises on page 2 of 3 keeps page 1's row next
+    to the page_no=0 failure row, and the document assembles to
+    partial_success with page 1's text."""
+    from docling_spark.kernels import pdf_layout
+    from docling_spark.operators import extract_pdf
+    from docling_spark.sources.pdfgen import build_pdf
+
+    url = "https://pdf.example.com/broken-later.pdf"
+    pdf = build_pdf([[("body", f"alpha page {n} text")] for n in (1, 2, 3)])
+    page_blocks = pdf_layout.page_blocks
+
+    def breaks_on_page_2(page):
+        if page.page_no == 2:
+            raise ValueError("bad page")
+        return page_blocks(page)
+
+    monkeypatch.setattr(pdf_layout, "page_blocks", breaks_on_page_2)
+    per_doc = extract_pdf._per_page(extract_pdf._page_rows, {"page_no": 0, "blocks": []})
+    rows = per_doc(url, pdf)
+    assert [(r["page_no"], r["status"]) for r in rows] == [(1, "success"), (0, "failure")]
+    assert rows[1]["error"] == "ValueError: bad page"
+
+    names = extract_pdf.PDF_PAGE_SCHEMA.fieldNames()
+    page_rows = spark.createDataFrame(
+        [tuple(r.get(n) for n in names) for r in rows], extract_pdf.PDF_PAGE_SCHEMA
+    )
+    (doc,) = extract_pdf.assemble_from_pages(page_rows).collect()
+    assert doc.status == "partial_success"
+    assert "alpha page 1 text" in doc.md and "alpha page 1 text" in doc.txt
+    assert "page 2" not in doc.txt and "page 3" not in doc.txt
