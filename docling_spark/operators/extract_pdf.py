@@ -137,10 +137,10 @@ def extract_pdf_docs(
 
 
 def _per_page(kernel, failure: dict):
-    """per_doc for kernels that emit one row per page. Rows emitted
-    before an exception are kept and the failure adds one page_no=0
-    row, so every url keeps a status row and a PDF that breaks on a
-    later page assembles to partial_success."""
+    """per_doc for kernels that emit one row per page. Rows a generator
+    kernel yields before an exception are kept and the failure adds one
+    page_no=0 row, so every url keeps a status row and a PDF that breaks
+    on a later page assembles to partial_success."""
 
     def per_doc(url, content):
         rows = []
