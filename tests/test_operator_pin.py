@@ -84,6 +84,35 @@ def _text_docs() -> list[tuple[str, bytes]]:
     ]
 
 
+def _images() -> list[tuple[str, bytes]]:
+    """Every codec the image route decodes without a system library,
+    plus hostile image headers. WebP is left out: building it needs
+    libwebp, so its rows would depend on the host."""
+    import numpy as np
+
+    from docling_spark.kernels.jpeg import encode_jpeg
+    from docling_spark.kernels.pdf_kernel import encode_png_gray
+    from docling_spark.kernels.raster import encode_gif_gray
+    from docling_spark.kernels.tiff import encode_tiff
+
+    w, h = 24, 16
+    gray = bytes((x * 11 + y * 7) % 256 for y in range(h) for x in range(w))
+    rgb = bytes((x * 9 + c * 80 + y * 5) % 256 for y in range(h) for x in range(w) for c in range(3))
+    tiff_pages = [(w, h, 1, gray), (h, w, 3, rgb[: w * h * 3])]
+    url = "https://img.example.com/{}".format
+    return [
+        (url("gray.png"), encode_png_gray(np.frombuffer(gray, np.uint8).reshape(h, w))),
+        (url("gray.gif"), encode_gif_gray(w, h, gray)),
+        (url("gray.jpg"), encode_jpeg(w, h, 1, gray)),
+        (url("color.jpg"), encode_jpeg(w, h, 3, rgb)),
+        (url("lzw.tif"), encode_tiff(tiff_pages, compression=5)),
+        (url("packbits.tif"), encode_tiff(tiff_pages, compression=32773)),
+        (url("truncated.png"), encode_png_gray(np.zeros((h, w), np.uint8))[:40]),
+        (url("bare.gif"), b"GIF8"),
+        (url("bare.tif"), b"II*\x00"),
+    ]
+
+
 _PAGE_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -107,6 +136,7 @@ def inputs(spark):
         "html": _frame(spark, html),
         "mixed": _frame(spark, mixed),
         "pdf": _frame(spark, pdfs, "content"),
+        "images": _frame(spark, _images()),
     }
 
 
@@ -148,6 +178,7 @@ CASES = {
         i["html"], num_partitions=4, split_big_docs=True, big_doc_bytes=30 << 10
     ),
     "convert_any": lambda s, i, t: convert.convert_any(i["mixed"], num_partitions=4),
+    "convert_any_images": lambda s, i, t: convert.convert_any(i["images"], num_partitions=4),
     "convert_any_doctags_json": lambda s, i, t: convert.convert_any(
         i["mixed"], num_partitions=4, want_doctags=True, want_json=True
     ),
