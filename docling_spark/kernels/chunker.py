@@ -34,6 +34,7 @@ from .doc_model import (
     TITLE,
     Doc,
 )
+from .textout import table_text
 
 
 @dataclass
@@ -42,14 +43,6 @@ class Chunk:
     headings: list[str] = field(default_factory=list)
     kind: str = "text"  # text | list | table | code
     n_items: int = 1
-
-
-def _table_text(node) -> str:
-    if node.table is None:
-        return ""
-    return "\n".join(
-        ", ".join(c for c in row if c) for row in node.table.grid()
-    )
 
 
 def hierarchical_chunks(doc: Doc) -> list[Chunk]:
@@ -104,7 +97,7 @@ def hierarchical_chunks(doc: Doc) -> list[Chunk]:
                 walk(nid)
             return
         elif node.kind == TABLE:
-            text = _table_text(node)
+            text = table_text(node.table) if node.table is not None else ""
             if text:
                 chunks.append(
                     Chunk(text=text, headings=[t for _, t in level_stack], kind="table")

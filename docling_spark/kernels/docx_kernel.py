@@ -108,25 +108,6 @@ def _load_numbering(z: zipfile.ZipFile) -> dict[tuple[str, int], tuple[str, str]
     return out
 
 
-class _NumCounters:
-    def __init__(self):
-        self.counters: dict[str, dict[int, int]] = {}
-
-    def next_prefix(self, num_id: str, ilvl: int, lvl_text: str) -> str:
-        c = self.counters.setdefault(num_id, {})
-        for shallower in range(ilvl):  # skipped levels implicitly start at 1
-            c.setdefault(shallower, 1)
-        c[ilvl] = c.get(ilvl, 0) + 1
-        for deeper in [k for k in c if k > ilvl]:
-            del c[deeper]
-
-        def sub(m):
-            i = int(m.group(1)) - 1
-            return str(c.get(i, 1))
-
-        return re.sub(r"%(\d+)", sub, lvl_text)
-
-
 # ------------------------------------------------------------ run model
 
 

@@ -49,7 +49,7 @@ from .hyperlinks import normalize_hyperlink
 BLOCK_TAGS = BLOCK_TAG_NAMES  # defined beside its parse-time watch bit
 
 # reference: html_backend.py:57
-CODE_TAGS = ("code", "kbd", "samp")
+CODE_TAGS = frozenset(("code", "kbd", "samp"))
 
 # reference: html_backend.py:59-74 (dict order matters for
 # _collect_parent_format_tags, see :367-377)
@@ -513,7 +513,7 @@ class HtmlExtractor:
         if isinstance(item, TextNode):
             text = item.strip()
             ft = self.format_tags
-            code = bool(ft) and ("code" in ft or "kbd" in ft or "samp" in ft)
+            code = bool(ft) and not CODE_TAGS.isdisjoint(ft)
             if text:
                 return [
                     AnnotatedText(

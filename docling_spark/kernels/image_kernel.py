@@ -25,43 +25,9 @@ class ImageError(Exception):
     pass
 
 
-def decode_pixels(payload: bytes, page: int = 0) -> tuple[int, int, int, bytes]:
-    """(w, h, channels, 8-bit samples) for PNG, GIF, JPEG (baseline +
-    progressive) and TIFF (uncompressed / PackBits / LZW) via the
-    stdlib decoders in kernels/raster.py, kernels/jpeg.py and
-    kernels/tiff.py (zlib inflate + unfilter; LZW; T.81 huffman
-    sequential and Annex-G progressive + IDCT; TIFF 6.0 strips), plus
-    WebP via the system libwebp (ctypes, kernels/webp.py) when the
-    host has it. ``page`` selects the frame of a multi-page TIFF.
-
-    On a host without libwebp, WebP remains the explicit stub
-    (NotImplementedError), exactly the pre-r4 behavior."""
-    head = payload[:8]
-    if head[:4] in (b"II*\x00", b"MM\x00*"):
-        from .tiff import decode_tiff
-
-        return decode_tiff(payload, page)
-    if head[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from .webp import webp_available
-
-        if not webp_available():
-            raise NotImplementedError("no webp codec on this host")
-        from .raster import decode_image
-
-        return decode_image(payload)
-    if (
-        head == b"\x89PNG\r\n\x1a\n"
-        or payload[:6] in (b"GIF87a", b"GIF89a")
-        or payload[:3] == b"\xff\xd8\xff"
-    ):
-        from .raster import decode_image
-
-        return decode_image(payload)
-    raise NotImplementedError("no stdlib decoder for this format")
-
-
-def _tiff_frames(data: bytes) -> list[tuple[int, int]]:
-    """(width, height) per IFD of a TIFF file (multi-page aware)."""
+def _tiff_frames(data: bytes) -> list[tuple[int, int, int]]:
+    """(width, height, IFD index) per sized IFD of a TIFF file; IFDs
+    without ImageWidth/ImageLength are not frames."""
     if data[:4] == b"II*\x00":
         endian = "<"
     elif data[:4] == b"MM\x00*":
@@ -72,6 +38,7 @@ def _tiff_frames(data: bytes) -> list[tuple[int, int]]:
     (off,) = struct.unpack(endian + "I", data[4:8])
     seen = set()
     while off and off not in seen and off + 2 <= len(data):
+        ifd = len(seen)
         seen.add(off)
         (n_entries,) = struct.unpack(endian + "H", data[off : off + 2])
         width = height = 0
@@ -90,7 +57,7 @@ def _tiff_frames(data: bytes) -> list[tuple[int, int]]:
                 else:
                     height = val
         if width and height:
-            frames.append((width, height))
+            frames.append((width, height, ifd))
         nxt = off + 2 + n_entries * 12
         if nxt + 4 > len(data):
             break
@@ -157,42 +124,46 @@ def _jpeg_size(data: bytes) -> tuple[int, int]:
     raise ImageError("jpeg has no SOF marker")
 
 
-def image_frames(payload: bytes) -> list[tuple[int, int]]:
-    """(width, height) per frame for any supported raster format."""
+def _frames(payload: bytes) -> list[tuple[int, int, int]]:
+    """(width, height, page) per frame for any supported raster format;
+    ``page`` is the index ``raster.decode_image`` decodes that frame at."""
     head = payload[:16]
     if head[:4] in (b"II*\x00", b"MM\x00*"):
         return _tiff_frames(payload)
     if head[:4] == b"RIFF":
-        return [_webp_size(payload)]
+        return [(*_webp_size(payload), 0)]
     if head[:8] == b"\x89PNG\r\n\x1a\n":
-        return [_png_size(payload)]
+        return [(*_png_size(payload), 0)]
     if head[:4] == b"GIF8":
-        return [_gif_size(payload)]
+        return [(*_gif_size(payload), 0)]
     if head[:3] == b"\xff\xd8\xff":
-        return [_jpeg_size(payload)]
+        return [(*_jpeg_size(payload), 0)]
     raise ImageError("unsupported image format")
 
 
-def image_to_pdf_pages(payload: bytes, with_pixels: bool = True) -> list[PdfPage]:
+def image_frames(payload: bytes) -> list[tuple[int, int]]:
+    """(width, height) per frame for any supported raster format."""
+    return [(w, h) for w, h, _ in _frames(payload)]
+
+
+def image_to_pdf_pages(payload: bytes) -> list[PdfPage]:
     """IMAGE -> PDF-path pages: one PdfPage per frame, zero text cells,
     one full-page bitmap rect — the exact page shape PIL's image-PDF
-    conversion hands the reference's PDF backend. When a decoder
-    exists (PNG/GIF/JPEG/TIFF stdlib; WebP via system libwebp) the
-    rect carries the real decoded luma plane; otherwise the rect stays
-    pixel-less."""
+    conversion hands the reference's PDF backend. When
+    ``raster.decode_image`` decodes the frame (PNG/GIF/JPEG/TIFF
+    stdlib; WebP via system libwebp) the rect carries the real decoded
+    luma plane; otherwise the rect stays pixel-less."""
+    from .raster import decode_image, luminance_plane
+
     pages = []
-    for i, (w, h) in enumerate(image_frames(payload)):
+    for i, (w, h, frame) in enumerate(_frames(payload)):
         page = PdfPage(i + 1, float(w), float(h))
         page.bitmap_rects.append((0.0, 0.0, float(w), float(h)))
-        pix = None
-        if with_pixels:
-            try:
-                pw, ph, ch, samples = decode_pixels(payload, page=i)
-                from .raster import luminance_plane
-
-                pix = (pw, ph, luminance_plane(pw, ph, ch, samples))
-            except Exception:
-                pix = None  # codec stub (webp) or malformed frame
+        try:
+            pw, ph, ch, samples = decode_image(payload, page=frame)
+            pix = (pw, ph, luminance_plane(pw, ph, ch, samples))
+        except Exception:
+            pix = None  # no codec on this host (webp) or malformed frame
         page.bitmap_pixels.append(pix)
         pages.append(page)
     return pages

@@ -51,10 +51,6 @@ def _get_text(node, sep: str | None = None) -> str:
     return text
 
 
-def _findall(root, tag: str):
-    return root.iter(tag)
-
-
 class _Jats:
     def __init__(self, root, name: str):
         self.tree = root

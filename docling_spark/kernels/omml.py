@@ -20,8 +20,6 @@ table_with_equations.docx.md):
 
 from __future__ import annotations
 
-import xml.etree.ElementTree as ET
-
 M = "{http://schemas.openxmlformats.org/officeDocument/2006/math}"
 
 # unicode -> latex command (no surrounding spaces; spacing added by rule)
@@ -249,7 +247,3 @@ def omml_to_latex(el) -> str:
     """One m:oMath element -> latex (reference collapses one
     double-space pass, omml.py __str__)."""
     return _Omml().convert(el).replace("  ", " ")
-
-
-def omml_xml_to_latex(xml: str | bytes) -> str:
-    return omml_to_latex(ET.fromstring(xml))

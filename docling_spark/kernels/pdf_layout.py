@@ -27,7 +27,7 @@ Behavioral ports (written fresh against the reference's semantics):
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from statistics import median
 
 from .doc_model import BODY, FURNITURE, Doc, TableCellData, TableDataIR
@@ -1379,12 +1379,6 @@ def build_doc(pages: list[PdfPage], name: str = "doc") -> tuple[Doc, list[float]
     mark_page_furniture(all_blocks, page_heights)
     all_blocks = merge_continuations(all_blocks)
     return assemble_doc(all_blocks, name), page_scores
-
-
-@dataclass
-class PdfResult:
-    doc: Doc
-    page_scores: list[float] = field(default_factory=list)
 
 
 # ------------------------------------- P14: overlap resolution (UnionFind)

@@ -387,10 +387,13 @@ def encode_gif_gray(w: int, h: int, pixels: bytes) -> bytes:
 # ------------------------------------------------------ features
 
 
-def decode_image(data: bytes) -> tuple[int, int, int, bytes]:
+def decode_image(data: bytes, page: int = 0) -> tuple[int, int, int, bytes]:
     """PNG, GIF, JPEG (baseline + progressive), TIFF (uncompressed /
     PackBits / LZW) or WebP (system libwebp via ctypes, when present)
-    -> (w, h, channels, samples); RasterError otherwise.
+    -> (w, h, channels, samples); RasterError otherwise. The one pixel
+    codec dispatch: the router's image route and the media operator
+    both decode here. ``page`` selects the IFD of a multi-page TIFF;
+    the other formats have one frame and ignore it.
 
     Total over arbitrary bytes: every malformed stream raises
     RasterError — the Spark extraction path depends on this to emit an
@@ -404,7 +407,7 @@ def decode_image(data: bytes) -> tuple[int, int, int, bytes]:
             from .tiff import TiffError, decode_tiff
 
             try:
-                return decode_tiff(data)
+                return decode_tiff(data, page)
             except TiffError as e:
                 raise RasterError(f"tiff: {e}") from e
         if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
@@ -440,38 +443,3 @@ def luminance_plane(w: int, h: int, channels: int, samples: bytes) -> bytes:
     rgb = arr[:, :3].astype(np.uint32)
     lum = (299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]) // 1000
     return lum.astype(np.uint8).tobytes()
-
-
-def image_features(w: int, h: int, channels: int, samples: bytes) -> dict:
-    """Deterministic stats + an 8-dim 2x4 grid-mean luminance feature —
-    the shape a real embedding model's output column would take."""
-    lum = luminance_plane(w, h, channels, samples)
-    n = len(lum)
-    mean = sum(lum) / n
-    var = sum((v - mean) ** 2 for v in lum) / n
-    feat = []
-    for gy in range(2):
-        for gx in range(4):
-            y0, y1 = h * gy // 2, h * (gy + 1) // 2
-            x0, x1 = w * gx // 4, w * (gx + 1) // 4
-            acc = cnt = 0
-            for y in range(y0, max(y1, y0 + 1)):
-                if y >= h:
-                    break
-                row = y * w
-                for x in range(x0, max(x1, x0 + 1)):
-                    if x >= w:
-                        break
-                    acc += lum[row + x]
-                    cnt += 1
-            feat.append(round(acc / max(cnt, 1) / 255.0, 6))
-    return {
-        "width": w,
-        "height": h,
-        "channels": channels,
-        "lum_mean": round(mean, 4),
-        "lum_std": round(var**0.5, 4),
-        "lum_min": min(lum),
-        "lum_max": max(lum),
-        "feature": feat,
-    }

@@ -9,7 +9,7 @@ character offsets into that text.
 
 from __future__ import annotations
 
-from .doc_model import BODY, GROUP, PICTURE, TABLE, Doc, DocNode
+from .doc_model import BODY, GROUP, PICTURE, TABLE, Doc, DocNode, TableDataIR
 
 
 def _text_nodes(doc: Doc) -> list[DocNode]:
@@ -37,8 +37,7 @@ def _text_nodes(doc: Doc) -> list[DocNode]:
             walk(child)
 
     for child in doc.body_children:
-        if doc.nodes[child].node_id not in caption_refs or True:
-            walk(child)
+        walk(child)
     # drop duplicates introduced by caption hoisting (a caption item is a
     # body child AND referenced by its picture); keep first occurrence
     seen: set[int] = set()
@@ -51,11 +50,15 @@ def _text_nodes(doc: Doc) -> list[DocNode]:
     return uniq
 
 
+def table_text(table: TableDataIR) -> str:
+    """A table as plain text: one line per grid row, its non-empty
+    cells joined by ", "."""
+    return "\n".join(", ".join(cell for cell in row if cell) for row in table.grid())
+
+
 def _node_text(doc: Doc, node: DocNode) -> str:
     if node.kind == TABLE and node.table is not None:
-        return "\n".join(
-            ", ".join(cell for cell in row if cell) for row in node.table.grid()
-        )
+        return table_text(node.table)
     return node.text
 
 

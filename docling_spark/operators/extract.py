@@ -125,21 +125,6 @@ def extract_pages(
     )
 
 
-def status_rollup(results: DataFrame) -> DataFrame:
-    """reference semantics: document_converter.py:376-398 success/failure
-    accounting — pure Spark SQL."""
-    return (
-        results.groupBy("status")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("bytes_in").alias("total_bytes"),
-            F.avg("t_sec").alias("avg_t_sec"),
-            F.percentile_approx("t_sec", 0.95).alias("p95_t_sec"),
-        )
-        .orderBy("status")
-    )
-
-
 def metrics_table(results: DataFrame) -> DataFrame:
     """Per-partition metrics rows (FIXTURES.md §5 metrics schema)."""
     return results.select(

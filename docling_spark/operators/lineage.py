@@ -34,6 +34,22 @@ def write_lineage(results: DataFrame, path: str, attempt: int = 0) -> None:
     lineage_rows(results, attempt).write.mode("append").parquet(path)
 
 
+def drop_recorded(df: DataFrame, spark: SparkSession, lineage_path: str, status: str) -> DataFrame:
+    """Rows of ``df`` whose url lineage does not yet record with
+    ``status`` (a ``left_anti`` join on url); all of ``df`` when no
+    lineage exists yet."""
+    try:
+        recorded = (
+            spark.read.parquet(lineage_path)
+            .filter(F.col("status") == status)
+            .select("url")
+            .distinct()
+        )
+    except Exception:  # noqa: BLE001 — no lineage yet
+        return df
+    return df.join(recorded, "url", "left_anti")
+
+
 def resume_filter(pages: DataFrame, spark: SparkSession, lineage_path: str) -> DataFrame:
     """Drop pages already extracted successfully in a previous attempt.
 
@@ -41,16 +57,7 @@ def resume_filter(pages: DataFrame, spark: SparkSession, lineage_path: str) -> D
     attempt (a length comparison — cheap) because the gate parameters
     may change between attempts (e.g. a raised --limit-bytes must
     un-skip previously oversized docs). Duplicate skip rows in lineage
-    are suppressed at append time (extract_job anti-joins new skips
-    against the recorded ones).
+    are suppressed at append time (extract_job drops the new skips
+    lineage already records).
     """
-    try:
-        done = (
-            spark.read.parquet(lineage_path)
-            .filter(F.col("status") == "success")
-            .select("url")
-            .distinct()
-        )
-    except Exception:  # no lineage yet -> nothing to skip
-        return pages
-    return pages.join(done, "url", "left_anti")
+    return drop_recorded(pages, spark, lineage_path, "success")

@@ -185,8 +185,9 @@ def _decode_image_stub(payload: bytes) -> tuple[int, int, list[float]]:
 
 
 def _grid_feature_np(w: int, h: int, channels: int, samples: bytes) -> list[float]:
-    """2x4 grid-mean luminance (numpy-vectorized twin of
-    kernels.raster.image_features for the Arrow batch hot path)."""
+    """8-dim 2x4 grid-mean luminance feature in [0, 1] (Rec.601 float
+    luma for color, channel 0 for gray), numpy-vectorized for the Arrow
+    batch hot path."""
     import numpy as np
 
     a = np.frombuffer(samples, dtype=np.uint8).reshape(h, w, channels)

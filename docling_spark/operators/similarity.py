@@ -3,7 +3,7 @@
 * brute-force cosine top-k — the exact baseline, one broadcast of the
   (small) query set against the corpus: no shuffle of the corpus at
   all, scales linearly with corpus size;
-* random-hyperplane LSH bucketing — the 100 TB path: corpus hashed to
+* random-hyperplane LSH buckets — the 100 TB path: corpus hashed to
   b-bit signatures once, queries probe only their own bucket
   (+ optional multi-probe), turning top-k into a bucket-local problem.
 

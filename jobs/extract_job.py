@@ -74,7 +74,12 @@ def run(spark, args) -> dict:
 
     from docling_spark.operators.extract import extract_pages, metrics_table
     from docling_spark.operators.formats import limits_gate
-    from docling_spark.operators.lineage import lineage_rows, resume_filter, write_lineage
+    from docling_spark.operators.lineage import (
+        drop_recorded,
+        lineage_rows,
+        resume_filter,
+        write_lineage,
+    )
 
     if args.format == "iceberg":
         pages = spark.read.format("iceberg").load(args.input)
@@ -133,17 +138,9 @@ def run(spark, args) -> dict:
         skipped_lineage = lineage_rows(
             skipped.select("url", F.lit("skipped").alias("status")), args.attempt
         )
-        try:
-            already = (
-                spark.read.parquet(args.lineage)
-                .filter(F.col("status") == "skipped")
-                .select("url")
-                .distinct()
-            )
-            skipped_lineage = skipped_lineage.join(already, "url", "left_anti")
-        except Exception:  # noqa: BLE001 — no lineage yet
-            pass
-        skipped_lineage.write.mode("append").parquet(args.lineage)
+        drop_recorded(skipped_lineage, spark, args.lineage, "skipped").write.mode(
+            "append"
+        ).parquet(args.lineage)
 
     n_fail = results.filter(F.col("status") == "failure").count()
     results.unpersist()

@@ -116,3 +116,11 @@ def test_boilerplate_strip():
         b"<style>p{}</style><div hidden>gone</div><p hidden>gone2</p></body></html>"
     )
     assert md(raw) == "keep"
+
+
+def test_every_code_tag_marks_inline_code():
+    raw = (
+        b"<html><body><p>Press <kbd>Ctrl</kbd>, see <samp>ok</samp>, run "
+        b"<code>ls</code> and <b>bold</b> <em>x</em>.</p></body></html>"
+    )
+    assert md(raw) == "Press `Ctrl` , see `ok` , run `ls` and **bold** *x* ."

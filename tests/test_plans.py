@@ -189,35 +189,6 @@ def test_jaccard_pairs_caps_hub_tokens(spark):
     assert "<= 100" in plan, "max_doc_freq cap missing from the plan"
 
 
-def test_bucketed_resume_anti_join_has_no_exchange(spark, tmp_path):
-    """Scale evidence: bucketing pages + lineage on url makes the
-    resume anti-join co-located — zero Exchange in the physical plan
-    (the shuffle is paid once at write time, amortized over every
-    subsequent attempt)."""
-    from docling_spark.operators.bucketing import resume_anti_join, write_bucketed
-    from docling_spark.sources.pages import synthesize_pages
-
-    pages = synthesize_pages(spark, "/root/testdata/sf0.001", n_pages=200)
-    lineage = pages.limit(120).selectExpr(
-        "url", "cast(0 as int) as attempt", "'success' as status"
-    )
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the join strategy a 100 TB lineage would get (no broadcast)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(pages, "bt_pages", key="url", buckets=8)
-        write_bucketed(lineage, "bt_lineage", key="url", buckets=8)
-        pending = resume_anti_join(spark, "bt_pages", "bt_lineage")
-        plan = _plan(pending)
-        assert "SortMergeJoin" in plan and "LeftAnti" in plan
-        assert "Exchange" not in plan, "bucketed join must not shuffle"
-        assert pending.count() == 80
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS bt_pages")
-        spark.sql("DROP TABLE IF EXISTS bt_lineage")
-
-
 # --------------------------------------------------- SimHash scale shape
 
 

@@ -14,7 +14,7 @@ from docling_spark.kernels.raster import (
     decode_image,
     decode_png,
     encode_gif_gray,
-    image_features,
+    luminance_plane,
 )
 
 # ---------------------------------------------------------- builders
@@ -191,9 +191,10 @@ def test_png_real_reference_fixture():
     assert (w, h, c) == (1275, 1650, 4)
     assert len(s) == w * h * c
     # a scanned text page is mostly white: high mean luminance
-    stats = image_features(w, h, c, s)
-    assert stats["lum_mean"] > 200
-    assert len(stats["feature"]) == 8
+    from docling_spark.operators.multimodal import _grid_feature_np
+
+    assert np.frombuffer(luminance_plane(w, h, c, s), np.uint8).mean() > 200
+    assert len(_grid_feature_np(w, h, c, s)) == 8
 
 
 def test_png_garbage_raises_typed_error():
@@ -230,36 +231,30 @@ def test_gif_encoder_decoder_roundtrip():
 # ----------------------------------------------- kernel + Spark path
 
 
-def test_decode_pixels_png_gif_jpeg_real_webp_stubbed():
-    from docling_spark.kernels.image_kernel import decode_pixels
+def test_decode_image_png_gif_jpeg_real_webp_stubbed():
     from docling_spark.kernels.jpeg import encode_jpeg
     from docling_spark.kernels.pdf_kernel import encode_png_gray
-    from docling_spark.kernels.raster import RasterError
 
     img = np.full((10, 20), 128, dtype=np.uint8)
-    w, h, c, s = decode_pixels(encode_png_gray(img))
+    w, h, c, s = decode_image(encode_png_gray(img))
     assert (w, h, c) == (20, 10, 1) and set(s) == {128}
-    w, h, c, s = decode_pixels(encode_jpeg(20, 10, 1, img.tobytes(), quant=2))
+    w, h, c, s = decode_image(encode_jpeg(20, 10, 1, img.tobytes(), quant=2))
     assert (w, h, c) == (20, 10, 1)
     assert max(abs(b - 128) for b in s) <= 4
     # malformed jpeg: decode is attempted for real and fails typed
     with pytest.raises(RasterError):
-        decode_pixels(b"\xff\xd8\xff rest of a jpeg")
+        decode_image(b"\xff\xd8\xff rest of a jpeg")
     # tiff decodes for real now (kernels/tiff.py)
     from docling_spark.kernels.tiff import encode_tiff
 
-    w, h, c, s = decode_pixels(encode_tiff([(20, 10, 1, img.tobytes())]))
+    w, h, c, s = decode_image(encode_tiff([(20, 10, 1, img.tobytes())]))
     assert (w, h, c) == (20, 10, 1) and set(s) == {128}
+    two_pages = encode_tiff([(20, 10, 1, img.tobytes()), (4, 3, 1, bytes(12))])
+    assert decode_image(two_pages, page=1) == (4, 3, 1, bytes(12))
     # webp: real decode via the system libwebp when present (garbage
-    # fails typed); explicit stub on hosts without it
-    from docling_spark.kernels.webp import webp_available
-
-    if webp_available():
-        with pytest.raises(RasterError):
-            decode_pixels(b"RIFF\x00\x00\x00\x00WEBPVP8 ")
-    else:
-        with pytest.raises(NotImplementedError):
-            decode_pixels(b"RIFF\x00\x00\x00\x00WEBPVP8 ")
+    # fails typed); typed failure too on hosts without it
+    with pytest.raises(RasterError):
+        decode_image(b"RIFF\x00\x00\x00\x00WEBPVP8 ")
 
 
 def test_media_features_decoded_flag(spark):

@@ -160,3 +160,41 @@ def test_spark_submit_split_big_docs(spark, pages_input, tmp_path):
     # the 20% ~80 KB band both clear the 64 KiB threshold
     n_big = sum(1 for r in b if r[4] >= (64 << 10))
     assert n_big >= 2
+
+
+def test_skipped_urls_recorded_once_and_unskipped_by_a_raised_limit(spark, tmp_path):
+    """In-process ``extract_job.run`` over three resumed attempts: an
+    oversized url is lineage-recorded as ``skipped`` exactly once across
+    repeated attempts, and a raised --limit-bytes extracts it."""
+    from pyspark.sql import functions as F
+
+    from docling_spark.sources.pages import page_url, render_page
+    from jobs import extract_job
+
+    limit = 20_000
+    pages = [(page_url(i), render_page(i, "word " * (40 + 30 * i), "en")) for i in range(1, 9)]
+    big = {u for u, b in pages if len(b) > limit}
+    assert 0 < len(big) < len(pages)
+    in_dir, out, lineage = (str(tmp_path / d) for d in ("pages", "out", "lineage"))
+    spark.createDataFrame(pages, "url string, html binary").withColumn(
+        "warc_ts", F.lit(None).cast("timestamp")
+    ).write.parquet(in_dir)
+
+    def attempt(n, limit_bytes):
+        args = extract_job.build_parser().parse_args(
+            ["--input", in_dir, "--output", out, "--lineage", lineage, "--partitions", "4",
+             "--attempt", str(n), "--resume", "--limit-bytes", str(limit_bytes)]
+        )
+        return extract_job.run(spark, args)
+
+    for n in (0, 1):
+        stats = attempt(n, limit)
+        assert stats["n_skipped"] == len(big)
+    assert attempt(1, limit)["n_extracted"] == 0
+    skips = spark.read.parquet(lineage).filter(F.col("status") == "skipped")
+    assert sorted(r.url for r in skips.collect()) == sorted(big)
+
+    stats = attempt(2, 1 << 20)
+    assert stats["n_extracted"] == len(big) and stats["n_skipped"] == 0
+    third = spark.read.parquet(out).filter(F.col("status") == "success")
+    assert {r.url for r in third.collect()} == {u for u, _ in pages}

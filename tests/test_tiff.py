@@ -121,6 +121,26 @@ def test_reference_fixture_through_image_pdf_path():
     assert np.array_equal(img, src)  # 1:1 scale blit is exact
 
 
+def test_unsized_ifd_does_not_shift_frame_pixels():
+    """An IFD without ImageWidth is not a frame, so the frames after it
+    must take their pixels from their own IFD, not from the IFD at the
+    same frame index."""
+    import struct
+
+    from docling_spark.kernels.image_kernel import image_to_pdf_pages
+
+    plane = bytes(range(30))
+    data = bytearray(encode_tiff([(4, 4, 1, bytes(16)), (6, 5, 1, plane)]))
+    (ifd0,) = struct.unpack("<I", data[4:8])
+    (n,) = struct.unpack("<H", data[ifd0 : ifd0 + 2])
+    for k in range(n):
+        p = ifd0 + 2 + 12 * k
+        if struct.unpack("<H", data[p : p + 2])[0] == 256:
+            data[p : p + 2] = struct.pack("<H", 65000)  # drop ImageWidth
+    pages = image_to_pdf_pages(bytes(data))
+    assert [(p.width, p.height) for p in pages] == [(6.0, 5.0)]
+    assert pages[0].bitmap_pixels == [(6, 5, plane)]
+
 # ---------------------------------------------------------- totality
 
 
