@@ -15,6 +15,7 @@ documents a job WILL be preempted, so:
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 LINEAGE_COLS = ("url", "partition_id", "attempt", "status", "batch_ts")
@@ -45,7 +46,7 @@ def drop_recorded(df: DataFrame, spark: SparkSession, lineage_path: str, status:
             .select("url")
             .distinct()
         )
-    except Exception:  # noqa: BLE001 — no lineage yet
+    except AnalysisException:  # no lineage yet
         return df
     return df.join(recorded, "url", "left_anti")
 
