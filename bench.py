@@ -1,5 +1,5 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS]; the last stdout line is the JSON record.
 
 The flagship metric is the extraction pipeline (pages -> byte-exact
 markdown + spans): pages are synthesized once per (sf, n) into a local
@@ -13,7 +13,11 @@ inherited ±2x host-VM noise (round-2 postmortem: three phantom
 regressions on unchanged plans); medians make rounds comparable.
 
 Extra keys beyond the driver contract: ``docs_per_sec`` (headline
-throughput, from the median extract time) and ``n_pages``.
+throughput, from the median extract time) and ``n_pages``. The LAST
+stdout line is always that compact summary (at most 1,500 chars: a
+driver keeps only the tail of stdout); the line before it carries the
+per-repeat ``load`` samples, ``queries_max`` and ``extract_success``.
+``SPARK_GRAFT_CPUS`` defaults to the cores this process may run on.
 
 Load-aware protocol (round-5): every repeat records /proc/loadavg and
 the CPU steal delta around it into ``load`` so a contended measurement
@@ -39,8 +43,17 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+
+def available_cpus() -> int:
+    """Cores this process may run on (its affinity mask)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or available_cpus())
 PAGES_PER_DOC = int(os.environ.get("SPARK_GRAFT_PAGES_PER_DOC", "4"))
 CACHE_ROOT = os.environ.get("SPARK_GRAFT_CACHE", "/tmp/docling_spark_bench")
 REPEATS = int(os.environ.get("SPARK_GRAFT_REPEATS", "3"))
@@ -174,6 +187,43 @@ def timed(
     return statistics.median(ts), min(ts), max(ts), loads
 
 
+def record_lines(
+    timings: dict[str, float],
+    tmin: dict[str, float],
+    tmax: dict[str, float],
+    qload: dict[str, list[dict]],
+    n_pages: int,
+    n_ok: int,
+    t_extract: float,
+    pinned: bool,
+    partial: bool,
+) -> list[str]:
+    """The record as two JSON lines: per-repeat detail, then the
+    compact summary that must end stdout."""
+    detail = {
+        "record": "detail",
+        "queries_max": dict(tmax),
+        "extract_success": n_ok,
+        "load": dict(qload),
+    }
+    summary = {
+        "metric": "headline_suite_wall_sec",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": dict(timings),
+        "queries_min": dict(tmin),
+        "docs_per_sec": round(n_pages / t_extract, 1) if t_extract else 0.0,
+        "cpus": CPUS,
+        "pinned_affinity": pinned,
+        "n_pages": n_pages,
+        "repeats": REPEATS,
+        "sf": SF_DIR.rstrip("/").split("/")[-1],
+    }
+    if partial:
+        summary["partial"] = True
+    return [json.dumps(detail), json.dumps(summary)]
+
+
 def main() -> None:
     pinned = pin_affinity(CPUS) if PIN else False
     spark = build_spark(CPUS)
@@ -192,29 +242,13 @@ def main() -> None:
     tmax: dict[str, float] = {}
     qload: dict[str, list[dict]] = {}
 
-    def snapshot(n_pages: int, n_ok: int, t_extract: float, partial: bool) -> dict:
-        out = {
-            "metric": "headline_suite_wall_sec",
-            "value": round(sum(timings.values()), 3),
-            "unit": "sec",
-            "queries": dict(timings),
-            "queries_min": dict(tmin),
-            "queries_max": dict(tmax),
-            "repeats": REPEATS,
-            "sf": SF_DIR.rstrip("/").split("/")[-1],
-            "n_pages": n_pages,
-            "extract_success": n_ok,
-            "docs_per_sec": round(n_pages / t_extract, 1) if t_extract else 0.0,
-            "cpus": CPUS,
-            "pinned_affinity": pinned,
-            "load": dict(qload),
-        }
-        if partial:
-            # progressive snapshot: if the harness kills a long run, the
-            # LAST complete line still carries every finished phase
-            out["partial"] = True
-        print(json.dumps(out), flush=True)
-        return out
+    def snapshot(n_pages: int, n_ok: int, t_extract: float, partial: bool) -> None:
+        # progressive snapshot: if the harness kills a long run, the
+        # LAST complete line still carries every finished phase
+        for line in record_lines(
+            timings, tmin, tmax, qload, n_pages, n_ok, t_extract, pinned, partial
+        ):
+            print(line, flush=True)
 
     # ---- flagship: extraction throughput ----
     pages = spark.read.parquet(pages_path)

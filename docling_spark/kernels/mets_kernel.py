@@ -250,3 +250,12 @@ def parse_mets_gbs(data: bytes, max_pages: int | None = None):
     if not pages:
         raise MetsError("no pages")
     return pages
+
+
+def book_pages(data: bytes) -> tuple[list, str | None]:
+    """(pages, None) for a METS/GBS book archive; ([], reason) for any
+    other gzip, which the router skips instead of failing."""
+    try:
+        return parse_mets_gbs(data), None
+    except MetsError as exc:
+        return [], str(exc)

@@ -1338,13 +1338,3 @@ def encode_png_gray(img) -> bytes:
         + chunk(b"IDAT", zlib.compress(raw, 6))
         + chunk(b"IEND", b"")
     )
-
-
-def page_png(
-    page: PdfPage,
-    scale: float = 1.0,
-    cropbox: tuple[float, float, float, float] | None = None,
-) -> bytes:
-    """P5 surface used by the multimodal export: raster -> PNG bytes."""
-    _, _, img = rasterize_page(page, scale, cropbox)
-    return encode_png_gray(img)

@@ -327,23 +327,18 @@ class Block:
     bold: bool = False
 
 
-def _cluster_columns(
-    lines: list[TextCell], page_w: float, rtl: bool = False
-) -> list[int]:
-    """Assign each line a column index: 0 for full-width/primary, 1 for
-    lines living entirely in the secondary half of a two-column layout.
-    On an RTL page the mirror rule applies — text is right-aligned, so
-    a short line hugging the RIGHT margin is a paragraph's last line
-    (it must stay with its column-0 paragraph), while a line living
-    entirely in the LEFT half is the secondary column."""
-    cols = []
+def _column(l: float, r: float, page_w: float, rtl: bool) -> int:
+    """Column index of a box spanning x in [l, r]: 0 for full-width/
+    primary, 1 for a box living entirely in the secondary half of a
+    two-column layout. On an RTL page the mirror rule applies — text is
+    right-aligned, so a short line hugging the RIGHT margin is a
+    paragraph's last line (it must stay with its column-0 paragraph),
+    while a box living entirely in the LEFT half is the secondary
+    column."""
     mid = page_w / 2
-    for ln in lines:
-        if rtl:
-            cols.append(1 if ln.r < mid * 1.04 and ln.l < mid else 0)
-        else:
-            cols.append(1 if ln.l > mid * 0.96 and ln.r > mid else 0)
-    return cols
+    if rtl:
+        return 1 if r < mid * 1.04 and l < mid else 0
+    return 1 if l > mid * 0.96 and r > mid else 0
 
 
 # ---------------------------- geometry-only table reconstruction (P15')
@@ -614,9 +609,9 @@ def page_blocks(page: PdfPage) -> list[Block]:
         blocks = resolve_overlapping_blocks(tile_blocks)
         return _interleave_extras(
             blocks, table_blocks, _picture_blocks(page), stable=False,
-            page_w=page.width,
+            page_w=page.width, rtl=page_rtl,
         )
-    cols = _cluster_columns(lines, page.width, rtl=page_rtl)
+    cols = [_column(ln.l, ln.r, page.width, page_rtl) for ln in lines]
     order = sorted(range(len(lines)), key=lambda i: (cols[i], lines[i].t, lines[i].l))
 
     blocks: list[Block] = []
@@ -665,7 +660,7 @@ def page_blocks(page: PdfPage) -> list[Block]:
     blocks = resolve_overlapping_blocks(blocks)
     blocks = _interleave_extras(
         blocks, table_blocks + tile_blocks, _picture_blocks(page),
-        stable=False, page_w=page.width,
+        stable=False, page_w=page.width, rtl=page_rtl,
     )
     return _form_row_reorder(blocks)
 
@@ -702,13 +697,14 @@ def _interleave_extras(
     picture_blocks: list[Block],
     stable: bool,
     page_w: float,
+    rtl: bool = False,
 ) -> list[Block]:
     """Re-interleave tables/pictures into reading order. Generic pages
-    re-sort everything by (column, t, l) — every block joins the column
-    its left edge starts in (full-width -> 0), the same geometric rule
-    _cluster_columns applies to lines. Form pages (stable=True) must
-    NOT be re-sorted — their row-major label/value order is the point —
-    so extras are inserted at their top coordinate instead."""
+    re-sort everything by (column, t, l), each block's column given by
+    the same _column rule as lines (full-width -> 0). Form pages
+    (stable=True) must NOT be re-sorted — their row-major label/value
+    order is the point — so extras are inserted at their top coordinate
+    instead."""
     extra = table_blocks + picture_blocks
     if not extra:
         return blocks
@@ -719,12 +715,9 @@ def _interleave_extras(
             )
             blocks.insert(idx, e)
         return blocks
-    mid = page_w / 2
-
-    def key(b: Block) -> tuple:
-        return (1 if b.l > mid * 0.96 and b.r > mid else 0, b.t, b.l)
-
-    return sorted(blocks + extra, key=key)
+    return sorted(
+        blocks + extra, key=lambda b: (_column(b.l, b.r, page_w, rtl), b.t, b.l)
+    )
 
 
 def _cells_block(cells: list[TextCell], page_no: int) -> Block | None:
@@ -1376,9 +1369,17 @@ def build_doc(pages: list[PdfPage], name: str = "doc") -> tuple[Doc, list[float]
         )
         all_blocks.extend(blocks)
         page_heights[page.page_no] = page.height
-    mark_page_furniture(all_blocks, page_heights)
-    all_blocks = merge_continuations(all_blocks)
-    return assemble_doc(all_blocks, name), page_scores
+    return assemble_pages(all_blocks, page_heights, name), page_scores
+
+
+def assemble_pages(
+    blocks: list[Block], page_heights: dict[int, float], name: str = "doc"
+) -> Doc:
+    """Every page's blocks, in reading order -> Doc: the doc-wide
+    layout policy both PDF strategies share (furniture marking, then
+    cross-page continuation merge, then assembly)."""
+    mark_page_furniture(blocks, page_heights)
+    return assemble_doc(merge_continuations(blocks), name)
 
 
 # ------------------------------------- P14: overlap resolution (UnionFind)

@@ -285,7 +285,9 @@ def _decode_page(data: bytes, tags: dict[int, list[int]]) -> tuple[int, int, int
             raise TiffError("tiled planar-2 tiff unsupported")
         tw = one(322)
         th = one(323)
-        if not tw or not th or tw * th > 268_435_456:
+        # a tile far larger than the image it tiles is a decode bomb:
+        # every tile allocates tw x th samples before cropping
+        if not tw or not th or tw * th > min(268_435_456, max(4 * width * height, 1 << 20)):
             raise TiffError("bad tile dimensions")
         offsets = tags.get(324)
         counts = tags.get(325)

@@ -60,7 +60,7 @@ def chunk_pages(
         try:
             raw = payload or b""
             if router:
-                _row, doc = route_to_doc(url, raw)
+                doc = route_to_doc({}, url, raw)
             else:
                 doc = HtmlExtractor(original_url=url).convert(raw)
             if doc is None:

@@ -6,8 +6,11 @@ map and routes each input document
 the route is a column: ``fmt`` is sniffed from leading bytes
 (operators/formats.py, reference document.py:280-338) and one
 ``mapInPandas`` dispatches each row to the matching kernel — html, pdf,
-csv, markdown. Unknown formats become status='skipped' rows, parse
-errors status='failure' (errors-as-data).
+csv, markdown. ``route_to_doc`` only resolves the format and calls one
+parser; unknown formats become status='skipped' rows. Each document
+runs under the batch driver (operators/batch.guarded), which alone
+times it, raises the recursion limit and turns a parse error into a
+status='failure' row (errors-as-data).
 
 One operator, one shuffle (url-hash repartition), any mix of formats:
 exactly what the 10^12-doc crawl table needs, since a WARC sample is
@@ -16,7 +19,7 @@ never single-format.
 
 from __future__ import annotations
 
-import time
+import json
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -28,7 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from docling_spark.operators.batch import error_text, map_docs, raise_recursion_limit, url_hash
+from docling_spark.operators.batch import guarded, map_docs, url_hash
 from docling_spark.operators.formats import sniff_format
 
 CONVERT_SCHEMA = StructType(
@@ -62,7 +65,6 @@ _EXT_HINTS = {
     ".tsv": "csv",
     ".adoc": "asciidoc",
     ".asciidoc": "asciidoc",
-    ".txt": "text",
     ".html": "html",
     ".htm": "html",
     ".xhtml": "html",
@@ -77,157 +79,115 @@ def _ext_of(url: str) -> str:
     return path[dot:].lower() if dot > slash else ""
 
 
-def _ended(base: dict, status: str, error: str, t0: float, **fields) -> dict:
-    """A complete result row for a document that yields no Doc."""
-    return {
-        **base,
-        **fields,
-        "status": status,
-        "error": error,
-        "md": None,
-        "txt": None,
-        "n_nodes": 0,
-        "t_sec": time.perf_counter() - t0,
-    }
+def _pages_doc(row: dict, url: str, pages) -> "object":
+    """Page-shaped routes (pdf, image, METS) -> Doc via the shared PDF
+    layout path; records the OCR need from bitmap coverage (P10)."""
+    from docling_spark.kernels.pdf_kernel import bitmap_coverage
+    from docling_spark.kernels.pdf_layout import build_doc
+
+    doc, _scores = build_doc(pages, name=url)
+    row["ocr_needed"] = max(bitmap_coverage(p) for p in pages)
+    return doc
 
 
-def route_to_doc(url: str, payload: bytes) -> tuple[dict, "object | None"]:
-    """S4 dispatch without exports: (row, doc).
+def route_to_doc(row: dict, url: str, payload: bytes) -> "object | None":
+    """S4 dispatch without exports: the parsed Doc IR, or None.
 
-    ``doc`` is the parsed Doc IR for successful routes; for skip and
-    failure outcomes ``doc`` is None and ``row`` is already a COMPLETE
-    result row. Shared by convert_one (full exports) and the
-    multi-format chunker (which wants the Doc, not the exports)."""
+    ``fmt`` (and, for page formats, ``ocr_needed``) is written into the
+    caller's ``row`` as soon as it is known, so a failure row built from
+    ``row`` keeps it. Skip outcomes and unparseable audio set
+    ``row['status']``/``row['error']`` and return None; parse errors
+    propagate to the caller's driver. Shared by convert_one (full
+    exports) and the multi-format chunker (which wants the Doc)."""
     from docling_spark.kernels.csv_kernel import parse_csv
     from docling_spark.kernels.docx_kernel import parse_docx
     from docling_spark.kernels.html_kernel import HtmlExtractor
     from docling_spark.kernels.md_kernel import parse_markdown
     from docling_spark.kernels.pdf_kernel import parse_pdf
-    from docling_spark.kernels.pdf_layout import build_doc
     from docling_spark.kernels.pptx_kernel import parse_pptx
     from docling_spark.kernels.xlsx_kernel import parse_xlsx
     from docling_spark.operators.formats import office_subformat
 
-    t0 = time.perf_counter()
     payload = payload or b""
     fmt = sniff_format(payload[:8192])
     if fmt in _TEXT_FAMILY:
-        hint = _EXT_HINTS.get(_ext_of(url))
-        if hint is not None and hint != "text":
-            fmt = hint
-    base = {
-        "url": url,
-        "fmt": fmt,
-        "bytes_in": len(payload),
-        "n_chunks": 0,
-        "doctags": None,
-        "json": None,
-        "ocr_needed": None,
-    }
-    try:
-        raise_recursion_limit()
-        if fmt == "html":
-            doc = HtmlExtractor(original_url=url).convert(payload)
-        elif fmt in ("xml", "xml_jats"):
-            from docling_spark.kernels.jats_kernel import parse_jats
+        fmt = _EXT_HINTS.get(_ext_of(url), fmt)
+    row["fmt"] = fmt
+    if fmt in ("html", "xml"):
+        return HtmlExtractor(original_url=url).convert(payload)
+    if fmt == "xml_jats":
+        from docling_spark.kernels.jats_kernel import parse_jats
 
-            if fmt == "xml_jats" or b"<article" in payload[:8192]:
-                base["fmt"] = "xml_jats"
-                doc = parse_jats(payload, name=url)
-            else:
-                doc = HtmlExtractor(original_url=url).convert(payload)
-        elif fmt == "xml_uspto":
-            from docling_spark.kernels.uspto_kernel import parse_uspto
+        return parse_jats(payload, name=url)
+    if fmt == "xml_uspto":
+        from docling_spark.kernels.uspto_kernel import parse_uspto
 
-            doc = parse_uspto(payload, name=url)
-        elif fmt == "gzip":
-            # gzip container: METS/GBS book archives route through the
-            # shared PDF layout path; other gzips stay skipped
-            from docling_spark.kernels.mets_kernel import MetsError, parse_mets_gbs
+        return parse_uspto(payload, name=url)
+    if fmt == "gzip":
+        # gzip container: METS/GBS book archives route through the
+        # shared PDF layout path; other gzips stay skipped
+        from docling_spark.kernels.mets_kernel import book_pages
 
-            try:
-                from docling_spark.kernels.pdf_kernel import bitmap_coverage
+        row["fmt"] = "mets_gbs"
+        pages, why = book_pages(payload)
+        if why is not None:
+            msg = f"gzip is not a METS/GBS archive: {why}"
+            row.update(fmt="gzip", status="skipped", error=msg)
+            return None
+        return _pages_doc(row, url, pages)
+    if fmt == "pdf":
+        return _pages_doc(row, url, parse_pdf(payload))
+    if fmt == "image":
+        # P7: image adapts into the PDF path (frames -> pages with a
+        # full-page bitmap rect); P10 scores the OCR need. No OCR
+        # engine exists here, so the text layer is empty by design.
+        from docling_spark.kernels.image_kernel import image_to_pdf_pages
 
-                base["fmt"] = "mets_gbs"
-                pages = parse_mets_gbs(payload)
-                doc, _scores = build_doc(pages, name=url)
-                base["ocr_needed"] = max(bitmap_coverage(p) for p in pages)
-            except MetsError as me:
-                msg = f"gzip is not a METS/GBS archive: {me}"
-                return _ended(base, "skipped", msg, t0, fmt="gzip"), None
-        elif fmt == "pdf":
-            from docling_spark.kernels.pdf_kernel import bitmap_coverage
+        return _pages_doc(row, url, image_to_pdf_pages(payload))
+    if fmt == "office":
+        sub = row["fmt"] = office_subformat(payload)
+        parse = {"docx": parse_docx, "xlsx": parse_xlsx, "pptx": parse_pptx}.get(sub)
+        if parse is None:
+            row.update(status="skipped", error=f"unsupported office container: {sub}")
+            return None
+        return parse(payload, name=url)
+    if fmt == "csv":
+        return parse_csv(payload, name=url)
+    if fmt == "json_docling":
+        # B10: lossless DoclingDocument JSON -> node pool -> re-export
+        from docling_spark.kernels.docjson import doc_from_dict
 
-            pages = parse_pdf(payload)
-            doc, _scores = build_doc(pages, name=url)
-            base["ocr_needed"] = max(bitmap_coverage(p) for p in pages)
-        elif fmt == "image":
-            # P7: image adapts into the PDF path (frames -> pages with a
-            # full-page bitmap rect); P10 scores the OCR need. No OCR
-            # engine exists here, so the text layer is empty by design.
-            from docling_spark.kernels.image_kernel import image_to_pdf_pages
-            from docling_spark.kernels.pdf_kernel import bitmap_coverage
+        return doc_from_dict(json.loads(payload.decode("utf-8")))
+    if fmt == "audio":
+        # B11 NoOp/audio: no ASR runtime in this sandbox, so the text
+        # layer is empty by design (the reference's _NoOpBackend also
+        # emits an empty doc and relies on the ASR pipeline to fill
+        # it, docling/backend/noop_backend.py). Success requires the
+        # container headers to actually parse — a corrupt payload is
+        # a failure row, not a silent empty success.
+        from docling_spark.kernels.doc_model import Doc
+        from docling_spark.operators.multimodal import (
+            parse_mp3_header,
+            parse_wav_header,
+        )
 
-            pages = image_to_pdf_pages(payload)
-            doc, _scores = build_doc(pages, name=url)
-            base["ocr_needed"] = max(bitmap_coverage(p) for p in pages)
-        elif fmt == "office":
-            sub = office_subformat(payload)
-            base["fmt"] = sub
-            if sub == "docx":
-                doc = parse_docx(payload, name=url)
-            elif sub == "xlsx":
-                doc = parse_xlsx(payload, name=url)
-            elif sub == "pptx":
-                doc = parse_pptx(payload, name=url)
-            else:
-                msg = f"unsupported office container: {sub}"
-                return _ended(base, "skipped", msg, t0), None
-        elif fmt == "csv":
-            doc = parse_csv(payload, name=url)
-        elif fmt == "json_docling":
-            # B10: lossless DoclingDocument JSON -> node pool -> re-export
-            import json as _json
+        if (parse_wav_header(payload) or parse_mp3_header(payload)) is None:
+            row.update(status="failure", error="unparseable audio container")
+            return None
+        return Doc(url)
+    if fmt in ("text", "md", "asciidoc"):
+        # plain text, markdown, or asciidoc (title/section markers)
+        head = payload[:2048].decode("utf-8", errors="replace")
+        if fmt == "asciidoc" or (
+            fmt == "text" and (head.startswith("= ") or "\n== " in head)
+        ):
+            from docling_spark.kernels.asciidoc_kernel import parse_asciidoc
 
-            from docling_spark.kernels.docjson import doc_from_dict
-
-            doc = doc_from_dict(_json.loads(payload.decode("utf-8")))
-        elif fmt == "audio":
-            # B11 NoOp/audio: no ASR runtime in this sandbox, so the text
-            # layer is empty by design (the reference's _NoOpBackend also
-            # emits an empty doc and relies on the ASR pipeline to fill
-            # it, docling/backend/noop_backend.py). Success requires the
-            # container headers to actually parse — a corrupt payload is
-            # a failure row, not a silent empty success.
-            from docling_spark.operators.multimodal import (
-                parse_mp3_header,
-                parse_wav_header,
-            )
-
-            meta = parse_wav_header(payload) or parse_mp3_header(payload)
-            if meta is None:
-                return _ended(base, "failure", "unparseable audio container", t0), None
-            from docling_spark.kernels.doc_model import Doc
-
-            doc = Doc(url)
-        elif fmt in ("text", "md", "asciidoc"):
-            # plain text, markdown, or asciidoc (title/section markers)
-            head = payload[:2048].decode("utf-8", errors="replace")
-            if fmt == "asciidoc" or (
-                fmt == "text" and (head.startswith("= ") or "\n== " in head)
-            ):
-                from docling_spark.kernels.asciidoc_kernel import parse_asciidoc
-
-                base["fmt"] = "asciidoc"
-                doc = parse_asciidoc(payload, name=url)
-            else:
-                doc = parse_markdown(payload, name=url)
-        else:
-            return _ended(base, "skipped", f"unsupported format: {fmt}", t0), None
-        base["t_sec"] = time.perf_counter() - t0
-        return base, doc
-    except Exception as e:  # noqa: BLE001 — errors become data
-        return _ended(base, "failure", error_text(e), t0), None
+            row["fmt"] = "asciidoc"
+            return parse_asciidoc(payload, name=url)
+        return parse_markdown(payload, name=url)
+    row.update(status="skipped", error=f"unsupported format: {fmt}")
+    return None
 
 
 def convert_one(
@@ -238,44 +198,54 @@ def convert_one(
 ) -> dict:
     """Route one document through the matching kernel; never raises.
 
-    ``want_json`` adds the lossless DoclingDocument JSON (E4,
-    kernels/docjson.export_to_dict) — off by default because the node
-    pool is the bulkiest export and most pipelines only read md/txt."""
-    t0 = time.perf_counter()
-    base, doc = route_to_doc(url, payload or b"")
-    if doc is None:
-        return base
-    try:
+    Runs under the batch driver (``batch.guarded``), which times the
+    document and turns an exception into a failure row built from the
+    same ``row`` the router records ``fmt`` into. ``want_json`` adds the
+    lossless DoclingDocument JSON (E4, kernels/docjson.export_to_dict)
+    — off by default because the node pool is the bulkiest export and
+    most pipelines only read md/txt."""
+    payload = payload or b""
+    row = {
+        "url": url,
+        "bytes_in": len(payload),
+        "md": None,
+        "txt": None,
+        "n_nodes": 0,
+        "n_chunks": 0,
+        "doctags": None,
+        "json": None,
+        "ocr_needed": None,
+    }
+
+    def kernel(url, payload):
         from docling_spark.kernels.chunker import hierarchical_chunks
         from docling_spark.kernels.doctags import export_to_doctags
         from docling_spark.kernels.markdown import to_markdown
         from docling_spark.kernels.textout import to_text
 
-        chunks = hierarchical_chunks(doc)
+        doc = route_to_doc(row, url, payload)
+        if doc is None:
+            return row
         json_out = None
         if want_json:
-            import json as _json2
-
             from docling_spark.kernels.docjson import export_to_dict
 
-            json_out = _json2.dumps(
-                export_to_dict(doc, filename=url, raw=payload or b""),
-                ensure_ascii=False,
+            json_out = json.dumps(
+                export_to_dict(doc, filename=url, raw=payload), ensure_ascii=False
             )
         return {
-            **base,
+            **row,
             "status": "success",
             "error": None,
             "md": to_markdown(doc),
             "txt": to_text(doc),
             "n_nodes": len(doc.nodes),
-            "n_chunks": len(chunks),
+            "n_chunks": len(hierarchical_chunks(doc)),
             "doctags": export_to_doctags(doc) if want_doctags else None,
             "json": json_out,
-            "t_sec": time.perf_counter() - t0,
         }
-    except Exception as e:  # noqa: BLE001 — errors become data
-        return _ended(base, "failure", error_text(e), t0)
+
+    return guarded(kernel, row, url, payload)
 
 
 def convert_any(

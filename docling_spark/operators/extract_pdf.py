@@ -239,13 +239,7 @@ def assemble_from_pages(page_rows: DataFrame) -> DataFrame:
 
 def _assemble(url: str, pages) -> dict:
     from docling_spark.kernels.markdown import to_markdown
-    from docling_spark.kernels.pdf_layout import (
-        Block,
-        assemble_doc,
-        mark_page_furniture,
-        merge_continuations,
-        table_from_json,
-    )
+    from docling_spark.kernels.pdf_layout import Block, assemble_pages, table_from_json
     from docling_spark.kernels.textout import to_text
 
     statuses = {p["status"] for p in pages}
@@ -269,9 +263,7 @@ def _assemble(url: str, pages) -> dict:
         for b in p["blocks"]
     ]
     page_heights = {p["page_no"]: p["height"] for p in pages if p["height"]}
-    mark_page_furniture(blocks, page_heights)
-    blocks = merge_continuations(blocks)
-    doc = assemble_doc(blocks, name=url)
+    doc = assemble_pages(blocks, page_heights, name=url)
     scores = [p["parse_score"] for p in pages if p["parse_score"] is not None]
     return {
         "status": "partial_success" if "failure" in statuses else "success",
@@ -454,7 +446,7 @@ def _multimodal_rows_for_doc(
             }
         )
         if image_scale is not None:
-            # P5: deterministic geometry raster (pdf_kernel.page_png),
+            # P5: deterministic geometry raster (pdf_kernel.rasterize_page),
             # the reference attaches page.image here (export.py:107)
             from docling_spark.kernels.pdf_kernel import (
                 encode_png_gray,

@@ -60,29 +60,6 @@ def brute_force_topk(
     )
 
 
-def hyperplane_lsh_buckets(df: DataFrame, n_bits: int = 12, seed: int = 42) -> DataFrame:
-    """Assign each vector a random-hyperplane LSH bucket (n_bits-bit
-    signature). Deterministic pseudo-hyperplanes: component j of plane b
-    derives from xxhash64(b, j, seed) mapped to {-1, +1} — no driver-side
-    randomness, identical across runs and cluster sizes."""
-    e = _with_norm(df)
-    dim = "size(v)"
-    # bit b = sign of dot(v, plane_b); plane_b[j] = +-1 from hash(b, j, seed)
-    bit = (
-        f"transform(sequence(0, {n_bits - 1}), b -> "
-        f"case when aggregate(zip_with(v, sequence(0, {dim} - 1), "
-        f"(x, j) -> x * (case when xxhash64(b, j, {seed}) % 2 = 0 then 1.0d else -1.0d end)), "
-        f"0.0d, (acc, x) -> acc + x) > 0 then 1L else 0L end)"
-    )
-    return e.withColumn(
-        "bucket",
-        F.expr(
-            f"aggregate(zip_with({bit}, sequence(0, {n_bits - 1}), "
-            f"(x, b) -> shiftleft(x, cast(b as int))), 0L, (acc, x) -> acc | x)"
-        ),
-    ).select("vec_id", "v", "norm", "bucket")
-
-
 def hyperplane_lsh_bands(
     df: DataFrame, n_bands: int = 4, bits_per_band: int = 8, seed: int = 42
 ) -> DataFrame:
@@ -94,8 +71,10 @@ def hyperplane_lsh_bands(
     agreement p >= 0.955) the 4x8 default catches a pair with
     probability 1 - (1 - p^8)^4 > 0.97; exact-direction duplicates
     (scaled copies) hash identically in every band, so recall for those
-    is 1.0 by construction. Planes are the same deterministic seeded
-    family as :func:`hyperplane_lsh_buckets`.
+    is 1.0 by construction. Planes are deterministic pseudo-hyperplanes:
+    component j of plane b derives from xxhash64(b, j, seed) mapped to
+    {-1, +1} — no driver-side randomness, identical across runs and
+    cluster sizes.
     """
     e = _with_norm(df)
     total = n_bands * bits_per_band

@@ -2,27 +2,20 @@
 efficiency >= 0.8 from N to 4N executors).
 
 Sandbox proxy: the same extraction job on the same input at local[N]
-and local[4N], headline N=4 -> 4N=16 (both levels leave hardware
-threads for driver/GC/OS like real executors do; 8->32 is also
-reported but understates scaling on a 32-core host, where level 32
-must donate task cores to the driver). Every level runs
-``spark.task.cpus=1``
-with GC parallelism scaled to the level (ParallelGCThreads=cpus/2,
-floor 4) — the round-5 interleaved A/B on the 20k corpus showed the
-old uniform ``task.cpus=2`` + GC=8 tuning was leaving ~40% of level-32
-throughput on the table (434 -> 713 docs/s best-of-interleaved) once
-the extraction kernel got faster: the Python worker, not the JVM
-thread, is now the bottleneck, so halving task slots just idles
-cores, and 8 GC threads throttle a 32-core heap. The config FORMULA
-is identical at every level — resolved per level exactly as a real
-executor JVM's ergonomics scale GC threads with its core count — so
-the ratio remains a pure cores-scaling measurement.
+and local[4N], with the levels derived from the cores this process may
+run on (C): N = C/4 -> 4N = C is the headline pair, C/2 -> C is also
+reported (on a 4-core host: 1 -> 4 and 2 -> 4). At level C the driver,
+GC and OS share the task cores, so the efficiency understates what
+separate executors would reach. Sessions come from bench.py's
+``build_spark``: ``spark.task.cpus=1`` with GC parallelism scaled to
+the level, the same config FORMULA at every level, so the ratio
+remains a pure cores-scaling measurement.
 
 Protocol (matches BASELINE.md): deterministic pages corpus cached to
-parquet; per level: spawn session -> warm JVM codegen + all Python
-workers -> best of REPS timed runs of scan -> repartition(xxhash64
-(url)) -> mapInPandas extract -> status rollup. Efficiency =
-(docs_per_sec@4N / docs_per_sec@N) / 4.
+parquet (bench.py's ``pages_parquet``); per level: spawn session ->
+warm JVM codegen + all Python workers -> best of REPS timed runs of
+scan -> repartition(xxhash64(url)) -> mapInPandas extract -> status
+rollup. Efficiency = (docs_per_sec@C / docs_per_sec@N) / (C / N).
 
 Run: python jobs/scaling_bench.py [n_pages] (default 10000, sf0.1)
 """
@@ -37,51 +30,13 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CACHE_ROOT = os.environ.get("SPARK_GRAFT_CACHE", "/tmp/docling_spark_bench")
+from bench import SF_DIR, available_cpus, build_spark, pages_parquet, pin_affinity  # noqa: E402
+
 REPS = int(os.environ.get("SPARK_GRAFT_REPS", "2"))
-def gc_opts(cpus: int) -> str:
-    """GC parallelism scaled to the level, like executor-JVM ergonomics
-    (G1 sizes its GC workers from the visible core count)."""
-    return (
-        f"-XX:ParallelGCThreads={max(4, cpus // 2)} "
-        f"-XX:ConcGCThreads={max(2, cpus // 8)}"
-    )
-
-
-def session(cpus: int):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"docling-scaling-{cpus}")
-        .config("spark.sql.shuffle.partitions", str(2 * cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.driver.extraJavaOptions", gc_opts(cpus))
-        .config("spark.task.cpus", "1")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-
-
-def ensure_corpus(n_pages: int) -> str:
-    tag = SF_DIR.rstrip("/").split("/")[-1]
-    path = f"{CACHE_ROOT}/pages_{tag}_{n_pages}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        spark = session(16)
-        spark.sparkContext.setLogLevel("ERROR")
-        from docling_spark.sources.pages import synthesize_pages
-
-        synthesize_pages(spark, SF_DIR, n_pages=n_pages).repartition(64).write.mode(
-            "overwrite"
-        ).parquet(path)
-        spark.stop()
-    return path
 
 
 def measure(cpus: int, path: str, n_pages: int) -> float:
-    spark = session(cpus)
+    spark = build_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     from docling_spark.operators.extract import extract_pages
     from docling_spark.sources.pages import synthesize_pages
@@ -105,11 +60,11 @@ def measure(cpus: int, path: str, n_pages: int) -> float:
 def _run_level(cpus: int, path: str, n_pages: int) -> float:
     """One parallelism level in an isolated, CPU-PINNED subprocess.
 
-    Affinity is the honest part of the protocol: local[8] on an idle
-    32-core host otherwise runs its 8 threads on whichever cores boost
-    highest with 24 cores idle and zero memory-bandwidth contention —
-    advantages a real 8-core executor never has — which inflates the
-    N-level baseline and understates N->4N efficiency. Pinning the
+    Affinity is the honest part of the protocol: local[N] on an idle
+    host otherwise runs its N threads on whichever cores boost highest
+    with the rest idle and no memory-bandwidth contention — advantages
+    a real N-core executor never has — which inflates the N-level
+    baseline and understates N->4N efficiency. Pinning the
     whole process tree (Spark JVM + python workers inherit the mask)
     to exactly ``cpus`` cores models separate cluster sizes on one box.
     """
@@ -134,37 +89,33 @@ def main() -> None:
         ap.add_argument("--path", required=True)
         ap.add_argument("--n-pages", type=int, required=True)
         args = ap.parse_args()
-        try:
-            os.sched_setaffinity(0, set(range(args.level)))
-        except (AttributeError, OSError):
-            pass  # non-linux: unpinned fallback
+        pin_affinity(args.level)
         print(measure(args.level, args.path, args.n_pages))
         return
 
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 10000
-    path = ensure_corpus(n_pages)
+    top = available_cpus()
+    spark = build_spark(top)
+    spark.sparkContext.setLogLevel("ERROR")
+    path = pages_parquet(spark, SF_DIR, n_pages)
+    spark.stop()
     out: dict = {"n_pages": n_pages, "sf": SF_DIR.rstrip("/").split("/")[-1]}
     levels = {}
-    for cpus in (4, 8, 32, 16):
+    for cpus in sorted({max(1, top // 4), max(1, top // 2), top}):
         levels[cpus] = round(_run_level(cpus, path, n_pages), 1)
         print(f"# local[{cpus}] pinned to {cpus} cores: {levels[cpus]} docs/s",
               file=sys.stderr, flush=True)
     out["docs_per_sec"] = {str(k): v for k, v in levels.items()}
-    out["efficiency_4_to_16"] = round(levels[16] / (4 * levels[4]), 3)
-    out["efficiency_8_to_32"] = round(levels[32] / (4 * levels[8]), 3)
-    out["efficiency_8_to_16"] = round(levels[16] / (2 * levels[8]), 3)
-    # HEADLINE pair 4->16: both levels leave spare hardware threads for
-    # the driver + GC + OS, like real executors that never share a
-    # socket with the driver. local[32] on a 32-core HOST cannot model
-    # a 4N-executor CLUSTER: the driver and GC must steal task cores
-    # (measured per-core throughput @8/@16/@32 = 32/38/25 docs/s/core
-    # — flat until the box is fully subscribed, then minus ~30%), so
-    # 8->32 understates the job's true scaling; it is still reported.
-    out["headline_pair"] = "4->16"
-    out["efficiency"] = out["efficiency_4_to_16"]
+    for n in levels:
+        if n < top:
+            out[f"efficiency_{n}_to_{top}"] = round(levels[top] * n / (top * levels[n]), 3)
+    n = min(levels)
+    out["headline_pair"] = f"{n}->{top}"
+    out["efficiency"] = out.get(f"efficiency_{n}_to_{top}")
     out["protocol"] = (
         "per-level subprocess pinned via sched_setaffinity; "
-        f"best of {REPS} steady-state repeats per level"
+        f"best of {REPS} steady-state repeats per level; "
+        "the driver shares the cores of every level"
     )
     print(json.dumps(out))
 

@@ -17,6 +17,9 @@ SCANNED = sorted((PACKAGE / "operators").glob("*.py")) + sorted(
 # batch-vectorized model inference and synthetic sources are not
 # per-document operators
 MAP_IN_PANDAS_EXEMPT = {("enrich.py", "enrich_spans"), ("multimodal.py", "synth_media")}
+# operators whose catch-all is their output contract: a bad document
+# yields no chunk rows, an undecodable media item a decoded=false row
+CATCH_ALL_EXEMPT = {("chunks.py", "chunk_pages"), ("multimodal.py", "extract_media_features")}
 
 DEEP = "b'<div>' * 3000 + b'deep' + b'</div>' * 3000"
 
@@ -62,6 +65,34 @@ def _calls(path: Path, attr: str):
                 and node.func.attr == attr
             ):
                 yield getattr(top, "name", "<module>"), node
+
+
+def _timers_and_catch_alls(path: Path):
+    """(top-level function name, what) for every ``.perf_counter``
+    reference and every ``except Exception`` handler."""
+    for top in ast.parse(path.read_text()).body:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Attribute) and node.attr == "perf_counter":
+                yield getattr(top, "name", "<module>"), "perf_counter"
+            elif isinstance(node, ast.ExceptHandler) and (
+                node.type is None or ast.unparse(node.type) in ("Exception", "BaseException")
+            ):
+                yield getattr(top, "name", "<module>"), "except Exception"
+
+
+def test_document_timing_and_catch_alls_only_in_batch_py():
+    offenders = [
+        (p.name, fn, what)
+        for p in SCANNED
+        if p != DRIVER
+        for fn, what in _timers_and_catch_alls(p)
+        if what == "perf_counter" or (p.name, fn) not in CATCH_ALL_EXEMPT
+    ]
+    assert offenders == []
+    assert {what for _, what in _timers_and_catch_alls(DRIVER)} == {
+        "perf_counter",
+        "except Exception",
+    }
 
 
 @pytest.mark.parametrize(

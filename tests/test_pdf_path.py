@@ -970,3 +970,19 @@ def test_form_reblock_line_granularity():
         few.append(cell(f"l{i}", 60, y, 280))
         few.append(cell(f"r{i}", 320, y, 540))
     assert _form_reblock(few, med_h, page_no=1) is None
+
+
+def test_interleave_extras_keeps_the_rtl_column_order():
+    """On an RTL two-column page the right column is primary: a table
+    in the left column sorts after the right column's text, by the same
+    column rule the page's lines use."""
+    from docling_spark.kernels.pdf_layout import Block, _interleave_extras
+
+    def block(kind, text, l, r, t):
+        return Block(kind=kind, text=text, level=0, page_no=1, l=l, t=t, r=r, b=t + 40, size=10.0)
+
+    right = block("text", "right column", 320, 580, 100)
+    left = block("text", "left column", 20, 280, 100)
+    table = block("table", "", 20, 280, 300)
+    out = _interleave_extras([right, left], [table], [], stable=False, page_w=600, rtl=True)
+    assert [b.text or b.kind for b in out] == ["right column", "left column", "table"]

@@ -3,6 +3,9 @@ LZW early/late width-change variants, the reference's real multi-page
 fixture, and the typed-error totality contract."""
 
 import os
+import struct
+import time
+import tracemalloc
 
 import numpy as np
 import pytest
@@ -213,3 +216,26 @@ def test_tiled_totality_on_garbage():
             assert 0 < w and 0 < h and len(s) == w * h * c
         except TiffError:
             pass  # typed — never struct.error/IndexError/KeyError
+
+
+def test_tile_far_beyond_the_image_is_rejected_before_decoding():
+    """A 1x1 image declaring 16384x16384 tiles would allocate ~268 MB
+    per tile; the tile guard is bounded by the image size."""
+    data = bytearray(encode_tiff([(1, 1, 1, b"\x80")], tile_size=16))
+    (ifd,) = struct.unpack_from("<I", data, 4)
+    (n,) = struct.unpack_from("<H", data, ifd)
+    for k in range(n):
+        entry = ifd + 2 + 12 * k
+        tag, typ = struct.unpack_from("<HH", data, entry)
+        if tag in (322, 323):
+            struct.pack_into("<H" if typ == 3 else "<I", data, entry + 8, 16384)
+    tracemalloc.start()
+    t0 = time.perf_counter()
+    try:
+        with pytest.raises(TiffError, match="bad tile dimensions"):
+            decode_tiff(bytes(data))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert time.perf_counter() - t0 < 1.0
+    assert peak < 64 << 20
