@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import re
 
-from .doc_model import CAPTION, Doc, TableCellData, TableDataIR
+from .doc_model import CAPTION, Doc, TableDataIR
 
 _TITLE_RE = re.compile(r"^= ")
 _SECTION_RE = re.compile(r"^(=+)\s+(.*)")
@@ -63,22 +63,6 @@ def parse_asciidoc(data: bytes, name: str = "doc") -> Doc:
             )
             text_data = []
 
-    def grid_table(rows: list[list[str]]) -> TableDataIR:
-        num_cols = max(len(r) for r in rows)
-        cells = [
-            TableCellData(
-                text=t,
-                start_row=ri,
-                end_row=ri + 1,
-                start_col=ci,
-                end_col=ci + 1,
-                column_header=ri == 0,
-            )
-            for ri, row in enumerate(rows)
-            for ci, t in enumerate(row)
-        ]
-        return TableDataIR(len(rows), num_cols, cells)
-
     def flush_table() -> None:
         nonlocal table_data, caption_data, in_table
         if table_data:
@@ -88,7 +72,7 @@ def parse_asciidoc(data: bytes, name: str = "doc") -> Doc:
                     label=CAPTION, text=" ".join(caption_data)
                 )
                 caption_data.clear()
-            node = doc.add_table(grid_table(table_data), parent=current_parent())
+            node = doc.add_table(TableDataIR.from_rows(table_data), parent=current_parent())
             if caption is not None:
                 node.caption_id = caption.node_id
         in_table = False

@@ -11,7 +11,7 @@ from __future__ import annotations
 import csv
 import io
 
-from .doc_model import Doc, TableCellData, TableDataIR
+from .doc_model import Doc, TableDataIR
 
 
 class CsvError(Exception):
@@ -42,22 +42,5 @@ def parse_csv(data: bytes, name: str = "doc") -> Doc:
 
     doc = Doc(name)
     if rows:
-        num_rows = len(rows)
-        num_cols = max(len(r) for r in rows)
-        cells = [
-            TableCellData(
-                text=str(value),
-                row_span=1,
-                col_span=1,
-                start_row=ri,
-                end_row=ri + 1,
-                start_col=ci,
-                end_col=ci + 1,
-                column_header=ri == 0,
-                row_header=False,
-            )
-            for ri, row in enumerate(rows)
-            for ci, value in enumerate(row)
-        ]
-        doc.add_table(TableDataIR(num_rows, num_cols, cells))
+        doc.add_table(TableDataIR.from_rows(rows))
     return doc

@@ -80,6 +80,23 @@ class TableDataIR:
     num_cols: int
     cells: list[TableCellData] = field(default_factory=list)
 
+    @classmethod
+    def from_rows(cls, rows: list[list[str]]) -> "TableDataIR":
+        """A grid of 1x1 cells, row 0 the column header (csv/md/adoc)."""
+        cells = [
+            TableCellData(
+                text=t,
+                start_row=ri,
+                end_row=ri + 1,
+                start_col=ci,
+                end_col=ci + 1,
+                column_header=ri == 0,
+            )
+            for ri, row in enumerate(rows)
+            for ci, t in enumerate(row)
+        ]
+        return cls(len(rows), max(len(r) for r in rows), cells)
+
     def grid(self) -> list[list[str]]:
         """Occupancy grid of cell texts (empty string where no cell)."""
         g = [["" for _ in range(self.num_cols)] for _ in range(self.num_rows)]

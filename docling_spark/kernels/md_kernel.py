@@ -29,7 +29,7 @@ from __future__ import annotations
 import copy as _copy
 import re
 
-from .doc_model import BODY, Doc, TableCellData, TableDataIR
+from .doc_model import BODY, Doc, TableDataIR
 
 _HTML_BLOCK_RE = re.compile(r"^\s*<(!--|/?[a-zA-Z][^>]*)>?")
 _COMMENT_RE = re.compile(r"<!--.*?-->", re.S)
@@ -378,22 +378,7 @@ def parse_markdown(data: bytes, name: str = "doc") -> Doc:
             while i < n and "|" in lines[i] and lines[i].strip():
                 rows.append(_split_table_row(lines[i]))
                 i += 1
-            num_cols = max(len(r) for r in rows)
-            cells = [
-                TableCellData(
-                    text=v,
-                    start_row=ri,
-                    end_row=ri + 1,
-                    start_col=ci,
-                    end_col=ci + 1,
-                    column_header=ri == 0,
-                )
-                for ri, row in enumerate(rows)
-                for ci, v in enumerate(row)
-            ]
-            doc.add_table(
-                TableDataIR(len(rows), num_cols, cells), parent=current_parent()
-            )
+            doc.add_table(TableDataIR.from_rows(rows), parent=current_parent())
             continue
 
         if stripped.startswith(">"):

@@ -257,16 +257,20 @@ def rate_text_quality(text: str) -> float:
     return max(1.0 - penalty, 0.0)
 
 
-def page_parse_score(cell_texts: list[str]) -> float:
-    """10th-percentile of per-cell scores (page_preprocessing_model.py:80-87),
-    with numpy's linear-interpolation quantile."""
-    if not cell_texts:
+def quantile10(values: list[float]) -> float:
+    """numpy's linear-interpolation 10th percentile; NaN when empty."""
+    vals = sorted(values)
+    if not vals:
         return float("nan")
-    scores = sorted(rate_text_quality(t) for t in cell_texts)
-    k = (len(scores) - 1) * 0.10
+    k = (len(vals) - 1) * 0.10
     lo = int(k)
-    hi = min(lo + 1, len(scores) - 1)
-    return scores[lo] + (scores[hi] - scores[lo]) * (k - lo)
+    hi = min(lo + 1, len(vals) - 1)
+    return vals[lo] + (vals[hi] - vals[lo]) * (k - lo)
+
+
+def page_parse_score(cell_texts: list[str]) -> float:
+    """10th-percentile of per-cell scores (page_preprocessing_model.py:80-87)."""
+    return quantile10([rate_text_quality(t) for t in cell_texts])
 
 
 # ------------------------------------------------------- text sanitizing
@@ -618,26 +622,9 @@ def page_blocks(page: PdfPage) -> list[Block]:
     cur: list[TextCell] = []
 
     def flush() -> None:
-        if not cur:
-            return
-        text = sanitize_lines([c.text for c in cur])
-        if text:
-            blocks.append(
-                Block(
-                    kind="text",
-                    text=text,
-                    level=0,
-                    page_no=page.page_no,
-                    l=min(c.l for c in cur),
-                    t=min(c.t for c in cur),
-                    r=max(c.r for c in cur),
-                    b=max(c.b for c in cur),
-                    size=max(c.size for c in cur),
-                    parse_score=page_parse_score([c.text for c in cur]),
-                    bold=sum(len(c.text) for c in cur if c.bold) * 2
-                    > (sum(len(c.text) for c in cur) or 1),
-                )
-            )
+        block = _cells_block(cur, page.page_no) if cur else None
+        if block is not None:
+            blocks.append(block)
         cur.clear()
 
     prev_idx = None
@@ -721,8 +708,8 @@ def _interleave_extras(
 
 
 def _cells_block(cells: list[TextCell], page_no: int) -> Block | None:
-    """One Block from a group of line cells (same construction as the
-    generic merge's flush())."""
+    """One text Block from a group of line cells; None when the cells
+    sanitize to no text."""
     text = sanitize_lines([c.text for c in cells])
     if not text:
         return None
@@ -1072,47 +1059,6 @@ def classify_blocks(blocks: list[Block]) -> None:
                     b.level -= 1
 
 
-def table_to_json(table: TableDataIR | None) -> str | None:
-    """Compact JSON for shipping a reconstructed grid through a Spark
-    shuffle (the paged strategy serializes blocks into Arrow structs)."""
-    import json
-
-    if table is None:
-        return None
-    return json.dumps(
-        {
-            "nr": table.num_rows,
-            "nc": table.num_cols,
-            "cells": [
-                [c.text, c.start_row, c.end_row, c.start_col, c.end_col,
-                 c.row_span, c.col_span, c.column_header, c.row_header]
-                for c in table.cells
-            ],
-        },
-        ensure_ascii=False,
-    )
-
-
-def table_from_json(payload: str | None) -> TableDataIR | None:
-    import json
-
-    if not payload:
-        return None
-    d = json.loads(payload)
-    return TableDataIR(
-        d["nr"],
-        d["nc"],
-        [
-            TableCellData(
-                text=c[0], start_row=c[1], end_row=c[2], start_col=c[3],
-                end_col=c[4], row_span=c[5], col_span=c[6],
-                column_header=c[7], row_header=c[8],
-            )
-            for c in d["cells"]
-        ],
-    )
-
-
 # ---------------------- page-header/footer furniture (boilerplate strip)
 #
 # The reference's layout model labels running heads, folios and
@@ -1356,20 +1302,25 @@ def assemble_doc(
     return doc
 
 
-def build_doc(pages: list[PdfPage], name: str = "doc") -> tuple[Doc, list[float]]:
+def page_score(page: PdfPage) -> float | None:
+    """The page's parse score; None for a page with no text cells."""
+    return page_parse_score([c.text for c in page.cells]) if page.cells else None
+
+
+def doc_blocks(pages: list[PdfPage]) -> tuple[list[Block], dict[int, float]]:
+    """The page pass: every page's blocks, pages ascending, and each
+    page's height (the input of mark_page_furniture)."""
+    blocks: list[Block] = []
+    for page in sorted(pages, key=lambda p: p.page_no):
+        blocks.extend(page_blocks(page))
+    return blocks, {p.page_no: p.height for p in pages}
+
+
+def build_doc(pages: list[PdfPage], name: str = "doc") -> tuple[Doc, list[float | None]]:
     """Pages -> Doc IR + per-page parse scores (P17/P18 doc assembly,
     standard_pdf_pipeline.py:183-201 + readingorder_model.py)."""
-    all_blocks: list[Block] = []
-    page_scores: list[float] = []
-    page_heights: dict[int, float] = {}
-    for page in sorted(pages, key=lambda p: p.page_no):
-        blocks = page_blocks(page)
-        page_scores.append(
-            page_parse_score([c.text for c in page.cells]) if page.cells else float("nan")
-        )
-        all_blocks.extend(blocks)
-        page_heights[page.page_no] = page.height
-    return assemble_pages(all_blocks, page_heights, name), page_scores
+    blocks, page_heights = doc_blocks(pages)
+    return assemble_pages(blocks, page_heights, name), [page_score(p) for p in pages]
 
 
 def assemble_pages(

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .similarity import _with_norm, cosine, hyperplane_lsh_bands
+
 
 def exact_dup_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact duplicate clusters by md5(text)."""
@@ -291,22 +293,12 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95) -> DataFrame:
     :func:`embedding_near_dups_lsh` (band-bucketed candidates, no
     nested-loop join).
     """
-    e = df.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    ).withColumn(
-        "norm", F.expr("sqrt(aggregate(v, 0.0d, (acc, x) -> acc + x * x))")
-    )
+    e = _with_norm(df)
     a = e.alias("a")
     b = e.alias("b")
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .withColumn(
-            "cos",
-            F.expr(
-                "aggregate(zip_with(a.v, b.v, (x, y) -> x * y), 0.0d, (acc, x) -> acc + x)"
-            )
-            / (F.col("a.norm") * F.col("b.norm")),
-        )
+        .withColumn("cos", cosine("a.v", "a.norm", "b.v", "b.norm"))
         .filter(F.col("cos") >= threshold)
         .select(
             F.col("a.vec_id").alias("vec_a"),
@@ -337,8 +329,6 @@ def embedding_near_dups_lsh(
     Vectors ride along with their band rows so verification needs no
     second join against the corpus.
     """
-    from .similarity import hyperplane_lsh_bands
-
     bands = hyperplane_lsh_bands(
         df, n_bands=n_bands, bits_per_band=bits_per_band, seed=seed
     )
@@ -358,13 +348,7 @@ def embedding_near_dups_lsh(
         .dropDuplicates(["vec_a", "vec_b"])
     )
     return (
-        cand.withColumn(
-            "cos",
-            F.expr(
-                "aggregate(zip_with(va, vb, (x, y) -> x * y), 0.0d, (acc, x) -> acc + x)"
-            )
-            / (F.col("na") * F.col("nb")),
-        )
+        cand.withColumn("cos", cosine("va", "na", "vb", "nb"))
         .filter(F.col("cos") >= threshold)
         .select("vec_a", "vec_b", F.round("cos", 4).alias("cos_sim"))
         .orderBy("vec_a", "vec_b")

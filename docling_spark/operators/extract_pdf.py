@@ -19,11 +19,20 @@ of one 2000-page document land in different tasks; the single shuffle is
 made into a real exchange. This is the skew escape hatch for oversized
 documents: one doc is no longer one task.
 
+Strategy B's wire format is the ``pdf_layout.Block`` dataclass itself:
+``_BLOCK_FIELDS`` is a nested Arrow struct with one field per dataclass
+field (``table`` a struct of num_rows, num_cols and TableCellData
+cells); pages ship ``dataclasses.asdict(block)`` and regroup into
+``Block(**row)``. Both strategies and the multimodal export share one
+page pass, ``pdf_layout.doc_blocks``.
+
 Confidence aggregation (P19, standard_pdf_pipeline.py:253-281) is plain
 Spark SQL over the per-page scores: avg + 10th-percentile.
 """
 
 from __future__ import annotations
+
+from collections import defaultdict
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -40,6 +49,9 @@ from pyspark.sql.types import (
 
 from docling_spark.operators.batch import guarded, map_docs, url_hash
 
+# pdf_layout.Block as an Arrow struct, field for field in dataclass
+# order: the paged strategy ships each block through the shuffle as
+# dataclasses.asdict(block) and rebuilds it with Block(**row)
 _BLOCK_FIELDS = [
     StructField("kind", StringType()),
     StructField("text", StringType()),
@@ -50,10 +62,35 @@ _BLOCK_FIELDS = [
     StructField("r", DoubleType()),
     StructField("b", DoubleType()),
     StructField("size", DoubleType()),
-    # JSON-serialized TableDataIR for kind == 'table' (else None): the
-    # paged strategy must carry the reconstructed grid through the
-    # shuffle or strategy B would silently drop tables strategy A keeps
-    StructField("table_json", StringType()),
+    StructField("parse_score", DoubleType()),
+    # doc_model.TableDataIR for kind == 'table', else null
+    StructField(
+        "table",
+        StructType(
+            [
+                StructField("num_rows", IntegerType()),
+                StructField("num_cols", IntegerType()),
+                StructField(
+                    "cells",
+                    ArrayType(
+                        StructType(
+                            [
+                                StructField("text", StringType()),
+                                StructField("row_span", IntegerType()),
+                                StructField("col_span", IntegerType()),
+                                StructField("start_row", IntegerType()),
+                                StructField("end_row", IntegerType()),
+                                StructField("start_col", IntegerType()),
+                                StructField("end_col", IntegerType()),
+                                StructField("column_header", BooleanType()),
+                                StructField("row_header", BooleanType()),
+                            ]
+                        )
+                    ),
+                ),
+            ]
+        ),
+    ),
     StructField("bold", BooleanType()),
 ]
 
@@ -87,16 +124,12 @@ PDF_PAGE_SCHEMA = StructType(
 )
 
 
-def _doc_score(page_scores: list[float]) -> float:
-    """Doc parse score = 10th percentile over pages
+def _doc_score(page_scores: list[float | None]) -> float:
+    """Doc parse score = 10th percentile over the scored pages
     (standard_pdf_pipeline.py:262-268 nanquantile)."""
-    vals = sorted(s for s in page_scores if s == s)  # drop NaN
-    if not vals:
-        return float("nan")
-    k = (len(vals) - 1) * 0.10
-    lo = int(k)
-    hi = min(lo + 1, len(vals) - 1)
-    return vals[lo] + (vals[hi] - vals[lo]) * (k - lo)
+    from docling_spark.kernels.pdf_layout import quantile10
+
+    return quantile10([s for s in page_scores if s is not None])
 
 
 # ------------------------------------------------------- strategy A
@@ -177,11 +210,12 @@ def parse_pdf_page_rows(df: DataFrame, content_col: str = "content") -> DataFram
 
 
 def _page_rows(url: str, content: bytes):
+    from dataclasses import asdict
+
     from docling_spark.kernels.pdf_kernel import parse_pdf
-    from docling_spark.kernels.pdf_layout import page_blocks, page_parse_score, table_to_json
+    from docling_spark.kernels.pdf_layout import page_blocks, page_score
 
     for page in parse_pdf(content or b""):
-        blocks = page_blocks(page)
         yield {
             "url": url,
             "status": "success",
@@ -190,25 +224,8 @@ def _page_rows(url: str, content: bytes):
             "width": page.width,
             "height": page.height,
             "n_cells": len(page.cells),
-            "parse_score": page_parse_score([c.text for c in page.cells])
-            if page.cells
-            else None,
-            "blocks": [
-                (
-                    b.kind,
-                    b.text,
-                    b.level,
-                    b.page_no,
-                    b.l,
-                    b.t,
-                    b.r,
-                    b.b,
-                    b.size,
-                    table_to_json(b.table),
-                    b.bold,
-                )
-                for b in blocks
-            ],
+            "parse_score": page_score(page),
+            "blocks": [asdict(b) for b in page_blocks(page)],
         }
 
 
@@ -238,32 +255,26 @@ def assemble_from_pages(page_rows: DataFrame) -> DataFrame:
 
 
 def _assemble(url: str, pages) -> dict:
+    from docling_spark.kernels.doc_model import TableCellData, TableDataIR
     from docling_spark.kernels.markdown import to_markdown
-    from docling_spark.kernels.pdf_layout import Block, assemble_pages, table_from_json
+    from docling_spark.kernels.pdf_layout import Block, assemble_pages
     from docling_spark.kernels.textout import to_text
+
+    def table(t):
+        if t is None:
+            return None
+        # int(): Arrow hands a struct's int fields to pandas as floats
+        # when the struct column holds nulls (every non-table block)
+        cells = [TableCellData(**c) for c in t["cells"]]
+        return TableDataIR(int(t["num_rows"]), int(t["num_cols"]), cells)
 
     statuses = {p["status"] for p in pages}
     if statuses == {"failure"}:
         return {**_DOC_FAILURE, "status": "failure"}
     blocks = [
-        Block(
-            kind=b["kind"],
-            text=b["text"],
-            level=b["level"],
-            page_no=b["page_no"],
-            l=b["l"],
-            t=b["t"],
-            r=b["r"],
-            b=b["b"],
-            size=b["size"],
-            table=table_from_json(b["table_json"]),
-            bold=bool(b["bold"]),
-        )
-        for p in pages
-        for b in p["blocks"]
+        Block(**{**b, "table": table(b["table"])}) for p in pages for b in p["blocks"]
     ]
-    page_heights = {p["page_no"]: p["height"] for p in pages if p["height"]}
-    doc = assemble_pages(blocks, page_heights, name=url)
+    doc = assemble_pages(blocks, {p["page_no"]: p["height"] for p in pages}, name=url)
     scores = [p["parse_score"] for p in pages if p["parse_score"] is not None]
     return {
         "status": "partial_success" if "failure" in statuses else "success",
@@ -376,25 +387,25 @@ def _multimodal_rows_for_doc(
     from docling_spark.kernels.pdf_layout import (
         assemble_doc,
         classify_blocks,
+        doc_blocks,
         mark_page_furniture,
-        page_blocks,
     )
 
     pages = parse_pdf(content or b"")
-    all_blocks = []
-    for page in sorted(pages, key=lambda p: p.page_no):
-        all_blocks.extend(page_blocks(page))
-    classify_blocks(all_blocks)  # doc-wide: heading ranks need all pages
-    # same furniture semantics as the doc path: running heads/folios
-    # leave the body layer in the per-page training tuples too
-    mark_page_furniture(all_blocks, {p.page_no: p.height for p in pages})
+    all_blocks, page_heights = doc_blocks(pages)
+    # the doc path's order and furniture semantics: running heads and
+    # folios leave the body layer before doc-wide classification (heading
+    # ranks need all pages) could promote them to headings
+    mark_page_furniture(all_blocks, page_heights)
+    classify_blocks(all_blocks)
+    by_page = defaultdict(list)
+    for ix, b in enumerate(all_blocks):
+        by_page[b.page_no].append((ix, b))
 
     rows = []
     for page in sorted(pages, key=lambda p: p.page_no):
         w, h = page.width or 1.0, page.height or 1.0
-        page_items = [
-            (ix, b) for ix, b in enumerate(all_blocks) if b.page_no == page.page_no
-        ]
+        page_items = by_page[page.page_no]
         # per-page doc slice -> md/doctags (export.py main_text_start/stop);
         # classify=False: ranks were assigned doc-wide above — a
         # page-local re-run would promote the page's largest heading to

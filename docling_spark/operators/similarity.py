@@ -12,9 +12,14 @@ All vector math is JVM-side (``zip_with``/``aggregate``) in float64.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
-_DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0d, (acc, x) -> acc + x)"
+
+def cosine(a: str, na: str, b: str, nb: str) -> Column:
+    """Cosine of vector columns ``a`` and ``b`` with norm columns
+    ``na`` and ``nb``: the float64 dot product over the norms."""
+    dot = f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0d, (acc, x) -> acc + x)"
+    return F.expr(dot) / (F.col(na) * F.col(nb))
 
 
 def _with_norm(df: DataFrame) -> DataFrame:
@@ -40,10 +45,7 @@ def brute_force_topk(
     )
     scored = (
         e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            F.expr(_DOT.format(a="v", b="qv")) / (F.col("norm") * F.col("qnorm")),
-        )
+        .withColumn("cos", cosine("v", "norm", "qv", "qnorm"))
         .select("query_id", "vec_id", "cos")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -166,10 +168,7 @@ def lsh_topk(
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", "qv", "qnorm", "v", "norm")
         .dropDuplicates(["query_id", "vec_id"])  # OR over tables+probes
-        .withColumn(
-            "cos",
-            F.expr(_DOT.format(a="v", b="qv")) / (F.col("norm") * F.col("qnorm")),
-        )
+        .withColumn("cos", cosine("v", "norm", "qv", "qnorm"))
         .select("query_id", "vec_id", "cos")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))

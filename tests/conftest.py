@@ -5,6 +5,14 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+# the docling source checkout whose fixtures, groundtruth and backend
+# sources the parity tests read; where it is absent they all skip,
+# under this one reason
+REFERENCE = Path("/root/reference")
+needs_reference = pytest.mark.skipif(
+    not REFERENCE.is_dir(), reason=f"needs the docling reference tree at {REFERENCE}"
+)
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -15,20 +15,18 @@ node pool must replay the same event sequence.
 
 import sys
 import types
-from pathlib import Path
 
 import pytest
+from conftest import REFERENCE, needs_reference
 
-REF = Path("/root/reference")
-FIXTURES = sorted((REF / "tests/data/asciidoc").glob("*.asciidoc"))
+pytestmark = needs_reference
+
+FIXTURES = sorted((REFERENCE / "tests/data/asciidoc").glob("*.asciidoc"))
 
 
 def _load_reference_backend():
     """Import the reference backend with recording fakes for its deps.
-    Returns (AsciiDocBackend, event-list factory) or raises ImportError
-    if the reference tree is absent."""
-    if not (REF / "docling/backend/asciidoc_backend.py").exists():
-        raise ImportError("reference tree not available")
+    Returns (AsciiDocBackend, event-list factory)."""
 
     class _Rec:
         """Generic keyword-record object (stands in for pydantic models
@@ -142,7 +140,7 @@ def _load_reference_backend():
     sys.modules["docling.backend.abstract_backend"] = abstract
     sys.modules["docling.datamodel.base_models"] = base_models
     sys.modules["docling.datamodel.document"] = document
-    sys.path.insert(0, str(REF))
+    sys.path.insert(0, str(REFERENCE))
     try:
         for k in ("docling", "docling.backend", "docling.backend.asciidoc_backend"):
             sys.modules.pop(k, None)
@@ -150,7 +148,7 @@ def _load_reference_backend():
 
         return ab.AsciiDocBackend, FakeDoc
     finally:
-        sys.path.remove(str(REF))
+        sys.path.remove(str(REFERENCE))
         # leave the fakes in sys.modules only while this module is used;
         # restore anything we displaced
         for k, v in saved.items():

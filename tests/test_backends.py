@@ -2,6 +2,7 @@
 unified format router (S4)."""
 
 import pytest
+from conftest import REFERENCE, needs_reference
 
 from docling_spark.kernels.csv_kernel import CsvError, parse_csv
 from docling_spark.kernels.doctags import export_to_doctags
@@ -144,11 +145,13 @@ def test_convert_one_chunks_and_doctags():
 
 import pathlib as _pl
 
-_GT = _pl.Path("/root/reference/tests/data/groundtruth/docling_v2")
+FIXTURE_ROOT = REFERENCE / "tests/data"
+_GT = FIXTURE_ROOT / "groundtruth/docling_v2"
 
 
+@needs_reference
 @pytest.mark.parametrize(
-    "name", sorted(f.name for f in _pl.Path("/root/reference/tests/data/csv").glob("*.csv"))
+    "name", sorted(f.name for f in (FIXTURE_ROOT / "csv").glob("*.csv"))
 )
 def test_csv_golden_byte_identical(name):
     from docling_spark.kernels.textout import to_indented_text
@@ -159,8 +162,9 @@ def test_csv_golden_byte_identical(name):
     assert to_indented_text(doc) == (_GT / f"{name}.itxt").read_text()
 
 
+@needs_reference
 @pytest.mark.parametrize(
-    "name", sorted(f.name for f in _pl.Path("/root/reference/tests/data/md").glob("*.md"))
+    "name", sorted(f.name for f in (FIXTURE_ROOT / "md").glob("*.md"))
 )
 def test_md_golden_byte_identical(name):
     """The reference's md goldens carry one trailing newline (their
@@ -170,6 +174,7 @@ def test_md_golden_byte_identical(name):
     assert to_markdown(doc) + "\n" == (_GT / f"{name}.md").read_text()
 
 
+@needs_reference
 def test_convert_one_never_raises_on_mutated_crawl_bytes():
     """Crawl-robustness: deterministic byte mutations of every format's
     fixture (truncation, bit flips, splices) must always yield a row —
@@ -209,8 +214,14 @@ def test_convert_one_never_raises_on_mutated_crawl_bytes():
     assert n_rows == len(seeds) * 5
 
 
+@needs_reference
 @pytest.mark.parametrize(
-    "name", sorted(f.name for f in _pl.Path("/root/reference/tests/data/csv").glob("*.csv"))
+    "name",
+    sorted(
+        f.name
+        for f in (FIXTURE_ROOT / "csv").glob("*.csv")
+        if (_GT / f"{f.name}.json").exists()
+    ),
 )
 def test_csv_json_structurally_identical(name):
     import json
@@ -219,8 +230,6 @@ def test_csv_json_structurally_identical(name):
 
     src = _pl.Path("/root/reference/tests/data/csv") / name
     gt_p = _GT / f"{name}.json"
-    if not gt_p.exists():
-        pytest.skip("no json groundtruth")
     raw = src.read_bytes()
     doc = parse_csv(raw, name=name.rsplit(".", 1)[0])
     mine = export_to_dict(doc, filename=name, raw=raw, mimetype="text/csv")
@@ -229,8 +238,6 @@ def test_csv_json_structurally_identical(name):
 
 # --------------------------------------------- S4 full-router coverage
 
-
-FIXTURE_ROOT = _pl.Path("/root/reference/tests/data")
 
 # (relative fixture path, fmt the router must report)
 ALL_FORMAT_FIXTURES = [
@@ -255,14 +262,13 @@ ALL_FORMAT_FIXTURES = [
 ]
 
 
+@needs_reference
 @pytest.mark.parametrize("rel,fmt", ALL_FORMAT_FIXTURES)
 def test_convert_one_covers_every_backend(rel, fmt):
     """Every routed backend family converts its reference fixture with
     status=success (document_converter.py:131-198 format map). This is
     the unit twin of the x_convert_all queries() entry."""
     path = FIXTURE_ROOT / rel
-    if not path.exists():
-        pytest.skip(f"fixture missing: {rel}")
     row = convert_one(f"https://fixtures.example.com/{rel}", path.read_bytes())
     assert (row["fmt"], row["status"]) == (fmt, "success"), row["error"]
     # text-bearing formats must actually extract content
@@ -321,6 +327,7 @@ def test_doctags_otsl_vocabulary_and_labels():
     assert "<footnote>1   a source</footnote>" in tags
 
 
+@needs_reference
 def test_convert_one_want_json_all_formats():
     """E4 through the router: want_json yields a valid DoclingDocument
     JSON for every text-bearing format, table payloads included."""

@@ -3,9 +3,8 @@ observably IDENTICAL to the stdlib html.parser path it replaces —
 same tree, same node types, same watch bits, or the same exception.
 Reading-order/byte-identity of every export depends on this."""
 
-from pathlib import Path
-
 import pytest
+from conftest import REFERENCE, needs_reference
 from hypothesis import given, settings, strategies as st
 
 from docling_spark.kernels.dom import (
@@ -17,7 +16,7 @@ from docling_spark.kernels.dom import (
     parse_html_stdlib,
 )
 
-REF_HTML = sorted(Path("/root/reference/tests/data/html").glob("*.html"))
+REF_HTML = sorted((REFERENCE / "tests/data/html").glob("*.html"))
 
 
 def _sig(node):
@@ -50,6 +49,7 @@ def _assert_same(raw):
     assert _outcome(_fast_tree, raw) == _outcome(parse_html_stdlib, raw)
 
 
+@needs_reference
 @pytest.mark.parametrize("fixture", REF_HTML, ids=[p.stem for p in REF_HTML])
 def test_reference_fixtures_identical(fixture):
     _assert_same(fixture.read_bytes())

@@ -18,12 +18,11 @@ same recording-fake harness as tests/test_asciidoc_live_golden.py.
 
 import sys
 import types
-from pathlib import Path
 
 import pytest
+from conftest import REFERENCE, needs_reference
 
-REF = Path("/root/reference")
-MODEL_SRC = REF / "docling/models/code_formula_model.py"
+pytestmark = needs_reference
 
 
 class _CodeItem:
@@ -39,8 +38,6 @@ class _TextItem:
 def _load_reference_model():
     """Import the reference code_formula_model with faked heavy deps;
     returns (CodeFormulaModel, fakes namespace)."""
-    if not MODEL_SRC.exists():
-        raise ImportError("reference tree not available")
 
     class _Rec:
         def __init__(self, **kw):
@@ -118,7 +115,7 @@ def _load_reference_model():
         }
     )
     sys.modules.update(fakes)
-    sys.path.insert(0, str(REF))
+    sys.path.insert(0, str(REFERENCE))
     try:
         for k in ("docling", "docling.models", "docling.models.code_formula_model"):
             sys.modules.pop(k, None)
@@ -126,7 +123,7 @@ def _load_reference_model():
 
         return cfm.CodeFormulaModel
     finally:
-        sys.path.remove(str(REF))
+        sys.path.remove(str(REFERENCE))
         for k, v in saved.items():
             if v is not None:
                 sys.modules[k] = v
@@ -138,8 +135,8 @@ def _load_reference_model():
 def ref_model_cls():
     try:
         return _load_reference_model()
-    except ImportError:
-        pytest.skip("reference tree not available")
+    except ImportError as e:
+        pytest.skip(f"reference model not importable: {e}")
 
 
 # adversarial battery for the <_language_> parse: prefix anchoring,

@@ -14,14 +14,17 @@ import json
 import pathlib
 
 import pytest
+from conftest import REFERENCE, needs_reference
 
 from docling_spark.kernels.docjson import doc_from_dict, export_to_dict
 from docling_spark.kernels.html_kernel import HtmlExtractor
 from docling_spark.kernels.markdown import to_markdown
 from docling_spark.kernels.textout import to_indented_text
 
-HTML_DIR = pathlib.Path("/root/reference/tests/data/html")
-GT_DIR = pathlib.Path("/root/reference/tests/data/groundtruth/docling_v2")
+pytestmark = needs_reference
+
+HTML_DIR = REFERENCE / "tests/data/html"
+GT_DIR = REFERENCE / "tests/data/groundtruth/docling_v2"
 
 FIXTURES = sorted(f.name for f in HTML_DIR.glob("*.html"))
 

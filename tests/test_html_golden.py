@@ -8,15 +8,16 @@ to markdown byte-identical to the committed groundtruth. This is the
 BASELINE.json invariant ("byte-identical extracted text per url").
 """
 
-from pathlib import Path
-
 import pytest
+from conftest import REFERENCE, needs_reference
 
 from docling_spark.kernels.html_kernel import HtmlExtractor
 from docling_spark.kernels.markdown import to_markdown
 
-FIXTURES = Path("/root/reference/tests/data/html")
-GROUNDTRUTH = Path("/root/reference/tests/data/groundtruth/docling_v2")
+pytestmark = needs_reference
+
+FIXTURES = REFERENCE / "tests/data/html"
+GROUNDTRUTH = REFERENCE / "tests/data/groundtruth/docling_v2"
 
 NAMES = sorted(p.name for p in FIXTURES.glob("*.html"))
 

@@ -1,6 +1,8 @@
 """Unit tests for individual HTML kernels, ported case-for-case from the
 reference unit tests (/root/reference/tests/test_backend_html.py)."""
 
+from conftest import needs_reference
+
 from docling_spark.kernels.doc_model import BODY, FURNITURE, SECTION_HEADER
 from docling_spark.kernels.html_kernel import HtmlExtractor, clean_unicode
 from docling_spark.kernels.hyperlinks import normalize_hyperlink
@@ -15,6 +17,7 @@ def md(raw: bytes) -> str:
     return to_markdown(convert(raw))
 
 
+@needs_reference
 def test_heading_levels():
     # reference: test_backend_html.py:22-46 — h2 -> level 1, h3 -> level 2
     raw = open("/root/reference/tests/data/html/wiki_duck.html", "rb").read()
@@ -61,6 +64,7 @@ def test_unicode_cleanup_table():
     assert clean_unicode("a\u00adb\ufeffc\u202fd\u2060e") == "abc de"
 
 
+@needs_reference
 def test_parent_hyperlink_discovery():
     # reference: test_backend_html.py:121-138 (hyperlink_04)
     raw = open("/root/reference/tests/data/html/hyperlink_04.html", "rb").read()
@@ -86,6 +90,7 @@ def test_furniture_layers():
     assert layers["Some Content"] == BODY
 
 
+@needs_reference
 def test_table_span_grid():
     # rowspan + colspan occupancy from example_04 semantics
     raw = open("/root/reference/tests/data/html/example_04.html", "rb").read()

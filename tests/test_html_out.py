@@ -6,12 +6,13 @@ contract is HTML -> doc -> HTML -> doc equivalence)."""
 from pathlib import Path
 
 import pytest
+from conftest import REFERENCE, needs_reference
 
 from docling_spark.kernels.html_kernel import HtmlExtractor
 from docling_spark.kernels.html_out import to_html, to_html_split_pages
 from docling_spark.kernels.markdown import to_markdown
 
-FIXTURES = Path("/root/reference/tests/data/html")
+FIXTURES = REFERENCE / "tests/data/html"
 
 RICH = b"""<html><head><title>Head Title</title></head><body>
 <p>furniture intro before any heading</p>
@@ -72,6 +73,7 @@ POOL_EXACT = [
 ]
 
 
+@needs_reference
 @pytest.mark.parametrize("stem", POOL_EXACT)
 def test_fixture_roundtrip_pool_exact(stem):
     raw = (FIXTURES / f"{stem}.html").read_bytes()
@@ -80,6 +82,7 @@ def test_fixture_roundtrip_pool_exact(stem):
     assert _pool(d1) == _pool(d2)
 
 
+@needs_reference
 def test_all_fixtures_roundtrip_md_and_idempotence():
     md_exact = 0
     for f in sorted(FIXTURES.glob("*.html")):
@@ -93,6 +96,7 @@ def test_all_fixtures_roundtrip_md_and_idempotence():
     assert md_exact == 18
 
 
+@needs_reference
 def test_serializes_docs_from_other_backends():
     """Any Doc serializes — e.g. a USPTO patent renders to HTML whose
     reparse keeps the body text."""

@@ -1,8 +1,7 @@
 """JATS (B7) golden parity + AsciiDoc (B6) behavior tests."""
 
-import pathlib
-
 import pytest
+from conftest import REFERENCE, needs_reference
 
 from docling_spark.kernels.asciidoc_kernel import parse_asciidoc
 from docling_spark.kernels.jats_kernel import parse_jats
@@ -10,12 +9,13 @@ from docling_spark.kernels.markdown import to_markdown
 from docling_spark.kernels.textout import to_indented_text
 from docling_spark.operators.convert import convert_one
 
-DATA = pathlib.Path("/root/reference/tests/data")
+DATA = REFERENCE / "tests/data"
 GT = DATA / "groundtruth/docling_v2"
 
 JATS = sorted(f.name for f in (DATA / "jats").glob("*.nxml"))
 
 
+@needs_reference
 @pytest.mark.parametrize("name", JATS)
 def test_jats_md_and_itxt_byte_identical(name):
     doc = parse_jats((DATA / "jats" / name).read_bytes(), name=name.rsplit(".", 1)[0])
@@ -23,6 +23,7 @@ def test_jats_md_and_itxt_byte_identical(name):
     assert to_indented_text(doc) == (GT / f"{name}.itxt").read_text()
 
 
+@needs_reference
 def test_asciidoc_structure():
     """Current reference backend semantics (asciidoc_backend.py:90-443).
     NOTE: the repo's committed asciidoc goldens are stale — produced by
@@ -68,6 +69,7 @@ def test_asciidoc_table_caption_json_roundtrip():
     assert to_markdown(doc2) == to_markdown(doc)
 
 
+@needs_reference
 def test_router_dispatches_jats_and_asciidoc():
     r = convert_one("u", (DATA / "jats" / "elife-56337.nxml").read_bytes())
     assert (r["fmt"], r["status"]) == ("xml_jats", "success")
@@ -76,6 +78,7 @@ def test_router_dispatches_jats_and_asciidoc():
     assert r["md"].startswith("# Title")
 
 
+@needs_reference
 @pytest.mark.parametrize(
     "name", ["elife-56337.nxml", "pntd.0008301.nxml", "pone.0234687.nxml"]
 )

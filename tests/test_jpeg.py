@@ -13,6 +13,7 @@ import os
 
 import numpy as np
 import pytest
+from conftest import needs_reference
 
 from docling_spark.kernels.jpeg import JpegError, decode_jpeg, encode_jpeg
 from docling_spark.kernels.raster import RasterError, decode_image
@@ -93,12 +94,11 @@ def test_block_edge_sizes():
             assert len(out) == w * h * 3
 
 
+@needs_reference
 def test_real_reference_fixture():
     """The reference's scanned QR-bill JPEG (external encoder, 4:4:4
     SOF0): dimensions match the header and the pixel statistics match a
     white-background document scan."""
-    if not os.path.exists(REAL_JPEG):
-        pytest.skip("reference fixture not present")
     data = open(REAL_JPEG, "rb").read()
     w, h, c, out = decode_jpeg(data)
     assert (w, h, c) == (1021, 1423, 3)

@@ -4,6 +4,7 @@ bitmap-coverage OCR decision (P10)."""
 from pathlib import Path
 
 import pytest
+from conftest import needs_reference
 
 from docling_spark.kernels.image_kernel import (
     ImageError,
@@ -22,12 +23,14 @@ TIFF_FIXTURE = Path("/root/reference/tests/data/tiff/2206.01062.tif")
 # ------------------------------------------------------------- METS/GBS
 
 
+@needs_reference
 def test_mets_page_count_and_validity():
     # reference pins 3 pages (test_backend_mets_gbs.py test_num_pages)
     doc = MetsGbsDoc(METS_FIXTURE.read_bytes())
     assert doc.page_count() == 3
 
 
+@needs_reference
 def test_mets_text_in_rect_reference_pinned():
     # reference: bbox (275,263,1388,311) on page 0 ->
     # "recently become prevalent that he who speaks"
@@ -39,6 +42,7 @@ def test_mets_text_in_rect_reference_pinned():
     )
 
 
+@needs_reference
 def test_mets_lines_match_plaintext_ocr_member():
     """Structure parity: hOCR line text must reproduce the archive's own
     plain-text OCR member (modulo whitespace)."""
@@ -49,6 +53,7 @@ def test_mets_lines_match_plaintext_ocr_member():
     assert hocr_text == txt
 
 
+@needs_reference
 def test_mets_feeds_pdf_path():
     pages = parse_mets_gbs(METS_FIXTURE.read_bytes())
     assert len(pages) == 3
@@ -57,6 +62,7 @@ def test_mets_feeds_pdf_path():
     assert pages[0].width == 1582 and pages[0].height == 2495
 
 
+@needs_reference
 def test_mets_router():
     r = convert_one("u", METS_FIXTURE.read_bytes())
     assert (r["fmt"], r["status"]) == ("mets_gbs", "success")
@@ -75,17 +81,20 @@ def test_mets_garbage():
 # ----------------------------------------------------------- image -> PDF
 
 
+@needs_reference
 def test_webp_single_frame():
     frames = image_frames(WEBP_FIXTURE.read_bytes())
     assert frames == [(2000, 2829)]
 
 
+@needs_reference
 def test_tiff_multipage_frames():
     frames = image_frames(TIFF_FIXTURE.read_bytes())
     assert len(frames) == 2
     assert all(f == (612, 792) for f in frames)
 
 
+@needs_reference
 def test_image_router_success_with_ocr_score():
     # the P7 done-criterion: webp/tiff produce success rows with an
     # ocr_needed score, not 'skipped'
@@ -185,6 +194,7 @@ def test_wav_header_parse_and_spark_metadata(spark):
     assert out[2].format == "unknown"
 
 
+@needs_reference
 def test_mp3_metadata_from_real_fixture():
     """The reference's real audio fixture: the frame-header parse must
     recover the advertised ~10 s duration and the stream parameters."""
@@ -233,6 +243,7 @@ def test_merge_ocr_cells_drops_overlapping_ocr():
     assert {c.text for c in out2 if c.from_ocr} == {"below", "right"}
 
 
+@needs_reference
 def test_mets_cells_carry_from_ocr_flag():
     import tarfile
     fixture = "/root/reference/tests/data/mets_gbs/32044009881525_select.tar.gz"

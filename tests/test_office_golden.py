@@ -10,6 +10,7 @@ reference's pylatexenc-derived spacing).
 import pathlib
 
 import pytest
+from conftest import REFERENCE, needs_reference
 
 from docling_spark.kernels.docx_kernel import parse_docx
 from docling_spark.kernels.markdown import to_markdown
@@ -18,20 +19,22 @@ from docling_spark.kernels.textout import to_indented_text
 from docling_spark.kernels.xlsx_kernel import parse_xlsx
 from docling_spark.operators.convert import convert_one
 
-DATA = pathlib.Path("/root/reference/tests/data")
-GT = pathlib.Path("/root/reference/tests/data/groundtruth/docling_v2")
+DATA = REFERENCE / "tests/data"
+GT = DATA / "groundtruth/docling_v2"
 
 DOCX = sorted(f.name for f in (DATA / "docx").glob("*.docx"))
 XLSX = sorted(f.name for f in (DATA / "xlsx").glob("*"))
 PPTX = sorted(f.name for f in (DATA / "pptx").glob("*.pptx"))
 
 
+@needs_reference
 @pytest.mark.parametrize("name", DOCX)
 def test_docx_md_byte_identical(name):
     doc = parse_docx((DATA / "docx" / name).read_bytes(), name=name.rsplit(".", 1)[0])
     assert to_markdown(doc) == (GT / f"{name}.md").read_text()
 
 
+@needs_reference
 @pytest.mark.parametrize("name", XLSX)
 def test_xlsx_md_and_itxt_byte_identical(name):
     doc = parse_xlsx((DATA / "xlsx" / name).read_bytes(), name=name.rsplit(".", 1)[0])
@@ -39,6 +42,7 @@ def test_xlsx_md_and_itxt_byte_identical(name):
     assert to_indented_text(doc) == (GT / f"{name}.itxt").read_text()
 
 
+@needs_reference
 @pytest.mark.parametrize("name", PPTX)
 def test_pptx_md_and_itxt_byte_identical(name):
     doc = parse_pptx((DATA / "pptx" / name).read_bytes(), name=name.rsplit(".", 1)[0])
@@ -46,6 +50,7 @@ def test_pptx_md_and_itxt_byte_identical(name):
     assert to_indented_text(doc) == (GT / f"{name}.itxt").read_text()
 
 
+@needs_reference
 def test_router_dispatches_office_formats():
     for sub, path in (
         ("docx", DATA / "docx" / "lorem_ipsum.docx"),
@@ -62,6 +67,7 @@ def test_office_garbage_is_failure_row():
     assert r["status"] in ("failure", "skipped")
 
 
+@needs_reference
 def test_xlsx_json_structurally_identical_mod_image_bytes():
     """xlsx JSON groundtruth: identical dict except the picture data
     URI, whose bytes the reference re-encodes through PIL (unavailable
@@ -103,6 +109,7 @@ def test_xlsx_json_structurally_identical_mod_image_bytes():
     assert dims[0] == dims[1] == (421, 430)
 
 
+@needs_reference
 @pytest.mark.parametrize(
     "name",
     ["powerpoint_sample.pptx", "powerpoint_with_image.pptx", "powerpoint_bad_text.pptx"],
@@ -148,6 +155,7 @@ _DOCX_JSON_IDENTICAL = [
 ]
 
 
+@needs_reference
 @pytest.mark.parametrize("name", _DOCX_JSON_IDENTICAL)
 def test_docx_json_structurally_identical(name):
     import copy
@@ -177,13 +185,13 @@ def test_docx_json_structurally_identical(name):
     assert m == g
 
 
+@needs_reference
 @pytest.mark.parametrize(
     "name",
     sorted(
         f.name
-        for f in pathlib.Path("/root/reference/tests/data/docx").glob("*.docx")
-        if (pathlib.Path("/root/reference/tests/data/groundtruth/docling_v2")
-            / f"{f.name}.itxt").exists()
+        for f in (DATA / "docx").glob("*.docx")
+        if (GT / f"{f.name}.itxt").exists()
     ),
 )
 def test_docx_itxt_byte_identical(name):

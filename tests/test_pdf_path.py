@@ -9,6 +9,7 @@ reference validates cells/text (tests/verify_utils.py verify_cells).
 """
 
 import pytest
+from conftest import needs_reference
 
 from docling_spark.kernels.pdf_kernel import PdfError, TextCell, parse_pdf
 from docling_spark.kernels.pdf_layout import (
@@ -214,6 +215,29 @@ def test_multimodal_pages_kernel():
     # segment indexes are doc-global and strictly increasing across pages
     idxs = [s["index_in_doc"] for r in rows for s in r["segments"]]
     assert idxs == sorted(idxs) and len(set(idxs)) == len(idxs)
+
+
+def test_multimodal_marks_furniture_before_classifying():
+    """A heading-sized running head repeated on every page is page
+    furniture in the multimodal export as in the doc path: marked
+    before classification, so it never becomes a title or heading."""
+    from docling_spark.operators.extract_pdf import _multimodal_rows_for_doc, _pdf_doc
+    from docling_spark.sources.pdfgen import build_pdf
+
+    pdf = build_pdf(
+        [
+            [("heading", "Journal of Tests"), ("body", f"page {n} {TEXT}"), ("body", TEXT)]
+            for n in (1, 2, 3)
+        ]
+    )
+    assert "Journal of Tests" not in _pdf_doc("u", pdf)["md"]
+    rows = _multimodal_rows_for_doc("u", pdf)
+    assert len(rows) == 3
+    for r in rows:
+        (head,) = [s for s in r["segments"] if s["text"] == "Journal of Tests"]
+        assert head["label"] == "page_header"
+        assert "Journal of Tests" not in r["md"]
+        assert r["md"].startswith(f"page {r['page_no']} ")
 
 
 def test_multimodal_pages_spark(spark, pdf_corpus):
@@ -446,6 +470,7 @@ def test_detect_tables_merges_label_rows():
     assert t.grid()[3] == ["rowC", "0.5", "0.6"]
 
 
+@needs_reference
 def test_pg9_table_end_to_end():
     """The arXiv table benchmark page yields exactly one table node
     with the HPO grid's shape and no dropped cell text."""
@@ -505,6 +530,7 @@ def test_caption_attachment_constructed():
     assert not [n for n in doc2.nodes if n.kind == "caption"]
 
 
+@needs_reference
 def test_pg9_caption_linked_to_table():
     from pathlib import Path
 
@@ -567,6 +593,7 @@ def test_furniture_excluded_from_body_exports():
     assert "Running Title" not in to_text(doc)
 
 
+@needs_reference
 def test_real_fixture_furniture_and_pictures():
     """redp5110: 30 page_footers in the reference groundtruth — the
     repeated-text + folio rules must find a large share; the picture
@@ -590,6 +617,7 @@ def test_real_fixture_furniture_and_pictures():
     assert sorted(p.caption_id for p in pics) == sorted(c.node_id for c in caps)
 
 
+@needs_reference
 def test_paged_strategy_carries_tables(spark):
     """Strategy B must not drop reconstructed tables: the pg9 fixture
     pushed through the page-explode + regroup shuffle produces the
@@ -608,6 +636,58 @@ def test_paged_strategy_carries_tables(spark):
     a = extract_pdf_docs(df, num_partitions=2).collect()[0]
     b = extract_pdfs_paged(df).collect()[0]
     assert "| OTSL" in a.md and a.md == b.md
+
+
+def test_paged_shuffle_carries_every_block_field(spark, monkeypatch):
+    """Strategy B's page rows carry each Block field for field through
+    Arrow and the regroup shuffle: a table with a spanning header cell
+    and a bold text block come out of assemble_from_pages exactly as
+    the in-process assembly renders them."""
+    import copy
+    from dataclasses import asdict
+
+    from docling_spark.kernels import pdf_layout
+    from docling_spark.kernels.doc_model import TableCellData, TableDataIR
+    from docling_spark.kernels.markdown import to_markdown
+    from docling_spark.operators import extract_pdf
+    from docling_spark.operators.batch import map_docs
+    from docling_spark.sources.pdfgen import build_pdf
+
+    def fake_page_blocks(page):
+        n = page.page_no
+        table = TableDataIR(
+            2,
+            2,
+            [
+                TableCellData(f"Span {n}", col_span=2, end_col=2, column_header=True),
+                TableCellData(f"a{n}", start_row=1, end_row=2),
+                TableCellData(f"b{n}", start_row=1, end_row=2, start_col=1, end_col=2),
+            ],
+        )
+        return [
+            pdf_layout.Block("text", f"Bold lead {n}", 0, n, 72, 300, 300, 312, 10.0,
+                             parse_score=0.75, bold=True),
+            pdf_layout.Block("text", f"page {n} {TEXT}", 0, n, 72, 320, 540, 380, 10.0),
+            pdf_layout.Block("table", "", 0, n, 72, 400, 540, 460, 10.0, table=table),
+        ]
+
+    monkeypatch.setattr(pdf_layout, "page_blocks", fake_page_blocks)
+    url = "https://pdf.example.com/tables.pdf"
+    pdf = build_pdf([[("body", "one")], [("body", "two")]])
+    rows = list(extract_pdf._page_rows(url, pdf))
+    blocks, heights = pdf_layout.doc_blocks(parse_pdf(pdf))
+    expected = to_markdown(pdf_layout.assemble_pages(copy.deepcopy(blocks), heights, url))
+
+    urls = spark.createDataFrame([(url,)], "url string")
+    page_rows = map_docs(urls, lambda u: rows, extract_pdf.PDF_PAGE_SCHEMA)
+    assert [f.name for f in extract_pdf._BLOCK_FIELDS] == list(asdict(blocks[0]))
+    shipped = [b.asDict(recursive=True) for r in page_rows.collect() for b in r.blocks]
+    assert shipped == [asdict(b) for b in blocks]
+
+    (doc,) = extract_pdf.assemble_from_pages(page_rows).collect()
+    assert doc.status == "success" and doc.md == expected
+    for text in ("Span 1", "a1", "b2", "## Bold lead 1"):
+        assert text in doc.md
 
 
 def test_footnote_rule_constructed():
@@ -629,6 +709,7 @@ def test_footnote_rule_constructed():
     assert "example.org" in to_markdown(doc)
 
 
+@needs_reference
 def test_bold_headings_split_and_classify():
     """A bold line at body size is a section header, split from its
     following paragraph (the arXiv '5.1 Hyper Parameter Optimization'
@@ -648,6 +729,7 @@ def test_bold_headings_split_and_classify():
     assert not [n for n in doc.nodes if n.kind == "title"]
 
 
+@needs_reference
 def test_pdf_list_items_grouped():
     """Bullet-glyph-led lines group into a list (multi_page fixture:
     the reference's groundtruth renders them as '- <glyph> text'

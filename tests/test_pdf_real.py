@@ -14,6 +14,7 @@ import zlib
 from pathlib import Path
 
 import pytest
+from conftest import needs_reference
 
 from docling_spark.kernels.pdf_kernel import (
     FontInfo,
@@ -220,6 +221,7 @@ def test_encrypted_pdf_is_typed_failure():
         parse_pdf(pdf)
 
 
+@needs_reference
 def test_real_world_pdf_fixtures_content_recall():
     """The reference's real PDF fixtures (varied producers: arXiv
     LaTeX, IBM Redbooks, Word exports, RTL documents) against its own
@@ -282,6 +284,7 @@ def test_real_world_pdf_fixtures_content_recall():
         assert precision >= 0.80, f"{stem}: precision {precision:.3f}"
 
 
+@needs_reference
 def test_real_world_pdf_fixtures_reading_order():
     """ORDER-sensitive witness: token-SEQUENCE similarity (difflib
     ratio over word tokens) of our markdown vs the reference
@@ -340,6 +343,7 @@ def test_real_world_pdf_fixtures_reading_order():
         assert ratio >= floor, f"{stem}: order ratio {ratio:.3f} < {floor}"
 
 
+@needs_reference
 def test_rtl_lam_alef_ligature_logical_order():
     """r4: a lam-alef ligature glyph expands to two chars in LOGICAL
     order inside a VISUAL-order stream; the extractor keeps the pair

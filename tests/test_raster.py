@@ -7,6 +7,7 @@ import zlib
 
 import numpy as np
 import pytest
+from conftest import needs_reference
 
 from docling_spark.kernels.raster import (
     RasterError,
@@ -185,6 +186,7 @@ def test_png_16bit_downscales_high_byte():
     assert list(ss) == [v >> 8 for v in vals]
 
 
+@needs_reference
 def test_png_real_reference_fixture():
     data = open("/root/reference/tests/data/2305.03393v1-pg9-img.png", "rb").read()
     w, h, c, s = decode_png(data)

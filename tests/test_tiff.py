@@ -2,13 +2,13 @@
 LZW early/late width-change variants, the reference's real multi-page
 fixture, and the typed-error totality contract."""
 
-import os
 import struct
 import time
 import tracemalloc
 
 import numpy as np
 import pytest
+from conftest import needs_reference
 
 from docling_spark.kernels.tiff import (
     TiffError,
@@ -81,7 +81,7 @@ def test_lzw_late_change_variant_rejected_by_early_and_vice_versa():
 # ------------------------------------------------ reference fixture
 
 
-@pytest.mark.skipif(not os.path.exists(FIXTURE), reason="no reference")
+@needs_reference
 def test_reference_fixture_decodes_both_pages():
     """The reference routes this exact multi-frame TIFF through its
     PDF path (docling/backend/pdf_backend.py:56-90). Big-endian, LZW
@@ -99,7 +99,7 @@ def test_reference_fixture_decodes_both_pages():
         assert (a[:, :, 0] < 128).sum() > 10_000
 
 
-@pytest.mark.skipif(not os.path.exists(FIXTURE), reason="no reference")
+@needs_reference
 def test_reference_fixture_through_image_pdf_path():
     """IMAGE->PDF adaptation: one PdfPage per TIFF frame, full-page
     bitmap rect carrying the real decoded luma plane."""

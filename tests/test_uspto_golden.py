@@ -3,9 +3,8 @@ groundtruth across all four DTD generations, plus the OASIS table
 parser and router dispatch (reference tests:
 tests/test_backend_patent_uspto.py)."""
 
-from pathlib import Path
-
 import pytest
+from conftest import REFERENCE, needs_reference
 
 from docling_spark.kernels.markdown import to_markdown
 from docling_spark.kernels.textout import to_indented_text
@@ -13,8 +12,10 @@ from docling_spark.kernels.uspto_kernel import XmlTable, parse_uspto
 from docling_spark.operators.convert import convert_one
 from docling_spark.operators.formats import sniff_format
 
-DATA = Path("/root/reference/tests/data/uspto")
-GT = Path("/root/reference/tests/data/groundtruth/docling_v2")
+pytestmark = needs_reference
+
+DATA = REFERENCE / "tests/data/uspto"
+GT = REFERENCE / "tests/data/groundtruth/docling_v2"
 
 # every fixture with committed groundtruth; spans ICE application (2018,
 # 2020), app v1 (2001), APS text (1997), and grant v2.5 (2002)

@@ -3,10 +3,10 @@ the reference's real fixture, lossless roundtrips, and totality.
 Skips cleanly on hosts without libwebp — the pipeline then keeps the
 pre-r4 stub behavior (decoded=false rows), which other tests pin."""
 
-import os
 
 import numpy as np
 import pytest
+from conftest import needs_reference
 
 from docling_spark.kernels.webp import (
     WebpError,
@@ -22,7 +22,7 @@ pytestmark = pytest.mark.skipif(
 FIXTURE = "/root/reference/tests/data/webp/webp-test.webp"
 
 
-@pytest.mark.skipif(not os.path.exists(FIXTURE), reason="no reference")
+@needs_reference
 def test_reference_fixture_decodes():
     """The reference feeds this exact VP8-lossy WebP through its image
     pipeline; it is a rendered white text page (verified visually)."""
