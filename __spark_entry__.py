@@ -214,9 +214,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pdfs = synthesize_pdf_pages(spark, sf_dir, n_docs=50).select(
             "url", F.col("content").alias("html")
         )
-        ch = chunks.chunk_pages(
-            html.unionByName(pdfs), router=True, mode="hybrid", max_tokens=128
-        )
+        ch = chunks.chunk_pages(html.unionByName(pdfs), mode="hybrid", max_tokens=128)
         return chunks.chunk_stats(ch)
 
     def x_enrich_code(spark, sf_dir):

@@ -27,6 +27,7 @@ Behavioral ports (written fresh against the reference's semantics):
 from __future__ import annotations
 
 import re
+import unicodedata
 from dataclasses import dataclass
 from statistics import median
 
@@ -61,11 +62,22 @@ def _group_rows(
     return rows
 
 
-def _bidi_class(ch: str) -> str:
-    import unicodedata
+_bidi_class = unicodedata.bidirectional
+# right-to-left letters (R, AL) and Arabic-Indic digits (AN): an AN
+# digit run sits inside RTL text, so it never flips the script
+_RTL = ("R", "AL", "AN")
 
-    return unicodedata.bidirectional(ch)
 
+def _is_rtl(ch: str) -> bool:
+    return _bidi_class(ch) in _RTL
+
+
+def _mostly_rtl(text: str) -> bool:
+    """More than 30% of ``text`` is RTL: the page, row or block set is
+    laid out right to left."""
+    if text.isascii():  # hot path: crawl text is overwhelmingly LTR
+        return False
+    return sum(1 for ch in text if _is_rtl(ch)) > 0.3 * len(text)
 
 
 _LTR_CORE = ("L", "EN")
@@ -87,7 +99,7 @@ def _visual_to_logical(s: str) -> str:
     tests/test_pdf_real.py)."""
     if s.isascii():  # hot path: crawl text is overwhelmingly LTR
         return s
-    n_rtl = sum(1 for c in s if _bidi_class(c) in ("R", "AL", "AN"))
+    n_rtl = sum(1 for c in s if _is_rtl(c))
     n_ltr = sum(1 for c in s if _bidi_class(c) == "L")
     if n_rtl == 0 or n_rtl < n_ltr:
         return s
@@ -124,11 +136,6 @@ def _merge_group(group: list[TextCell]) -> TextCell:
     ordered = sorted(group, key=lambda c: c.l)
     texts = [c.text for c in ordered]
 
-    def _is_rtl_ch(ch: str) -> bool:
-        import unicodedata
-
-        return unicodedata.bidirectional(ch) in ("R", "AL")
-
     seps = []
     for prev, cur in zip(ordered, ordered[1:]):
         gap = cur.l - prev.r
@@ -140,7 +147,7 @@ def _merge_group(group: list[TextCell]) -> TextCell:
             and cur.text
             and prev.text[-1].isalnum()
             and cur.text[0].isalnum()
-            and _is_rtl_ch(prev.text[-1]) != _is_rtl_ch(cur.text[0])
+            and _is_rtl(prev.text[-1]) != _is_rtl(cur.text[0])
         ):
             # a script-direction flip is a word boundary even when the
             # glyphs sit kerning-close: pdfium emits a space between an
@@ -598,14 +605,7 @@ def page_blocks(page: PdfPage) -> list[Block]:
             blocks, table_blocks, _picture_blocks(page), stable=True,
             page_w=page.width,
         )
-    import unicodedata
-
-    page_txt = "".join(ln.text for ln in lines)
-    page_rtl = sum(
-        1
-        for ch in page_txt
-        if unicodedata.bidirectional(ch) in ("R", "AL", "AN")
-    ) > 0.3 * max(len(page_txt), 1)
+    page_rtl = _mostly_rtl("".join(ln.text for ln in lines))
     tile_blocks, lines = _tile_band_blocks(
         lines, page.width, med_h, page.page_no
     )
@@ -870,12 +870,7 @@ def _form_reblock(
     if sep < 4 or sep < 0.4 * len(rows) or tight * 3 > sep:
         return None
 
-    import unicodedata
-
-    txt = "".join(c.text for c in cells)
-    rtl = sum(
-        1 for ch in txt if unicodedata.bidirectional(ch) in ("R", "AL", "AN")
-    ) > 0.3 * max(len(txt), 1)
+    rtl = _mostly_rtl("".join(c.text for c in cells))
 
     out: list[Block] = []
     open_row: dict[int, list[TextCell]] | None = None
@@ -958,12 +953,7 @@ def _form_row_reorder(blocks: list[Block]) -> list[Block]:
             paired_blocks += len(g)
     if paired < 3 or paired_blocks < 0.5 * len(cand):
         return blocks
-    import unicodedata
-
-    txt = "".join(b.text for b in blocks)
-    rtl = sum(
-        1 for c in txt if unicodedata.bidirectional(c) in ("R", "AL", "AN")
-    ) > 0.3 * max(len(txt), 1)
+    rtl = _mostly_rtl("".join(b.text for b in blocks))
     ordered: list[Block] = []
     for g in sorted(groups.values(), key=lambda g: min(blocks[i].t for i in g)):
         ordered.extend(

@@ -2,9 +2,9 @@
 
 The north rule asks for "structured extracted text plus span offsets
 per url": ``to_text`` emits the body-layer text in reading order
-(DFS over the node pool, like docling's ``export_to_text`` surface),
-and ``text_spans`` returns per-node (node_id, label, start, end)
-character offsets into that text.
+(DFS over the node pool, like docling's ``export_to_text`` surface);
+``text_spans`` returns that text together with per-node (node_id,
+label, start, end) character offsets into it.
 """
 
 from __future__ import annotations
@@ -62,22 +62,24 @@ def _node_text(doc: Doc, node: DocNode) -> str:
     return node.text
 
 
-def to_text(doc: Doc) -> str:
-    return "\n".join(
-        t for n in _text_nodes(doc) if (t := _node_text(doc, n))
-    )
-
-
-def text_spans(doc: Doc) -> list[tuple[int, str, int, int]]:
+def text_spans(doc: Doc) -> tuple[str, list[tuple[int, str, int, int]]]:
+    """The txt layout, written once: the non-empty node texts joined by
+    newlines, and each node's (node_id, label, start, end) in it."""
+    parts = []
     spans = []
     pos = 0
     for n in _text_nodes(doc):
         t = _node_text(doc, n)
         if not t:
             continue
+        parts.append(t)
         spans.append((n.node_id, n.kind, pos, pos + len(t)))
         pos += len(t) + 1  # the joining newline
-    return spans
+    return "\n".join(parts), spans
+
+
+def to_text(doc: Doc) -> str:
+    return text_spans(doc)[0]
 
 
 # ------------------------------------------------------- indented text

@@ -61,6 +61,25 @@ def guarded(kernel, failure: dict, url, payload):
     return out
 
 
+def per_page(kernel, failure: dict):
+    """per_doc for kernels that emit many rows per document (pages,
+    chunks). Rows a generator kernel yields before an exception are kept
+    and the failure adds one row, so every url keeps a status row and a
+    PDF that breaks on a later page assembles to partial_success."""
+
+    def per_doc(url, payload):
+        rows = []
+
+        def collect(url, payload):
+            rows.extend(kernel(url, payload))
+            return rows
+
+        out = guarded(collect, failure, url, payload)
+        return rows if out is rows else [*rows, {**out, "url": url}]
+
+    return per_doc
+
+
 def partitions(df: DataFrame, n: int | None = None) -> int:
     """``n``, defaulting to the session's ``spark.sql.shuffle.partitions``."""
     if n is None:

@@ -18,11 +18,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from docling_spark.operators.batch import map_docs, url_hash
+from docling_spark.operators.batch import map_docs, per_page, url_hash
 
 CHUNK_SCHEMA = StructType(
     [
         StructField("url", StringType()),
+        StructField("status", StringType()),
+        StructField("error", StringType()),
         StructField("chunk_id", IntegerType()),
         StructField("kind", StringType()),
         StructField("headings", ArrayType(StringType())),
@@ -32,6 +34,9 @@ CHUNK_SCHEMA = StructType(
     ]
 )
 
+# a skipped or failed document keeps one status row with no chunk
+_NO_CHUNK = dict.fromkeys(("chunk_id", "kind", "headings", "text", "context_text", "n_tokens"))
+
 
 def chunk_pages(
     df: DataFrame,
@@ -39,41 +44,37 @@ def chunk_pages(
     mode: str = "hybrid",
     max_tokens: int = 128,
     num_partitions: int | None = None,
-    router: bool = False,
 ) -> DataFrame:
     """(url, <payload>) -> chunk rows; mode in {'hierarchical', 'hybrid'}.
 
-    ``router=True`` dispatches each payload through the full S4 format
-    router (operators/convert.route_to_doc) instead of assuming HTML —
-    one chunking job over a mixed html/pdf/office/xml crawl, the shape
-    an embedding/training pipeline actually feeds."""
+    Each payload goes through the format router
+    (operators/convert.route_to_doc), so one chunking job covers a mixed
+    html/pdf/office/xml crawl, the shape an embedding/training pipeline
+    actually feeds. Chunk rows carry status='success'; a document the
+    router skips or that fails to parse yields one row with a null
+    chunk_id and the router's or driver's status and error."""
 
-    def per_doc(url, payload):
+    def kernel(url, payload):
         from docling_spark.kernels.chunker import (
             contextualize,
             hierarchical_chunks,
             hybrid_chunks,
         )
-        from docling_spark.kernels.html_kernel import HtmlExtractor
         from docling_spark.operators.convert import route_to_doc
 
-        try:
-            raw = payload or b""
-            if router:
-                doc = route_to_doc({}, url, raw)
-            else:
-                doc = HtmlExtractor(original_url=url).convert(raw)
-            if doc is None:
-                return []
-            if mode == "hybrid":
-                chunks = hybrid_chunks(doc, max_tokens=max_tokens)
-            else:
-                chunks = hierarchical_chunks(doc)
-        except Exception:  # noqa: BLE001 — bad doc -> no chunks
-            return []
+        row = {}
+        doc = route_to_doc(row, url, payload)
+        if doc is None:
+            return [{**_NO_CHUNK, "url": url, "status": row["status"], "error": row["error"]}]
+        if mode == "hybrid":
+            chunks = hybrid_chunks(doc, max_tokens=max_tokens)
+        else:
+            chunks = hierarchical_chunks(doc)
         return [
             {
                 "url": url,
+                "status": "success",
+                "error": None,
                 "chunk_id": i,
                 "kind": ch.kind,
                 "headings": ch.headings,
@@ -84,13 +85,15 @@ def chunk_pages(
             for i, ch in enumerate(chunks)
         ]
 
-    return map_docs(url_hash(df, ["url", content_col], num_partitions), per_doc, CHUNK_SCHEMA)
+    sel = url_hash(df, ["url", content_col], num_partitions)
+    return map_docs(sel, per_page(kernel, _NO_CHUNK), CHUNK_SCHEMA)
 
 
 def chunk_stats(chunks: DataFrame) -> DataFrame:
-    """Distribution rollup — plain Spark SQL over chunk rows."""
+    """Distribution rollup — plain Spark SQL over the success rows."""
     return (
-        chunks.groupBy("kind")
+        chunks.filter(F.col("status") == "success")
+        .groupBy("kind")
         .agg(
             F.count("*").alias("n_chunks"),
             F.sum("n_tokens").cast("long").alias("sum_tokens"),

@@ -67,12 +67,11 @@ def _extract_kernel(url, html: bytes) -> dict:
     # lazy imports keep executor-side pickling cheap
     from docling_spark.kernels.html_kernel import HtmlExtractor
     from docling_spark.kernels.markdown import to_markdown
-    from docling_spark.kernels.textout import text_spans, to_text
+    from docling_spark.kernels.textout import text_spans
 
     doc = HtmlExtractor(original_url=url).convert(html or b"")
     md = to_markdown(doc)
-    txt = to_text(doc)
-    spans = text_spans(doc)
+    txt, spans = text_spans(doc)
     return {
         "status": "success",
         "error": None,

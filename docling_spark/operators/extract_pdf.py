@@ -47,7 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from docling_spark.operators.batch import guarded, map_docs, url_hash
+from docling_spark.operators.batch import guarded, map_docs, per_page, url_hash
 
 # pdf_layout.Block as an Arrow struct, field for field in dataclass
 # order: the paged strategy ships each block through the shuffle as
@@ -169,25 +169,6 @@ def extract_pdf_docs(
     return map_docs(sel, _pdf_doc_row, PDF_DOC_SCHEMA)
 
 
-def _per_page(kernel, failure: dict):
-    """per_doc for kernels that emit one row per page. Rows a generator
-    kernel yields before an exception are kept and the failure adds one
-    page_no=0 row, so every url keeps a status row and a PDF that breaks
-    on a later page assembles to partial_success."""
-
-    def per_doc(url, content):
-        rows = []
-
-        def collect(url, content):
-            rows.extend(kernel(url, content))
-            return rows
-
-        out = guarded(collect, failure, url, content)
-        return rows if out is rows else [*rows, {**out, "url": url}]
-
-    return per_doc
-
-
 # ------------------------------------------------------- strategy B
 
 
@@ -205,7 +186,7 @@ def parse_pdf_page_rows(df: DataFrame, content_col: str = "content") -> DataFram
         "parse_score": None,
         "blocks": [],
     }
-    per_doc = _per_page(_page_rows, failure)
+    per_doc = per_page(_page_rows, failure)
     return map_docs(df.select("url", content_col), per_doc, PDF_PAGE_SCHEMA)
 
 
@@ -507,4 +488,4 @@ def multimodal_pages(
         return _multimodal_rows_for_doc(url, content, image_scale=image_scale)
 
     sel = url_hash(df, ["url", content_col], num_partitions)
-    return map_docs(sel, _per_page(kernel, failure), schema)
+    return map_docs(sel, per_page(kernel, failure), schema)

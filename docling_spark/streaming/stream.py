@@ -36,18 +36,17 @@ PAGES_SCHEMA = StructType(
 )
 
 
-def read_pages_stream(
-    spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None
-):
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_dir)
+def read_pages_stream(spark: SparkSession, input_dir: str):
+    return spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
 
 
-def _drain(df, out: str, ckpt: str, timeout: int) -> bool:
-    """Append ``df`` to a parquet sink: drain every currently available
-    input, checkpointed, then stop."""
+def drain(df, out: str, ckpt: str, timeout_sec: int = 300) -> bool:
+    """Append the streaming frame ``df`` to a parquet sink: drain every
+    currently available input, checkpointed, then stop. A re-run with the
+    same checkpoint processes only files added since (streaming resume).
+    Per-document operators run unchanged on a streaming frame (url-hash
+    repartition is a stateless shuffle), so a drain-and-stop extraction
+    is ``drain(extract_pages(read_pages_stream(spark, d)), out, ckpt)``."""
     query = (
         df.writeStream.format("parquet")
         .outputMode("append")
@@ -56,45 +55,7 @@ def _drain(df, out: str, ckpt: str, timeout: int) -> bool:
         .trigger(availableNow=True)
         .start()
     )
-    return query.awaitTermination(timeout)
-
-
-def run_available_now(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    num_partitions: int = 8,
-    timeout_sec: int = 300,
-) -> bool:
-    """Drain all currently-available input files, then stop. Re-running
-    with the same checkpoint processes only files added since the last
-    run (streaming resume semantics). The extraction operator runs
-    unchanged on the streaming frame: its url-hash repartition is a
-    stateless shuffle and is legal inside a streaming query."""
-    from docling_spark.operators.extract import extract_pages
-
-    pages = read_pages_stream(spark, input_dir)
-    results = extract_pages(pages, num_partitions=num_partitions)
-    return _drain(results, output_dir, checkpoint_dir, timeout_sec)
-
-
-def run_convert_available_now(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    num_partitions: int = 8,
-    timeout_sec: int = 300,
-) -> bool:
-    """Drain-and-stop multi-format conversion with streaming resume: an
-    incremental crawl drop of mixed html/pdf/office/... bytes converts
-    exactly like the batch path (operators.convert.convert_any)."""
-    from docling_spark.operators.convert import convert_any
-
-    pages = read_pages_stream(spark, input_dir)
-    results = convert_any(pages, num_partitions=num_partitions)
-    return _drain(results, output_dir, checkpoint_dir, timeout_sec)
+    return query.awaitTermination(timeout_sec)
 
 
 # ------------------------------------------- windowed event-time rollup
@@ -145,7 +106,7 @@ def run_windowed_stream(
         ).parquet(input_dir)
     )
     agg = windowed_event_rollup(events, window=window, watermark=watermark)
-    return _drain(agg, output_dir, checkpoint_dir, timeout_sec)
+    return drain(agg, output_dir, checkpoint_dir, timeout_sec)
 
 
 # ----------------------------- stateful cross-batch dedup (GroupState)
@@ -208,4 +169,4 @@ def run_dedup_stream(
     timeout_sec: int = 300,
 ) -> bool:
     pages = read_pages_stream(spark, input_dir)
-    return _drain(dedup_stream(pages), output_dir, checkpoint_dir, timeout_sec)
+    return drain(dedup_stream(pages), output_dir, checkpoint_dir, timeout_sec)

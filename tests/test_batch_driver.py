@@ -17,9 +17,9 @@ SCANNED = sorted((PACKAGE / "operators").glob("*.py")) + sorted(
 # batch-vectorized model inference and synthetic sources are not
 # per-document operators
 MAP_IN_PANDAS_EXEMPT = {("enrich.py", "enrich_spans"), ("multimodal.py", "synth_media")}
-# operators whose catch-all is their output contract: a bad document
-# yields no chunk rows, an undecodable media item a decoded=false row
-CATCH_ALL_EXEMPT = {("chunks.py", "chunk_pages"), ("multimodal.py", "extract_media_features")}
+# the one operator whose catch-all is its output contract: an
+# undecodable media item is a decoded=false row
+CATCH_ALL_EXEMPT = {("multimodal.py", "extract_media_features")}
 
 DEEP = "b'<div>' * 3000 + b'deep' + b'</div>' * 3000"
 
@@ -125,7 +125,23 @@ def test_available_now_sink_only_in_drain():
         for fn, node in _calls(p, "trigger")
         if any(k.arg == "availableNow" for k in node.keywords)
     ]
-    assert calls == [("stream.py", "_drain")]
+    assert calls == [("stream.py", "drain")]
+
+
+def test_html_parser_built_only_by_the_router_and_the_flagship():
+    """One dispatch: an operator that wants a Doc from bytes asks
+    convert.route_to_doc; only the HTML-only flagship kernel builds the
+    parser itself."""
+    builders = [
+        (p.name, getattr(top, "name", "<module>"))
+        for p in sorted((PACKAGE / "operators").glob("*.py"))
+        for top in ast.parse(p.read_text()).body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "HtmlExtractor"
+    ]
+    assert builders == [("convert.py", "route_to_doc"), ("extract.py", "_extract_kernel")]
 
 
 
@@ -134,7 +150,7 @@ def test_pdf_broken_on_a_later_page_keeps_earlier_pages(spark, monkeypatch):
     to the page_no=0 failure row, and the document assembles to
     partial_success with page 1's text."""
     from docling_spark.kernels import pdf_layout
-    from docling_spark.operators import extract_pdf
+    from docling_spark.operators import batch, extract_pdf
     from docling_spark.sources.pdfgen import build_pdf
 
     url = "https://pdf.example.com/broken-later.pdf"
@@ -147,7 +163,7 @@ def test_pdf_broken_on_a_later_page_keeps_earlier_pages(spark, monkeypatch):
         return page_blocks(page)
 
     monkeypatch.setattr(pdf_layout, "page_blocks", breaks_on_page_2)
-    per_doc = extract_pdf._per_page(extract_pdf._page_rows, {"page_no": 0, "blocks": []})
+    per_doc = batch.per_page(extract_pdf._page_rows, {"page_no": 0, "blocks": []})
     rows = per_doc(url, pdf)
     assert [(r["page_no"], r["status"]) for r in rows] == [(1, "success"), (0, "failure")]
     assert rows[1]["error"] == "ValueError: bad page"

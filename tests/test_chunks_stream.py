@@ -91,8 +91,9 @@ def test_streaming_available_now_and_incremental(spark, tmp_path):
     """Streaming = same kernel + checkpointed incremental resume: first
     drain processes the initial files; a second drain after new files
     arrive processes ONLY the new ones."""
+    from docling_spark.operators.extract import extract_pages
     from docling_spark.sources.pages import synthesize_pages
-    from docling_spark.streaming.stream import run_available_now
+    from docling_spark.streaming.stream import drain, read_pages_stream
 
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
@@ -101,7 +102,7 @@ def test_streaming_available_now_and_incremental(spark, tmp_path):
     synthesize_pages(spark, "/root/testdata/sf0.001", n_pages=30).coalesce(
         2
     ).write.mode("append").parquet(in_dir)
-    assert run_available_now(spark, in_dir, out_dir, ckpt, num_partitions=4)
+    assert drain(extract_pages(read_pages_stream(spark, in_dir), num_partitions=4), out_dir, ckpt)
     first = spark.read.parquet(out_dir)
     assert first.count() == 30
     assert first.filter(first.status == "success").count() == 30
@@ -113,7 +114,7 @@ def test_streaming_available_now_and_incremental(spark, tmp_path):
     more.exceptAll(
         synthesize_pages(spark, "/root/testdata/sf0.001", n_pages=30)
     ).coalesce(1).write.mode("append").parquet(in_dir)
-    assert run_available_now(spark, in_dir, out_dir, ckpt, num_partitions=4)
+    assert drain(extract_pages(read_pages_stream(spark, in_dir), num_partitions=4), out_dir, ckpt)
     assert spark.read.parquet(out_dir).count() == 50
 
 
@@ -188,9 +189,10 @@ def test_streaming_convert_mixed_formats(spark, tmp_path):
     """The unified router under Structured Streaming: a crawl drop of
     mixed html/csv/pdf bytes converts with the same per-format rows as
     the batch path, and a second drain is incremental."""
+    from docling_spark.operators.convert import convert_any
     from docling_spark.sources.pages import synthesize_pages
     from docling_spark.sources.pdfgen import synthesize_pdf_pages
-    from docling_spark.streaming.stream import run_convert_available_now
+    from docling_spark.streaming.stream import drain, read_pages_stream
     from pyspark.sql import functions as F
 
     in_dir = str(tmp_path / "in")
@@ -211,7 +213,7 @@ def test_streaming_convert_mixed_formats(spark, tmp_path):
         )
     )
     html.unionByName(pdfs).coalesce(2).write.mode("append").parquet(in_dir)
-    assert run_convert_available_now(spark, in_dir, out_dir, ckpt, num_partitions=4)
+    assert drain(convert_any(read_pages_stream(spark, in_dir), num_partitions=4), out_dir, ckpt)
     out = spark.read.parquet(out_dir)
     by_fmt = {r["fmt"]: r["n"] for r in out.groupBy("fmt").agg(F.count("*").alias("n")).collect()}
     assert by_fmt.get("html") == 12 and by_fmt.get("pdf") == 6
@@ -222,12 +224,12 @@ def test_streaming_convert_mixed_formats(spark, tmp_path):
         "url", "warc_ts", "html", "text", "lang"
     ).limit(20).exceptAll(html)
     more.coalesce(1).write.mode("append").parquet(in_dir)
-    assert run_convert_available_now(spark, in_dir, out_dir, ckpt, num_partitions=4)
+    assert drain(convert_any(read_pages_stream(spark, in_dir), num_partitions=4), out_dir, ckpt)
     assert spark.read.parquet(out_dir).count() == 26
 
 
 def test_chunk_pages_router_mixed_formats(spark):
-    """router=True chunks a MIXED crawl (html + pdf) in one pass: every
+    """chunk_pages chunks a MIXED crawl (html + pdf) in one pass: every
     doc yields chunks, budgets hold, and pdf chunks carry pdf headings."""
     from pyspark.sql import functions as F
 
@@ -241,9 +243,41 @@ def test_chunk_pages_router_mixed_formats(spark):
     pdfs = synthesize_pdf_pages(spark, "/root/testdata/sf0.001", n_docs=4).select(
         "url", F.col("content").alias("html")
     )
-    ch = chunk_pages(html.unionByName(pdfs), router=True, max_tokens=64).cache()
+    ch = chunk_pages(html.unionByName(pdfs), max_tokens=64).cache()
     assert ch.select("url").distinct().count() == 12
     assert ch.agg(F.max("n_tokens")).collect()[0][0] <= 64
     pdf_chunks = ch.filter(F.col("url").contains("pdf.example.com"))
     assert pdf_chunks.count() > 0
     assert pdf_chunks.filter(F.size("headings") > 0).count() > 0
+
+
+def test_chunk_pages_keeps_a_status_row_for_bad_inputs(spark):
+    """Every input ends as a row with a status: inputs the router skips
+    or that fail to parse keep one chunk-less row with the router's or
+    the driver's error; parseable pages chunk as usual."""
+    from collections import defaultdict
+
+    from docling_spark.operators.chunks import chunk_pages
+    from tests.test_operator_pin import HOSTILE
+
+    docs = [("https://www.example.com/doc.html", HTML), *HOSTILE]
+    df = spark.createDataFrame(docs, "url string, html binary")
+    by_url = defaultdict(list)
+    for r in chunk_pages(df, max_tokens=64, num_partitions=2).collect():
+        by_url[r.url].append(r)
+    assert set(by_url) == {url for url, _ in docs}
+
+    hostile = "https://hostile.example.com/{}".format
+    for name, fmt in (("empty", "empty"), ("random", "binary")):
+        (row,) = by_url[hostile(name)]
+        assert (row.status, row.chunk_id) == ("skipped", None)
+        assert row.error == f"unsupported format: {fmt}"
+    (row,) = by_url[hostile("broken.pdf")]
+    assert (row.status, row.chunk_id, row.text) == ("failure", None, None)
+    assert row.error.startswith("PdfError: ")
+
+    for url in ("https://www.example.com/doc.html", hostile("deep"), hostile("colspan")):
+        rows = sorted(by_url[url], key=lambda r: r.chunk_id)
+        assert {(r.status, r.error) for r in rows} == {("success", None)}
+        assert [r.chunk_id for r in rows] == list(range(len(rows)))
+    assert any("deep" in r.text for r in by_url[hostile("deep")])

@@ -159,7 +159,7 @@ def _digest(df) -> dict:
     return {"rows": len(rows), "sha256": hashlib.sha256("\n".join(rows).encode()).hexdigest()}
 
 
-def _stream(spark, tmp_path, frame, runner):
+def _stream(spark, tmp_path, frame, operator):
     in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
     frame.select(
         "url",
@@ -168,7 +168,8 @@ def _stream(spark, tmp_path, frame, runner):
         F.lit(None).cast("string").alias("text"),
         F.lit("en").alias("lang"),
     ).coalesce(2).write.parquet(in_dir)
-    assert runner(spark, in_dir, out_dir, ckpt, num_partitions=4)
+    pages = stream.read_pages_stream(spark, in_dir)
+    assert stream.drain(operator(pages, num_partitions=4), out_dir, ckpt)
     return spark.read.parquet(out_dir)
 
 
@@ -194,10 +195,10 @@ CASES = {
         i["html"], mode="hierarchical", num_partitions=4
     ),
     "chunk_pages_router": lambda s, i, t: chunks.chunk_pages(
-        i["mixed"], router=True, max_tokens=64, num_partitions=4
+        i["mixed"], max_tokens=64, num_partitions=4
     ),
-    "stream_extract": lambda s, i, t: _stream(s, t, i["html"], stream.run_available_now),
-    "stream_convert": lambda s, i, t: _stream(s, t, i["mixed"], stream.run_convert_available_now),
+    "stream_extract": lambda s, i, t: _stream(s, t, i["html"], extract.extract_pages),
+    "stream_convert": lambda s, i, t: _stream(s, t, i["mixed"], convert.convert_any),
     "media_features": lambda s, i, t: multimodal.extract_media_features(
         multimodal.synth_media(s, 64)
     ),

@@ -108,6 +108,21 @@ def test_merge_horizontal_cells_reference_semantics():
     assert [c.text for c in merge_horizontal_cells(two_rows)] == ["Hello", "below"]
 
 
+def test_merge_script_flip_space_counts_arabic_indic_digits_as_rtl():
+    """Kerning-tight cells get a space only where the script direction
+    flips. Arabic-Indic digits (bidi AN) belong to the RTL side: set
+    against an Arabic word they join with no space, while an embedded
+    latin word still gets one."""
+    digits = [TextCell("صف", 10, 20, 28, 10, 10), TextCell("١٢", 28, 20, 40, 10, 10)]
+    (merged,) = merge_horizontal_cells(digits)
+    assert " " not in merged.text and sorted(merged.text) == sorted("صف١٢")
+    latin = [TextCell("صف", 10, 20, 28, 10, 10), TextCell("python", 28, 20, 60, 10, 10)]
+    (merged,) = merge_horizontal_cells(latin)
+    assert merged.text.count(" ") == 1 and sorted(merged.text.replace(" ", "")) == sorted(
+        "صفpython"
+    )
+
+
 def test_rate_text_quality_reference_semantics():
     """page_preprocessing_model.py:120-145 hard zeros + frag penalty."""
     assert rate_text_quality("normal text") == 1.0
