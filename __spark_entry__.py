@@ -139,7 +139,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from docling_spark.sources.pdfgen import synthesize_pdf_pages
 
         pdfs = synthesize_pdf_pages(spark, sf_dir, n_docs=200)
-        res = extract_pdf.extract_pdf_docs(pdfs, num_partitions=16)
+        res = convert.convert_any(pdfs, content_col="content", num_partitions=16)
         return res.select(
             "url", "status", "n_pages", "n_nodes", "parse_score", "md"
         ).orderBy("url")
@@ -153,7 +153,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from docling_spark.sources.pdfgen import synthesize_pdf_pages
 
         pdfs = synthesize_pdf_pages(spark, sf_dir, n_docs=200, mixed_producers=True)
-        res = extract_pdf.extract_pdf_docs(pdfs, num_partitions=16)
+        res = convert.convert_any(pdfs, content_col="content", num_partitions=16)
         return (
             res.withColumn(
                 "doc_id", F.regexp_extract("url", r"/doc/(\d+)\.pdf", 1).cast("long")

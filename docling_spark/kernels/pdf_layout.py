@@ -1297,6 +1297,14 @@ def page_score(page: PdfPage) -> float | None:
     return page_parse_score([c.text for c in page.cells]) if page.cells else None
 
 
+def doc_score(page_scores: list[float | None]) -> float | None:
+    """The document's parse score: 10th percentile over the scored pages
+    (standard_pdf_pipeline.py:262-268 nanquantile); None when no page
+    has a score."""
+    scores = [s for s in page_scores if s is not None]
+    return quantile10(scores) if scores else None
+
+
 def doc_blocks(pages: list[PdfPage]) -> tuple[list[Block], dict[int, float]]:
     """The page pass: every page's blocks, pages ascending, and each
     page's height (the input of mark_page_furniture)."""
@@ -1317,8 +1325,9 @@ def assemble_pages(
     blocks: list[Block], page_heights: dict[int, float], name: str = "doc"
 ) -> Doc:
     """Every page's blocks, in reading order -> Doc: the doc-wide
-    layout policy both PDF strategies share (furniture marking, then
-    cross-page continuation merge, then assembly)."""
+    layout policy the router's doc-at-once route and the paged strategy
+    share (furniture marking, then cross-page continuation merge, then
+    assembly)."""
     mark_page_furniture(blocks, page_heights)
     return assemble_doc(merge_continuations(blocks), name)
 

@@ -44,6 +44,9 @@ CONVERT_SCHEMA = StructType(
         StructField("txt", StringType()),
         StructField("n_nodes", IntegerType()),
         StructField("n_chunks", IntegerType()),
+        # page-shaped formats (pdf, image, METS) only, else null
+        StructField("n_pages", IntegerType()),
+        StructField("parse_score", DoubleType()),
         StructField("doctags", StringType()),
         StructField("json", StringType()),
         StructField("bytes_in", LongType()),
@@ -81,21 +84,26 @@ def _ext_of(url: str) -> str:
 
 def _pages_doc(row: dict, url: str, pages) -> "object":
     """Page-shaped routes (pdf, image, METS) -> Doc via the shared PDF
-    layout path; records the OCR need from bitmap coverage (P10)."""
+    layout path, the one doc-at-once assembly; records the page count,
+    the doc parse score (P19) and the OCR need from bitmap coverage
+    (P10)."""
     from docling_spark.kernels.pdf_kernel import bitmap_coverage
-    from docling_spark.kernels.pdf_layout import build_doc
+    from docling_spark.kernels.pdf_layout import build_doc, doc_score
 
-    doc, _scores = build_doc(pages, name=url)
+    doc, scores = build_doc(pages, name=url)
     row["ocr_needed"] = max(bitmap_coverage(p) for p in pages)
+    row["n_pages"] = len(pages)
+    row["parse_score"] = doc_score(scores)
     return doc
 
 
 def route_to_doc(row: dict, url: str, payload: bytes) -> "object | None":
     """S4 dispatch without exports: the parsed Doc IR, or None.
 
-    ``fmt`` (and, for page formats, ``ocr_needed``) is written into the
-    caller's ``row`` as soon as it is known, so a failure row built from
-    ``row`` keeps it. Skip outcomes and unparseable audio set
+    ``fmt`` (and, for page formats, ``ocr_needed``, ``n_pages`` and
+    ``parse_score``) is written into the caller's ``row`` as soon as it
+    is known, so a failure row built from ``row`` keeps it. Skip
+    outcomes and unparseable audio set
     ``row['status']``/``row['error']`` and return None; parse errors
     propagate to the caller's driver. Shared by convert_one (full
     exports) and the multi-format chunker (which wants the Doc)."""
@@ -212,6 +220,8 @@ def convert_one(
         "txt": None,
         "n_nodes": 0,
         "n_chunks": 0,
+        "n_pages": None,
+        "parse_score": None,
         "doctags": None,
         "json": None,
         "ocr_needed": None,

@@ -1,4 +1,5 @@
-"""PDF extraction as Spark operators — two physical strategies.
+"""PDF extraction as Spark operators: the paged strategy, the
+confidence rollup and the multimodal page export.
 
 Reference pipeline being re-expressed: StandardPdfPipeline
 (/root/reference/docling/pipeline/standard_pdf_pipeline.py:68-92,
@@ -7,24 +8,26 @@ reading order -> document. Its threaded variant
 (threaded_standard_pdf_pipeline.py) exists only to pipeline stages
 inside one process; Spark replaces all of it with partition parallelism.
 
-Strategy A — ``extract_pdf_docs`` (doc-at-once): one ``mapInPandas``
-parses + assembles each document in a single task. Right when documents
-are small (crawl PDFs overwhelmingly are) because there is ZERO shuffle.
+Doc-at-once extraction, which parses and assembles each document in a
+single task with zero shuffle (right when documents are small, as crawl
+PDFs overwhelmingly are), is the router's pdf route,
+``convert.convert_any``; its rows carry ``n_pages`` and ``parse_score``.
 
-Strategy B — ``parse_pdf_page_rows`` + ``assemble_from_pages`` (paged):
-parse emits one row per page (url, page_no, blocks, parse_score), pages
-of one 2000-page document land in different tasks; the single shuffle is
+Paged — ``parse_pdf_page_rows`` + ``assemble_from_pages``: parse emits
+one row per page (url, page_no, blocks, parse_score), pages of one
+2000-page document land in different tasks; the single shuffle is
 ``groupBy(url).agg(array_sort(collect_list(struct(page_no, blocks))))``
 — the reference's page-concat boundary (standard_pdf_pipeline.py:183-201)
 made into a real exchange. This is the skew escape hatch for oversized
 documents: one doc is no longer one task.
 
-Strategy B's wire format is the ``pdf_layout.Block`` dataclass itself:
+The paged wire format is the ``pdf_layout.Block`` dataclass itself:
 ``_BLOCK_FIELDS`` is a nested Arrow struct with one field per dataclass
 field (``table`` a struct of num_rows, num_cols and TableCellData
 cells); pages ship ``dataclasses.asdict(block)`` and regroup into
-``Block(**row)``. Both strategies and the multimodal export share one
-page pass, ``pdf_layout.doc_blocks``.
+``Block(**row)``. Both PDF paths and the multimodal export share one
+page pass, ``pdf_layout.doc_blocks``, and one doc score,
+``pdf_layout.doc_score``.
 
 Confidence aggregation (P19, standard_pdf_pipeline.py:253-281) is plain
 Spark SQL over the per-page scores: avg + 10th-percentile.
@@ -41,13 +44,12 @@ from pyspark.sql.types import (
     BooleanType,
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from docling_spark.operators.batch import guarded, map_docs, per_page, url_hash
+from docling_spark.operators.batch import map_docs, per_page, url_hash
 
 # pdf_layout.Block as an Arrow struct, field for field in dataclass
 # order: the paged strategy ships each block through the shuffle as
@@ -94,21 +96,6 @@ _BLOCK_FIELDS = [
     StructField("bold", BooleanType()),
 ]
 
-PDF_DOC_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("status", StringType()),
-        StructField("error", StringType()),
-        StructField("n_pages", IntegerType()),
-        StructField("md", StringType()),
-        StructField("txt", StringType()),
-        StructField("n_nodes", IntegerType()),
-        StructField("parse_score", DoubleType()),
-        StructField("bytes_in", LongType()),
-        StructField("t_sec", DoubleType()),
-    ]
-)
-
 PDF_PAGE_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -124,52 +111,7 @@ PDF_PAGE_SCHEMA = StructType(
 )
 
 
-def _doc_score(page_scores: list[float | None]) -> float:
-    """Doc parse score = 10th percentile over the scored pages
-    (standard_pdf_pipeline.py:262-268 nanquantile)."""
-    from docling_spark.kernels.pdf_layout import quantile10
-
-    return quantile10([s for s in page_scores if s is not None])
-
-
-# ------------------------------------------------------- strategy A
-
-
-_DOC_FAILURE = {"n_pages": 0, "md": None, "txt": None, "n_nodes": 0, "parse_score": None}
-
-
-def _pdf_doc(url: str, content: bytes) -> dict:
-    from docling_spark.kernels.markdown import to_markdown
-    from docling_spark.kernels.pdf_kernel import parse_pdf
-    from docling_spark.kernels.pdf_layout import build_doc
-    from docling_spark.kernels.textout import to_text
-
-    pages = parse_pdf(content or b"")
-    doc, page_scores = build_doc(pages, name=url or "doc")
-    return {
-        "status": "success",
-        "error": None,
-        "n_pages": len(pages),
-        "md": to_markdown(doc),
-        "txt": to_text(doc),
-        "n_nodes": len(doc.nodes),
-        "parse_score": _doc_score(page_scores),
-        "bytes_in": len(content) if content is not None else 0,
-    }
-
-
-def _pdf_doc_row(url, content) -> list[dict]:
-    return [{**guarded(_pdf_doc, _DOC_FAILURE, url, content), "url": url}]
-
-
-def extract_pdf_docs(
-    df: DataFrame, content_col: str = "content", num_partitions: int | None = None
-) -> DataFrame:
-    sel = url_hash(df, ["url", content_col], num_partitions)
-    return map_docs(sel, _pdf_doc_row, PDF_DOC_SCHEMA)
-
-
-# ------------------------------------------------------- strategy B
+# ------------------------------------------------------- paged strategy
 
 
 def parse_pdf_page_rows(df: DataFrame, content_col: str = "content") -> DataFrame:
@@ -214,6 +156,8 @@ ASSEMBLED_SCHEMA = StructType(
     [
         StructField("url", StringType()),
         StructField("status", StringType()),
+        # the first failed page's error; null on success rows
+        StructField("error", StringType()),
         StructField("n_pages", IntegerType()),
         StructField("md", StringType()),
         StructField("txt", StringType()),
@@ -229,7 +173,9 @@ def assemble_from_pages(page_rows: DataFrame) -> DataFrame:
     per-doc kernel does classification + reading order + serialize."""
     grouped = page_rows.groupBy("url").agg(
         F.array_sort(
-            F.collect_list(F.struct("page_no", "height", "blocks", "parse_score", "status"))
+            F.collect_list(
+                F.struct("page_no", "height", "blocks", "parse_score", "status", "error")
+            )
         ).alias("pages"),
     )
     return map_docs(grouped, _assembled_row, ASSEMBLED_SCHEMA)
@@ -238,7 +184,7 @@ def assemble_from_pages(page_rows: DataFrame) -> DataFrame:
 def _assemble(url: str, pages) -> dict:
     from docling_spark.kernels.doc_model import TableCellData, TableDataIR
     from docling_spark.kernels.markdown import to_markdown
-    from docling_spark.kernels.pdf_layout import Block, assemble_pages
+    from docling_spark.kernels.pdf_layout import Block, assemble_pages, doc_score
     from docling_spark.kernels.textout import to_text
 
     def table(t):
@@ -249,21 +195,23 @@ def _assemble(url: str, pages) -> dict:
         cells = [TableCellData(**c) for c in t["cells"]]
         return TableDataIR(int(t["num_rows"]), int(t["num_cols"]), cells)
 
-    statuses = {p["status"] for p in pages}
-    if statuses == {"failure"}:
-        return {**_DOC_FAILURE, "status": "failure"}
+    # pages arrive sorted by page_no, so this is the first failed page
+    error = next((p["error"] for p in pages if p["status"] == "failure"), None)
+    if all(p["status"] == "failure" for p in pages):
+        return {"status": "failure", "error": error, "n_pages": 0, "md": None,
+                "txt": None, "n_nodes": 0, "parse_score": None}
     blocks = [
         Block(**{**b, "table": table(b["table"])}) for p in pages for b in p["blocks"]
     ]
     doc = assemble_pages(blocks, {p["page_no"]: p["height"] for p in pages}, name=url)
-    scores = [p["parse_score"] for p in pages if p["parse_score"] is not None]
     return {
-        "status": "partial_success" if "failure" in statuses else "success",
+        "status": "success" if error is None else "partial_success",
+        "error": error,
         "n_pages": len(pages),
         "md": to_markdown(doc),
         "txt": to_text(doc),
         "n_nodes": len(doc.nodes),
-        "parse_score": _doc_score(scores) if scores else None,
+        "parse_score": doc_score([p["parse_score"] for p in pages]),
     }
 
 
@@ -459,7 +407,8 @@ def multimodal_pages(
     image_scale: float | None = None,
 ) -> DataFrame:
     """(url, content) PDF corpus -> one multimodal training row per
-    page. Same single-exchange shape as extract_pdf_docs. With
+    page. Same single-exchange shape as the router's doc-at-once
+    route (``convert.convert_any``). With
     ``image_scale`` set, each row also carries the P5 geometry raster
     as PNG bytes (page_image, img_width, img_height) — the reference's
     page.image tuple member (utils/export.py:107). Off by default:

@@ -46,7 +46,9 @@ def drain(df, out: str, ckpt: str, timeout_sec: int = 300) -> bool:
     same checkpoint processes only files added since (streaming resume).
     Per-document operators run unchanged on a streaming frame (url-hash
     repartition is a stateless shuffle), so a drain-and-stop extraction
-    is ``drain(extract_pages(read_pages_stream(spark, d)), out, ckpt)``."""
+    is ``drain(extract_pages(read_pages_stream(spark, d)), out, ckpt)``,
+    a windowed rollup ``drain(windowed_event_rollup(events), out, ckpt)``
+    and a cross-batch dedup ``drain(dedup_stream(pages), out, ckpt)``."""
     query = (
         df.writeStream.format("parquet")
         .outputMode("append")
@@ -85,28 +87,6 @@ def windowed_event_rollup(events, window: str = "1 hour", watermark: str = "30 m
             "sum_value",
         )
     )
-
-
-def run_windowed_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
-    timeout_sec: int = 300,
-) -> bool:
-    """Streaming twin of the batch rollup: file-source events stream ->
-    watermarked windowed agg -> append-mode parquet sink (windows emit
-    once finalized by the watermark; AvailableNow drains and stops)."""
-    events = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        ).parquet(input_dir)
-    )
-    agg = windowed_event_rollup(events, window=window, watermark=watermark)
-    return drain(agg, output_dir, checkpoint_dir, timeout_sec)
 
 
 # ----------------------------- stateful cross-batch dedup (GroupState)
@@ -159,14 +139,3 @@ def dedup_stream(pages_stream, text_col: str = "text"):
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_dedup_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    timeout_sec: int = 300,
-) -> bool:
-    pages = read_pages_stream(spark, input_dir)
-    return drain(dedup_stream(pages), output_dir, checkpoint_dir, timeout_sec)

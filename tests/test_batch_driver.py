@@ -144,6 +144,23 @@ def test_html_parser_built_only_by_the_router_and_the_flagship():
     assert builders == [("convert.py", "route_to_doc"), ("extract.py", "_extract_kernel")]
 
 
+def test_pdf_doc_assembled_at_once_only_by_the_router():
+    """One doc-at-once path for page-shaped documents: within
+    operators/ only the router's convert._pages_doc calls build_doc (the
+    paged strategy assembles regrouped blocks through assemble_pages)."""
+    callers = [
+        (p.name, getattr(top, "name", "<module>"))
+        for p in sorted((PACKAGE / "operators").glob("*.py"))
+        for top in ast.parse(p.read_text()).body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call)
+        and (
+            getattr(node.func, "id", None) == "build_doc"
+            or getattr(node.func, "attr", None) == "build_doc"
+        )
+    ]
+    assert callers == [("convert.py", "_pages_doc")]
+
 
 def test_pdf_broken_on_a_later_page_keeps_earlier_pages(spark, monkeypatch):
     """A page kernel that raises on page 2 of 3 keeps page 1's row next
@@ -174,5 +191,6 @@ def test_pdf_broken_on_a_later_page_keeps_earlier_pages(spark, monkeypatch):
     )
     (doc,) = extract_pdf.assemble_from_pages(page_rows).collect()
     assert doc.status == "partial_success"
+    assert doc.error == "ValueError: bad page"
     assert "alpha page 1 text" in doc.md and "alpha page 1 text" in doc.txt
     assert "page 2" not in doc.txt and "page 3" not in doc.txt

@@ -122,10 +122,7 @@ def test_windowed_event_rollup_streaming_matches_batch(spark, tmp_path):
     """Watermarked tumbling-window aggregation: the streaming run over
     the events files (append mode, windows finalized by the watermark)
     must agree with the batch plan on every finalized window."""
-    from docling_spark.streaming.stream import (
-        run_windowed_stream,
-        windowed_event_rollup,
-    )
+    from docling_spark.streaming.stream import drain, windowed_event_rollup
 
     in_dir = str(tmp_path / "ev_in")
     out_dir = str(tmp_path / "ev_out")
@@ -133,7 +130,11 @@ def test_windowed_event_rollup_streaming_matches_batch(spark, tmp_path):
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     ev.write.parquet(in_dir)
 
-    assert run_windowed_stream(spark, in_dir, out_dir, ckpt, timeout_sec=120)
+    events = spark.readStream.schema(
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string"
+    ).parquet(in_dir)
+    assert drain(windowed_event_rollup(events), out_dir, ckpt, 120)
     streamed = {
         (r.win_start, r.event_type): (r.n_events, r.sum_value)
         for r in spark.read.parquet(out_dir).collect()
@@ -155,7 +156,7 @@ def test_stateful_dedup_stream_across_batches(spark, tmp_path):
     marked is_first=false when the same content re-arrives in batch 2 —
     state survives across drains via the checkpoint."""
     from docling_spark.sources.pages import synthesize_pages
-    from docling_spark.streaming.stream import run_dedup_stream
+    from docling_spark.streaming.stream import dedup_stream, drain, read_pages_stream
 
     in_dir = str(tmp_path / "dd_in")
     out_dir = str(tmp_path / "dd_out")
@@ -163,7 +164,7 @@ def test_stateful_dedup_stream_across_batches(spark, tmp_path):
 
     batch1 = synthesize_pages(spark, "/root/testdata/sf0.001", n_pages=20)
     batch1.coalesce(1).write.mode("append").parquet(in_dir)
-    assert run_dedup_stream(spark, in_dir, out_dir, ckpt)
+    assert drain(dedup_stream(read_pages_stream(spark, in_dir)), out_dir, ckpt)
     first = spark.read.parquet(out_dir)
     assert first.count() == 20
     assert first.filter("is_first").count() == 20
@@ -176,7 +177,7 @@ def test_stateful_dedup_stream_across_batches(spark, tmp_path):
         .withColumn("url", F.concat(F.col("url"), F.lit("?recrawl=1")))
     )
     dup.coalesce(1).write.mode("append").parquet(in_dir)
-    assert run_dedup_stream(spark, in_dir, out_dir, ckpt)
+    assert drain(dedup_stream(read_pages_stream(spark, in_dir)), out_dir, ckpt)
     out = spark.read.parquet(out_dir)
     assert out.count() == 30
     # the re-crawled rows are flagged as duplicates

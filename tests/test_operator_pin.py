@@ -183,7 +183,6 @@ CASES = {
     "convert_any_doctags_json": lambda s, i, t: convert.convert_any(
         i["mixed"], num_partitions=4, want_doctags=True, want_json=True
     ),
-    "extract_pdf_docs": lambda s, i, t: extract_pdf.extract_pdf_docs(i["pdf"], num_partitions=4),
     "parse_pdf_page_rows": lambda s, i, t: extract_pdf.parse_pdf_page_rows(i["pdf"]),
     "extract_pdfs_paged": lambda s, i, t: extract_pdf.extract_pdfs_paged(i["pdf"]),
     "multimodal_pages": lambda s, i, t: extract_pdf.multimodal_pages(i["pdf"], num_partitions=4),

@@ -1,5 +1,5 @@
 """PDF extraction path: kernel roundtrip against constructed ground
-truth, docling-semantics unit tests, and both Spark strategies.
+truth, docling-semantics unit tests, and both Spark PDF paths.
 
 Correctness is proven two ways: against generated PDFs whose
 expected structure is known by construction, and (test_pdf_real.py)
@@ -156,26 +156,35 @@ def pdf_corpus(spark):
 
 
 def test_extract_pdf_docs_spark(spark, pdf_corpus):
-    from docling_spark.operators.extract_pdf import extract_pdf_docs
+    """Doc-at-once PDF extraction is the router's pdf route: every row
+    carries the page count (doc_spec: 1 + doc_id % 2) and the doc parse
+    score."""
+    from docling_spark.operators.convert import convert_any
 
-    res = extract_pdf_docs(pdf_corpus, num_partitions=8).cache()
-    assert res.count() == 40
-    assert res.filter(res.status == "success").count() == 40
+    res = convert_any(pdf_corpus, content_col="content", num_partitions=8).cache()
+    rows = res.collect()
+    assert len(rows) == 40
+    assert {(r.fmt, r.status) for r in rows} == {("pdf", "success")}
+    for r in rows:
+        doc_id = int(r.url.rsplit("/", 1)[1].removesuffix(".pdf"))
+        assert r.n_pages == 1 + doc_id % 2, r.url
     row = res.filter(res.url.endswith("/5.pdf")).first()
     assert row.md.startswith("# ")
     assert row.parse_score == 1.0
 
 
 def test_paged_strategy_matches_doc_at_once(spark, pdf_corpus):
-    """Strategy B (page explode + regroup shuffle) must produce the
-    same markdown as strategy A for every document."""
-    from docling_spark.operators.extract_pdf import (
-        extract_pdf_docs,
-        extract_pdfs_paged,
-    )
+    """The paged strategy (page explode + regroup shuffle) must produce
+    the same markdown, page count and doc score as the router's
+    doc-at-once route for every document."""
+    from docling_spark.operators.convert import convert_any
+    from docling_spark.operators.extract_pdf import extract_pdfs_paged
 
-    a = {r["url"]: r["md"] for r in extract_pdf_docs(pdf_corpus).collect()}
-    b = {r["url"]: r["md"] for r in extract_pdfs_paged(pdf_corpus).collect()}
+    def rows(df):
+        return {r.url: (r.md, r.n_pages, r.parse_score) for r in df.collect()}
+
+    a = rows(convert_any(pdf_corpus, content_col="content"))
+    b = rows(extract_pdfs_paged(pdf_corpus))
     assert a == b
     assert len(a) == 40
 
@@ -194,15 +203,37 @@ def test_confidence_rollup(spark, pdf_corpus):
 
 
 def test_spark_failure_rows_not_exceptions(spark):
-    from docling_spark.operators.extract_pdf import extract_pdf_docs
+    """Bad bytes end as rows: a broken PDF is a failure with the parser's
+    error; empty bytes are no PDF at all, so the router skips them."""
+    from docling_spark.operators.convert import convert_any
 
     bad = spark.createDataFrame(
         [("u1", bytearray(b"%PDF-broken")), ("u2", bytearray(b""))],
         "url string, content binary",
     )
-    res = extract_pdf_docs(bad, num_partitions=2).collect()
-    assert {r.status for r in res} == {"failure"}
-    assert all(r.error for r in res)
+    res = {r.url: r for r in convert_any(bad, content_col="content", num_partitions=2).collect()}
+    assert res["u1"].status == "failure" and res["u1"].error.startswith("PdfError: ")
+    assert (res["u2"].status, res["u2"].error) == ("skipped", "unsupported format: empty")
+
+
+def test_doc_score_is_null_without_a_scored_page():
+    """One doc-score rule: the 10th percentile over the scored pages,
+    None when no page has text. A one-frame image is one unscored page;
+    an HTML page is no page-shaped document at all."""
+    from test_operator_pin import _images
+
+    from docling_spark.kernels.pdf_layout import doc_score
+    from docling_spark.operators.convert import convert_one
+
+    assert doc_score([None, None]) is None
+    assert doc_score([None, 0.5, 1.0]) == 0.55
+    url = "https://img.example.com/gray.png"
+    image = convert_one(url, dict(_images())[url])
+    assert (image["fmt"], image["status"]) == ("image", "success")
+    assert image["n_pages"] == 1 and image["parse_score"] is None
+    page = convert_one("https://x/p.html", b"<html><body><p>hello</p></body></html>")
+    assert (page["fmt"], page["status"]) == ("html", "success")
+    assert page["n_pages"] is None and page["parse_score"] is None
 
 
 def test_multimodal_pages_kernel():
@@ -236,7 +267,8 @@ def test_multimodal_marks_furniture_before_classifying():
     """A heading-sized running head repeated on every page is page
     furniture in the multimodal export as in the doc path: marked
     before classification, so it never becomes a title or heading."""
-    from docling_spark.operators.extract_pdf import _multimodal_rows_for_doc, _pdf_doc
+    from docling_spark.operators.convert import convert_one
+    from docling_spark.operators.extract_pdf import _multimodal_rows_for_doc
     from docling_spark.sources.pdfgen import build_pdf
 
     pdf = build_pdf(
@@ -245,7 +277,7 @@ def test_multimodal_marks_furniture_before_classifying():
             for n in (1, 2, 3)
         ]
     )
-    assert "Journal of Tests" not in _pdf_doc("u", pdf)["md"]
+    assert "Journal of Tests" not in convert_one("u", pdf)["md"]
     rows = _multimodal_rows_for_doc("u", pdf)
     assert len(rows) == 3
     for r in rows:
@@ -634,30 +666,29 @@ def test_real_fixture_furniture_and_pictures():
 
 @needs_reference
 def test_paged_strategy_carries_tables(spark):
-    """Strategy B must not drop reconstructed tables: the pg9 fixture
-    pushed through the page-explode + regroup shuffle produces the
-    same markdown (table grid included) as the doc-at-once path."""
+    """The paged strategy must not drop reconstructed tables: the pg9
+    fixture pushed through the page-explode + regroup shuffle produces
+    the same markdown (table grid included) as the router's doc-at-once
+    route."""
     from pathlib import Path
 
-    from docling_spark.operators.extract_pdf import (
-        extract_pdf_docs,
-        extract_pdfs_paged,
-    )
+    from docling_spark.operators.convert import convert_any
+    from docling_spark.operators.extract_pdf import extract_pdfs_paged
 
     pdf = Path("/root/reference/tests/data/pdf/2305.03393v1-pg9.pdf").read_bytes()
     df = spark.createDataFrame(
         [("https://x/pg9.pdf", bytearray(pdf))], "url string, content binary"
     )
-    a = extract_pdf_docs(df, num_partitions=2).collect()[0]
+    a = convert_any(df, content_col="content", num_partitions=2).collect()[0]
     b = extract_pdfs_paged(df).collect()[0]
     assert "| OTSL" in a.md and a.md == b.md
 
 
 def test_paged_shuffle_carries_every_block_field(spark, monkeypatch):
-    """Strategy B's page rows carry each Block field for field through
-    Arrow and the regroup shuffle: a table with a spanning header cell
-    and a bold text block come out of assemble_from_pages exactly as
-    the in-process assembly renders them."""
+    """The paged strategy's page rows carry each Block field for field
+    through Arrow and the regroup shuffle: a table with a spanning
+    header cell and a bold text block come out of assemble_from_pages
+    exactly as the in-process assembly renders them."""
     import copy
     from dataclasses import asdict
 
@@ -962,7 +993,7 @@ def test_cross_page_merge_identical_in_both_strategies(spark):
     from pyspark.sql import Row
 
     from docling_spark.operators.convert import convert_one
-    from docling_spark.operators.extract_pdf import extract_pdf_docs
+    from docling_spark.operators.extract_pdf import extract_pdfs_paged
 
     pdf = _two_page_continuation_pdf()
     merged = ("The framework keeps its promise across the "
@@ -974,7 +1005,7 @@ def test_cross_page_merge_identical_in_both_strategies(spark):
     df = spark.createDataFrame(
         [Row(url="http://x/cont.pdf", content=pdf)]
     )
-    rows = extract_pdf_docs(df, num_partitions=2).collect()  # paged
+    rows = extract_pdfs_paged(df).collect()  # paged
     assert rows[0].status == "success"
     assert merged in rows[0].md
     assert rows[0].md.count("framework keeps") == 1
