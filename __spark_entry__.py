@@ -55,12 +55,13 @@ def _corpus_with_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: synthesize the Common-Crawl-style pages table from the
-    sf0.001 documents parquet and run HTML extraction end-to-end."""
-    from docling_spark.operators.extract import extract_pages
+    sf0.001 documents parquet and convert it end-to-end through the
+    format router."""
+    from docling_spark.operators.convert import convert_any
     from docling_spark.sources.pages import synthesize_pages
 
     pages = synthesize_pages(spark, "/root/testdata/sf0.001")
-    res = extract_pages(pages, num_partitions=8)
+    res = convert_any(pages, num_partitions=8)
     return res.select(
         "url", "warc_ts", "status", "n_nodes", "n_spans", "bytes_in", "md", "txt"
     )
@@ -74,7 +75,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         chunks,
         convert,
         dedup,
-        extract,
         extract_pdf,
         formats,
         multimodal,
@@ -86,13 +86,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---- extraction family (kernel output; rows-only checks) ----
     def x_extract(spark, sf_dir):
         pages = synthesize_pages(spark, sf_dir)
-        return extract.extract_pages(pages).select(
+        return convert.convert_any(pages).select(
             "url", "status", "n_nodes", "n_spans", "bytes_in", "md"
         ).orderBy("url")
 
     def x_extract_status(spark, sf_dir):
         pages = synthesize_pages(spark, sf_dir)
-        res = extract.extract_pages(pages)
+        res = convert.convert_any(pages)
         return res.groupBy("status").agg(
             F.count("*").alias("n_docs"), F.sum("bytes_in").alias("total_bytes")
         ).orderBy("status")
@@ -224,7 +224,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from docling_spark.operators import enrich
 
         pages = synthesize_pages(spark, sf_dir)
-        res = extract.extract_pages(pages)
+        res = convert.convert_any(pages)
         rel = enrich.enrich_code_language(res)
         return (
             rel.groupBy(F.col("enrichment").alias("language"))
@@ -471,16 +471,33 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_doc_deciles(spark, sf_dir):
         # window-function coverage: documents ranked into character
         # deciles (deterministic tie-break on doc_id), then per-decile
-        # rollup — the partition-all window is the one shape that must
-        # NOT appear in a 100 TB plan unless bounded (here it ranks a
-        # metadata-only projection, not the payload).
+        # rollup. ntile(10) over a global order would run in one
+        # partition; the exact ranks come instead from the n_chars
+        # histogram (one row per distinct length, cumulated on the
+        # driver and broadcast back) plus a row_number within each
+        # length, a window partitioned by n_chars.
         from pyspark.sql import Window
 
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        w = Window.orderBy(F.asc("n_chars"), F.asc("doc_id"))
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "n_chars")
+        hist = sorted(docs.groupBy("n_chars").count().collect())
+        before, n = [], 0
+        for r in hist:
+            before.append((r["n_chars"], n))
+            n += r["count"]
+        offsets = spark.createDataFrame(before, "n_chars long, n_before long")
+        w = Window.partitionBy("n_chars").orderBy("doc_id")
+        rank0 = F.col("rank0")  # 0-based rank in (n_chars, doc_id) order
+        # ntile: the first n % 10 buckets hold one row more than the rest
+        # (with n < 10 every rank takes the first branch; max() keeps the
+        # unused divisor non-zero)
+        q, big = divmod(n, 10)
+        decile = F.when(rank0 < big * (q + 1), F.floor(rank0 / (q + 1)) + 1).otherwise(
+            F.floor((rank0 - big * (q + 1)) / max(q, 1)) + big + 1
+        )
         return (
-            docs.select("doc_id", "n_chars")
-            .withColumn("decile", F.ntile(10).over(w).cast("int"))
+            docs.join(F.broadcast(offsets), "n_chars")
+            .withColumn("rank0", F.col("n_before") + F.row_number().over(w) - 1)
+            .withColumn("decile", decile.cast("int"))
             .groupBy("decile")
             .agg(
                 F.count("*").alias("n_docs"),

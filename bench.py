@@ -138,12 +138,12 @@ def warmup(spark) -> None:
     Python UDF workers (imports included) before timing — executor
     startup is not part of cluster throughput, and its cost scales
     with worker count, which would corrupt the N-vs-4N efficiency."""
-    from docling_spark.operators.extract import extract_pages
+    from docling_spark.operators.convert import convert_any
     from docling_spark.sources.pages import synthesize_pages
 
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     tiny = synthesize_pages(spark, "/root/testdata/sf0.001", n_pages=CPUS * 4)
-    extract_pages(tiny, num_partitions=CPUS * 2).groupBy("status").count().collect()
+    convert_any(tiny, num_partitions=CPUS * 2).groupBy("status").count().collect()
 
 
 def timed(
@@ -230,7 +230,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
-    from docling_spark.operators.extract import extract_pages
+    from docling_spark.operators.convert import convert_any
 
     warmup(spark)
     n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
@@ -255,7 +255,7 @@ def main() -> None:
     n_ok_box = [0]
 
     def run_extract():
-        res = extract_pages(
+        res = convert_any(
             pages,
             num_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
         )

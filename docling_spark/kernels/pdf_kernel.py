@@ -43,6 +43,7 @@ from __future__ import annotations
 import bisect
 import re
 import zlib
+from collections.abc import Iterator
 from dataclasses import dataclass, field, replace
 
 
@@ -1139,11 +1140,12 @@ def interpret_text(
     return page
 
 
-def parse_pdf(data: bytes, max_pages: int | None = None) -> list[PdfPage]:
-    """bytes -> positioned text cells per page. Raises PdfError on
-    undecodable input (caller converts to a failure row)."""
+def iter_pdf_pages(data: bytes, max_pages: int | None = None) -> Iterator[PdfPage]:
+    """bytes -> positioned text cells, one page at a time, so a page
+    that fails to decode leaves the pages before it usable. Raises
+    PdfError on undecodable input (caller converts to a failure row)."""
     doc = PdfDocument(data)
-    pages = []
+    n = 0
     for i, pd in enumerate(doc.page_dicts()):
         if max_pages is not None and i >= max_pages:
             break
@@ -1151,16 +1153,20 @@ def parse_pdf(data: bytes, max_pages: int | None = None) -> list[PdfPage]:
         w, h = mb[2] - mb[0], mb[3] - mb[1]
         content = doc.page_content(pd)
         fonts = doc.page_fonts(pd)
-        pages.append(
-            interpret_text(
-                content, i + 1, w, h,
-                fonts=fonts,
-                image_xobjects=doc.page_image_xobjects(pd),
-            )
+        yield interpret_text(
+            content, i + 1, w, h,
+            fonts=fonts,
+            image_xobjects=doc.page_image_xobjects(pd),
         )
-    if not pages:
+        n += 1
+    if not n:
         raise PdfError("no pages")
-    return pages
+
+
+def parse_pdf(data: bytes, max_pages: int | None = None) -> list[PdfPage]:
+    """Every page of ``iter_pdf_pages``; any page error fails the whole
+    document."""
+    return list(iter_pdf_pages(data, max_pages))
 
 
 # ----------------------------------------------------- P10: OCR decision

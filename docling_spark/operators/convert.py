@@ -1,4 +1,4 @@
-"""Unified conversion operator: format routing + kernel dispatch (S4).
+"""The one conversion operator: format routing + kernel dispatch (S4).
 
 Reference: ``DocumentConverter`` holds a format -> (backend, pipeline)
 map and routes each input document
@@ -12,9 +12,12 @@ runs under the batch driver (operators/batch.guarded), which alone
 times it, raises the recursion limit and turns a parse error into a
 status='failure' row (errors-as-data).
 
-One operator, one shuffle (url-hash repartition), any mix of formats:
-exactly what the 10^12-doc crawl table needs, since a WARC sample is
-never single-format.
+``convert_any`` is the one conversion operator and ``CONVERT_SCHEMA``
+its one result row, for any mix of formats (a WARC sample is never
+single-format). One shuffle, the url-hash repartition, with ``warc_ts``
+carried column-wise when the input has it; with ``split_big_docs``,
+documents of ``big_doc_bytes`` or more are spread round-robin so one
+5 MB page does not straggle a 10k-row task (AQE handles residual skew).
 """
 
 from __future__ import annotations
@@ -23,26 +26,45 @@ import json
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
+    ArrayType,
     DoubleType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
+    TimestampType,
 )
 
-from docling_spark.operators.batch import guarded, map_docs, url_hash
+from docling_spark.operators.batch import guarded, map_docs, partitions, url_hash
 from docling_spark.operators.formats import sniff_format
 
 CONVERT_SCHEMA = StructType(
     [
         StructField("url", StringType()),
+        # the input's crawl time when it has that column, else null
+        StructField("warc_ts", TimestampType()),
         StructField("fmt", StringType()),
         StructField("status", StringType()),
         StructField("error", StringType()),
         StructField("md", StringType()),
         StructField("txt", StringType()),
         StructField("n_nodes", IntegerType()),
+        # each text node's (node_id, label, start, end) in txt
+        StructField("n_spans", IntegerType()),
+        StructField(
+            "spans",
+            ArrayType(
+                StructType(
+                    [
+                        StructField("node_id", IntegerType()),
+                        StructField("label", StringType()),
+                        StructField("start", IntegerType()),
+                        StructField("end", IntegerType()),
+                    ]
+                )
+            ),
+        ),
         StructField("n_chunks", IntegerType()),
         # page-shaped formats (pdf, image, METS) only, else null
         StructField("n_pages", IntegerType()),
@@ -215,10 +237,13 @@ def convert_one(
     payload = payload or b""
     row = {
         "url": url,
+        "warc_ts": None,  # convert_any carries the input's column, if any
         "bytes_in": len(payload),
         "md": None,
         "txt": None,
         "n_nodes": 0,
+        "n_spans": 0,
+        "spans": [],
         "n_chunks": 0,
         "n_pages": None,
         "parse_score": None,
@@ -231,7 +256,7 @@ def convert_one(
         from docling_spark.kernels.chunker import hierarchical_chunks
         from docling_spark.kernels.doctags import export_to_doctags
         from docling_spark.kernels.markdown import to_markdown
-        from docling_spark.kernels.textout import to_text
+        from docling_spark.kernels.textout import text_spans
 
         doc = route_to_doc(row, url, payload)
         if doc is None:
@@ -243,13 +268,16 @@ def convert_one(
             json_out = json.dumps(
                 export_to_dict(doc, filename=url, raw=payload), ensure_ascii=False
             )
+        txt, spans = text_spans(doc)
         return {
             **row,
             "status": "success",
             "error": None,
             "md": to_markdown(doc),
-            "txt": to_text(doc),
+            "txt": txt,
             "n_nodes": len(doc.nodes),
+            "n_spans": len(spans),
+            "spans": spans,
             "n_chunks": len(hierarchical_chunks(doc)),
             "doctags": export_to_doctags(doc) if want_doctags else None,
             "json": json_out,
@@ -264,13 +292,38 @@ def convert_any(
     num_partitions: int | None = None,
     want_doctags: bool = False,
     want_json: bool = False,
+    big_doc_bytes: int = 2 << 20,
+    split_big_docs: bool = False,
 ) -> DataFrame:
-    """(url, <content binary>) of ANY supported format -> results."""
+    """(url, <content binary>[, warc_ts]) of ANY supported format ->
+    one ``CONVERT_SCHEMA`` row per input.
+
+    Column pruning keeps the scan narrow (only url, the payload and
+    warc_ts are read); the repartition by url-hash is the single
+    shuffle."""
+    carry = ("warc_ts",) if "warc_ts" in df.columns else ()
+    cols = ["url", content_col, *carry]
 
     def per_doc(url, payload):
         return [convert_one(url, payload, want_doctags=want_doctags, want_json=want_json)]
 
-    return map_docs(url_hash(df, ["url", content_col], num_partitions), per_doc, CONVERT_SCHEMA)
+    def run(part):
+        return map_docs(part, per_doc, CONVERT_SCHEMA, carry)
+
+    if not split_big_docs:
+        return run(url_hash(df, cols, num_partitions))
+    # route oversized docs to their own round-robin-spread tasks so
+    # they cannot straggle a dense url-hash partition: the big side
+    # gets num_partitions extra (mostly tiny) tasks, each owning at
+    # most ceil(n_big / num_partitions) documents. The two branches
+    # re-scan the source; at crawl scale put a size bucket in the
+    # table layout (e.g. Iceberg hidden partitioning on
+    # bucket(length)) so both filters partition-prune instead.
+    n = partitions(df, num_partitions)
+    is_big = F.length(content_col) >= big_doc_bytes
+    small = url_hash(df.filter(~is_big), cols, n)
+    big = df.filter(is_big).select(*cols).repartition(n)
+    return run(small).unionByName(run(big))
 
 
 def conversion_rollup(results: DataFrame) -> DataFrame:

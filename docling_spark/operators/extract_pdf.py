@@ -135,10 +135,10 @@ def parse_pdf_page_rows(df: DataFrame, content_col: str = "content") -> DataFram
 def _page_rows(url: str, content: bytes):
     from dataclasses import asdict
 
-    from docling_spark.kernels.pdf_kernel import parse_pdf
+    from docling_spark.kernels.pdf_kernel import iter_pdf_pages
     from docling_spark.kernels.pdf_layout import page_blocks, page_score
 
-    for page in parse_pdf(content or b""):
+    for page in iter_pdf_pages(content or b""):
         yield {
             "url": url,
             "status": "success",
@@ -158,6 +158,7 @@ ASSEMBLED_SCHEMA = StructType(
         StructField("status", StringType()),
         # the first failed page's error; null on success rows
         StructField("error", StringType()),
+        # pages that parsed; null when none did
         StructField("n_pages", IntegerType()),
         StructField("md", StringType()),
         StructField("txt", StringType()),
@@ -197,21 +198,22 @@ def _assemble(url: str, pages) -> dict:
 
     # pages arrive sorted by page_no, so this is the first failed page
     error = next((p["error"] for p in pages if p["status"] == "failure"), None)
-    if all(p["status"] == "failure" for p in pages):
-        return {"status": "failure", "error": error, "n_pages": 0, "md": None,
+    parsed = [p for p in pages if p["status"] != "failure"]
+    if not parsed:
+        return {"status": "failure", "error": error, "n_pages": None, "md": None,
                 "txt": None, "n_nodes": 0, "parse_score": None}
     blocks = [
-        Block(**{**b, "table": table(b["table"])}) for p in pages for b in p["blocks"]
+        Block(**{**b, "table": table(b["table"])}) for p in parsed for b in p["blocks"]
     ]
-    doc = assemble_pages(blocks, {p["page_no"]: p["height"] for p in pages}, name=url)
+    doc = assemble_pages(blocks, {p["page_no"]: p["height"] for p in parsed}, name=url)
     return {
         "status": "success" if error is None else "partial_success",
         "error": error,
-        "n_pages": len(pages),
+        "n_pages": len(parsed),
         "md": to_markdown(doc),
         "txt": to_text(doc),
         "n_nodes": len(doc.nodes),
-        "parse_score": doc_score([p["parse_score"] for p in pages]),
+        "parse_score": doc_score([p["parse_score"] for p in parsed]),
     }
 
 

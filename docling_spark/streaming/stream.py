@@ -46,7 +46,7 @@ def drain(df, out: str, ckpt: str, timeout_sec: int = 300) -> bool:
     same checkpoint processes only files added since (streaming resume).
     Per-document operators run unchanged on a streaming frame (url-hash
     repartition is a stateless shuffle), so a drain-and-stop extraction
-    is ``drain(extract_pages(read_pages_stream(spark, d)), out, ckpt)``,
+    is ``drain(convert_any(read_pages_stream(spark, d)), out, ckpt)``,
     a windowed rollup ``drain(windowed_event_rollup(events), out, ckpt)``
     and a cross-batch dedup ``drain(dedup_stream(pages), out, ckpt)``."""
     query = (

@@ -16,6 +16,8 @@ Replaces the reference's CLI driver (/root/reference/docling/cli/main.py:286+
 ``docling <source> --output ...``) and its in-process batching/thread model
 (/root/reference/docling/document_converter.py:309-345) with:
 
+* one operator for any mix of formats, the format router
+  (operators/convert.convert_any), writing one result schema;
 * one explicit url-hash repartition (the only shuffle in the hot path);
 * errors-as-data rows (reference raises_on_error=False semantics,
   document_converter.py:264-279);
@@ -52,7 +54,7 @@ def build_parser() -> argparse.ArgumentParser:
                    help="left_anti-filter urls already successful in lineage")
     p.add_argument("--format", default="parquet", choices=("parquet", "iceberg"))
     p.add_argument("--limit-bytes", type=int, default=64 << 20,
-                   help="max html size; larger rows become status='skipped'")
+                   help="max payload size; larger rows become status='skipped'")
     p.add_argument("--split-big-docs", action="store_true",
                    help="route oversized documents (>= --big-doc-bytes) "
                         "to their own round-robin-spread tasks so a "
@@ -62,17 +64,16 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--big-doc-bytes", type=int, default=2 << 20,
                    help="threshold for --split-big-docs (default 2 MiB)")
     p.add_argument("--router", action="store_true",
-                   help="run the unified multi-format router (S4, "
-                        "operators/convert.py) instead of the HTML-only "
-                        "extractor: a mixed html/pdf/office/xml crawl "
-                        "converts in one job, same lineage/resume/metrics")
+                   help="accepted and ignored: every input is routed by "
+                        "its format (operators/convert.py)")
     return p
 
 
 def run(spark, args) -> dict:
     from pyspark.sql import functions as F
 
-    from docling_spark.operators.extract import extract_pages, metrics_table
+    from docling_spark.operators.convert import convert_any
+    from docling_spark.operators.extract import metrics_table
     from docling_spark.operators.formats import limits_gate
     from docling_spark.operators.lineage import (
         drop_recorded,
@@ -100,17 +101,12 @@ def run(spark, args) -> dict:
     pages_ok = gated.filter(F.col("gate_status") == "accepted").drop("gate_status")
 
     t0 = time.perf_counter()
-    if args.router:
-        from docling_spark.operators.convert import convert_any
-
-        results = convert_any(pages_ok, num_partitions=args.partitions)
-    else:
-        results = extract_pages(
-            pages_ok,
-            num_partitions=args.partitions,
-            split_big_docs=args.split_big_docs,
-            big_doc_bytes=args.big_doc_bytes,
-        )
+    results = convert_any(
+        pages_ok,
+        num_partitions=args.partitions,
+        split_big_docs=args.split_big_docs,
+        big_doc_bytes=args.big_doc_bytes,
+    )
 
     # one materialization, three outputs: results, lineage, metrics.
     # persist() avoids re-running the extraction kernel per sink. The
@@ -126,9 +122,6 @@ def run(spark, args) -> dict:
 
     write_lineage(results, args.lineage, attempt=args.attempt)
     if args.metrics:
-        # convert rows carry the same url/status/t_sec/n_nodes/bytes_in
-        # metric columns as extract rows, so one metrics schema serves
-        # both modes
         metrics_table(results).write.mode("append").parquet(args.metrics)
 
     # skipped rows are lineage-recorded once: new skips anti-join the

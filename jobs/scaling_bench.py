@@ -38,17 +38,17 @@ REPS = int(os.environ.get("SPARK_GRAFT_REPS", "2"))
 def measure(cpus: int, path: str, n_pages: int) -> float:
     spark = build_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    from docling_spark.operators.extract import extract_pages
+    from docling_spark.operators.convert import convert_any
     from docling_spark.sources.pages import synthesize_pages
 
     tiny = synthesize_pages(spark, "/root/testdata/sf0.001", n_pages=cpus * 8)
-    extract_pages(tiny, num_partitions=cpus * 2).groupBy("status").count().collect()
+    convert_any(tiny, num_partitions=cpus * 2).groupBy("status").count().collect()
 
     pages = spark.read.parquet(path)
     best = None
     for _ in range(REPS):
         t0 = time.perf_counter()
-        extract_pages(pages, num_partitions=cpus * 2).groupBy(
+        convert_any(pages, num_partitions=cpus * 2).groupBy(
             "status"
         ).count().collect()
         dt = time.perf_counter() - t0

@@ -24,17 +24,10 @@ CATCH_ALL_EXEMPT = {("multimodal.py", "extract_media_features")}
 DEEP = "b'<div>' * 3000 + b'deep' + b'</div>' * 3000"
 
 
-@pytest.mark.parametrize(
-    "module, fn",
-    [
-        ("docling_spark.operators.extract", "extract_one"),
-        ("docling_spark.operators.convert", "convert_one"),
-    ],
-)
-def test_one_document_calls_are_total_at_default_recursion_limit(module, fn):
-    """extract_one/convert_one run on the driver too (spot checks,
-    notebooks), where nothing has raised the recursion limit: the
-    per-document wrapper must raise it itself."""
+def test_one_document_calls_are_total_at_default_recursion_limit():
+    """convert_one runs on the driver too (spot checks, notebooks),
+    where nothing has raised the recursion limit: the per-document
+    wrapper must raise it itself."""
     script = f"""
 import sys
 assert sys.getrecursionlimit() == 1000, sys.getrecursionlimit()
@@ -45,8 +38,8 @@ try:
     raise SystemExit("kernel no longer recurses per level; pick a deeper input")
 except RecursionError:
     pass
-from {module} import {fn}
-row = {fn}("https://deep.example.com/page.html", raw)
+from docling_spark.operators.convert import convert_one
+row = convert_one("https://deep.example.com/page.html", raw)
 assert row["status"] == "success", row["error"]
 """
     proc = subprocess.run(
@@ -128,10 +121,9 @@ def test_available_now_sink_only_in_drain():
     assert calls == [("stream.py", "drain")]
 
 
-def test_html_parser_built_only_by_the_router_and_the_flagship():
+def test_html_parser_built_only_by_the_router():
     """One dispatch: an operator that wants a Doc from bytes asks
-    convert.route_to_doc; only the HTML-only flagship kernel builds the
-    parser itself."""
+    convert.route_to_doc, the only place that builds the parser."""
     builders = [
         (p.name, getattr(top, "name", "<module>"))
         for p in sorted((PACKAGE / "operators").glob("*.py"))
@@ -141,7 +133,7 @@ def test_html_parser_built_only_by_the_router_and_the_flagship():
         and isinstance(node.func, ast.Name)
         and node.func.id == "HtmlExtractor"
     ]
-    assert builders == [("convert.py", "route_to_doc"), ("extract.py", "_extract_kernel")]
+    assert builders == [("convert.py", "route_to_doc")]
 
 
 def test_pdf_doc_assembled_at_once_only_by_the_router():
@@ -190,7 +182,7 @@ def test_pdf_broken_on_a_later_page_keeps_earlier_pages(spark, monkeypatch):
         [tuple(r.get(n) for n in names) for r in rows], extract_pdf.PDF_PAGE_SCHEMA
     )
     (doc,) = extract_pdf.assemble_from_pages(page_rows).collect()
-    assert doc.status == "partial_success"
+    assert (doc.status, doc.n_pages) == ("partial_success", 1)
     assert doc.error == "ValueError: bad page"
     assert "alpha page 1 text" in doc.md and "alpha page 1 text" in doc.txt
     assert "page 2" not in doc.txt and "page 3" not in doc.txt

@@ -91,7 +91,7 @@ def test_streaming_available_now_and_incremental(spark, tmp_path):
     """Streaming = same kernel + checkpointed incremental resume: first
     drain processes the initial files; a second drain after new files
     arrive processes ONLY the new ones."""
-    from docling_spark.operators.extract import extract_pages
+    from docling_spark.operators.convert import convert_any
     from docling_spark.sources.pages import synthesize_pages
     from docling_spark.streaming.stream import drain, read_pages_stream
 
@@ -102,7 +102,7 @@ def test_streaming_available_now_and_incremental(spark, tmp_path):
     synthesize_pages(spark, "/root/testdata/sf0.001", n_pages=30).coalesce(
         2
     ).write.mode("append").parquet(in_dir)
-    assert drain(extract_pages(read_pages_stream(spark, in_dir), num_partitions=4), out_dir, ckpt)
+    assert drain(convert_any(read_pages_stream(spark, in_dir), num_partitions=4), out_dir, ckpt)
     first = spark.read.parquet(out_dir)
     assert first.count() == 30
     assert first.filter(first.status == "success").count() == 30
@@ -114,7 +114,7 @@ def test_streaming_available_now_and_incremental(spark, tmp_path):
     more.exceptAll(
         synthesize_pages(spark, "/root/testdata/sf0.001", n_pages=30)
     ).coalesce(1).write.mode("append").parquet(in_dir)
-    assert drain(extract_pages(read_pages_stream(spark, in_dir), num_partitions=4), out_dir, ckpt)
+    assert drain(convert_any(read_pages_stream(spark, in_dir), num_partitions=4), out_dir, ckpt)
     assert spark.read.parquet(out_dir).count() == 50
 
 

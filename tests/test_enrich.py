@@ -3,7 +3,7 @@
 
 from pyspark.sql import functions as F
 
-from docling_spark.operators import enrich, extract
+from docling_spark.operators import convert, enrich
 from docling_spark.operators.enrich import classify_code_language
 
 
@@ -31,7 +31,7 @@ def _results(spark):
     pages = spark.createDataFrame(rows, "url string, html binary").withColumn(
         "warc_ts", F.current_timestamp()
     )
-    return extract.extract_pages(pages)
+    return convert.convert_any(pages)
 
 
 def test_enrich_spans_driver_and_writeback(spark):

@@ -27,7 +27,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
-from docling_spark.operators import chunks, convert, extract, extract_pdf, multimodal
+from docling_spark.operators import chunks, convert, extract_pdf, multimodal
 from docling_spark.streaming import stream
 
 MANIFEST = Path(__file__).with_name("operator_pin.json")
@@ -74,6 +74,18 @@ def _pdfs() -> list[tuple[str, bytes]]:
         for i in range(5, 8)
     ]
     return docs
+
+
+def _pdf_broken_later() -> tuple[str, bytes]:
+    """A three-page PDF whose second page object carries a MediaBox that
+    is not numeric: the paged strategy keeps page 1 and assembles to
+    partial_success with the page error, doc-at-once routes fail."""
+    from docling_spark.sources.pdfgen import build_pdf
+
+    pdf = build_pdf([[("title", f"Part {n}"), ("body", _text(n))] for n in (1, 2, 3)])
+    broken = pdf.replace(b"/Contents 3 0 R", b"/MediaBox [0 0 /Bad 792] /Contents 3 0 R")
+    assert broken != pdf
+    return "https://pdf.example.com/broken/later.pdf", broken
 
 
 def _text_docs() -> list[tuple[str, bytes]]:
@@ -131,7 +143,7 @@ def _frame(spark, rows, col="html"):
 def inputs(spark):
     html = _html_pages() + HOSTILE
     mixed = _html_pages() + _pdfs() + _text_docs() + HOSTILE
-    pdfs = _pdfs() + HOSTILE[:3]
+    pdfs = _pdfs() + [_pdf_broken_later()] + HOSTILE[:3]
     return {
         "html": _frame(spark, html),
         "mixed": _frame(spark, mixed),
@@ -173,9 +185,11 @@ def _stream(spark, tmp_path, frame, operator):
     return spark.read.parquet(out_dir)
 
 
+# the extract_* cases keep the names of the HTML-only operator the
+# router replaced; they pin convert_any over the HTML frame
 CASES = {
-    "extract_pages": lambda s, i, t: extract.extract_pages(i["html"], num_partitions=4),
-    "extract_pages_split": lambda s, i, t: extract.extract_pages(
+    "extract_pages": lambda s, i, t: convert.convert_any(i["html"], num_partitions=4),
+    "extract_pages_split": lambda s, i, t: convert.convert_any(
         i["html"], num_partitions=4, split_big_docs=True, big_doc_bytes=30 << 10
     ),
     "convert_any": lambda s, i, t: convert.convert_any(i["mixed"], num_partitions=4),
@@ -196,7 +210,7 @@ CASES = {
     "chunk_pages_router": lambda s, i, t: chunks.chunk_pages(
         i["mixed"], max_tokens=64, num_partitions=4
     ),
-    "stream_extract": lambda s, i, t: _stream(s, t, i["html"], extract.extract_pages),
+    "stream_extract": lambda s, i, t: _stream(s, t, i["html"], convert.convert_any),
     "stream_convert": lambda s, i, t: _stream(s, t, i["mixed"], convert.convert_any),
     "media_features": lambda s, i, t: multimodal.extract_media_features(
         multimodal.synth_media(s, 64)

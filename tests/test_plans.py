@@ -42,10 +42,10 @@ def test_scan_pushdown_and_pruning(spark, pages_path):
 
 
 def test_extract_single_exchange(spark, pages_path):
-    from docling_spark.operators.extract import extract_pages
+    from docling_spark.operators.convert import convert_any
 
     pages = spark.read.parquet(pages_path)
-    res = extract_pages(pages, num_partitions=8)
+    res = convert_any(pages, num_partitions=8)
     plan = _plan(res)
     # the url-hash repartition is the ONLY exchange in the hot path
     assert plan.count("Exchange") == 1
@@ -56,10 +56,10 @@ def test_split_big_docs_two_branch_plan(spark, pages_path):
     """north-rule "salted handling of oversized documents": the split
     plan is a Union of the url-hash branch (co-located small docs) and
     a RoundRobinPartitioning branch spreading the big docs thinly."""
-    from docling_spark.operators.extract import extract_pages
+    from docling_spark.operators.convert import convert_any
 
     pages = spark.read.parquet(pages_path)
-    res = extract_pages(
+    res = convert_any(
         pages, num_partitions=8, split_big_docs=True, big_doc_bytes=64 << 10
     )
     plan = _plan(res)
@@ -82,12 +82,12 @@ def test_split_big_docs_equivalent_and_spread(spark, pages_path):
     """
     import math
 
-    from docling_spark.operators.extract import extract_pages
+    from docling_spark.operators.convert import convert_any
 
     pages = spark.read.parquet(pages_path)
     thresh = 64 << 10
-    base = extract_pages(pages, num_partitions=8)
-    split = extract_pages(
+    base = convert_any(pages, num_partitions=8)
+    split = convert_any(
         pages, num_partitions=8, split_big_docs=True, big_doc_bytes=thresh
     )
     cols = ["url", "status", "md", "n_spans", "bytes_in"]
@@ -258,8 +258,8 @@ def test_simhash_bucket_occupancy_bounded(spark):
 
 
 def test_convert_any_single_exchange(spark, pages_path):
-    """The unified multi-format router has the same hot-path shape as
-    extract: scan -> ONE url-hash Exchange -> one Arrow python stage.
+    """The router keeps its hot-path shape on an input without warc_ts:
+    scan -> ONE url-hash Exchange -> one Arrow python stage.
     A second shuffle or a stray row-wise BatchEvalPython would double
     the network cost of every crawl conversion at 100 TB."""
     from docling_spark.operators.convert import convert_any
@@ -296,3 +296,15 @@ def test_lsh_topk_single_parquet_scan(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan
     assert df.count() > 0
+
+
+def test_doc_deciles_no_single_partition(spark):
+    """q_doc_deciles ranks documents without a global-order window: the
+    plan has no SinglePartition exchange, and its one Window is
+    partitioned by n_chars."""
+    import __spark_entry__ as entry
+
+    plan = _plan(entry.queries()["q_doc_deciles"](spark, "/root/testdata/sf0.001"))
+    assert "SinglePartition" not in plan
+    assert "hashpartitioning(n_chars" in plan
+    assert "BroadcastExchange" in plan

@@ -25,12 +25,12 @@ def test_spark_extraction_matches_local_kernel(spark):
     per url (north rule: byte-identical extracted text per url)."""
     from docling_spark.kernels.html_kernel import HtmlExtractor
     from docling_spark.kernels.markdown import to_markdown
-    from docling_spark.operators.extract import extract_pages
+    from docling_spark.operators.convert import convert_any
     from docling_spark.sources.pages import render_page, page_url, synthesize_pages
 
     sf_dir = "/root/testdata/sf0.001"
     pages = synthesize_pages(spark, sf_dir)
-    res = extract_pages(pages, num_partitions=8)
+    res = convert_any(pages, num_partitions=8)
     got = {r.url: r.md for r in res.select("url", "md").collect()}
 
     docs = {
@@ -58,7 +58,7 @@ def test_entry_smoke(spark):
 
 def test_resume_filter(spark, tmp_path):
     """Kill-and-resume semantics: lineage left_anti skips done urls."""
-    from docling_spark.operators.extract import extract_pages
+    from docling_spark.operators.convert import convert_any
     from docling_spark.operators.lineage import resume_filter, write_lineage
     from docling_spark.sources.pages import synthesize_pages
 
@@ -68,7 +68,7 @@ def test_resume_filter(spark, tmp_path):
     from pyspark.sql import functions as F
 
     half = pages.filter(F.xxhash64("url") % 2 == 0)
-    res1 = extract_pages(half, num_partitions=8)
+    res1 = convert_any(half, num_partitions=8)
     lineage_path = str(tmp_path / "lineage")
     write_lineage(res1, lineage_path, attempt=0)
 
@@ -76,7 +76,7 @@ def test_resume_filter(spark, tmp_path):
     n_half = half.count()
     assert remaining.count() == total - n_half
     # attempt 2 completes the rest; union is exactly the full set
-    res2 = extract_pages(remaining, num_partitions=8)
+    res2 = convert_any(remaining, num_partitions=8)
     urls = {r.url for r in res1.select("url").collect()} | {
         r.url for r in res2.select("url").collect()
     }

@@ -94,10 +94,11 @@ def test_spark_submit_pyfiles_and_resume(spark, pages_input, tmp_path):
     assert spark.read.parquet(str(out)).count() == 48
 
 
-def test_spark_submit_router_mode(spark, tmp_path):
-    """--router runs the unified multi-format converter through the
-    SAME spark-submit surface: a mixed html/pdf crawl converts with
-    per-format rows, lineage recorded, resume processes zero docs."""
+def test_spark_submit_routes_mixed_formats(spark, tmp_path):
+    """The job routes every input by its format through the SAME
+    spark-submit surface: a mixed html/pdf crawl converts with
+    per-format rows, lineage recorded, resume processes zero docs. The
+    retired --router flag is still accepted and changes nothing."""
     from pyspark.sql import functions as F
 
     from docling_spark.sources.pages import synthesize_pages
@@ -120,7 +121,7 @@ def test_spark_submit_router_mode(spark, tmp_path):
     html.unionByName(pdfs).write.mode("overwrite").parquet(str(in_dir))
 
     out, lineage = tmp_path / "out", tmp_path / "lineage"
-    stats = _run_job(zip_path, in_dir, out, lineage, router=True)
+    stats = _run_job(zip_path, in_dir, out, lineage)
     assert stats["n_extracted"] == 30 and stats["n_failed"] == 0
 
     res = spark.read.parquet(str(out))
@@ -131,6 +132,7 @@ def test_spark_submit_router_mode(spark, tmp_path):
     stats2 = _run_job(zip_path, in_dir, out, lineage, router=True,
                       resume=True, attempt=1)
     assert stats2["n_extracted"] == 0
+
 
 def test_spark_submit_split_big_docs(spark, pages_input, tmp_path):
     """north-rule "salted handling of ... oversized documents" through
@@ -197,3 +199,32 @@ def test_skipped_urls_recorded_once_and_unskipped_by_a_raised_limit(spark, tmp_p
     assert stats["n_extracted"] == len(big) and stats["n_skipped"] == 0
     third = spark.read.parquet(out).filter(F.col("status") == "success")
     assert {r.url for r in third.collect()} == {u for u, _ in pages}
+
+
+def test_non_html_bytes_end_as_typed_rows(spark, tmp_path):
+    """Bytes that are not HTML go through the job's default operator and
+    end as a row typed by their format, never as a success row carrying
+    the raw bytes as markdown."""
+    from pyspark.sql import functions as F
+
+    from jobs import extract_job
+    from tests.test_operator_pin import HOSTILE
+
+    hostile = dict(HOSTILE)
+    picked = [(u, hostile[u]) for u in (
+        "https://hostile.example.com/random", "https://hostile.example.com/broken.pdf"
+    )]
+    in_dir, out, lineage = (str(tmp_path / d) for d in ("pages", "out", "lineage"))
+    spark.createDataFrame(picked, "url string, html binary").withColumn(
+        "warc_ts", F.lit(None).cast("timestamp")
+    ).write.parquet(in_dir)
+    args = extract_job.build_parser().parse_args(
+        ["--input", in_dir, "--output", out, "--lineage", lineage, "--partitions", "2"]
+    )
+    extract_job.run(spark, args)
+    rows = {r.url: r for r in spark.read.parquet(out).collect()}
+    random_row = rows["https://hostile.example.com/random"]
+    broken_row = rows["https://hostile.example.com/broken.pdf"]
+    assert (random_row.fmt, random_row.status) == ("binary", "skipped")
+    assert (broken_row.fmt, broken_row.status) == ("pdf", "failure")
+    assert random_row.md is None and broken_row.md is None
