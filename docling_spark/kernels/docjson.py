@@ -40,8 +40,6 @@ from .doc_model import (
 SCHEMA_NAME = "DoclingDocument"
 VERSION = "1.6.0"
 
-_TEXT_KINDS = {TITLE, SECTION_HEADER, TEXT, PARAGRAPH, LIST_ITEM, CODE, CAPTION}
-
 
 def binary_hash(data: bytes) -> int:
     # fixtures pin this to sha256(bytes) mod 2^64, i.e. the LAST 8

@@ -46,7 +46,6 @@ def _zigzag() -> np.ndarray:
 
 
 ZIGZAG = _zigzag()
-UNZIGZAG = np.argsort(ZIGZAG)
 
 
 def _dct_basis() -> np.ndarray:

@@ -39,6 +39,15 @@ def error_text(e: BaseException) -> str:
     return f"{type(e).__name__}: {e}"[:500]
 
 
+def _failure_row(failure: dict, e: BaseException, payload) -> dict:
+    return {
+        **failure,
+        "status": "failure",
+        "error": error_text(e),
+        "bytes_in": len(payload) if payload is not None else 0,
+    }
+
+
 def guarded(kernel, failure: dict, url, payload):
     """``kernel(url, payload)`` for one document; never raises.
 
@@ -50,32 +59,41 @@ def guarded(kernel, failure: dict, url, payload):
     try:
         out = kernel(url, payload)
     except Exception as e:  # noqa: BLE001 — errors become data
-        out = {
-            **failure,
-            "status": "failure",
-            "error": error_text(e),
-            "bytes_in": len(payload) if payload is not None else 0,
-        }
+        out = _failure_row(failure, e, payload)
     if isinstance(out, dict):
         out["t_sec"] = time.perf_counter() - t0
     return out
 
 
+def until_error(produce, *args) -> tuple[list, Exception | None]:
+    """The items ``produce(*args)`` yields before it raises, and what it
+    raised (None when it runs out).
+
+    The one rule for a document that breaks partway: what came before
+    the failure stands. A PDF keeps the pages parsed before the broken
+    one, and a row kernel keeps the rows it yielded."""
+    kept = []
+    try:
+        for item in produce(*args):
+            kept.append(item)
+    except Exception as e:  # noqa: BLE001 — the items before it stand
+        return kept, e
+    return kept, None
+
+
 def per_page(kernel, failure: dict):
     """per_doc for kernels that emit many rows per document (pages,
     chunks). Rows a generator kernel yields before an exception are kept
-    and the failure adds one row, so every url keeps a status row and a
-    PDF that breaks on a later page assembles to partial_success."""
+    (``until_error``) and the failure adds one row, so every url keeps a
+    status row and a PDF that breaks on a later page assembles to
+    partial_success."""
 
     def per_doc(url, payload):
-        rows = []
-
-        def collect(url, payload):
-            rows.extend(kernel(url, payload))
+        raise_recursion_limit()
+        rows, e = until_error(kernel, url, payload)
+        if e is None:
             return rows
-
-        out = guarded(collect, failure, url, payload)
-        return rows if out is rows else [*rows, {**out, "url": url}]
+        return [*rows, {**_failure_row(failure, e, payload), "url": url}]
 
     return per_doc
 

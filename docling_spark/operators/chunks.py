@@ -50,9 +50,11 @@ def chunk_pages(
     Each payload goes through the format router
     (operators/convert.route_to_doc), so one chunking job covers a mixed
     html/pdf/office/xml crawl, the shape an embedding/training pipeline
-    actually feeds. Chunk rows carry status='success'; a document the
-    router skips or that fails to parse yields one row with a null
-    chunk_id and the router's or driver's status and error."""
+    actually feeds. Chunk rows carry status='success', or the router's
+    'partial_success' and page error for a PDF that breaks partway; a
+    document the router skips or that fails to parse yields one row
+    with a null chunk_id and the router's or driver's status and
+    error."""
 
     def kernel(url, payload):
         from docling_spark.kernels.chunker import (
@@ -73,8 +75,8 @@ def chunk_pages(
         return [
             {
                 "url": url,
-                "status": "success",
-                "error": None,
+                "status": row.get("status", "success"),
+                "error": row.get("error"),
                 "chunk_id": i,
                 "kind": ch.kind,
                 "headings": ch.headings,

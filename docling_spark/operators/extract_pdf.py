@@ -27,7 +27,9 @@ field (``table`` a struct of num_rows, num_cols and TableCellData
 cells); pages ship ``dataclasses.asdict(block)`` and regroup into
 ``Block(**row)``. Both PDF paths and the multimodal export share one
 page pass, ``pdf_layout.doc_blocks``, and one doc score,
-``pdf_layout.doc_score``.
+``pdf_layout.doc_score``. All of them follow one rule for a PDF that
+breaks partway (``batch.until_error``): the pages parsed before the
+broken one are kept, and the page error ends the document.
 
 Confidence aggregation (P19, standard_pdf_pipeline.py:253-281) is plain
 Spark SQL over the per-page scores: avg + 10th-percentile.
@@ -49,7 +51,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from docling_spark.operators.batch import map_docs, per_page, url_hash
+from docling_spark.operators.batch import map_docs, per_page, until_error, url_hash
 
 # pdf_layout.Block as an Arrow struct, field for field in dataclass
 # order: the paged strategy ships each block through the shuffle as
@@ -304,17 +306,19 @@ MULTIMODAL_IMAGE_FIELDS = StructType(
 )
 
 
-def _multimodal_rows_for_doc(
-    url: str, content: bytes, image_scale: float | None = None
-) -> list[dict]:
+def _multimodal_rows_for_doc(url: str, content: bytes, image_scale: float | None = None):
     """Per-page (text, md, doctags, cells, segments) tuples — S8,
     reference utils/export.py:13-146 generate_multimodal_pages: cells
     and segment bboxes TOPLEFT-normalized to [0,1], per-page markdown
     from that page's slice of the document items, content_text =
-    space-joined item texts."""
+    space-joined item texts.
+
+    A PDF that breaks partway yields the rows of the pages before the
+    broken one, then raises the page error (``batch.until_error``), so
+    ``per_page`` adds the document's failure row."""
     from docling_spark.kernels.doctags import export_to_doctags
     from docling_spark.kernels.markdown import to_markdown
-    from docling_spark.kernels.pdf_kernel import parse_pdf
+    from docling_spark.kernels.pdf_kernel import iter_pdf_pages
     from docling_spark.kernels.pdf_layout import (
         assemble_doc,
         classify_blocks,
@@ -322,7 +326,9 @@ def _multimodal_rows_for_doc(
         mark_page_furniture,
     )
 
-    pages = parse_pdf(content or b"")
+    pages, error = until_error(iter_pdf_pages, content or b"")
+    if not pages:
+        raise error
     all_blocks, page_heights = doc_blocks(pages)
     # the doc path's order and furniture semantics: running heads and
     # folios leave the body layer before doc-wide classification (heading
@@ -333,7 +339,6 @@ def _multimodal_rows_for_doc(
     for ix, b in enumerate(all_blocks):
         by_page[b.page_no].append((ix, b))
 
-    rows = []
     for page in sorted(pages, key=lambda p: p.page_no):
         w, h = page.width or 1.0, page.height or 1.0
         page_items = by_page[page.page_no]
@@ -370,23 +375,21 @@ def _multimodal_rows_for_doc(
             }
             for c in page.cells_top_left()
         ]
-        rows.append(
-            {
-                "url": url,
-                "status": "success",
-                "error": None,
-                "page_no": page.page_no,
-                "width": w,
-                "height": h,
-                "text": " ".join(b.text for _, b in page_items if b.text),
-                "md": to_markdown(page_doc),
-                "doctags": export_to_doctags(
-                    page_doc, bboxes=bboxes, page_w=w, page_h=h
-                ),
-                "cells": cells,
-                "segments": segments,
-            }
-        )
+        row = {
+            "url": url,
+            "status": "success",
+            "error": None,
+            "page_no": page.page_no,
+            "width": w,
+            "height": h,
+            "text": " ".join(b.text for _, b in page_items if b.text),
+            "md": to_markdown(page_doc),
+            "doctags": export_to_doctags(
+                page_doc, bboxes=bboxes, page_w=w, page_h=h
+            ),
+            "cells": cells,
+            "segments": segments,
+        }
         if image_scale is not None:
             # P5: deterministic geometry raster (pdf_kernel.rasterize_page),
             # the reference attaches page.image here (export.py:107)
@@ -396,10 +399,10 @@ def _multimodal_rows_for_doc(
             )
 
             iw, ih, img = rasterize_page(page, scale=image_scale)
-            rows[-1]["page_image"] = encode_png_gray(img)
-            rows[-1]["img_width"] = iw
-            rows[-1]["img_height"] = ih
-    return rows
+            row.update(page_image=encode_png_gray(img), img_width=iw, img_height=ih)
+        yield row
+    if error is not None:
+        raise error
 
 
 def multimodal_pages(

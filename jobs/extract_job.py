@@ -20,9 +20,13 @@ Replaces the reference's CLI driver (/root/reference/docling/cli/main.py:286+
   (operators/convert.convert_any), writing one result schema;
 * one explicit url-hash repartition (the only shuffle in the hot path);
 * errors-as-data rows (reference raises_on_error=False semantics,
-  document_converter.py:264-279);
+  document_converter.py:264-279): every input ends as one results row
+  per attempt, an input over --limit-bytes as a skipped row;
 * per-partition lineage append -> idempotent resume via left_anti join;
 * per-doc metrics rows -> metrics table (reference: utils/profiling.py).
+
+A run is three Spark actions, its three writes; the counts it prints
+are observed on the results write.
 
 At 10^12-document scale the same job runs unchanged: --input becomes an
 Iceberg table, --partitions scales with cluster cores, and a preempted
@@ -70,17 +74,12 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def run(spark, args) -> dict:
-    from pyspark.sql import functions as F
+    from pyspark.sql import Observation, functions as F
 
-    from docling_spark.operators.convert import convert_any
+    from docling_spark.operators.convert import convert_any, skipped_rows
     from docling_spark.operators.extract import metrics_table
     from docling_spark.operators.formats import limits_gate
-    from docling_spark.operators.lineage import (
-        drop_recorded,
-        lineage_rows,
-        resume_filter,
-        write_lineage,
-    )
+    from docling_spark.operators.lineage import resume_filter, write_lineage
 
     if args.format == "iceberg":
         pages = spark.read.format("iceberg").load(args.input)
@@ -90,57 +89,52 @@ def run(spark, args) -> dict:
     # resume BEFORE the gate: successfully-extracted urls never re-gate
     # or re-extract. Previously-SKIPPED urls flow through on purpose:
     # the gate is re-evaluated each attempt so changed parameters
-    # (e.g. a raised --limit-bytes) can un-skip them; duplicate skip
-    # lineage rows are suppressed at append time below.
+    # (e.g. a raised --limit-bytes) can un-skip them; lineage records
+    # a skipped url once (write_lineage).
     if args.resume:
         pages = resume_filter(pages, spark, args.lineage)
 
-    # limits gate (reference: DocumentLimits, datamodel/document.py:116-181)
+    # limits gate (reference: DocumentLimits, datamodel/document.py:116-181):
+    # an oversized input is never sniffed, and ends as a skipped row
     gated = limits_gate(pages, max_bytes=args.limit_bytes)
-    skipped = gated.filter(F.col("gate_status") == "skipped")
-    pages_ok = gated.filter(F.col("gate_status") == "accepted").drop("gate_status")
+    too_big = F.col("gate_status") == "skipped"
 
     t0 = time.perf_counter()
     results = convert_any(
-        pages_ok,
+        gated.filter(~too_big).drop("gate_status"),
         num_partitions=args.partitions,
         split_big_docs=args.split_big_docs,
         big_doc_bytes=args.big_doc_bytes,
+    ).unionByName(
+        skipped_rows(gated.filter(too_big), f"payload over --limit-bytes {args.limit_bytes}")
     )
 
-    # one materialization, three outputs: results, lineage, metrics.
+    # one materialization, three writes: results, lineage, metrics.
     # persist() avoids re-running the extraction kernel per sink. The
-    # WRITE is the first action: under MEMORY_AND_DISK pressure at
-    # 10^12 scale a leading count() would evict blocks whose first
-    # materialization was then discarded; writing first makes the
-    # expensive pass also the durable one, and the counts after it read
-    # from cache (or, worst case, recompute — never the reverse).
+    # results WRITE is the first action, so the expensive pass is also
+    # the durable one, and the run's counts are observed on that same
+    # write: no action is spent on counting.
     results.persist()
-    results.write.mode("append").parquet(args.output)
-    n_out = results.count()
+    counts = Observation("counts")
+    results.observe(
+        counts,
+        F.count(F.lit(1)).alias("rows"),
+        F.count_if((F.col("status") == "skipped") & F.col("fmt").isNull()).alias("gated"),
+        F.count_if(F.col("status") == "failure").alias("failed"),
+    ).write.mode("append").parquet(args.output)
     t_extract = time.perf_counter() - t0
 
     write_lineage(results, args.lineage, attempt=args.attempt)
     if args.metrics:
         metrics_table(results).write.mode("append").parquet(args.metrics)
-
-    # skipped rows are lineage-recorded once: new skips anti-join the
-    # already-recorded ones so repeated attempts do not grow the table
-    n_skipped = skipped.count()
-    if n_skipped:
-        skipped_lineage = lineage_rows(
-            skipped.select("url", F.lit("skipped").alias("status")), args.attempt
-        )
-        drop_recorded(skipped_lineage, spark, args.lineage, "skipped").write.mode(
-            "append"
-        ).parquet(args.lineage)
-
-    n_fail = results.filter(F.col("status") == "failure").count()
     results.unpersist()
+
+    n = counts.get
+    n_out = n["rows"] - n["gated"]  # the rows the router produced
     return {
         "n_extracted": n_out,
-        "n_failed": n_fail,
-        "n_skipped": n_skipped,
+        "n_failed": n["failed"],
+        "n_skipped": n["gated"],
         "t_extract_sec": round(t_extract, 3),
         "docs_per_sec": round(n_out / t_extract, 1) if t_extract > 0 else None,
         "attempt": args.attempt,

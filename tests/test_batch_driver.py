@@ -111,6 +111,20 @@ def test_per_document_map_in_pandas_only_in_batch_py():
     assert [fn for fn, _ in _calls(DRIVER, "mapInPandas")] == ["map_docs"]
 
 
+def test_extract_job_spends_no_action_on_counting():
+    """The job's three actions are its writes; its counts come from an
+    Observation on the results write. ``F.count`` is an aggregate
+    expression, not an action."""
+    job = ROOT / "jobs" / "extract_job.py"
+    actions = [
+        ast.unparse(node)
+        for attr in ("count", "collect", "first", "take", "head", "toPandas", "show")
+        for _, node in _calls(job, attr)
+        if not (isinstance(node.func.value, ast.Name) and node.func.value.id == "F")
+    ]
+    assert actions == []
+
+
 def test_available_now_sink_only_in_drain():
     calls = [
         (p.name, fn)

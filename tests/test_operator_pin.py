@@ -78,8 +78,9 @@ def _pdfs() -> list[tuple[str, bytes]]:
 
 def _pdf_broken_later() -> tuple[str, bytes]:
     """A three-page PDF whose second page object carries a MediaBox that
-    is not numeric: the paged strategy keeps page 1 and assembles to
-    partial_success with the page error, doc-at-once routes fail."""
+    is not numeric: every PDF path keeps page 1. The paged strategy and
+    the router end partial_success with the page error; the multimodal
+    export emits page 1's row and a page_no=0 failure row."""
     from docling_spark.sources.pdfgen import build_pdf
 
     pdf = build_pdf([[("title", f"Part {n}"), ("body", _text(n))] for n in (1, 2, 3)])
@@ -219,6 +220,20 @@ CASES = {
         multimodal.synth_media(s, 64)
     ),
 }
+
+
+def test_router_keeps_the_pages_before_a_broken_one():
+    """The router's pdf route follows the paged rule: the pages parsed
+    before the broken one make the document, which ends
+    partial_success with the first error; n_pages and parse_score count
+    only the parsed pages."""
+    url, pdf = _pdf_broken_later()
+    row = convert.convert_one(url, pdf)
+    assert (row["fmt"], row["status"], row["n_pages"]) == ("pdf", "partial_success", 1)
+    assert row["error"] == "ValueError: could not convert string to float: 'Bad'"
+    assert row["txt"].startswith("Part 1\n" + _text(1)[:40])
+    assert "Part 2" not in row["txt"] and "Part 3" not in row["txt"]
+    assert row["parse_score"] is not None
 
 
 @pytest.mark.parametrize("case", list(CASES))

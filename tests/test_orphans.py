@@ -1,5 +1,5 @@
-"""Orphan guard: every top-level def and class in the package is
-referenced by code somewhere outside its own body.
+"""Orphan guard: every top-level def, class and assigned name in the
+package is referenced by code somewhere outside its own body.
 
 References are counted from the syntax tree of every Python file in the
 package, the jobs, ``__spark_entry__.py``, ``bench.py``, ``perfbench/``
@@ -20,6 +20,28 @@ PACKAGE = REPO / "docling_spark"
 SEARCHED = [PACKAGE, REPO / "jobs", REPO / "perfbench", REPO / "tests",
             REPO / "__spark_entry__.py", REPO / "bench.py"]
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _defined(node: ast.stmt) -> list[str]:
+    """The names a top-level statement defines: a def or class, or the
+    plain names an assignment binds (dunders such as ``__all__`` are
+    read by the language, not by code)."""
+    if isinstance(node, DEFS):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [
+        n.id
+        for t in targets
+        for n in ast.walk(t)
+        if isinstance(n, ast.Name)
+        and isinstance(n.ctx, ast.Store)
+        and not n.id.startswith("__")
+    ]
 
 
 def _py_files(root: Path) -> list[Path]:
@@ -45,12 +67,16 @@ def test_every_top_level_def_is_referenced():
     orphans = []
     for path in _py_files(PACKAGE):
         for node in trees[path].body:
-            if not isinstance(node, DEFS):
-                continue
-            inside = sum(1 for name in _references(node) if name == node.name)
-            if refs[node.name] == inside:
-                orphans.append(f"{path.relative_to(REPO)}:{node.lineno} {node.name}")
-    assert not orphans, "top-level defs nothing references:\n" + "\n".join(orphans)
+            for defined in _defined(node):
+                inside = sum(1 for name in _references(node) if name == defined)
+                if refs[defined] == inside:
+                    orphans.append(f"{path.relative_to(REPO)}:{node.lineno} {defined}")
+    assert not orphans, "top-level names nothing references:\n" + "\n".join(orphans)
+
+
+def test_assigned_names_are_defined():
+    tree = ast.parse("A = 1\nB: int = 2\nC, D = 3, 4\n__all__ = []\nE[0] = 5\n")
+    assert [n for node in tree.body for n in _defined(node)] == ["A", "B", "C", "D"]
 
 
 def test_prose_is_not_a_reference():

@@ -242,7 +242,7 @@ def test_multimodal_pages_kernel():
     from docling_spark.operators.extract_pdf import _multimodal_rows_for_doc
 
     pdf = render_doc_pdf(7, TEXT)  # doc_id 7 -> 2 pages
-    rows = _multimodal_rows_for_doc("u", pdf)
+    rows = list(_multimodal_rows_for_doc("u", pdf))
     _, expected = doc_spec(7, TEXT)
     assert len(rows) == expected["n_pages"] == 2
     for i, r in enumerate(rows):
@@ -278,7 +278,7 @@ def test_multimodal_marks_furniture_before_classifying():
         ]
     )
     assert "Journal of Tests" not in convert_one("u", pdf)["md"]
-    rows = _multimodal_rows_for_doc("u", pdf)
+    rows = list(_multimodal_rows_for_doc("u", pdf))
     assert len(rows) == 3
     for r in rows:
         (head,) = [s for s in r["segments"] if s["text"] == "Journal of Tests"]

@@ -11,6 +11,7 @@ import json
 import os
 import subprocess
 import sys
+from collections import Counter
 from pathlib import Path
 
 import pytest
@@ -55,6 +56,36 @@ def _run_job(zip_path, input_dir, out, lineage, metrics=None, resume=False,
     return json.loads(stats_line)
 
 
+STATUSES = ("success", "partial_success", "failure", "skipped")
+
+
+def _rows(spark, path) -> Counter:
+    """(url, status) -> rows in a parquet table; empty when it does not
+    exist yet."""
+    if not Path(path).exists():
+        return Counter()
+    return Counter((r.url, r.status) for r in spark.read.parquet(str(path)).collect())
+
+
+def _reconciled(spark, input_dir, out, lineage, resume, run_attempt) -> dict:
+    """Run one attempt and check its accounting against the tables:
+    rows_in == resumed + success + partial_success + failure + skipped,
+    with ``rows_in`` counted from the input and ``resumed`` from the
+    success urls lineage held before a ``--resume`` attempt. Every url
+    that reaches the gate ends as exactly one new results row."""
+    urls = [r.url for r in spark.read.parquet(str(input_dir)).select("url").collect()]
+    done = {u for u, status in _rows(spark, lineage) if status == "success"}
+    resumed = done if resume else set()
+    before = _rows(spark, out)
+    stats = run_attempt()
+    new = _rows(spark, out) - before
+    by_status = Counter(status for _, status in new.elements())
+    assert set(by_status) <= set(STATUSES), by_status
+    assert len(urls) == len(resumed) + sum(by_status[s] for s in STATUSES)
+    assert sorted(u for u, _ in new.elements()) == sorted(u for u in urls if u not in resumed)
+    return stats
+
+
 @pytest.fixture(scope="module")
 def pages_input(spark, tmp_path_factory):
     from docling_spark.sources.pages import synthesize_pages
@@ -74,7 +105,10 @@ def test_spark_submit_pyfiles_and_resume(spark, pages_input, tmp_path):
     )
     out, lineage, metrics = tmp_path / "out", tmp_path / "lineage", tmp_path / "metrics"
 
-    stats = _run_job(zip_path, pages_input, out, lineage, metrics=metrics)
+    stats = _reconciled(
+        spark, pages_input, out, lineage, False,
+        lambda: _run_job(zip_path, pages_input, out, lineage, metrics=metrics),
+    )
     assert stats["n_extracted"] == 48
     assert stats["n_failed"] == 0
 
@@ -88,7 +122,10 @@ def test_spark_submit_pyfiles_and_resume(spark, pages_input, tmp_path):
     assert set(met.columns) >= {"url", "stage", "t_sec", "bytes_in"}
 
     # resume: second attempt must process zero documents
-    stats2 = _run_job(zip_path, pages_input, out, lineage, resume=True, attempt=1)
+    stats2 = _reconciled(
+        spark, pages_input, out, lineage, True,
+        lambda: _run_job(zip_path, pages_input, out, lineage, resume=True, attempt=1),
+    )
     assert stats2["n_extracted"] == 0
     # results table unchanged (append of empty frame)
     assert spark.read.parquet(str(out)).count() == 48
@@ -166,7 +203,8 @@ def test_spark_submit_split_big_docs(spark, pages_input, tmp_path):
 
 def test_skipped_urls_recorded_once_and_unskipped_by_a_raised_limit(spark, tmp_path):
     """In-process ``extract_job.run`` over three resumed attempts: an
-    oversized url is lineage-recorded as ``skipped`` exactly once across
+    oversized url ends as a skipped results row on every attempt that
+    gates it, is lineage-recorded as ``skipped`` exactly once across
     repeated attempts, and a raised --limit-bytes extracts it."""
     from pyspark.sql import functions as F
 
@@ -178,22 +216,33 @@ def test_skipped_urls_recorded_once_and_unskipped_by_a_raised_limit(spark, tmp_p
     big = {u for u, b in pages if len(b) > limit}
     assert 0 < len(big) < len(pages)
     in_dir, out, lineage = (str(tmp_path / d) for d in ("pages", "out", "lineage"))
+    crawled = F.timestamp_seconds(F.lit(1_700_000_000))
     spark.createDataFrame(pages, "url string, html binary").withColumn(
-        "warc_ts", F.lit(None).cast("timestamp")
+        "warc_ts", crawled
     ).write.parquet(in_dir)
+    (warc_ts,) = spark.range(1).select(crawled).first()
 
     def attempt(n, limit_bytes):
         args = extract_job.build_parser().parse_args(
             ["--input", in_dir, "--output", out, "--lineage", lineage, "--partitions", "4",
              "--attempt", str(n), "--resume", "--limit-bytes", str(limit_bytes)]
         )
-        return extract_job.run(spark, args)
+        return _reconciled(spark, in_dir, out, lineage, True, lambda: extract_job.run(spark, args))
 
     first, second = attempt(0, limit), attempt(1, limit)
     assert first["n_skipped"] == second["n_skipped"] == len(big)
     assert (first["n_extracted"], second["n_extracted"]) == (len(pages) - len(big), 0)
     skips = spark.read.parquet(lineage).filter(F.col("status") == "skipped")
     assert sorted(r.url for r in skips.collect()) == sorted(big)
+
+    # the gate's rows: never sniffed, so no fmt; the error names the option
+    gate_rows = spark.read.parquet(out).filter(F.col("url").isin(list(big))).collect()
+    assert len(gate_rows) == 2 * len(big)
+    payloads = dict(pages)
+    for r in gate_rows:
+        assert (r.status, r.fmt, r.md, r.warc_ts) == ("skipped", None, None, warc_ts)
+        assert "--limit-bytes" in r.error
+        assert r.bytes_in == len(payloads[r.url])
 
     stats = attempt(2, 1 << 20)
     assert stats["n_extracted"] == len(big) and stats["n_skipped"] == 0
