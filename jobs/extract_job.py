@@ -76,7 +76,7 @@ def build_parser() -> argparse.ArgumentParser:
 def run(spark, args) -> dict:
     from pyspark.sql import Observation, functions as F
 
-    from docling_spark.operators.convert import convert_any, skipped_rows
+    from docling_spark.operators.convert import convert_any, gate_row, skipped_rows
     from docling_spark.operators.extract import metrics_table
     from docling_spark.operators.formats import limits_gate
     from docling_spark.operators.lineage import resume_filter, write_lineage
@@ -119,14 +119,14 @@ def run(spark, args) -> dict:
     results.observe(
         counts,
         F.count(F.lit(1)).alias("rows"),
-        F.count_if((F.col("status") == "skipped") & F.col("fmt").isNull()).alias("gated"),
+        F.count_if(gate_row()).alias("gated"),
         F.count_if(F.col("status") == "failure").alias("failed"),
     ).write.mode("append").parquet(args.output)
     t_extract = time.perf_counter() - t0
 
     write_lineage(results, args.lineage, attempt=args.attempt)
     if args.metrics:
-        metrics_table(results).write.mode("append").parquet(args.metrics)
+        metrics_table(results.filter(~gate_row())).write.mode("append").parquet(args.metrics)
     results.unpersist()
 
     n = counts.get

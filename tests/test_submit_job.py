@@ -203,8 +203,8 @@ def test_spark_submit_split_big_docs(spark, pages_input, tmp_path):
 
 def test_skipped_urls_recorded_once_and_unskipped_by_a_raised_limit(spark, tmp_path):
     """In-process ``extract_job.run`` over three resumed attempts: an
-    oversized url ends as a skipped results row on every attempt that
-    gates it, is lineage-recorded as ``skipped`` exactly once across
+    oversized url ends as a skipped results row, and no metrics row, on
+    every attempt that gates it, is lineage-recorded as ``skipped`` exactly once across
     repeated attempts, and a raised --limit-bytes extracts it."""
     from pyspark.sql import functions as F
 
@@ -215,7 +215,9 @@ def test_skipped_urls_recorded_once_and_unskipped_by_a_raised_limit(spark, tmp_p
     pages = [(page_url(i), render_page(i, "word " * (40 + 30 * i), "en")) for i in range(1, 9)]
     big = {u for u, b in pages if len(b) > limit}
     assert 0 < len(big) < len(pages)
-    in_dir, out, lineage = (str(tmp_path / d) for d in ("pages", "out", "lineage"))
+    in_dir, out, lineage, metrics = (
+        str(tmp_path / d) for d in ("pages", "out", "lineage", "metrics")
+    )
     crawled = F.timestamp_seconds(F.lit(1_700_000_000))
     spark.createDataFrame(pages, "url string, html binary").withColumn(
         "warc_ts", crawled
@@ -225,7 +227,8 @@ def test_skipped_urls_recorded_once_and_unskipped_by_a_raised_limit(spark, tmp_p
     def attempt(n, limit_bytes):
         args = extract_job.build_parser().parse_args(
             ["--input", in_dir, "--output", out, "--lineage", lineage, "--partitions", "4",
-             "--attempt", str(n), "--resume", "--limit-bytes", str(limit_bytes)]
+             "--metrics", metrics, "--attempt", str(n), "--resume",
+             "--limit-bytes", str(limit_bytes)]
         )
         return _reconciled(spark, in_dir, out, lineage, True, lambda: extract_job.run(spark, args))
 
@@ -243,6 +246,9 @@ def test_skipped_urls_recorded_once_and_unskipped_by_a_raised_limit(spark, tmp_p
         assert (r.status, r.fmt, r.md, r.warc_ts) == ("skipped", None, None, warc_ts)
         assert "--limit-bytes" in r.error
         assert r.bytes_in == len(payloads[r.url])
+    # nothing was extracted from them, so they have no metrics rows
+    met = [r.url for r in spark.read.parquet(metrics).collect()]
+    assert sorted(met) == sorted(u for u, _ in pages if u not in big)
 
     stats = attempt(2, 1 << 20)
     assert stats["n_extracted"] == len(big) and stats["n_skipped"] == 0
@@ -263,7 +269,9 @@ def test_non_html_bytes_end_as_typed_rows(spark, tmp_path):
     picked = [(u, hostile[u]) for u in (
         "https://hostile.example.com/random", "https://hostile.example.com/broken.pdf"
     )]
-    in_dir, out, lineage = (str(tmp_path / d) for d in ("pages", "out", "lineage"))
+    in_dir, out, lineage, metrics = (
+        str(tmp_path / d) for d in ("pages", "out", "lineage", "metrics")
+    )
     spark.createDataFrame(picked, "url string, html binary").withColumn(
         "warc_ts", F.lit(None).cast("timestamp")
     ).write.parquet(in_dir)
