@@ -14,6 +14,7 @@ one value of ``ARRAY<STRUCT<...>>`` inside a DataFrame cell.
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -98,12 +99,36 @@ class TableDataIR:
         return cls(len(rows), max(len(r) for r in rows), cells)
 
     def grid(self) -> list[list[str]]:
-        """Occupancy grid of cell texts (empty string where no cell)."""
-        g = [["" for _ in range(self.num_cols)] for _ in range(self.num_rows)]
+        """Occupancy grid of cell texts (empty string where no cell).
+
+        A cell fills its columns with one slice assignment per covered
+        row, clipped to ``num_cols`` and exactly as long as the texts
+        assigned: a slice assignment of any other length would insert
+        or delete columns. A cell that starts at a negative column (a
+        negative span in a hostile document) is written column by
+        column, each index counting from the row's end. Row and column
+        ranges are built with ``range`` in the per-cell order, so sizes
+        that are not integers (a malformed JSON document) raise the
+        same error at the same point."""
+        num_rows, num_cols = self.num_rows, self.num_cols
+        g = [[""] * operator.index(num_cols) for _ in range(num_rows)]
         for c in self.cells:
-            for r in range(c.start_row, min(c.end_row, self.num_rows)):
-                for k in range(c.start_col, min(c.end_col, self.num_cols)):
-                    g[r][k] = c.text
+            rows = range(c.start_row, min(c.end_row, num_rows))
+            if not rows:
+                continue
+            cols = range(c.start_col, min(c.end_col, num_cols))
+            if not cols:
+                continue
+            text = c.text
+            if cols.start < 0:
+                for r in rows:
+                    row = g[r]
+                    for k in cols:
+                        row[k] = text
+                continue
+            fill = [text] * len(cols)
+            for r in rows:
+                g[r][cols.start : cols.stop] = fill
         return g
 
 

@@ -83,6 +83,9 @@ WATCH_TABLE = 4
 # almost every node — a parse-time bit turns that from an O(subtree)
 # scan into one mask test
 WATCH_BLOCK = 8
+# crawl pages rarely carry a <title>: without the bit, Soup.title is a
+# full-tree miss on every such page
+WATCH_TITLE = 16
 BLOCK_TAG_NAMES = frozenset(
     {
         "address", "details", "figure", "footer",
@@ -90,7 +93,12 @@ BLOCK_TAG_NAMES = frozenset(
         "ol", "p", "pre", "summary", "table", "ul",
     }
 )
-_WATCH_BITS = {"img": WATCH_IMG, "inline-formula": WATCH_FORMULA, "table": WATCH_TABLE}
+_WATCH_BITS = {
+    "img": WATCH_IMG,
+    "inline-formula": WATCH_FORMULA,
+    "table": WATCH_TABLE,
+    "title": WATCH_TITLE,
+}
 for _t in BLOCK_TAG_NAMES:
     _WATCH_BITS[_t] = _WATCH_BITS.get(_t, 0) | WATCH_BLOCK
 
@@ -246,7 +254,7 @@ class Soup(Tag):
 
     @property
     def title(self) -> Optional[Tag]:
-        return self.find("title")
+        return self.find("title") if self.watch & WATCH_TITLE else None
 
     @property
     def body(self) -> Optional[Tag]:

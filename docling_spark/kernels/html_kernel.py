@@ -257,7 +257,9 @@ def parse_table_data(element: Tag) -> Optional[TableDataIR]:
         if not is_row_header:
             num_rows += 1
 
-    grid: list[list] = [[None] * num_cols for _ in range(num_rows)]
+    # occupancy, with one spare free column past the end: on a full row
+    # list.index stops there, at num_cols, as a per-column scan would
+    grid: list[list] = [[None] * (num_cols + 1) for _ in range(num_rows)]
     data = TableDataIR(num_rows=num_rows, num_cols=num_cols, cells=[])
 
     start_row_span = 0
@@ -290,12 +292,19 @@ def parse_table_data(element: Tag) -> Optional[TableDataIR]:
             text = get_cell_text(html_cell).strip()
             if row_header:
                 row_span -= 1
-            while col_idx < num_cols and grid[row_idx + start_row_span][col_idx] is not None:
-                col_idx += 1
-            for r in range(start_row_span, start_row_span + row_span):
-                for c in range(col_span):
-                    if row_idx + r < num_rows and col_idx + c < num_cols:
-                        grid[row_idx + r][col_idx + c] = text
+            top = row_idx + start_row_span
+            if col_idx < num_cols and grid[top][col_idx] is not None:
+                col_idx = grid[top].index(None, col_idx)
+            # one slice per covered row, clipped to the table
+            end_col = col_idx + col_span
+            if end_col > num_cols:
+                end_col = num_cols
+            end_row = top + row_span
+            if end_row > num_rows:
+                end_row = num_rows
+            fill = [text] * (end_col - col_idx)
+            for r in range(top, end_row):
+                grid[r][col_idx:end_col] = fill
 
             data.cells.append(
                 TableCellData(

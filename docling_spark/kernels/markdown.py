@@ -20,11 +20,15 @@ tests/verify_utils.py:500-511):
 * code: fenced block standalone, single backticks in inline scope;
 * pictures: optional caption text + ``<!-- image -->``;
 * tables: padded github-style pipe grid with numeric right-alignment
-  (tabulate-compatible: column width >= header width + 2).
+  (tabulate-compatible: column width >= header width + 2); a run of
+  identical adjacent columns (a colspan) is laid out and rendered once,
+  then repeated.
 """
 
 from __future__ import annotations
 
+import re
+from itertools import groupby
 from typing import Optional
 
 from .doc_model import (
@@ -110,59 +114,46 @@ def _format_number(s: str) -> str:
         return format(float(s), "g")
 
 
+_CONTROL = re.compile(r"[\x00-\x1f]")
+
+
+def _cell_width(s: str) -> int:
+    # tabulate measures via wcswidth, which returns -1 for strings
+    # holding control chars (e.g. an embedded tab, csv-tab golden);
+    # such cells don't widen the column and get width+1 padding
+    return -1 if _CONTROL.search(s) else len(s)
+
+
+def _pad(s: str, width: int, right: bool) -> str:
+    fill = " " * max(width - _cell_width(s), 0)
+    return fill + s if right else s + fill
+
+
 def render_table(table: TableDataIR) -> str:
     grid = table.grid()
     if not grid or table.num_cols == 0:
         return ""
-    grid = [[cell.replace("\n", " ") for cell in row] for row in grid]
-    headers = grid[0]
-    body = grid[1:]
-
-    ncols = table.num_cols
-    numeric = []
-    for c in range(ncols):
+    lines: list[list[str]] = [[] for _ in grid]  # rendered runs per row
+    rule = []
+    # adjacent identical columns render identically: lay out each run
+    # of them once and repeat its cells, so a wide colspan costs one
+    # column of Python work
+    for column, run in groupby(zip(*grid)):
+        k = len(list(run))
+        head, *body = [cell.replace("\n", " ") for cell in column]
         # tabulate: a column is numeric only if EVERY body cell parses
         # as a number — an empty cell makes it textual (pone golden)
-        vals = [row[c] for row in body]
-        numeric.append(bool(vals) and all(_is_number(v) for v in vals))
-
-    cells: list[list[str]] = []
-    for row in body:
-        cells.append(
-            [
-                _format_number(row[c]) if numeric[c] and row[c] != "" else row[c]
-                for c in range(ncols)
-            ]
-        )
-
-    def _visible(s: str) -> int:
-        # tabulate measures via wcswidth, which returns -1 for strings
-        # holding control chars (e.g. an embedded tab, csv-tab golden);
-        # such cells don't widen the column and get width+1 padding
-        return -1 if any(ord(ch) < 32 for ch in s) else len(s)
-
-    widths = []
-    for c in range(ncols):
-        w = len(headers[c]) + 2  # tabulate MIN_PADDING on headers
-        for row in cells:
-            w = max(w, _visible(row[c]))
-        widths.append(w)
-
-    def _pad(s: str, w: int, right: bool) -> str:
-        fill = " " * max(w - _visible(s), 0)
-        return fill + s if right else s + fill
-
-    def fmt_row(row: list[str]) -> str:
-        out = []
-        for c in range(ncols):
-            out.append(_pad(row[c], widths[c], right=numeric[c]))
-        return "| " + " | ".join(out) + " |"
-
-    lines = [fmt_row(headers)]
-    lines.append("|" + "|".join("-" * (w + 2) for w in widths) + "|")
-    for row in cells:
-        lines.append(fmt_row(row))
-    return "\n".join(lines)
+        numeric = bool(body) and all(map(_is_number, body))
+        if numeric:
+            body = list(map(_format_number, body))
+        # tabulate MIN_PADDING on headers
+        width = max([len(head) + 2, *map(_cell_width, body)])
+        for out, cell in zip(lines, [head, *body]):
+            out.append(" | ".join([_pad(cell, width, numeric)] * k))
+        rule.append("|".join(["-" * (width + 2)] * k))
+    rows = ["| " + " | ".join(out) + " |" for out in lines]
+    rows.insert(1, "|" + "|".join(rule) + "|")
+    return "\n".join(rows)
 
 
 # ---------------------------------------------------------------- serializer

@@ -53,7 +53,7 @@ def _text_nodes(doc: Doc) -> list[DocNode]:
 def table_text(table: TableDataIR) -> str:
     """A table as plain text: one line per grid row, its non-empty
     cells joined by ", "."""
-    return "\n".join(", ".join(cell for cell in row if cell) for row in table.grid())
+    return "\n".join(", ".join(filter(None, row)) for row in table.grid())
 
 
 def _node_text(doc: Doc, node: DocNode) -> str:

@@ -13,6 +13,7 @@ from docling_spark.kernels.dom import (
     _decode_html,
     _fast_feed,
     _TreeParser,
+    parse_html,
     parse_html_stdlib,
 )
 
@@ -120,3 +121,24 @@ def test_property_identical_on_htmlish_soup(s):
 @given(data=st.binary(max_size=300))
 def test_property_identical_on_random_bytes(data):
     _assert_same(data)
+
+
+TITLES = {
+    "none": b"<html><head><meta charset=utf-8></head><body><p>x</p></body></html>",
+    "head": b"<html><head><title>Head title</title></head><body><p>x</p></body></html>",
+    "body": b"<html><body><div><p>x</p><title>Body title</title></div></body></html>",
+    "self_closed": b"<html><head><title/></head><body>y</body></html>",
+    "two": b"<title>first</title><div><title>second</title></div>",
+}
+
+
+@pytest.mark.parametrize("name", sorted(TITLES))
+@pytest.mark.parametrize("parse", [parse_html, parse_html_stdlib])
+def test_soup_title_is_the_first_title_tag(name, parse):
+    """``Soup.title`` answers a page without ``<title>`` from the
+    parse-time watch bit; wherever the tag sits, it is the node a full
+    ``find("title")`` returns."""
+    soup = parse(TITLES[name])
+    found = soup.find("title")
+    assert (found is None) == (name == "none")
+    assert soup.title is found
