@@ -13,12 +13,12 @@ times it, raises the recursion limit and turns a parse error into a
 status='failure' row (errors-as-data).
 
 ``convert_any`` is the one conversion operator and ``CONVERT_SCHEMA``
-its one result row (``skipped_rows`` frames inputs skipped before
-routing in it), for any mix of formats (a WARC sample is never
-single-format). One shuffle, the url-hash repartition, with ``warc_ts``
-carried column-wise when the input has it; with ``split_big_docs``,
-documents of ``big_doc_bytes`` or more are spread round-robin so one
-5 MB page does not straggle a 10k-row task (AQE handles residual skew).
+its one result row (an input over the limits gate is a ``gate_row``),
+for any mix of formats (a WARC sample is never single-format). One
+shuffle, the url-hash repartition, with ``warc_ts`` carried column-wise
+when the input has it; with ``split_big_docs``, documents of
+``big_doc_bytes`` or more are spread round-robin so one 5 MB page does
+not straggle a 10k-row task (AQE handles residual skew).
 """
 
 from __future__ import annotations
@@ -45,7 +45,7 @@ from docling_spark.operators.batch import (
     until_error,
     url_hash,
 )
-from docling_spark.operators.formats import sniff_format
+from docling_spark.operators.formats import LIMIT_BYTES, limits_gate, sniff_format
 
 CONVERT_SCHEMA = StructType(
     [
@@ -317,59 +317,57 @@ def convert_any(
     want_json: bool = False,
     big_doc_bytes: int = 2 << 20,
     split_big_docs: bool = False,
+    limit_bytes: int = LIMIT_BYTES,
 ) -> DataFrame:
     """(url, <content binary>[, warc_ts]) of ANY supported format ->
     one ``CONVERT_SCHEMA`` row per input.
 
     Column pruning keeps the scan narrow (only url, the payload and
     warc_ts are read); the repartition by url-hash is the single
-    shuffle."""
+    shuffle. The limits gate is a projection before it: a payload over
+    ``limit_bytes`` crosses neither the exchange nor Arrow; the kernel
+    gets its length instead (0 within the limit) and frames its
+    ``gate_row``, with no exports and a null ``fmt`` and ``t_sec``."""
     carry = ("warc_ts",) if "warc_ts" in df.columns else ()
-    cols = ["url", content_col, *carry]
+    over = F.col("gate_status") == "skipped"
+    gated = limits_gate(df, content_col, limit_bytes).select(
+        "url",
+        F.when(~over, F.col(content_col)).alias(content_col),
+        F.when(over, F.length(content_col)).otherwise(0).alias("withheld"),
+        *carry,
+    )
+    cols = gated.columns
+    error = f"payload over --limit-bytes {limit_bytes}"
+    skipped = {**_UNCONVERTED, "warc_ts": None, "fmt": None, "status": "skipped", "error": error}
 
-    def per_doc(url, payload):
+    def per_doc(url, payload, withheld):
+        if withheld:
+            return [{**skipped, "url": url, "bytes_in": int(withheld), "t_sec": None}]
         return [convert_one(url, payload, want_doctags=want_doctags, want_json=want_json)]
 
     def run(part):
         return map_docs(part, per_doc, CONVERT_SCHEMA, carry)
 
     if not split_big_docs:
-        return run(url_hash(df, cols, num_partitions))
+        return run(url_hash(gated, cols, num_partitions))
     # route oversized docs to their own round-robin-spread tasks so
     # they cannot straggle a dense url-hash partition: the big side
     # gets num_partitions extra (mostly tiny) tasks, each owning at
-    # most ceil(n_big / num_partitions) documents. The two branches
-    # re-scan the source; at crawl scale put a size bucket in the
-    # table layout (e.g. Iceberg hidden partitioning on
-    # bucket(length)) so both filters partition-prune instead.
+    # most ceil(n_big / num_partitions) documents; a null payload is
+    # small. The two branches re-scan the source; at crawl scale put a
+    # size bucket in the table layout (e.g. Iceberg hidden partitioning
+    # on bucket(length)) so both filters partition-prune instead.
     n = partitions(df, num_partitions)
-    is_big = F.length(content_col) >= big_doc_bytes
-    small = url_hash(df.filter(~is_big), cols, n)
-    big = df.filter(is_big).select(*cols).repartition(n)
+    is_big = F.coalesce(F.length(content_col) >= big_doc_bytes, F.lit(False))
+    small = url_hash(gated.filter(~is_big), cols, n)
+    big = gated.filter(is_big).repartition(n)
     return run(small).unionByName(run(big))
 
 
-def skipped_rows(df: DataFrame, error: str) -> DataFrame:
-    """``CONVERT_SCHEMA`` rows for inputs skipped before routing (the
-    job's limits gate): status 'skipped' with ``error`` saying why,
-    ``bytes_in`` the payload length, ``warc_ts`` carried when the input
-    has it, and a null ``fmt``, because the payload was never sniffed
-    (``gate_row`` tells these rows apart)."""
-    filled = {
-        "url": F.col("url"),
-        "status": F.lit("skipped"),
-        "error": F.lit(error),
-        "bytes_in": F.length("html"),
-        "warc_ts": F.col("warc_ts") if "warc_ts" in df.columns else F.lit(None),
-    }
-    return df.select(
-        *(filled.get(f.name, F.lit(_UNCONVERTED.get(f.name))).alias(f.name) for f in CONVERT_SCHEMA)
-    ).to(CONVERT_SCHEMA)
-
-
 def gate_row() -> Column:
-    """True on the rows ``skipped_rows`` makes: skipped, with no ``fmt``
-    (a router skip always has its sniffed ``fmt``)."""
+    """True on the gate rows ``convert_any`` frames for a payload over
+    its limit: skipped, with no ``fmt`` (a router skip always has its
+    sniffed ``fmt``)."""
     return (F.col("status") == "skipped") & F.col("fmt").isNull()
 
 

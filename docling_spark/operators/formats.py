@@ -165,8 +165,11 @@ def format_rollup(df: DataFrame, binary_col: str = "html") -> DataFrame:
     )
 
 
+LIMIT_BYTES = 64 << 20  # default of limits_gate, convert_any and --limit-bytes
+
+
 def limits_gate(
-    df: DataFrame, binary_col: str = "html", max_bytes: int = 10 << 20
+    df: DataFrame, binary_col: str = "html", max_bytes: int = LIMIT_BYTES
 ) -> DataFrame:
     """S3 limits gate: oversized rows become status='skipped' rows, not
     dropped (reference: document.py:116-181, errors-as-data)."""

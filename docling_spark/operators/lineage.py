@@ -17,17 +17,17 @@ documents a job WILL be preempted, so:
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 def _recorded(spark: SparkSession, path: str, status: str) -> DataFrame | None:
     """(url, status) of the lineage rows with ``status``; None while no
-    lineage exists."""
-    try:
-        lineage = spark.read.schema("url string, status string").parquet(path)
-    except AnalysisException:  # no lineage yet
+    lineage exists. A missing path is probed, not read: a failed read
+    costs ~65 ms and, after an ``Observation``, logs a listener ERROR."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         return None
+    lineage = spark.read.schema("url string, status string").parquet(path)
     return lineage.filter(F.col("status") == status)
 
 

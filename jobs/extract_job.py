@@ -47,6 +47,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def build_parser() -> argparse.ArgumentParser:
+    from docling_spark.operators.formats import LIMIT_BYTES
+
     p = argparse.ArgumentParser(description="docling-spark extraction job")
     p.add_argument("--input", required=True, help="pages parquet dir or iceberg table")
     p.add_argument("--output", required=True, help="results parquet dir")
@@ -57,7 +59,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--resume", action="store_true",
                    help="left_anti-filter urls already successful in lineage")
     p.add_argument("--format", default="parquet", choices=("parquet", "iceberg"))
-    p.add_argument("--limit-bytes", type=int, default=64 << 20,
+    p.add_argument("--limit-bytes", type=int, default=LIMIT_BYTES,
                    help="max payload size; larger rows become status='skipped'")
     p.add_argument("--split-big-docs", action="store_true",
                    help="route oversized documents (>= --big-doc-bytes) "
@@ -76,9 +78,8 @@ def build_parser() -> argparse.ArgumentParser:
 def run(spark, args) -> dict:
     from pyspark.sql import Observation, functions as F
 
-    from docling_spark.operators.convert import convert_any, gate_row, skipped_rows
+    from docling_spark.operators.convert import convert_any, gate_row
     from docling_spark.operators.extract import metrics_table
-    from docling_spark.operators.formats import limits_gate
     from docling_spark.operators.lineage import resume_filter, write_lineage
 
     if args.format == "iceberg":
@@ -94,19 +95,15 @@ def run(spark, args) -> dict:
     if args.resume:
         pages = resume_filter(pages, spark, args.lineage)
 
-    # limits gate (reference: DocumentLimits, datamodel/document.py:116-181):
-    # an oversized input is never sniffed, and ends as a skipped row
-    gated = limits_gate(pages, max_bytes=args.limit_bytes)
-    too_big = F.col("gate_status") == "skipped"
-
+    # convert_any holds the limits gate (reference: DocumentLimits,
+    # datamodel/document.py:116-181): an input over --limit-bytes is a gate row
     t0 = time.perf_counter()
     results = convert_any(
-        gated.filter(~too_big).drop("gate_status"),
+        pages,
         num_partitions=args.partitions,
         split_big_docs=args.split_big_docs,
         big_doc_bytes=args.big_doc_bytes,
-    ).unionByName(
-        skipped_rows(gated.filter(too_big), f"payload over --limit-bytes {args.limit_bytes}")
+        limit_bytes=args.limit_bytes,
     )
 
     # one materialization, three writes: results, lineage, metrics.

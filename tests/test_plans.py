@@ -130,6 +130,91 @@ def test_split_big_docs_equivalent_and_spread(spark, pages_path):
     assert max(r["n_big"] for r in pids) <= bound
 
 
+@pytest.mark.parametrize("split", [False, True], ids=["hash", "split"])
+def test_every_payload_ends_as_one_row(spark, split):
+    """Null, empty, small, big and over-limit payloads each end as
+    exactly one row, with and without split_big_docs: the branch
+    filters are null-safe (a null payload's length is null), and the
+    payload over the limit ends as the gate row, framed by the kernel
+    with its length and crawl time and no exports."""
+    import datetime
+
+    from docling_spark.operators.convert import convert_any, gate_row
+
+    crawled = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    over = b"<p>" + b"c" * 2000 + b"</p>"
+    pages = spark.createDataFrame(
+        [
+            ("u1", b"<p>a</p>"),
+            ("u2", None),
+            ("u3", b""),
+            ("u4", b"<p>" + b"b" * 200 + b"</p>"),
+            ("u5", over),
+        ],
+        "url string, html binary",
+    ).withColumn("warc_ts", F.lit(crawled))
+    res = convert_any(
+        pages, num_partitions=4, split_big_docs=split, big_doc_bytes=100, limit_bytes=1000
+    )
+    rows = res.collect()
+    assert sorted(r.url for r in rows) == ["u1", "u2", "u3", "u4", "u5"]
+    by_url = {r.url: r for r in rows}
+    assert [by_url[u].status for u in ("u1", "u4")] == ["success", "success"]
+    assert [(by_url[u].status, by_url[u].fmt) for u in ("u2", "u3")] == [
+        ("skipped", "empty"), ("skipped", "empty")
+    ]
+    gate = by_url["u5"].asDict()
+    assert gate == {
+        "url": "u5",
+        "warc_ts": crawled,
+        "fmt": None,
+        "status": "skipped",
+        "error": "payload over --limit-bytes 1000",
+        "md": None,
+        "txt": None,
+        "n_nodes": 0,
+        "n_spans": 0,
+        "spans": [],
+        "n_chunks": 0,
+        "n_pages": None,
+        "parse_score": None,
+        "doctags": None,
+        "json": None,
+        "bytes_in": len(over),
+        "ocr_needed": None,
+        "t_sec": None,
+    }
+    assert [r.url for r in res.filter(gate_row()).collect()] == ["u5"]
+
+
+def test_job_results_one_scan_one_exchange(spark, pages_path, tmp_path, monkeypatch):
+    """The results ``extract_job.run`` writes read the pages once: the
+    limits gate is a projection of the one scan, the url-hash
+    repartition is the one Exchange, and the results have
+    --partitions partitions."""
+    from docling_spark.operators import lineage
+    from jobs import extract_job
+
+    written = []
+    write_lineage = lineage.write_lineage
+
+    def spy(results, *args, **kwargs):
+        written.append(results)
+        write_lineage(results, *args, **kwargs)
+
+    monkeypatch.setattr(lineage, "write_lineage", spy)
+    args = extract_job.build_parser().parse_args(
+        ["--input", pages_path, "--output", str(tmp_path / "out"),
+         "--lineage", str(tmp_path / "lineage"), "--partitions", "8"]
+    )
+    extract_job.run(spark, args)
+    (results,) = written
+    plan = _plan(results)
+    assert plan.count("Scan parquet") == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    assert results.rdd.getNumPartitions() == 8
+
+
 def test_region_revenue_broadcasts_dims(spark):
     import __spark_entry__ as entry
 

@@ -52,6 +52,10 @@ def _run_job(zip_path, input_dir, out, lineage, metrics=None, resume=False,
         cmd, capture_output=True, text=True, timeout=600, cwd=str(REPO)
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
+    # a missing lineage path is probed, never read: after the observed
+    # results write, a failed read is logged as a listener ERROR
+    for noise in ("Listener threw an exception", "PATH_NOT_FOUND"):
+        assert noise not in proc.stderr, proc.stderr[-4000:]
     stats_line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
     return json.loads(stats_line)
 
