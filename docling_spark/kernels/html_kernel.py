@@ -9,7 +9,8 @@ cites the reference lines whose observable behavior it reproduces.
 
 The kernel is pure Python per document and embarrassingly parallel
 across documents; on Spark it runs inside an Arrow-batched
-``mapInPandas`` (see docling_spark.operators.extract).
+``mapInPandas`` (see docling_spark.operators.convert.convert_any and
+docling_spark.operators.batch.map_docs).
 """
 
 from __future__ import annotations
@@ -293,7 +294,9 @@ def parse_table_data(element: Tag) -> Optional[TableDataIR]:
             if row_header:
                 row_span -= 1
             top = row_idx + start_row_span
-            if col_idx < num_cols and grid[top][col_idx] is not None:
+            # a folded all-<th> row below the last grid row lands nowhere:
+            # its cells fall outside the table, as the fill clips them
+            if top < num_rows and col_idx < num_cols and grid[top][col_idx] is not None:
                 col_idx = grid[top].index(None, col_idx)
             # one slice per covered row, clipped to the table
             end_col = col_idx + col_span

@@ -14,13 +14,18 @@ choose a kernel, a failure-row template and an output schema.
   document_converter.py:264-279);
 * **metrics as data** — per-doc wall time and byte counts are ordinary
   columns, aggregated into a metrics table downstream
-  (reference: utils/profiling.py TimeRecorder).
+  (reference: utils/profiling.py TimeRecorder);
+* **per-task overhead** — ``guard_zip_rereads`` keeps the worker from
+  re-reading every zip on its ``sys.path`` at the start of each task.
 """
 
 from __future__ import annotations
 
+import functools
+import os
 import sys
 import time
+import zipimport
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructType
@@ -33,6 +38,56 @@ KERNEL_RECURSION_LIMIT = 20000
 def raise_recursion_limit() -> None:
     if sys.getrecursionlimit() < KERNEL_RECURSION_LIMIT:
         sys.setrecursionlimit(KERNEL_RECURSION_LIMIT)
+
+
+def _zip_stamp(archive: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(archive)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
+
+
+def _stamp_read(importer, stamp) -> None:
+    # a failed read left no directory: read it again next time
+    read = importer.archive in zipimport._zip_directory_cache
+    importer._read_stamp = stamp if read else None
+
+
+def guard_zip_rereads() -> None:
+    """Re-read a zip archive on ``sys.path`` only when it changed on disk.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task. On CPython 3.11 each ``zipimporter`` then re-parses
+    its archive's whole directory in pure Python. A reused worker holds
+    16 of them (pyspark.zip under 12 package paths, py4j and the
+    spark-core jar twice each): 0.1-0.3 s per task on 4 cores, outside
+    the UDF. Later CPython releases make this invalidation lazy.
+
+    The wrapped ``invalidate_caches`` re-reads an archive only when its
+    ``(st_mtime_ns, st_size)`` differs from the stamp taken at that
+    importer's last read, or when it cannot be stat'ed. A new archive or
+    directory on the path still gets a new importer, so a file added
+    with ``addPyFile`` imports as before. The importers already cached
+    are stamped at install: this task's setup has just read them. The
+    first task of a worker still pays once. Installed once per process;
+    a second call does nothing."""
+    cls = zipimport.zipimporter
+    if hasattr(cls.invalidate_caches, "__wrapped__"):
+        return
+    reread = cls.invalidate_caches
+
+    @functools.wraps(reread)
+    def invalidate_caches(self):
+        stamp = _zip_stamp(self.archive)
+        if stamp is None or stamp != getattr(self, "_read_stamp", None):
+            reread(self)
+            _stamp_read(self, stamp)
+
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, cls):
+            _stamp_read(finder, _zip_stamp(finder.archive))
+    cls.invalidate_caches = invalidate_caches
 
 
 def error_text(e: BaseException) -> str:
@@ -127,6 +182,7 @@ def map_docs(
         import pandas as pd
 
         raise_recursion_limit()
+        guard_zip_rereads()
         for pdf in batches:
             rows = []
             for row in zip(*(pdf[c] for c in cols)):

@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from docling_spark.operators.batch import guard_zip_rereads
+
 # ordered rules: first hit wins (deterministic; mirrors the reference's
 # single-label tag). Keyword sets are disjoint enough for crawl code.
 _LANG_RULES: list[tuple[str, tuple[str, ...]]] = [
@@ -133,6 +135,7 @@ def enrich_spans(
     spans = processable_spans(results, labels)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_zip_rereads()
         for pdf in batches:
             out = pdf[["url", "node_id", "label"]].copy()
             out["enrichment"] = model_fn(pdf["snippet"]).astype(str)

@@ -14,6 +14,8 @@ import re
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType
 
+from docling_spark.operators.batch import guard_zip_rereads
+
 _HTML_RE = re.compile(
     rb"(?i)<\s*(!doctype\s+html|html|head|body|div|p|table|h1)\b"
 )
@@ -148,6 +150,7 @@ def with_format(df: DataFrame, binary_col: str = "html") -> DataFrame:
 
     @pandas_udf(StringType())
     def detect(payloads):
+        guard_zip_rereads()
         return payloads.map(lambda b: sniff_format(bytes(b) if b is not None else b""))
 
     # Truncate to the 8 KB sniff window JVM-side (F.substring on binary)

@@ -29,7 +29,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from docling_spark.operators.batch import map_docs, url_hash
+from docling_spark.operators.batch import guard_zip_rereads, map_docs, url_hash
 
 MEDIA_SCHEMA = StructType(
     [
@@ -151,6 +151,7 @@ def synth_media(spark, n: int = 256) -> DataFrame:
     def gen(batches):
         import pandas as pd
 
+        guard_zip_rereads()
         for pdf in batches:
             rows = []
             for i in pdf["id"].tolist():

@@ -233,6 +233,8 @@ def synthesize_pages(spark, sf_dir: str, n_pages: int | None = None):
         BinaryType, LongType, StringType, StructField, StructType, TimestampType,
     )
 
+    from docling_spark.operators.batch import guard_zip_rereads
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text", "lang"
     )
@@ -258,6 +260,7 @@ def synthesize_pages(spark, sf_dir: str, n_pages: int | None = None):
     )
 
     def render_batches(batches):
+        guard_zip_rereads()
         for pdf in batches:
             ids_ = pdf["page_id"].tolist()
             texts = pdf["text"].tolist()

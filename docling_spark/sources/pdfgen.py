@@ -169,6 +169,8 @@ def synthesize_pdf_pages(
     )
     import datetime as dt
 
+    from docling_spark.operators.batch import guard_zip_rereads
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     if n_docs is not None:
         docs = docs.filter(F.col("doc_id") < n_docs)
@@ -189,6 +191,7 @@ def synthesize_pdf_pages(
         return render_doc_pdf_modern(i, t, cid=(i % 3 == 1))
 
     def render(batches):
+        guard_zip_rereads()
         for pdf_batch in batches:
             ids = pdf_batch["doc_id"].tolist()
             texts = pdf_batch["text"].tolist()

@@ -25,6 +25,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from docling_spark.operators.batch import guard_zip_rereads
+
 PAGES_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -115,6 +117,7 @@ def dedup_stream(pages_stream, text_col: str = "text"):
     def emit_first(key, pdfs, state):
         import pandas as pd
 
+        guard_zip_rereads()
         seen = state.exists
         rows = []
         for pdf in pdfs:

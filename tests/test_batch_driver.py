@@ -90,13 +90,128 @@ def test_document_timing_and_catch_alls_only_in_batch_py():
 
 @pytest.mark.parametrize(
     "needle",
-    ["setrecursionlimit", "[:500]", '"spark.sql.shuffle.partitions"'],
-    ids=["recursion_limit", "error_format", "partition_default"],
+    ["setrecursionlimit", "[:500]", '"spark.sql.shuffle.partitions"', "zipimport"],
+    ids=["recursion_limit", "error_format", "partition_default", "zip_rereads"],
 )
 def test_driver_concerns_live_only_in_batch_py(needle):
     offenders = [p.name for p in SCANNED if p != DRIVER and needle in p.read_text()]
     assert offenders == []
     assert needle in DRIVER.read_text()
+
+
+ZIP_GUARD = """
+import importlib, sys, tempfile, zipfile, zipimport
+from pathlib import Path
+from docling_spark.operators.batch import guard_zip_rereads
+
+archive = Path(tempfile.mkdtemp()) / "mods.zip"
+
+def write(**modules):
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("pkg/__init__.py", "")
+        for name, src in modules.items():
+            z.writestr(f"pkg/{name}.py", src)
+
+write(old="X = 1")
+sys.path.insert(0, str(archive))
+import pkg.old  # two importers on one archive: the zip and pkg/ in it
+importers = [f for f in sys.path_importer_cache.values() if isinstance(f, zipimport.zipimporter)]
+assert len(importers) == 2, importers
+
+reads = []
+read = zipimport._read_directory
+zipimport._read_directory = lambda path: reads.append(path) or read(path)
+
+def rereads():
+    reads.clear()
+    importlib.invalidate_caches()
+    return len(reads)
+
+assert rereads() == 2  # unguarded: every invalidate re-reads
+guard_zip_rereads()
+assert rereads() == 0
+write(old="X = 1", new="Y = 2")
+assert rereads() == 2
+import pkg.new
+assert pkg.new.Y == 2
+assert rereads() == 0
+guard = zipimport.zipimporter.invalidate_caches
+guard_zip_rereads()
+assert zipimport.zipimporter.invalidate_caches is guard
+assert rereads() == 0
+archive.unlink()  # cannot be stat'ed: re-read, as before
+assert rereads() == 2
+assert rereads() == 2
+"""
+
+
+def test_zip_guard_rereads_only_changed_archives():
+    proc = subprocess.run(
+        [sys.executable, "-c", ZIP_GUARD], cwd=ROOT, capture_output=True, text=True, timeout=120
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:] + proc.stdout[-2000:]
+
+
+def test_map_docs_task_rereads_no_zip(spark):
+    """Inside a map_docs task, PySpark's per-task invalidate_caches()
+    re-reads no archive on the worker's path (with a Spark distribution
+    that is pyspark.zip, py4j and the spark-core jar)."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from docling_spark.operators.batch import map_docs
+
+    def per_doc(_):
+        import importlib
+        import zipimport
+
+        reads = []
+        read = zipimport._read_directory
+        zipimport._read_directory = lambda path: reads.append(path) or read(path)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        return [{"reads": len(reads)}]
+
+    schema = StructType([StructField("reads", LongType())])
+    df = spark.range(0, 1, 1, 1).toDF("i")
+    assert [r.reads for r in map_docs(df, per_doc, schema).collect()] == [0]
+
+
+def _python_task_functions(path: Path):
+    """(top-level name, function) for every function a module hands to
+    Spark to run in a Python worker: the first argument of
+    ``mapInPandas`` / ``applyInPandasWithState`` and each ``@pandas_udf``."""
+    for top in ast.parse(path.read_text()).body:
+        defs = {n.name: n for n in ast.walk(top) if isinstance(n, ast.FunctionDef)}
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("mapInPandas", "applyInPandasWithState")
+            ):
+                yield getattr(top, "name", "<module>"), defs[node.args[0].id]
+            elif isinstance(node, ast.FunctionDef) and any(
+                "pandas_udf" in ast.unparse(d) for d in node.decorator_list
+            ):
+                yield getattr(top, "name", "<module>"), node
+
+
+def test_every_python_task_guards_zip_rereads():
+    tasks = [
+        (p.name, top, fn)
+        for p in sorted(PACKAGE.rglob("*.py"))
+        for top, fn in _python_task_functions(p)
+    ]
+    unguarded = [
+        (name, top, fn.name)
+        for name, top, fn in tasks
+        if not any(
+            isinstance(n, ast.Call) and getattr(n.func, "id", None) == "guard_zip_rereads"
+            for n in ast.walk(fn)
+        )
+    ]
+    assert len(tasks) >= 7 and unguarded == []
 
 
 def test_per_document_map_in_pandas_only_in_batch_py():

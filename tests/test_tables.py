@@ -3,10 +3,11 @@
 ``TableDataIR.grid``, ``markdown.render_table``, ``textout.table_text``
 and ``html_kernel.parse_table_data`` fill and render a span once per run
 of identical columns. The functions below are the per-cell versions
-they replaced, kept verbatim as the reference: on every table,
-hand-built or parsed from HTML, the markdown, the text, the grid and
-the parsed cells must be byte-equal, or both sides must raise the same
-exception. A last test bounds the Python-level work of a
+they replaced, kept verbatim as the reference, with one deliberate
+departure: a folded all-<th> row below the last grid row no longer
+raises IndexError. On every table, hand-built or parsed from HTML, the
+markdown, the text, the grid and the parsed cells must be byte-equal,
+or both sides must raise the same exception. A last test bounds the Python-level work of a
 ``colspan=99999`` table, which the per-cell versions paid per column.
 """
 
@@ -162,7 +163,14 @@ def oracle_parse_table_data(element):
             text = get_cell_text(html_cell).strip()
             if row_header:
                 row_span -= 1
-            while col_idx < num_cols and grid[row_idx + start_row_span][col_idx] is not None:
+            # departs from the reference on purpose: a folded all-<th> row
+            # below the last grid row raised IndexError there and failed
+            # the whole document; its cells now fall outside the grid
+            while (
+                row_idx + start_row_span < num_rows
+                and col_idx < num_cols
+                and grid[row_idx + start_row_span][col_idx] is not None
+            ):
                 col_idx += 1
             for r in range(start_row_span, start_row_span + row_span):
                 for c in range(col_span):
@@ -300,6 +308,17 @@ def test_html_tables_parse_and_render_as_the_oracle(html):
     assert parsed == _outcome(oracle_parse_table_data, parse_html(html).find("table"))
     if parsed[0] == "ok" and parsed[1] is not None:
         _assert_renders_equal(parsed[1])
+
+
+def test_folded_header_row_below_the_table_keeps_the_document():
+    """An all-<th> row with rowspan != 1 folds into the row above, here
+    a row past the grid: the page still converts, with its other text."""
+    from docling_spark.operators.convert import convert_one
+
+    html = b"<p>intro</p><table><tr><td>a</td></tr><tr><th rowspan=2>h</th></tr></table><p>after</p>"
+    row = convert_one("u", html)
+    assert row["status"] == "success", row["error"]
+    assert "intro" in row["md"] and "after" in row["md"]
 
 
 def test_colspan_table_costs_its_cells_not_its_span():
