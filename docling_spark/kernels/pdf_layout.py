@@ -1240,8 +1240,8 @@ def assemble_doc(
     all_blocks: list[Block], name: str = "doc", classify: bool = True
 ) -> Doc:
     """Blocks (already in per-page reading order, pages ascending) ->
-    Doc IR. Runs doc-wide classification, so it must see ALL pages —
-    in the Spark paged path this is the post-shuffle kernel. Pass
+    Doc IR. Runs doc-wide classification, so it must see ALL pages of
+    the document (``build_doc`` hands it every page's blocks). Pass
     ``classify=False`` when the blocks were already classified
     doc-wide (e.g. per-page slices of a classified document)."""
     from .doc_model import CAPTION
@@ -1316,20 +1316,13 @@ def doc_blocks(pages: list[PdfPage]) -> tuple[list[Block], dict[int, float]]:
 
 def build_doc(pages: list[PdfPage], name: str = "doc") -> tuple[Doc, list[float | None]]:
     """Pages -> Doc IR + per-page parse scores (P17/P18 doc assembly,
-    standard_pdf_pipeline.py:183-201 + readingorder_model.py)."""
+    standard_pdf_pipeline.py:183-201 + readingorder_model.py): the
+    doc-wide layout policy of the router's pdf route (furniture marking,
+    then cross-page continuation merge, then assembly)."""
     blocks, page_heights = doc_blocks(pages)
-    return assemble_pages(blocks, page_heights, name), [page_score(p) for p in pages]
-
-
-def assemble_pages(
-    blocks: list[Block], page_heights: dict[int, float], name: str = "doc"
-) -> Doc:
-    """Every page's blocks, in reading order -> Doc: the doc-wide
-    layout policy the router's doc-at-once route and the paged strategy
-    share (furniture marking, then cross-page continuation merge, then
-    assembly)."""
     mark_page_furniture(blocks, page_heights)
-    return assemble_doc(merge_continuations(blocks), name)
+    doc = assemble_doc(merge_continuations(blocks), name)
+    return doc, [page_score(p) for p in pages]
 
 
 # ------------------------------------- P14: overlap resolution (UnionFind)

@@ -140,8 +140,8 @@ def per_page(kernel, failure: dict):
     """per_doc for kernels that emit many rows per document (pages,
     chunks). Rows a generator kernel yields before an exception are kept
     (``until_error``) and the failure adds one row, so every url keeps a
-    status row and a PDF that breaks on a later page assembles to
-    partial_success."""
+    status row and a PDF that breaks on a later page keeps the rows of
+    the pages before it."""
 
     def per_doc(url, payload):
         raise_recursion_limit()

@@ -1,4 +1,4 @@
-"""PDF extraction as Spark operators: the paged strategy, the
+"""PDF extraction as Spark operators: per-page parse rows, the
 confidence rollup and the multimodal page export.
 
 Reference pipeline being re-expressed: StandardPdfPipeline
@@ -8,28 +8,19 @@ reading order -> document. Its threaded variant
 (threaded_standard_pdf_pipeline.py) exists only to pipeline stages
 inside one process; Spark replaces all of it with partition parallelism.
 
-Doc-at-once extraction, which parses and assembles each document in a
-single task with zero shuffle (right when documents are small, as crawl
-PDFs overwhelmingly are), is the router's pdf route,
-``convert.convert_any``; its rows carry ``n_pages`` and ``parse_score``.
+A PDF document is assembled in one place: the router's pdf route,
+``convert.convert_any``, which parses and assembles each document in a
+single task (``pdf_layout.build_doc``) and carries ``n_pages`` and
+``parse_score`` on its rows. No path spreads the pages of one oversized
+PDF over several tasks.
 
-Paged — ``parse_pdf_page_rows`` + ``assemble_from_pages``: parse emits
-one row per page (url, page_no, blocks, parse_score), pages of one
-2000-page document land in different tasks; the single shuffle is
-``groupBy(url).agg(array_sort(collect_list(struct(page_no, blocks))))``
-— the reference's page-concat boundary (standard_pdf_pipeline.py:183-201)
-made into a real exchange. This is the skew escape hatch for oversized
-documents: one doc is no longer one task.
-
-The paged wire format is the ``pdf_layout.Block`` dataclass itself:
-``_BLOCK_FIELDS`` is a nested Arrow struct with one field per dataclass
-field (``table`` a struct of num_rows, num_cols and TableCellData
-cells); pages ship ``dataclasses.asdict(block)`` and regroup into
-``Block(**row)``. Both PDF paths and the multimodal export share one
-page pass, ``pdf_layout.doc_blocks``, and one doc score,
-``pdf_layout.doc_score``. All of them follow one rule for a PDF that
-breaks partway (``batch.until_error``): the pages parsed before the
-broken one are kept, and the page error ends the document.
+``parse_pdf_page_rows`` emits one row per page (url, page_no, size,
+cell count, parse_score), the input of the confidence rollup.
+``multimodal_pages`` emits one training row per page, sharing the
+router's page pass (``pdf_layout.doc_blocks``). All of them follow one
+rule for a PDF that breaks partway (``batch.until_error``): the pages
+parsed before the broken one are kept, and the page error ends the
+document.
 
 Confidence aggregation (P19, standard_pdf_pipeline.py:253-281) is plain
 Spark SQL over the per-page scores: avg + 10th-percentile.
@@ -43,7 +34,6 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
-    BooleanType,
     DoubleType,
     IntegerType,
     StringType,
@@ -52,51 +42,6 @@ from pyspark.sql.types import (
 )
 
 from docling_spark.operators.batch import map_docs, per_page, until_error, url_hash
-
-# pdf_layout.Block as an Arrow struct, field for field in dataclass
-# order: the paged strategy ships each block through the shuffle as
-# dataclasses.asdict(block) and rebuilds it with Block(**row)
-_BLOCK_FIELDS = [
-    StructField("kind", StringType()),
-    StructField("text", StringType()),
-    StructField("level", IntegerType()),
-    StructField("page_no", IntegerType()),
-    StructField("l", DoubleType()),
-    StructField("t", DoubleType()),
-    StructField("r", DoubleType()),
-    StructField("b", DoubleType()),
-    StructField("size", DoubleType()),
-    StructField("parse_score", DoubleType()),
-    # doc_model.TableDataIR for kind == 'table', else null
-    StructField(
-        "table",
-        StructType(
-            [
-                StructField("num_rows", IntegerType()),
-                StructField("num_cols", IntegerType()),
-                StructField(
-                    "cells",
-                    ArrayType(
-                        StructType(
-                            [
-                                StructField("text", StringType()),
-                                StructField("row_span", IntegerType()),
-                                StructField("col_span", IntegerType()),
-                                StructField("start_row", IntegerType()),
-                                StructField("end_row", IntegerType()),
-                                StructField("start_col", IntegerType()),
-                                StructField("end_col", IntegerType()),
-                                StructField("column_header", BooleanType()),
-                                StructField("row_header", BooleanType()),
-                            ]
-                        )
-                    ),
-                ),
-            ]
-        ),
-    ),
-    StructField("bold", BooleanType()),
-]
 
 PDF_PAGE_SCHEMA = StructType(
     [
@@ -108,37 +53,33 @@ PDF_PAGE_SCHEMA = StructType(
         StructField("height", DoubleType()),
         StructField("n_cells", IntegerType()),
         StructField("parse_score", DoubleType()),
-        StructField("blocks", ArrayType(StructType(_BLOCK_FIELDS))),
     ]
 )
 
 
-# ------------------------------------------------------- paged strategy
+# ------------------------------------------------------- page rows
 
 
 def parse_pdf_page_rows(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """One output row per page, blocks already assembled per page.
+    """One output row per page: its size, text-cell count and parse score.
 
-    Parse failures emit a single page_no=0 failure row per doc so the
-    downstream regroup still produces a status row for every url.
-    """
+    A parse failure emits a single page_no=0 failure row per doc, after
+    the rows of the pages parsed before it, so every url keeps a status
+    row."""
     failure = {
         "page_no": 0,
         "width": 0.0,
         "height": 0.0,
         "n_cells": 0,
         "parse_score": None,
-        "blocks": [],
     }
     per_doc = per_page(_page_rows, failure)
     return map_docs(df.select("url", content_col), per_doc, PDF_PAGE_SCHEMA)
 
 
 def _page_rows(url: str, content: bytes):
-    from dataclasses import asdict
-
     from docling_spark.kernels.pdf_kernel import iter_pdf_pages
-    from docling_spark.kernels.pdf_layout import page_blocks, page_score
+    from docling_spark.kernels.pdf_layout import page_score
 
     for page in iter_pdf_pages(content or b""):
         yield {
@@ -150,83 +91,7 @@ def _page_rows(url: str, content: bytes):
             "height": page.height,
             "n_cells": len(page.cells),
             "parse_score": page_score(page),
-            "blocks": [asdict(b) for b in page_blocks(page)],
         }
-
-
-ASSEMBLED_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("status", StringType()),
-        # the first failed page's error; null on success rows
-        StructField("error", StringType()),
-        # pages that parsed; null when none did
-        StructField("n_pages", IntegerType()),
-        StructField("md", StringType()),
-        StructField("txt", StringType()),
-        StructField("n_nodes", IntegerType()),
-        StructField("parse_score", DoubleType()),
-    ]
-)
-
-
-def assemble_from_pages(page_rows: DataFrame) -> DataFrame:
-    """The one wide dependency of the PDF path: regroup pages per url
-    (reference page-concat, standard_pdf_pipeline.py:183-201), then a
-    per-doc kernel does classification + reading order + serialize."""
-    grouped = page_rows.groupBy("url").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct("page_no", "height", "blocks", "parse_score", "status", "error")
-            )
-        ).alias("pages"),
-    )
-    return map_docs(grouped, _assembled_row, ASSEMBLED_SCHEMA)
-
-
-def _assemble(url: str, pages) -> dict:
-    from docling_spark.kernels.doc_model import TableCellData, TableDataIR
-    from docling_spark.kernels.markdown import to_markdown
-    from docling_spark.kernels.pdf_layout import Block, assemble_pages, doc_score
-    from docling_spark.kernels.textout import to_text
-
-    def table(t):
-        if t is None:
-            return None
-        # int(): Arrow hands a struct's int fields to pandas as floats
-        # when the struct column holds nulls (every non-table block)
-        cells = [TableCellData(**c) for c in t["cells"]]
-        return TableDataIR(int(t["num_rows"]), int(t["num_cols"]), cells)
-
-    # pages arrive sorted by page_no, so this is the first failed page
-    error = next((p["error"] for p in pages if p["status"] == "failure"), None)
-    parsed = [p for p in pages if p["status"] != "failure"]
-    if not parsed:
-        return {"status": "failure", "error": error, "n_pages": None, "md": None,
-                "txt": None, "n_nodes": 0, "parse_score": None}
-    blocks = [
-        Block(**{**b, "table": table(b["table"])}) for p in parsed for b in p["blocks"]
-    ]
-    doc = assemble_pages(blocks, {p["page_no"]: p["height"] for p in parsed}, name=url)
-    return {
-        "status": "success" if error is None else "partial_success",
-        "error": error,
-        "n_pages": len(parsed),
-        "md": to_markdown(doc),
-        "txt": to_text(doc),
-        "n_nodes": len(doc.nodes),
-        "parse_score": doc_score([p["parse_score"] for p in parsed]),
-    }
-
-
-def _assembled_row(url, pages) -> list[dict]:
-    # not guarded: page failures already arrive as rows, so an exception
-    # here is a bug in the assembly kernel and fails the task
-    return [{**_assemble(url, pages), "url": url}]
-
-
-def extract_pdfs_paged(df: DataFrame, content_col: str = "content") -> DataFrame:
-    return assemble_from_pages(parse_pdf_page_rows(df, content_col))
 
 
 # ------------------------------------------------------- P19 rollup

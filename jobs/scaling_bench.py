@@ -12,10 +12,15 @@ the level, the same config FORMULA at every level, so the ratio
 remains a pure cores-scaling measurement.
 
 Protocol (matches BASELINE.md): deterministic pages corpus cached to
-parquet (bench.py's ``pages_parquet``); per level: spawn session ->
-warm JVM codegen + all Python workers -> best of REPS timed runs of
-scan -> repartition(xxhash64(url)) -> mapInPandas extract -> status
-rollup. Efficiency = (docs_per_sec@C / docs_per_sec@N) / (C / N).
+parquet (bench.py's ``pages_parquet``); REPS rounds, each running every
+level once in turn (N, ..., C), so a drift in host load falls on all
+levels of a round alike. One level run: spawn a pinned session -> warm
+JVM codegen + all Python workers -> one timed run of scan ->
+repartition(xxhash64(url)) -> mapInPandas extract -> status rollup.
+Each round gives its own efficiency = (docs_per_sec@C /
+docs_per_sec@N) / (C / N); the record carries every round's value and
+their median, min and max, the spread being what tells whether the
+host resolved the ratio at all.
 
 Run: python jobs/scaling_bench.py [n_pages] (default 10000, sf0.1)
 """
@@ -24,6 +29,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 from pathlib import Path
@@ -32,7 +38,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from bench import SF_DIR, available_cpus, build_spark, pages_parquet, pin_affinity  # noqa: E402
 
-REPS = int(os.environ.get("SPARK_GRAFT_REPS", "2"))
+REPS = int(os.environ.get("SPARK_GRAFT_REPS", "5"))
 
 
 def measure(cpus: int, path: str, n_pages: int) -> float:
@@ -45,16 +51,11 @@ def measure(cpus: int, path: str, n_pages: int) -> float:
     convert_any(tiny, num_partitions=cpus * 2).groupBy("status").count().collect()
 
     pages = spark.read.parquet(path)
-    best = None
-    for _ in range(REPS):
-        t0 = time.perf_counter()
-        convert_any(pages, num_partitions=cpus * 2).groupBy(
-            "status"
-        ).count().collect()
-        dt = time.perf_counter() - t0
-        best = dt if best is None or dt < best else best
+    t0 = time.perf_counter()
+    convert_any(pages, num_partitions=cpus * 2).groupBy("status").count().collect()
+    dt = time.perf_counter() - t0
     spark.stop()
-    return n_pages / best
+    return n_pages / dt
 
 
 def _run_level(cpus: int, path: str, n_pages: int) -> float:
@@ -100,22 +101,31 @@ def main() -> None:
     path = pages_parquet(spark, SF_DIR, n_pages)
     spark.stop()
     out: dict = {"n_pages": n_pages, "sf": SF_DIR.rstrip("/").split("/")[-1]}
-    levels = {}
-    for cpus in sorted({max(1, top // 4), max(1, top // 2), top}):
-        levels[cpus] = round(_run_level(cpus, path, n_pages), 1)
-        print(f"# local[{cpus}] pinned to {cpus} cores: {levels[cpus]} docs/s",
-              file=sys.stderr, flush=True)
-    out["docs_per_sec"] = {str(k): v for k, v in levels.items()}
-    for n in levels:
-        if n < top:
-            out[f"efficiency_{n}_to_{top}"] = round(levels[top] * n / (top * levels[n]), 3)
-    n = min(levels)
+    levels = sorted({max(1, top // 4), max(1, top // 2), top})
+    rounds = []
+    for r in range(REPS):
+        dps = {}
+        for cpus in levels:
+            dps[cpus] = round(_run_level(cpus, path, n_pages), 1)
+            print(f"# round {r + 1}/{REPS}: local[{cpus}] pinned to {cpus} cores: "
+                  f"{dps[cpus]} docs/s", file=sys.stderr, flush=True)
+        rounds.append(dps)
+    out["docs_per_sec"] = {str(c): [d[c] for d in rounds] for c in levels}
+    for n in levels[:-1]:
+        effs = [round(d[top] * n / (top * d[n]), 3) for d in rounds]
+        out[f"efficiency_{n}_to_{top}"] = {
+            "rounds": effs,
+            "median": round(statistics.median(effs), 3),
+            "min": min(effs),
+            "max": max(effs),
+        }
+    n = levels[0]
     out["headline_pair"] = f"{n}->{top}"
-    out["efficiency"] = out.get(f"efficiency_{n}_to_{top}")
+    out["efficiency"] = out.get(f"efficiency_{n}_to_{top}", {}).get("median")
     out["protocol"] = (
         "per-level subprocess pinned via sched_setaffinity; "
-        f"best of {REPS} steady-state repeats per level; "
-        "the driver shares the cores of every level"
+        f"{REPS} rounds of interleaved levels, one timed run per level "
+        "after warm-up; the driver shares the cores of every level"
     )
     print(json.dumps(out))
 

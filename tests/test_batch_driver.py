@@ -267,51 +267,47 @@ def test_html_parser_built_only_by_the_router():
 
 def test_pdf_doc_assembled_at_once_only_by_the_router():
     """One doc-at-once path for page-shaped documents: within
-    operators/ only the router's convert._pages_doc calls build_doc (the
-    paged strategy assembles regrouped blocks through assemble_pages)."""
-    callers = [
-        (p.name, getattr(top, "name", "<module>"))
-        for p in sorted((PACKAGE / "operators").glob("*.py"))
-        for top in ast.parse(p.read_text()).body
-        for node in ast.walk(top)
-        if isinstance(node, ast.Call)
-        and (
-            getattr(node.func, "id", None) == "build_doc"
-            or getattr(node.func, "attr", None) == "build_doc"
-        )
-    ]
+    operators/ only the router's convert._pages_doc calls build_doc, and
+    no operator touches the per-page blocks (pdf_layout.Block,
+    page_blocks) that a second assembly path would regroup."""
+    callers, block_refs = [], []
+    for p in sorted((PACKAGE / "operators").glob("*.py")):
+        for top in ast.parse(p.read_text()).body:
+            for node in ast.walk(top):
+                name = getattr(node, "id", None) or getattr(node, "attr", None)
+                if isinstance(node, ast.alias):
+                    name = node.name
+                if name in ("Block", "page_blocks"):
+                    block_refs.append((p.name, name))
+                if isinstance(node, ast.Call) and (
+                    getattr(node.func, "id", None) == "build_doc"
+                    or getattr(node.func, "attr", None) == "build_doc"
+                ):
+                    callers.append((p.name, getattr(top, "name", "<module>")))
     assert callers == [("convert.py", "_pages_doc")]
+    assert block_refs == []
 
 
-def test_pdf_broken_on_a_later_page_keeps_earlier_pages(spark, monkeypatch):
+def test_pdf_broken_on_a_later_page_keeps_earlier_pages(monkeypatch):
     """A page kernel that raises on page 2 of 3 keeps page 1's row next
-    to the page_no=0 failure row, and the document assembles to
-    partial_success with page 1's text."""
+    to the page_no=0 failure row. The router's document row for such a
+    PDF is test_operator_pin's test_router_keeps_the_pages_before_a_broken_one."""
     from docling_spark.kernels import pdf_layout
     from docling_spark.operators import batch, extract_pdf
     from docling_spark.sources.pdfgen import build_pdf
 
     url = "https://pdf.example.com/broken-later.pdf"
     pdf = build_pdf([[("body", f"alpha page {n} text")] for n in (1, 2, 3)])
-    page_blocks = pdf_layout.page_blocks
+    page_score = pdf_layout.page_score
 
     def breaks_on_page_2(page):
         if page.page_no == 2:
             raise ValueError("bad page")
-        return page_blocks(page)
+        return page_score(page)
 
-    monkeypatch.setattr(pdf_layout, "page_blocks", breaks_on_page_2)
-    per_doc = batch.per_page(extract_pdf._page_rows, {"page_no": 0, "blocks": []})
+    monkeypatch.setattr(pdf_layout, "page_score", breaks_on_page_2)
+    per_doc = batch.per_page(extract_pdf._page_rows, {"page_no": 0})
     rows = per_doc(url, pdf)
     assert [(r["page_no"], r["status"]) for r in rows] == [(1, "success"), (0, "failure")]
     assert rows[1]["error"] == "ValueError: bad page"
-
-    names = extract_pdf.PDF_PAGE_SCHEMA.fieldNames()
-    page_rows = spark.createDataFrame(
-        [tuple(r.get(n) for n in names) for r in rows], extract_pdf.PDF_PAGE_SCHEMA
-    )
-    (doc,) = extract_pdf.assemble_from_pages(page_rows).collect()
-    assert (doc.status, doc.n_pages) == ("partial_success", 1)
-    assert doc.error == "ValueError: bad page"
-    assert "alpha page 1 text" in doc.md and "alpha page 1 text" in doc.txt
-    assert "page 2" not in doc.txt and "page 3" not in doc.txt
+    assert rows[0]["n_cells"] > 0 and rows[0]["parse_score"] is not None

@@ -78,9 +78,9 @@ def _pdfs() -> list[tuple[str, bytes]]:
 
 def _pdf_broken_later() -> tuple[str, bytes]:
     """A three-page PDF whose second page object carries a MediaBox that
-    is not numeric: every PDF path keeps page 1. The paged strategy and
-    the router end partial_success with the page error; the multimodal
-    export emits page 1's row and a page_no=0 failure row."""
+    is not numeric: every PDF operator keeps page 1. The router ends
+    partial_success with the page error; the page rows and the
+    multimodal export emit page 1's row and a page_no=0 failure row."""
     from docling_spark.sources.pdfgen import build_pdf
 
     pdf = build_pdf([[("title", f"Part {n}"), ("body", _text(n))] for n in (1, 2, 3)])
@@ -199,7 +199,9 @@ CASES = {
         i["mixed"], num_partitions=4, want_doctags=True, want_json=True
     ),
     "parse_pdf_page_rows": lambda s, i, t: extract_pdf.parse_pdf_page_rows(i["pdf"]),
-    "extract_pdfs_paged": lambda s, i, t: extract_pdf.extract_pdfs_paged(i["pdf"]),
+    "convert_any_pdf": lambda s, i, t: convert.convert_any(
+        i["pdf"], content_col="content", num_partitions=4
+    ),
     "multimodal_pages": lambda s, i, t: extract_pdf.multimodal_pages(i["pdf"], num_partitions=4),
     "multimodal_pages_image": lambda s, i, t: extract_pdf.multimodal_pages(
         i["pdf"], num_partitions=4, image_scale=0.5
@@ -223,8 +225,8 @@ CASES = {
 
 
 def test_router_keeps_the_pages_before_a_broken_one():
-    """The router's pdf route follows the paged rule: the pages parsed
-    before the broken one make the document, which ends
+    """The router's pdf route keeps the pages parsed before the broken
+    one (``batch.until_error``): they make the document, which ends
     partial_success with the first error; n_pages and parse_score count
     only the parsed pages."""
     url, pdf = _pdf_broken_later()

@@ -173,22 +173,6 @@ def test_extract_pdf_docs_spark(spark, pdf_corpus):
     assert row.parse_score == 1.0
 
 
-def test_paged_strategy_matches_doc_at_once(spark, pdf_corpus):
-    """The paged strategy (page explode + regroup shuffle) must produce
-    the same markdown, page count and doc score as the router's
-    doc-at-once route for every document."""
-    from docling_spark.operators.convert import convert_any
-    from docling_spark.operators.extract_pdf import extract_pdfs_paged
-
-    def rows(df):
-        return {r.url: (r.md, r.n_pages, r.parse_score) for r in df.collect()}
-
-    a = rows(convert_any(pdf_corpus, content_col="content"))
-    b = rows(extract_pdfs_paged(pdf_corpus))
-    assert a == b
-    assert len(a) == 40
-
-
 def test_confidence_rollup(spark, pdf_corpus):
     from docling_spark.operators.extract_pdf import (
         confidence_rollup,
@@ -664,78 +648,6 @@ def test_real_fixture_furniture_and_pictures():
     assert sorted(p.caption_id for p in pics) == sorted(c.node_id for c in caps)
 
 
-@needs_reference
-def test_paged_strategy_carries_tables(spark):
-    """The paged strategy must not drop reconstructed tables: the pg9
-    fixture pushed through the page-explode + regroup shuffle produces
-    the same markdown (table grid included) as the router's doc-at-once
-    route."""
-    from pathlib import Path
-
-    from docling_spark.operators.convert import convert_any
-    from docling_spark.operators.extract_pdf import extract_pdfs_paged
-
-    pdf = Path("/root/reference/tests/data/pdf/2305.03393v1-pg9.pdf").read_bytes()
-    df = spark.createDataFrame(
-        [("https://x/pg9.pdf", bytearray(pdf))], "url string, content binary"
-    )
-    a = convert_any(df, content_col="content", num_partitions=2).collect()[0]
-    b = extract_pdfs_paged(df).collect()[0]
-    assert "| OTSL" in a.md and a.md == b.md
-
-
-def test_paged_shuffle_carries_every_block_field(spark, monkeypatch):
-    """The paged strategy's page rows carry each Block field for field
-    through Arrow and the regroup shuffle: a table with a spanning
-    header cell and a bold text block come out of assemble_from_pages
-    exactly as the in-process assembly renders them."""
-    import copy
-    from dataclasses import asdict
-
-    from docling_spark.kernels import pdf_layout
-    from docling_spark.kernels.doc_model import TableCellData, TableDataIR
-    from docling_spark.kernels.markdown import to_markdown
-    from docling_spark.operators import extract_pdf
-    from docling_spark.operators.batch import map_docs
-    from docling_spark.sources.pdfgen import build_pdf
-
-    def fake_page_blocks(page):
-        n = page.page_no
-        table = TableDataIR(
-            2,
-            2,
-            [
-                TableCellData(f"Span {n}", col_span=2, end_col=2, column_header=True),
-                TableCellData(f"a{n}", start_row=1, end_row=2),
-                TableCellData(f"b{n}", start_row=1, end_row=2, start_col=1, end_col=2),
-            ],
-        )
-        return [
-            pdf_layout.Block("text", f"Bold lead {n}", 0, n, 72, 300, 300, 312, 10.0,
-                             parse_score=0.75, bold=True),
-            pdf_layout.Block("text", f"page {n} {TEXT}", 0, n, 72, 320, 540, 380, 10.0),
-            pdf_layout.Block("table", "", 0, n, 72, 400, 540, 460, 10.0, table=table),
-        ]
-
-    monkeypatch.setattr(pdf_layout, "page_blocks", fake_page_blocks)
-    url = "https://pdf.example.com/tables.pdf"
-    pdf = build_pdf([[("body", "one")], [("body", "two")]])
-    rows = list(extract_pdf._page_rows(url, pdf))
-    blocks, heights = pdf_layout.doc_blocks(parse_pdf(pdf))
-    expected = to_markdown(pdf_layout.assemble_pages(copy.deepcopy(blocks), heights, url))
-
-    urls = spark.createDataFrame([(url,)], "url string")
-    page_rows = map_docs(urls, lambda u: rows, extract_pdf.PDF_PAGE_SCHEMA)
-    assert [f.name for f in extract_pdf._BLOCK_FIELDS] == list(asdict(blocks[0]))
-    shipped = [b.asDict(recursive=True) for r in page_rows.collect() for b in r.blocks]
-    assert shipped == [asdict(b) for b in blocks]
-
-    (doc,) = extract_pdf.assemble_from_pages(page_rows).collect()
-    assert doc.status == "success" and doc.md == expected
-    for text in ("Span 1", "a1", "b2", "## Bold lead 1"):
-        assert text in doc.md
-
-
 def test_footnote_rule_constructed():
     from docling_spark.kernels.markdown import to_markdown
     from docling_spark.kernels.pdf_layout import Block, assemble_doc, mark_page_furniture
@@ -987,25 +899,24 @@ def _two_page_continuation_pdf() -> bytes:
 
 
 def test_cross_page_merge_identical_in_both_strategies(spark):
-    """A paragraph split by a page break merges in the doc-at-once
-    path AND in the Spark paged path (r4 parity fix) — the synthetic
-    corpus has no continuation candidates, so this pins it directly."""
+    """A paragraph split by a page break merges in process (convert_one)
+    AND through the Spark router (convert_any) — the synthetic corpus
+    has no continuation candidates, so this pins it directly."""
     from pyspark.sql import Row
 
-    from docling_spark.operators.convert import convert_one
-    from docling_spark.operators.extract_pdf import extract_pdfs_paged
+    from docling_spark.operators.convert import convert_any, convert_one
 
     pdf = _two_page_continuation_pdf()
     merged = ("The framework keeps its promise across the "
               "page boundary without stopping at all.")
 
-    r = convert_one("http://x/cont.pdf", pdf)          # doc-at-once
+    r = convert_one("http://x/cont.pdf", pdf)          # in process
     assert r["status"] == "success" and merged in r["md"]
 
     df = spark.createDataFrame(
         [Row(url="http://x/cont.pdf", content=pdf)]
     )
-    rows = extract_pdfs_paged(df).collect()  # paged
+    rows = convert_any(df, content_col="content", num_partitions=2).collect()
     assert rows[0].status == "success"
     assert merged in rows[0].md
     assert rows[0].md.count("framework keeps") == 1
