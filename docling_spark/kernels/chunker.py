@@ -12,14 +12,12 @@ in /root/reference/docs/concepts/chunking.md:62-90):
   successive undersized peers that share the same heading path.
 
 Tokens here = whitespace tokens (the reference defaults to an HF
-tokenizer, which is not available in this sandbox; the count function
-is injectable).
+tokenizer, which is not installed here).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
 
 from .doc_model import (
     BODY,
@@ -125,19 +123,16 @@ def _ws_tokens(text: str) -> int:
     return len(text.split())
 
 
-def hybrid_chunks(
-    doc: Doc,
-    max_tokens: int = 128,
-    count_tokens: Callable[[str], int] = _ws_tokens,
-) -> list[Chunk]:
+def hybrid_chunks(doc: Doc, max_tokens: int = 128) -> list[Chunk]:
     """Hierarchical pass, then split-oversized + merge-undersized-peers
-    (chunking.md:75-86)."""
+    (chunking.md:75-86). Tokens are whitespace-separated words, both in
+    the budgets and in the split windows."""
     base = hierarchical_chunks(doc)
     out: list[Chunk] = []
     for ch in base:
-        ctx = count_tokens(" ".join(ch.headings))
+        ctx = _ws_tokens(" ".join(ch.headings))
         budget = max(max_tokens - ctx, 8)
-        if count_tokens(ch.text) <= budget:
+        if _ws_tokens(ch.text) <= budget:
             out.append(ch)
             continue
         # split on whitespace token windows (doc-structure preserving
@@ -158,8 +153,8 @@ def hybrid_chunks(
             merged
             and merged[-1].headings == ch.headings
             and merged[-1].kind == ch.kind == "text"
-            and count_tokens(merged[-1].text) + count_tokens(ch.text)
-            + count_tokens(" ".join(ch.headings))
+            and _ws_tokens(merged[-1].text) + _ws_tokens(ch.text)
+            + _ws_tokens(" ".join(ch.headings))
             <= max_tokens
         ):
             prev = merged[-1]

@@ -169,8 +169,8 @@ def image_to_pdf_pages(payload: bytes) -> list[PdfPage]:
     return pages
 
 
-def png_dpi(data: bytes, default: int = 72) -> int:
-    """DPI from the PNG pHYs chunk (pixels-per-metre), if present."""
+def png_dpi(data: bytes) -> int:
+    """DPI from the PNG pHYs chunk (pixels-per-metre), if present, else 72."""
     pos = 8
     while pos + 8 <= len(data):
         (length,) = struct.unpack(">I", data[pos : pos + 4])
@@ -179,11 +179,11 @@ def png_dpi(data: bytes, default: int = 72) -> int:
             ppm_x, _, unit = struct.unpack(">IIB", data[pos + 8 : pos + 17])
             if unit == 1 and ppm_x:
                 return round(ppm_x * 0.0254)
-            return default
+            return 72
         if ctype == b"IDAT":
             break
         pos += 12 + length
-    return default
+    return 72
 
 
 def image_ref_payload(path_or_ext: str, data: bytes) -> dict | None:

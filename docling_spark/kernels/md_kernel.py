@@ -185,14 +185,6 @@ def parse_markdown(data: bytes, name: str = "doc") -> Doc:
     # (indent, group_node, is_ordered, marker_char) for nested lists
     list_stack: list[list] = []
 
-    def close_lists(indent: int = -1) -> None:
-        while list_stack and list_stack[-1][0] >= indent >= 0 or (
-            indent < 0 and list_stack
-        ):
-            if indent >= 0 and list_stack[-1][0] < indent:
-                break
-            list_stack.pop()
-
     saw_html_block = False
     while i < n:
         line = lines[i]
@@ -201,7 +193,7 @@ def parse_markdown(data: bytes, name: str = "doc") -> Doc:
         fence = _FENCE_RE.match(line)
         if fence:
             flush_para()
-            close_lists()
+            list_stack.clear()
             marker = fence.group(1)[:3]
             body: list[str] = []
             i += 1
@@ -223,7 +215,7 @@ def parse_markdown(data: bytes, name: str = "doc") -> Doc:
                 j += 1
             nxt = lines[j] if j < n else ""
             if not (_BULLET_RE.match(nxt) or _ORDERED_RE.match(nxt)):
-                close_lists()
+                list_stack.clear()
             i += 1
             continue
 
@@ -250,7 +242,7 @@ def parse_markdown(data: bytes, name: str = "doc") -> Doc:
 
         if _HTML_BLOCK_RE.match(line) and not _TABLE_SEP_RE.match(line):
             flush_para()
-            close_lists()
+            list_stack.clear()
             chunk = [line]
             i += 1
             if "<!--" in line and "-->" not in line:
@@ -275,7 +267,7 @@ def parse_markdown(data: bytes, name: str = "doc") -> Doc:
         m = _HEADING_RE.match(line)
         if m:
             flush_para()
-            close_lists()
+            list_stack.clear()
             if m.group(1) is None or not m.group(2):
                 i += 1  # empty heading: dropped (blocks.md golden)
                 continue
@@ -371,7 +363,7 @@ def parse_markdown(data: bytes, name: str = "doc") -> Doc:
 
         if "|" in line and i + 1 < n and _TABLE_SEP_RE.match(lines[i + 1]):
             flush_para()
-            close_lists()
+            list_stack.clear()
             header = _split_table_row(line)
             rows = [header]
             i += 2

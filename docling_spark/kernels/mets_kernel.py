@@ -216,7 +216,7 @@ class MetsGbsDoc:
 _WS_RE = re.compile(r"\s+")
 
 
-def parse_mets_gbs(data: bytes, max_pages: int | None = None):
+def parse_mets_gbs(data: bytes):
     """bytes -> list of pdf_kernel.PdfPage, feeding the shared PDF
     layout/assembly path (hOCR lines become BOTTOMLEFT text cells; cell
     size approximated by line bbox height, like a rasterized font)."""
@@ -226,8 +226,6 @@ def parse_mets_gbs(data: bytes, max_pages: int | None = None):
     pages: list[PdfPage] = []
     try:
         for page_no in sorted(doc.page_map):
-            if max_pages is not None and len(pages) >= max_pages:
-                break
             mp = doc.load_page(page_no)
             page = PdfPage(page_no + 1, mp.width, mp.height)
             for c in mp.line_cells:

@@ -1140,15 +1140,13 @@ def interpret_text(
     return page
 
 
-def iter_pdf_pages(data: bytes, max_pages: int | None = None) -> Iterator[PdfPage]:
+def iter_pdf_pages(data: bytes) -> Iterator[PdfPage]:
     """bytes -> positioned text cells, one page at a time, so a page
     that fails to decode leaves the pages before it usable. Raises
     PdfError on undecodable input (caller converts to a failure row)."""
     doc = PdfDocument(data)
     n = 0
     for i, pd in enumerate(doc.page_dicts()):
-        if max_pages is not None and i >= max_pages:
-            break
         mb = [float(v) for v in pd["MediaBox"][:4]]
         w, h = mb[2] - mb[0], mb[3] - mb[1]
         content = doc.page_content(pd)
@@ -1163,10 +1161,10 @@ def iter_pdf_pages(data: bytes, max_pages: int | None = None) -> Iterator[PdfPag
         raise PdfError("no pages")
 
 
-def parse_pdf(data: bytes, max_pages: int | None = None) -> list[PdfPage]:
+def parse_pdf(data: bytes) -> list[PdfPage]:
     """Every page of ``iter_pdf_pages``; any page error fails the whole
     document."""
-    return list(iter_pdf_pages(data, max_pages))
+    return list(iter_pdf_pages(data))
 
 
 # ----------------------------------------------------- P10: OCR decision

@@ -36,10 +36,16 @@ from .pdf_kernel import PdfPage, TextCell
 
 # ------------------------------------------------------------- cell merge
 
+# Row grouping and line merge (pypdfium2_backend.py:160-196): a cell
+# joins a row when its top and its bottom each lie within
+# _ROW_HEIGHT_FACTOR x the row's height of the row's, and joins the line
+# to its left when the gap is at most _GAP_HEIGHT_FACTOR x the two
+# cells' mean height.
+_ROW_HEIGHT_FACTOR = 0.5
+_GAP_HEIGHT_FACTOR = 1.0
 
-def _group_rows(
-    cells: list[TextCell], vertical_threshold_factor: float = 0.5
-) -> list[list[TextCell]]:
+
+def _group_rows(cells: list[TextCell]) -> list[list[TextCell]]:
     """Group TOPLEFT-origin cells into visual rows; thresholds follow
     pypdfium2_backend.py:160-196 (running row bbox, 0.5x height)."""
     rows: list[list[TextCell]] = []
@@ -47,7 +53,7 @@ def _group_rows(
     row_top, row_bot = cells[0].t, cells[0].b  # TL origin: t < b
     row_h = abs(row_bot - row_top)
     for cell in cells[1:]:
-        thr = row_h * vertical_threshold_factor
+        thr = row_h * _ROW_HEIGHT_FACTOR
         if abs(cell.t - row_top) <= thr and abs(cell.b - row_bot) <= thr:
             cur.append(cell)
             row_top = min(row_top, cell.t)
@@ -216,23 +222,19 @@ def _dedup_double_draws(cells: list[TextCell]) -> list[TextCell]:
     return [c for i, c in enumerate(cells) if i not in dropped]
 
 
-def merge_horizontal_cells(
-    cells: list[TextCell],
-    horizontal_threshold_factor: float = 1.0,
-    vertical_threshold_factor: float = 0.5,
-) -> list[TextCell]:
+def merge_horizontal_cells(cells: list[TextCell]) -> list[TextCell]:
     """TOPLEFT-origin cells -> row-merged line cells."""
     if not cells:
         return []
     cells = _dedup_double_draws(cells)
     merged: list[TextCell] = []
-    for row in _group_rows(cells, vertical_threshold_factor):
+    for row in _group_rows(cells):
         row = sorted(row, key=lambda c: c.l)
         group = [row[0]]
         for cell in row[1:]:
             prev = group[-1]
             avg_h = ((prev.b - prev.t) + (cell.b - cell.t)) / 2
-            if cell.l - prev.r <= avg_h * horizontal_threshold_factor:
+            if cell.l - prev.r <= avg_h * _GAP_HEIGHT_FACTOR:
                 group.append(cell)
             else:
                 merged.append(_merge_group(group))
@@ -1373,12 +1375,18 @@ def _intersection(a: Block, b: Block) -> float:
     return w * h if w > 0 and h > 0 else 0.0
 
 
-def blocks_overlap(
-    a: Block,
-    b: Block,
-    overlap_threshold: float = 0.8,
-    containment_threshold: float = 0.8,
-) -> bool:
+# The reference's 'regular' OVERLAP_PARAMS (layout_postprocessor.py:
+# 86-106 and 488-543): two blocks overlap when their IoU, or the share
+# of either one inside the other, exceeds the first two. A block cannot
+# win its group while another member is more than _CONF_MARGIN more
+# confident and the block is at most _AREA_RATIO times its area.
+_IOU_THRESHOLD = 0.8
+_CONTAINMENT_THRESHOLD = 0.8
+_AREA_RATIO = 1.3
+_CONF_MARGIN = 0.05
+
+
+def blocks_overlap(a: Block, b: Block) -> bool:
     """IoU above threshold OR either box mostly contained in the other
     (layout_postprocessor.py:86-106 check_overlap)."""
     area_a, area_b = _block_area(a), _block_area(b)
@@ -1387,27 +1395,20 @@ def blocks_overlap(
     inter = _intersection(a, b)
     iou = inter / (area_a + area_b - inter)
     return (
-        iou > overlap_threshold
-        or inter / area_a > containment_threshold
-        or inter / area_b > containment_threshold
+        iou > _IOU_THRESHOLD
+        or inter / area_a > _CONTAINMENT_THRESHOLD
+        or inter / area_b > _CONTAINMENT_THRESHOLD
     )
 
 
-def resolve_overlapping_blocks(
-    blocks: list[Block],
-    overlap_threshold: float = 0.8,
-    containment_threshold: float = 0.8,
-    area_threshold: float = 1.3,
-    conf_threshold: float = 0.05,
-) -> list[Block]:
+def resolve_overlapping_blocks(blocks: list[Block]) -> list[Block]:
     """Merge duplicate/contained blocks: candidate pairs from a sorted
     x-interval sweep, grouping via UnionFind, one survivor per group —
     the larger block unless its confidence (parse_score) trails by more
-    than ``conf_threshold`` (layout_postprocessor.py:488-543 +
+    than ``_CONF_MARGIN`` (layout_postprocessor.py:488-543 +
     _select_best_cluster_from_group, 'regular' OVERLAP_PARAMS). The
     survivor absorbs the losers' text in reading order and grows to the
-    union bbox. Defaults match the reference's 'regular' class; a
-    future layout model plugs its clusters straight in."""
+    union bbox."""
     if len(blocks) < 2:
         return list(blocks)
 
@@ -1420,9 +1421,7 @@ def resolve_overlapping_blocks(
         bi = blocks[i]
         active = [j for j in active if blocks[j].r > bi.l]
         for j in active:
-            if blocks[j].page_no == bi.page_no and blocks_overlap(
-                bi, blocks[j], overlap_threshold, containment_threshold
-            ):
+            if blocks[j].page_no == bi.page_no and blocks_overlap(bi, blocks[j]):
                 uf.union(i, j)
         active.append(i)
 
@@ -1442,14 +1441,14 @@ def resolve_overlapping_blocks(
                 bo = blocks[other]
                 area_ratio = _block_area(bc) / max(_block_area(bo), 1e-9)
                 conf_diff = bo.parse_score - bc.parse_score
-                if area_ratio <= area_threshold and conf_diff > conf_threshold:
+                if area_ratio <= _AREA_RATIO and conf_diff > _CONF_MARGIN:
                     ok = False
                     break
             if ok and (
                 best is None
                 or (
                     _block_area(bc) > _block_area(blocks[best])
-                    and blocks[best].parse_score - bc.parse_score <= conf_threshold
+                    and blocks[best].parse_score - bc.parse_score <= _CONF_MARGIN
                 )
             ):
                 best = cand

@@ -103,20 +103,18 @@ def _failure_row(failure: dict, e: BaseException, payload) -> dict:
     }
 
 
-def guarded(kernel, failure: dict, url, payload):
-    """``kernel(url, payload)`` for one document; never raises.
-
-    A dict result gets ``t_sec``; a list result (one row per page) is
-    returned as is. On an exception the result is the operator's
-    ``failure`` template with status, error, bytes_in and t_sec set."""
+def guarded(kernel, failure: dict, url, payload) -> dict:
+    """``kernel(url, payload)`` for one document, a dict row; never
+    raises. The row gets ``t_sec``. On an exception the row is the
+    operator's ``failure`` template with status, error, bytes_in and
+    t_sec set."""
     raise_recursion_limit()
     t0 = time.perf_counter()
     try:
         out = kernel(url, payload)
     except Exception as e:  # noqa: BLE001 — errors become data
         out = _failure_row(failure, e, payload)
-    if isinstance(out, dict):
-        out["t_sec"] = time.perf_counter() - t0
+    out["t_sec"] = time.perf_counter() - t0
     return out
 
 

@@ -40,12 +40,11 @@ _NO_CHUNK = dict.fromkeys(("chunk_id", "kind", "headings", "text", "context_text
 
 def chunk_pages(
     df: DataFrame,
-    content_col: str = "html",
     mode: str = "hybrid",
     max_tokens: int = 128,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """(url, <payload>) -> chunk rows; mode in {'hierarchical', 'hybrid'}.
+    """(url, html) -> chunk rows; mode in {'hierarchical', 'hybrid'}.
 
     Each payload goes through the format router
     (operators/convert.route_to_doc), so one chunking job covers a mixed
@@ -87,7 +86,7 @@ def chunk_pages(
             for i, ch in enumerate(chunks)
         ]
 
-    sel = url_hash(df, ["url", content_col], num_partitions)
+    sel = url_hash(df, ["url", "html"], num_partitions)
     return map_docs(sel, per_page(kernel, _NO_CHUNK), CHUNK_SCHEMA)
 
 

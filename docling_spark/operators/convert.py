@@ -47,6 +47,8 @@ from docling_spark.operators.batch import (
 )
 from docling_spark.operators.formats import LIMIT_BYTES, limits_gate, sniff_format
 
+BIG_DOC_BYTES = 2 << 20  # default of convert_any and --big-doc-bytes
+
 CONVERT_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -315,7 +317,7 @@ def convert_any(
     num_partitions: int | None = None,
     want_doctags: bool = False,
     want_json: bool = False,
-    big_doc_bytes: int = 2 << 20,
+    big_doc_bytes: int = BIG_DOC_BYTES,
     split_big_docs: bool = False,
     limit_bytes: int = LIMIT_BYTES,
 ) -> DataFrame:

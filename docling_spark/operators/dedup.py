@@ -26,20 +26,20 @@ from pyspark.sql import DataFrame, Window, functions as F
 from .similarity import _with_norm, cosine, hyperplane_lsh_bands
 
 
-def exact_dup_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dup_groups(df: DataFrame) -> DataFrame:
     """Exact duplicate clusters by md5(text)."""
     return (
-        df.groupBy(F.md5(F.col(text_col)).alias("fp_md5"))
+        df.groupBy(F.md5(F.col("text")).alias("fp_md5"))
         .agg(F.count("*").alias("n_dups"), F.min("doc_id").alias("keeper_doc_id"))
         .filter(F.col("n_dups") > 1)
         .orderBy("fp_md5")
     )
 
 
-def _tokens(df: DataFrame, text_col: str) -> DataFrame:
+def _tokens(df: DataFrame) -> DataFrame:
     return df.select(
         "doc_id",
-        F.explode(F.array_distinct(F.split(F.trim(F.col(text_col)), "\\s+"))).alias(
+        F.explode(F.array_distinct(F.split(F.trim(F.col("text")), "\\s+"))).alias(
             "token"
         ),
     ).filter(F.col("token") != "")
@@ -47,7 +47,6 @@ def _tokens(df: DataFrame, text_col: str) -> DataFrame:
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
     threshold: float = 0.8,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
@@ -57,7 +56,7 @@ def ngram_jaccard_pairs(
     (stopword-like hub tokens) — the skew guard that keeps the token
     shuffle balanced at corpus scale.
     """
-    toks = _tokens(df, text_col)
+    toks = _tokens(df)
     if max_doc_freq is not None:
         rare = (
             toks.groupBy("token")
@@ -100,16 +99,16 @@ _N_HASHES = 64
 _N_BANDS = 16  # 16 bands x 4 rows: catches jaccard >~ 0.7 w.h.p.
 
 
-def _shingles(text_col: str, k: int = 3):
-    """k-token shingles as an array column (JVM-side, no UDF)."""
-    words = f"split(trim({text_col}), '\\\\s+')"
+def _shingles():
+    """3-token shingles as an array column (JVM-side, no UDF)."""
+    words = "split(trim(text), '\\\\s+')"
     return F.expr(
-        f"transform(sequence(0, greatest(size({words}) - {k}, 0)), "
-        f"i -> concat_ws(' ', slice({words}, i + 1, {k})))"
+        f"transform(sequence(0, greatest(size({words}) - 3, 0)), "
+        f"i -> concat_ws(' ', slice({words}, i + 1, 3)))"
     )
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
+def minhash_signatures(df: DataFrame) -> DataFrame:
     """64 minhashes per doc via explode + codegen'd groupBy.
 
     Each shingle is string-hashed ONCE (xxhash64); the 64-member hash
@@ -121,7 +120,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", k: int = 3) -> Dat
     higher-order-function (aggregate over array) formulation at sf0.1.
     """
     sh = (
-        df.select("doc_id", _shingles(text_col, k).alias("sh"))
+        df.select("doc_id", _shingles().alias("sh"))
         .filter(F.size("sh") > 0)
     )
     ex = sh.select("doc_id", F.explode("sh").alias("s")).withColumn(
@@ -141,9 +140,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", k: int = 3) -> Dat
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame, text_col: str = "text", threshold: float = 0.7, k: int = 3
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.7) -> DataFrame:
     """Candidate pairs from LSH banding, verified by signature overlap.
 
     Band bucket join: explode docs to (band_id, band_hash) — equal
@@ -155,7 +152,7 @@ def minhash_lsh_pairs(
     runs once, not three times (at cluster scale: materialize the
     signature table first, then join against it).
     """
-    sigs = minhash_signatures(df, text_col, k).persist()
+    sigs = minhash_signatures(df).persist()
     rows_per_band = _N_HASHES // _N_BANDS
     # persist the band relation: the self-join reads it twice, and the
     # materialized size stats let AQE choose a broadcast/shuffle-hash
@@ -200,10 +197,10 @@ def minhash_lsh_pairs(
 # ------------------------------------------------------------------ SimHash
 
 
-def simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """64-bit SimHash over unique tokens: bit i of the hash is 1 iff
     more token-hashes have bit i set than not. Pure JVM expressions."""
-    toks = f"array_distinct(split(trim({text_col}), '\\\\s+'))"
+    toks = "array_distinct(split(trim(text), '\\\\s+'))"
     hashes = f"transform({toks}, t -> xxhash64(t))"
     # for each bit: sum(+1/-1) over tokens, sign -> bit
     bit_exprs = (
@@ -253,11 +250,11 @@ def _simhash_table_keys() -> list[str]:
     return keys
 
 
-def simhash_near_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash_near_pairs(df: DataFrame) -> DataFrame:
     """Near-dup pairs at Hamming distance <= 3: candidates from 10
     Manku block-pair tables (wide ~26-bit keys, bounded buckets at
     corpus scale), then exact Hamming verify on the equi-join."""
-    sh = simhash(df, text_col)
+    sh = simhash(df)
     keys = _simhash_table_keys()
     bands = sh.select(
         "doc_id",
@@ -284,8 +281,13 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 # -------------------------------------------------- embedding near-dup
 
+# 4 bands of 8 bits: a pair at cosine >= 0.99 is a candidate with
+# probability > 0.97 (banding analysis in similarity.hyperplane_lsh_bands).
+_EMB_N_BANDS = 4
+_EMB_BITS_PER_BAND = 8
 
-def embedding_near_dups(df: DataFrame, threshold: float = 0.95) -> DataFrame:
+
+def embedding_near_dups(df: DataFrame, threshold: float) -> DataFrame:
     """Cosine near-duplicates over an embedding column.
 
     Brute-force all-pairs — correct baseline, O(n^2): the oracle twin
@@ -309,13 +311,7 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.95) -> DataFrame:
     )
 
 
-def embedding_near_dups_lsh(
-    df: DataFrame,
-    threshold: float = 0.99,
-    n_bands: int = 4,
-    bits_per_band: int = 8,
-    seed: int = 42,
-) -> DataFrame:
+def embedding_near_dups_lsh(df: DataFrame, threshold: float = 0.99) -> DataFrame:
     """Cosine near-duplicates via banded hyperplane LSH — the 100 TB
     plan shape.
 
@@ -330,7 +326,7 @@ def embedding_near_dups_lsh(
     second join against the corpus.
     """
     bands = hyperplane_lsh_bands(
-        df, n_bands=n_bands, bits_per_band=bits_per_band, seed=seed
+        df, n_bands=_EMB_N_BANDS, bits_per_band=_EMB_BITS_PER_BAND
     )
     a = bands.alias("a")
     b = bands.alias("b")

@@ -60,7 +60,7 @@ PDF_PAGE_SCHEMA = StructType(
 # ------------------------------------------------------- page rows
 
 
-def parse_pdf_page_rows(df: DataFrame, content_col: str = "content") -> DataFrame:
+def parse_pdf_page_rows(df: DataFrame) -> DataFrame:
     """One output row per page: its size, text-cell count and parse score.
 
     A parse failure emits a single page_no=0 failure row per doc, after
@@ -74,7 +74,7 @@ def parse_pdf_page_rows(df: DataFrame, content_col: str = "content") -> DataFram
         "parse_score": None,
     }
     per_doc = per_page(_page_rows, failure)
-    return map_docs(df.select("url", content_col), per_doc, PDF_PAGE_SCHEMA)
+    return map_docs(df.select("url", "content"), per_doc, PDF_PAGE_SCHEMA)
 
 
 def _page_rows(url: str, content: bytes):
@@ -272,7 +272,6 @@ def _multimodal_rows_for_doc(url: str, content: bytes, image_scale: float | None
 
 def multimodal_pages(
     df: DataFrame,
-    content_col: str = "content",
     num_partitions: int | None = None,
     image_scale: float | None = None,
 ) -> DataFrame:
@@ -306,5 +305,5 @@ def multimodal_pages(
     def kernel(url, content):
         return _multimodal_rows_for_doc(url, content, image_scale=image_scale)
 
-    sel = url_hash(df, ["url", content_col], num_partitions)
+    sel = url_hash(df, ["url", "content"], num_partitions)
     return map_docs(sel, per_page(kernel, failure), schema)

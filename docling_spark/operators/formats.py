@@ -145,7 +145,7 @@ def office_subformat(payload: bytes) -> str:
     return "zip"
 
 
-def with_format(df: DataFrame, binary_col: str = "html") -> DataFrame:
+def with_format(df: DataFrame) -> DataFrame:
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(StringType())
@@ -156,14 +156,14 @@ def with_format(df: DataFrame, binary_col: str = "html") -> DataFrame:
     # Truncate to the 8 KB sniff window JVM-side (F.substring on binary)
     # so only the prefix crosses Arrow into Python — on multi-MB PDFs
     # this is a multiple-x saving on the serialization for this stage.
-    return df.withColumn("fmt", detect(F.substring(F.col(binary_col), 1, 8192)))
+    return df.withColumn("fmt", detect(F.substring(F.col("html"), 1, 8192)))
 
 
-def format_rollup(df: DataFrame, binary_col: str = "html") -> DataFrame:
+def format_rollup(df: DataFrame) -> DataFrame:
     return (
-        with_format(df, binary_col)
+        with_format(df)
         .groupBy("fmt")
-        .agg(F.count("*").alias("n_docs"), F.sum(F.length(binary_col)).alias("total_bytes"))
+        .agg(F.count("*").alias("n_docs"), F.sum(F.length("html")).alias("total_bytes"))
         .orderBy("fmt")
     )
 

@@ -315,7 +315,7 @@ def parse_wav_header(payload: bytes) -> dict | None:
     }
 
 
-def extract_audio_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def extract_audio_metadata(df: DataFrame) -> DataFrame:
     """(media_id, payload) -> typed audio metadata rows (WAV chunks or
     MPEG frame headers); other formats yield format='unknown' rows,
     never errors."""
@@ -335,7 +335,7 @@ def extract_audio_metadata(df: DataFrame, payload_col: str = "payload") -> DataF
             }
         ]
 
-    return map_docs(df.select("media_id", payload_col), per_doc, AUDIO_META_SCHEMA)
+    return map_docs(df.select("media_id", "payload"), per_doc, AUDIO_META_SCHEMA)
 
 
 _MP3_BITRATES_V1L3 = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320]

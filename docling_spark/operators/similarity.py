@@ -4,8 +4,8 @@
   (small) query set against the corpus: no shuffle of the corpus at
   all, scales linearly with corpus size;
 * random-hyperplane LSH buckets — the 100 TB path: corpus hashed to
-  b-bit signatures once, queries probe only their own bucket
-  (+ optional multi-probe), turning top-k into a bucket-local problem.
+  b-bit signatures once, queries probe their own bucket and the
+  buckets one bit flip away, turning top-k into a bucket-local problem.
 
 All vector math is JVM-side (``zip_with``/``aggregate``) in float64.
 """
@@ -13,6 +13,10 @@ All vector math is JVM-side (``zip_with``/``aggregate``) in float64.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+# Seeds the pseudo-hyperplanes: every band value, and so every LSH
+# candidate set, is a function of it.
+_LSH_SEED = 42
 
 
 def cosine(a: str, na: str, b: str, nb: str) -> Column:
@@ -48,6 +52,12 @@ def brute_force_topk(
         .withColumn("cos", cosine("v", "norm", "qv", "qnorm"))
         .select("query_id", "vec_id", "cos")
     )
+    return _top_k(scored, k)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best (query_id, vec_id, cos) rows per query: ranked by
+    cosine, ties to the lower vec_id, cosine rounded to 4 places."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -63,18 +73,18 @@ def brute_force_topk(
 
 
 def hyperplane_lsh_bands(
-    df: DataFrame, n_bands: int = 4, bits_per_band: int = 8, seed: int = 42
+    df: DataFrame, n_bands: int, bits_per_band: int
 ) -> DataFrame:
     """Banded random-hyperplane LSH: one row per (vector, band).
 
     OR-amplification across ``n_bands`` independent ``bits_per_band``-bit
     tables: two vectors are candidates iff they agree on ALL bits of at
     least one band. For cosine >= 0.99 (angle <= 8.1 deg, per-bit
-    agreement p >= 0.955) the 4x8 default catches a pair with
+    agreement p >= 0.955) a 4x8 shape catches a pair with
     probability 1 - (1 - p^8)^4 > 0.97; exact-direction duplicates
     (scaled copies) hash identically in every band, so recall for those
     is 1.0 by construction. Planes are deterministic pseudo-hyperplanes:
-    component j of plane b derives from xxhash64(b, j, seed) mapped to
+    component j of plane b derives from xxhash64(b, j, _LSH_SEED) mapped to
     {-1, +1} — no driver-side randomness, identical across runs and
     cluster sizes.
     """
@@ -83,7 +93,7 @@ def hyperplane_lsh_bands(
     bit = (
         f"transform(sequence(0, {total - 1}), b -> "
         f"case when aggregate(zip_with(v, sequence(0, size(v) - 1), "
-        f"(x, j) -> x * (case when xxhash64(b, j, {seed}) % 2 = 0 then 1.0d else -1.0d end)), "
+        f"(x, j) -> x * (case when xxhash64(b, j, {_LSH_SEED}) % 2 = 0 then 1.0d else -1.0d end)), "
         f"0.0d, (acc, x) -> acc + x) > 0 then 1L else 0L end)"
     )
     return e.withColumn("bits", F.expr(bit)).select(
@@ -101,21 +111,21 @@ def hyperplane_lsh_bands(
     )
 
 
-def auto_n_bits(n_vectors: int, target_bucket: int = 64, floor: int = 6) -> int:
+def auto_n_bits(n_vectors: int) -> int:
     """Size the per-table signature so expected bucket occupancy is
-    ~``target_bucket`` vectors: n_bits = log2(n / target_bucket).
+    ~64 vectors: n_bits = log2(n / 64), at least 6.
 
     This is what makes an lsh_topk registration scale-honest: a fixed
     n_bits=6 (64 buckets/table) means every probe scans ~1/64 of the
     corpus — fine at 10^3 vectors, a quarter-billion-row scan per probe
     at 10^10. Deriving bits from the corpus count keeps each probed
-    bucket bounded (~target_bucket rows) at every scale: 10^3 vectors
+    bucket bounded (~64 rows) at every scale: 10^3 vectors
     -> 6 bits, 10^6 -> 14, 10^10 -> 27."""
     import math
 
-    if n_vectors <= target_bucket:
-        return floor
-    return max(floor, math.ceil(math.log2(n_vectors / target_bucket)))
+    if n_vectors <= 64:
+        return 6
+    return max(6, math.ceil(math.log2(n_vectors / 64)))
 
 
 def lsh_topk(
@@ -124,8 +134,6 @@ def lsh_topk(
     k: int = 10,
     n_bits: int = 8,
     n_tables: int = 4,
-    probe_hamming: int = 1,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k via banded multi-table LSH with multi-probe.
 
@@ -136,8 +144,8 @@ def lsh_topk(
     * **OR across ``n_tables`` independent tables** (one row per
       (vector, table) from :func:`hyperplane_lsh_bands`);
     * **multi-probe**: each query also probes every bucket within
-      Hamming distance ``probe_hamming`` of its own signature (the
-      neighboring buckets a near-miss bit flip would land in).
+      Hamming distance 1 of its own signature (the neighboring
+      buckets a near-miss bit flip would land in).
 
     Scale shape: the corpus is hashed ONCE (n_tables rows per vector,
     hash-partitioned by bucket); queries explode to
@@ -145,9 +153,7 @@ def lsh_topk(
     (band_id, band_val) — candidate exact-cosine verification touches
     only probed buckets, never the corpus at large.
     """
-    bands = hyperplane_lsh_bands(
-        df, n_bands=n_tables, bits_per_band=n_bits, seed=seed
-    )
+    bands = hyperplane_lsh_bands(df, n_bands=n_tables, bits_per_band=n_bits)
     q0 = bands.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -155,11 +161,8 @@ def lsh_topk(
         "band_id",
         F.col("band_val").alias("qval"),
     )
-    if probe_hamming >= 1:
-        flips = f"transform(sequence(0, {n_bits - 1}), b -> qval ^ shiftleft(1L, cast(b as int)))"
-        probes = F.expr(f"array_union(array(qval), {flips})")
-    else:
-        probes = F.array(F.col("qval"))
+    flips = f"transform(sequence(0, {n_bits - 1}), b -> qval ^ shiftleft(1L, cast(b as int)))"
+    probes = F.expr(f"array_union(array(qval), {flips})")
     q = q0.select(
         "query_id", "qv", "qnorm", "band_id", F.explode(probes).alias("band_val")
     )
@@ -171,15 +174,4 @@ def lsh_topk(
         .withColumn("cos", cosine("v", "norm", "qv", "qnorm"))
         .select("query_id", "vec_id", "cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "rank",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round("cos", 4).alias("cos_sim"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, k)

@@ -32,14 +32,14 @@ LANG_MARKERS = {
 BPE_RE_SQL = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\\\s]"
 
 
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.trim(F.col(text_col))
+def with_tokens(df: DataFrame) -> DataFrame:
+    t = F.trim(F.col("text"))
     return df.withColumn(
         "n_tokens_ws",
         F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, "\\s+"))),
     ).withColumn(
         "n_tokens_bpe",
-        F.size(F.expr(f"regexp_extract_all(trim({text_col}), '{BPE_RE_SQL}', 0)")),
+        F.size(F.expr(f"regexp_extract_all(trim(text), '{BPE_RE_SQL}', 0)")),
     )
 
 
@@ -58,17 +58,17 @@ def token_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Per-document quality features + a composite keep/drop score
     (Gopher/C4-style cheap filters, all codegen'd)."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t)
     n_ws_tokens = F.when(F.length(F.trim(t)) == 0, F.lit(0)).otherwise(
         F.size(F.split(F.trim(t), "\\s+"))
     )
     n_punct = F.length(t) - F.length(F.regexp_replace(t, "[^a-zA-Z0-9\\s]", ""))
     n_stop = F.size(
-        F.expr(f"regexp_extract_all({text_col}, '\\\\b(the|and|of|a|to|in)\\\\b', 0)")
+        F.expr("regexp_extract_all(text, '\\\\b(the|and|of|a|to|in)\\\\b', 0)")
     )
     out = (
         df.withColumn("n_chars_c", n_chars)
@@ -113,14 +113,14 @@ def quality_rollup(df: DataFrame) -> DataFrame:
     )
 
 
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Heuristic language ID: argmax of marker-stopword hit counts, with
     a deterministic precedence order on ties ('en' > 'de' > 'fr' > 'es',
     'unk' when no marker hits)."""
     scores = {
         lang: F.size(
             F.expr(
-                f"regexp_extract_all(lower({text_col}), "
+                "regexp_extract_all(lower(text), "
                 f"'\\\\b({'|'.join(markers)})\\\\b', 0)"
             )
         )
@@ -142,11 +142,11 @@ def language_id_rollup(df: DataFrame) -> DataFrame:
     )
 
 
-def fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprints(df: DataFrame) -> DataFrame:
     """Document fingerprints: md5 of the full text (exact-dup key) plus
     a coarse length bucket for blocking."""
     return df.select(
         "doc_id",
-        F.md5(F.col(text_col)).alias("fp_md5"),
-        F.floor(F.length(text_col) / 64).cast("long").alias("len_bucket"),
+        F.md5(F.col("text")).alias("fp_md5"),
+        F.floor(F.length("text") / 64).cast("long").alias("len_bucket"),
     )

@@ -42,9 +42,10 @@ def read_pages_stream(spark: SparkSession, input_dir: str):
     return spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
 
 
-def drain(df, out: str, ckpt: str, timeout_sec: int = 300) -> bool:
+def drain(df, out: str, ckpt: str) -> bool:
     """Append the streaming frame ``df`` to a parquet sink: drain every
-    currently available input, checkpointed, then stop. A re-run with the
+    currently available input, checkpointed, then stop. Returns whether
+    the query finished within 300 seconds. A re-run with the
     same checkpoint processes only files added since (streaming resume).
     Per-document operators run unchanged on a streaming frame (url-hash
     repartition is a stateless shuffle), so a drain-and-stop extraction
@@ -59,23 +60,23 @@ def drain(df, out: str, ckpt: str, timeout_sec: int = 300) -> bool:
         .trigger(availableNow=True)
         .start()
     )
-    return query.awaitTermination(timeout_sec)
+    return query.awaitTermination(300)
 
 
 # ------------------------------------------- windowed event-time rollup
 
-def windowed_event_rollup(events, window: str = "1 hour", watermark: str = "30 minutes"):
+def windowed_event_rollup(events, window: str = "1 hour"):
     """Event-time tumbling-window aggregation with late-data handling.
 
     Works on BOTH batch and streaming DataFrames (same plan): group by
     window(ts) x event_type, count + sum(value). On a stream the
-    watermark bounds state: events later than ``watermark`` behind the
+    watermark bounds state: events later than 30 minutes behind the
     max seen event time are dropped and their windows finalized — the
     idiomatic Structured Streaming shape for crawl-rate/metrics rollups.
     """
     from pyspark.sql import functions as F
 
-    w = events.withWatermark("ts", watermark) if events.isStreaming else events
+    w = events.withWatermark("ts", "30 minutes") if events.isStreaming else events
     return (
         w.groupBy(F.window("ts", window).alias("win"), "event_type")
         .agg(
@@ -94,7 +95,7 @@ def windowed_event_rollup(events, window: str = "1 hour", watermark: str = "30 m
 # ----------------------------- stateful cross-batch dedup (GroupState)
 
 
-def dedup_stream(pages_stream, text_col: str = "text"):
+def dedup_stream(pages_stream):
     """Custom stateful streaming operator: emit each content fingerprint
     the FIRST time it is seen across ALL micro-batches
     (``applyInPandasWithState`` keyed by md5(text); state = seen flag).
@@ -109,7 +110,7 @@ def dedup_stream(pages_stream, text_col: str = "text"):
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    keyed = pages_stream.withColumn("fp_md5", F.md5(F.col(text_col)))
+    keyed = pages_stream.withColumn("fp_md5", F.md5(F.col("text")))
     out_schema = (
         "url string, warc_ts timestamp, fp_md5 string, is_first boolean"
     )

@@ -47,6 +47,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def build_parser() -> argparse.ArgumentParser:
+    from docling_spark.operators.convert import BIG_DOC_BYTES
     from docling_spark.operators.formats import LIMIT_BYTES
 
     p = argparse.ArgumentParser(description="docling-spark extraction job")
@@ -67,8 +68,8 @@ def build_parser() -> argparse.ArgumentParser:
                         "dense url-hash partition never straggles on a "
                         "handful of huge pages (north-rule: salted "
                         "handling of oversized documents)")
-    p.add_argument("--big-doc-bytes", type=int, default=2 << 20,
-                   help="threshold for --split-big-docs (default 2 MiB)")
+    p.add_argument("--big-doc-bytes", type=int, default=BIG_DOC_BYTES,
+                   help="threshold for --split-big-docs (default %(default)s)")
     p.add_argument("--router", action="store_true",
                    help="accepted and ignored: every input is routed by "
                         "its format (operators/convert.py)")

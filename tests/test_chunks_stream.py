@@ -134,7 +134,7 @@ def test_windowed_event_rollup_streaming_matches_batch(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string"
     ).parquet(in_dir)
-    assert drain(windowed_event_rollup(events), out_dir, ckpt, 120)
+    assert drain(windowed_event_rollup(events), out_dir, ckpt)
     streamed = {
         (r.win_start, r.event_type): (r.n_events, r.sum_value)
         for r in spark.read.parquet(out_dir).collect()

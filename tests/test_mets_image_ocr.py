@@ -251,6 +251,6 @@ def test_mets_cells_carry_from_ocr_flag():
         return
     from docling_spark.kernels.mets_kernel import parse_mets_gbs
 
-    pages = parse_mets_gbs(open(fixture, "rb").read(), max_pages=1)
+    pages = parse_mets_gbs(open(fixture, "rb").read())
     assert pages and pages[0].cells
     assert all(c.from_ocr for c in pages[0].cells)

@@ -116,13 +116,13 @@ def test_lsh_topk_recall_vs_brute_force(spark):
 
 def test_lsh_topk_registration_is_scale_honest(spark):
     """The registered x_lsh_topk derives n_bits from the corpus count
-    (auto_n_bits) so a probed bucket holds ~target_bucket vectors at
+    (auto_n_bits) so a probed bucket holds ~64 vectors at
     any corpus size — never a fixed fraction of the corpus."""
     from docling_spark.operators import similarity
 
-    # sizing function: expected occupancy n / 2^bits <= 2*target
+    # sizing function: expected occupancy n / 2^bits <= 2 * 64
     for n in (1_000, 100_000, 10_000_000, 10_000_000_000):
-        bits = similarity.auto_n_bits(n, target_bucket=64)
+        bits = similarity.auto_n_bits(n)
         assert n / (1 << bits) <= 128, (n, bits)
     assert similarity.auto_n_bits(10_000_000_000) >= 27
 
