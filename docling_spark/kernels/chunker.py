@@ -119,6 +119,50 @@ def hierarchical_chunks(doc: Doc) -> list[Chunk]:
     return chunks
 
 
+def count_hierarchical_chunks(doc: Doc) -> int:
+    """``len(hierarchical_chunks(doc))`` without building the chunks:
+    the same walk over the same nodes, counting where the chunker
+    appends, with no chunk text, heading path or ``table_text``.
+
+    A table makes a chunk when its ``table_text`` is not empty: always
+    for two or more grid rows (the rows are joined by a newline), so
+    only a one-row table is rendered to tell. The walk is iterative;
+    visiting order does not change a count."""
+    nodes = doc.nodes
+    n = 0
+    todo = list(doc.body_children)
+    while todo:
+        node = nodes[todo.pop()]
+        if node.content_layer != BODY:
+            continue
+        kind = node.kind
+        if kind == GROUP and node.group_label == G_LIST:
+            # one chunk for the list's item texts (nested lists
+            # included); other content under its items is walked
+            has_items = False
+            sub = list(node.children)
+            while sub:
+                nid = sub.pop()
+                item = nodes[nid]
+                if item.kind == LIST_ITEM:
+                    has_items = has_items or bool(item.text)
+                    sub.extend(item.children)
+                elif item.kind == GROUP:
+                    sub.extend(item.children)
+                else:
+                    todo.append(nid)
+            n += has_items
+            continue
+        if kind == TABLE:
+            table = node.table
+            if table is not None and (table.num_rows > 1 or table_text(table)):
+                n += 1
+        elif kind == CODE or kind == TEXT or kind == "paragraph":
+            n += bool(node.text)
+        todo.extend(node.children)
+    return n
+
+
 def _ws_tokens(text: str) -> int:
     return len(text.split())
 

@@ -16,12 +16,24 @@ reference backend's observable semantics
 * comments / doctypes / processing instructions are kept as skip-nodes
   (BeautifulSoup's ``PreformattedString``) that text extraction ignores.
 
+Two parse paths make the same tree. ``parse_html`` runs ``_fast_feed``, a
+whole-document tokenizer that builds the tree itself: a plain start or
+end tag (``<p>``, ``</p>``) and a text run become nodes in the loop,
+and only the rarer constructs (attributes, comments, CDATA, broken
+markup) go through ``_TreeParser``'s handlers. ``parse_html_stdlib``
+drives the same handlers from the stdlib incremental parser; it is the
+equivalence oracle and ``parse_html``'s fallback. Both paths also
+record, in document order, the boilerplate candidates the kernel
+strips (``Soup.strip_tags``) and the ``<br>`` tags it rewrites
+(``Soup.br_tags``), and each tag's ``watch`` bits (below).
+
 No code is copied from BeautifulSoup; only the behavior needed for the
 fixture corpus is implemented.
 """
 
 from __future__ import annotations
 
+import re
 from html.parser import HTMLParser
 from typing import Iterable, Iterator, Optional, Union
 
@@ -62,19 +74,20 @@ class SkipNode(TextNode):
 Node = Union["Tag", TextNode]
 
 
-def _name_matches(tag_name: str, name_filter) -> bool:
-    if name_filter is None:
-        return True
-    if isinstance(name_filter, str):
-        return tag_name == name_filter
-    return tag_name in name_filter
+def _names(name_filter) -> Optional[Iterable[str]]:
+    """A tag-name filter (None, a name, or a collection of names) as a
+    container for one ``in`` test per node; None matches every tag."""
+    if name_filter is None or not isinstance(name_filter, str):
+        return name_filter
+    return (name_filter,)
 
 
 # Parse-time descendant flags: a bit per "rare but scanned-for" tag.
-# Marking open ancestors when such a tag starts costs O(depth) per
-# occurrence; it lets the kernel skip whole-subtree find_all("img") /
-# find("table") scans on the overwhelmingly common subtrees that lack
-# them (profiled: ~15% of kernel time was these no-hit scans).
+# ``Tag.watch`` is the OR of the bits of the tag's descendants: a new
+# tag sets its bit on its parent, and a tag ORs its own ``watch`` into
+# its parent when it is closed (or at end of input). It lets the
+# kernel skip whole-subtree find_all("img") / find("table") scans on
+# the overwhelmingly common subtrees that lack them.
 WATCH_IMG = 1
 WATCH_FORMULA = 2
 WATCH_TABLE = 4
@@ -101,17 +114,36 @@ _WATCH_BITS = {
 }
 for _t in BLOCK_TAG_NAMES:
     _WATCH_BITS[_t] = _WATCH_BITS.get(_t, 0) | WATCH_BLOCK
+_WATCH_MASK = WATCH_IMG | WATCH_FORMULA | WATCH_TABLE | WATCH_BLOCK | WATCH_TITLE
+
+# How tree building treats a start tag, one dict lookup per tag: its
+# watch bit (the low bits) plus these flags. A name that is not a key
+# needs nothing but a push.
+_VOID = 32
+_PRE = 64
+_CDATA = 128  # script/style: raw-text content, and stripped as boilerplate
+_BR = 256
+_START_FLAGS: dict[str, int] = dict(_WATCH_BITS)
+for _t in VOID_ELEMENTS:
+    _START_FLAGS[_t] = _START_FLAGS.get(_t, 0) | _VOID
+for _t in PRESERVE_WHITESPACE_TAGS:
+    _START_FLAGS[_t] = _START_FLAGS.get(_t, 0) | _PRE
+for _t in ("script", "style"):
+    _START_FLAGS[_t] = _START_FLAGS.get(_t, 0) | _CDATA
+_START_FLAGS["br"] |= _BR
 
 
 class Tag:
     __slots__ = ("name", "attrs", "contents", "parent", "watch")
     is_tag = True
 
-    def __init__(self, name: str, attrs: Optional[dict] = None):
+    def __init__(
+        self, name: str, attrs: Optional[dict] = None, parent: Optional["Tag"] = None
+    ):
         self.name = name
         self.attrs = attrs or {}
         self.contents: list[Node] = []
-        self.parent: Optional[Tag] = None
+        self.parent = parent
         self.watch = 0  # OR of _WATCH_BITS present in DESCENDANTS
 
     # -- construction -------------------------------------------------
@@ -131,9 +163,8 @@ class Tag:
 
     def descendants(self) -> Iterator[Node]:
         # iterative pre-order DFS: nested `yield from` generators cost
-        # one Python frame per tree level per item (profiled at ~13% of
-        # kernel time on deep crawl pages); for/else replaces the
-        # `advanced` flag and the class-attr is_tag test replaces
+        # one Python frame per tree level per item; for/else replaces
+        # the `advanced` flag and the class-attr is_tag test replaces
         # isinstance in the per-node loop
         stack: list[Iterator[Node]] = [iter(self.contents)]
         push = stack.append
@@ -154,14 +185,15 @@ class Tag:
         has_attr: Optional[str] = None,
     ) -> list["Tag"]:
         # direct iterative DFS instead of iterating descendants(): the
-        # generator costs one resume per *node*, these scans are the
-        # kernel's most frequent subtree operations (profiled)
+        # generator costs one resume per *node*, and these scans are
+        # the kernel's most frequent subtree operations
+        names = _names(name)
         out: list[Tag] = []
         if not recursive:
             for node in self.contents:
                 if (
                     node.is_tag
-                    and _name_matches(node.name, name)
+                    and (names is None or node.name in names)
                     and (has_attr is None or has_attr in node.attrs)
                 ):
                     out.append(node)
@@ -170,7 +202,7 @@ class Tag:
         while stack:
             for node in stack[-1]:
                 if node.is_tag:
-                    if _name_matches(node.name, name) and (
+                    if (names is None or node.name in names) and (
                         has_attr is None or has_attr in node.attrs
                     ):
                         out.append(node)
@@ -185,16 +217,17 @@ class Tag:
         return self.find_all(name, recursive=recursive, has_attr=has_attr)
 
     def find(self, name=None, recursive: bool = True) -> Optional["Tag"]:
+        names = _names(name)
         if not recursive:
             for node in self.contents:
-                if node.is_tag and _name_matches(node.name, name):
+                if node.is_tag and (names is None or node.name in names):
                     return node
             return None
         stack: list[Iterator[Node]] = [iter(self.contents)]
         while stack:
             for node in stack[-1]:
                 if node.is_tag:
-                    if _name_matches(node.name, name):
+                    if names is None or node.name in names:
                         return node
                     if node.contents:
                         stack.append(iter(node.contents))
@@ -204,9 +237,10 @@ class Tag:
         return None
 
     def find_parent(self, name) -> Optional["Tag"]:
+        names = _names(name)
         p = self.parent
         while p is not None:
-            if _name_matches(p.name, name):
+            if names is None or p.name in names:
                 return p
             p = p.parent
         return None
@@ -247,10 +281,15 @@ class Tag:
 class Soup(Tag):
     """Document root ('[document]' in bs4 terms)."""
 
-    __slots__ = ()
+    __slots__ = ("strip_tags", "br_tags")
 
     def __init__(self) -> None:
         super().__init__("[document]")
+        # collected while parsing, in document order: the boilerplate
+        # the kernel strips (script, style, any tag with a ``hidden``
+        # attribute) and the <br> tags it turns into newlines
+        self.strip_tags: list[Tag] = []
+        self.br_tags: list[Tag] = []
 
     @property
     def title(self) -> Optional[Tag]:
@@ -269,15 +308,15 @@ class _TreeParser(HTMLParser):
         self._pre_depth = 0
 
     # -- text handling -------------------------------------------------
-    def _append_text(self, data: str, cls=TextNode) -> None:
+    def _append_text(self, data: str) -> None:
         if data == "":
             return
-        if cls is TextNode and self._pre_depth == 0 and data.isspace():
+        if self._pre_depth == 0 and data.isspace():
             # bs4 collapses whitespace-only strings outside pre/textarea
             # (isspace on nonempty data == `not data.strip()`, without
             # the throwaway string allocation)
             data = "\n" if "\n" in data else " "
-        self.stack[-1].append(cls(data))
+        self.stack[-1].append(TextNode(data))
 
     def handle_data(self, data: str) -> None:
         self._append_text(data)
@@ -296,8 +335,7 @@ class _TreeParser(HTMLParser):
 
     def updatepos(self, i: int, j: int) -> int:
         # stdlib HTMLParser tracks (lineno, offset) for error messages
-        # on every chunk boundary — ~3% of kernel time at crawl scale
-        # (profiled); nothing downstream reads positions, so skip it
+        # on every chunk boundary; nothing downstream reads positions
         return j
 
     # -- tags ------------------------------------------------------------
@@ -309,45 +347,56 @@ class _TreeParser(HTMLParser):
                 out[k] = "" if v is None else v
         return out
 
-    def handle_starttag(self, tag: str, attrs) -> None:
-        node = Tag(tag, self._make_attrs(attrs))
-        self.stack[-1].append(node)
-        bit = _WATCH_BITS.get(tag)
-        if bit is not None:
-            for open_tag in self.stack:
-                open_tag.watch |= bit
-        if tag not in VOID_ELEMENTS:
+    def _open(self, tag: str, attrs: dict, push: bool) -> None:
+        """Append a new tag to the open one, set its watch bit there,
+        record it if it is a strip or <br> candidate, and make it the
+        open tag unless it is void or self-closed (``push`` false)."""
+        parent = self.stack[-1]
+        node = Tag(tag, attrs, parent)
+        parent.contents.append(node)
+        flags = _START_FLAGS.get(tag, 0)
+        parent.watch |= flags & _WATCH_MASK
+        if flags & _CDATA or "hidden" in attrs:
+            self.root.strip_tags.append(node)
+        elif flags & _BR:
+            self.root.br_tags.append(node)
+        if push and not flags & _VOID:
             self.stack.append(node)
-            if tag in PRESERVE_WHITESPACE_TAGS:
+            if flags & _PRE:
                 self._pre_depth += 1
 
+    def _close_to(self, i: int) -> None:
+        """Close the open tags from ``stack[i]`` up, innermost first,
+        each ORing its watch bits into its parent (the tag below it)."""
+        stack = self.stack
+        for k in range(len(stack) - 1, i - 1, -1):
+            node = stack[k]
+            stack[k - 1].watch |= node.watch
+            if node.name in PRESERVE_WHITESPACE_TAGS:
+                self._pre_depth -= 1
+        del stack[i:]
+
+    def handle_starttag(self, tag: str, attrs) -> None:
+        self._open(tag, self._make_attrs(attrs), True)
+
     def handle_startendtag(self, tag: str, attrs) -> None:
-        self.stack[-1].append(Tag(tag, self._make_attrs(attrs)))
-        bit = _WATCH_BITS.get(tag)
-        if bit is not None:
-            for open_tag in self.stack:
-                open_tag.watch |= bit
+        self._open(tag, self._make_attrs(attrs), False)
 
     def handle_endtag(self, tag: str) -> None:
-        # fast path: well-formed HTML closes the innermost tag
-        stack = self.stack
-        if len(stack) > 1 and stack[-1].name == tag:
-            if tag in PRESERVE_WHITESPACE_TAGS:
-                self._pre_depth -= 1
-            del stack[-1]
-            return
         # pop to the nearest matching open tag; ignore if unmatched
+        stack = self.stack
         for i in range(len(stack) - 1, 0, -1):
             if stack[i].name == tag:
-                for popped in stack[i:]:
-                    if popped.name in PRESERVE_WHITESPACE_TAGS:
-                        self._pre_depth -= 1
-                del stack[i:]
+                self._close_to(i)
                 return
+
+    def close(self) -> None:
+        super().close()
+        self._close_to(1)  # what is still open at end of input
 
 
 # ---------------------------------------------------------------------
-# Whole-document fast tokenizer.
+# Whole-document fast tokenizer that builds the tree.
 #
 # html.parser's goahead() is built for INCREMENTAL feeding: every
 # construct can span a chunk boundary, so each iteration pays for
@@ -357,9 +406,19 @@ class _TreeParser(HTMLParser):
 # tight loop: the SAME stdlib regexes (tagfind_tolerant,
 # attrfind_tolerant, locatestarttagend_tolerant, endtagfind, …) make
 # the same parsing decisions, only the orchestration differs.
+#
+# It also builds the tree in the loop: a text run, and a start or end
+# tag that is a bare name (``<p>``, ``</p>``: about 95% of the tags of
+# a crawl page), are matched by one regex (_PLAIN_TOKEN) and become
+# nodes without a handler call, with the open tag and its contents
+# list held in locals. For such a tag every stdlib regex above makes
+# the trivial decision (no attributes, tail ">", end tag found at its
+# own ">"), so the shortcut decides as they would. Everything else goes through the regexes and the
+# _TreeParser handlers, after which the locals are re-read.
+#
 # Equivalence is pinned three ways: byte-identical goldens, a
 # tree-equality sweep against the stdlib path over the synthetic crawl
-# corpus, and a hypothesis property (tests/test_properties.py).
+# corpus, and hypothesis properties (tests/test_dom_fast_parse.py).
 # parse_html additionally falls back to the stdlib path on ANY
 # exception from the fast one.
 
@@ -367,9 +426,12 @@ from html import unescape as _unescape
 from html import parser as _hp
 
 _CDATA_CLOSE = {
-    "script": _hp.re.compile(r"</\s*script\s*>", _hp.re.I),
-    "style": _hp.re.compile(r"</\s*style\s*>", _hp.re.I),
+    "script": re.compile(r"</\s*script\s*>", re.I),
+    "style": re.compile(r"</\s*style\s*>", re.I),
 }
+_PLAIN_TOKEN = re.compile(
+    r"([^<]*)<(?:([a-zA-Z][-.a-zA-Z0-9:_]*)|/([a-zA-Z][-.a-zA-Z0-9:_]*))>"
+)
 
 
 def _fast_feed(self: "_TreeParser", rawdata: str) -> None:  # noqa: C901
@@ -381,8 +443,16 @@ def _fast_feed(self: "_TreeParser", rawdata: str) -> None:  # noqa: C901
     endendtag = _hp.endendtag.search
     commentclose = _hp.commentclose.search
     piclose = _hp.piclose.search
+    plain_token = _PLAIN_TOKEN.match
+    start_flags = _START_FLAGS.get
+    new_text = str.__new__  # TextNode without its Python-level __new__
     find = rawdata.find
     startswith = rawdata.startswith
+    stack = self.stack
+    strip_tags = self.root.strip_tags
+    br_tags = self.root.br_tags
+    cur = stack[-1]  # the open tag, and its contents
+    contents = cur.contents
     n = len(rawdata)
     i = 0
     cdata_elem = None
@@ -401,24 +471,77 @@ def _fast_feed(self: "_TreeParser", rawdata: str) -> None:  # noqa: C901
 
     while i < n:
         if cdata_elem is None:
-            j = find("<", i)
-            if j < 0:
-                j = n
-            if i < j:
+            # the text up to the next "<", and that tag if it is plain
+            m = plain_token(rawdata, i)
+            if m is None:
+                j = find("<", i)
+                if j < 0:
+                    j = n
                 seg = rawdata[i:j]
+            else:
+                seg, name, end_name = m.group(1, 2, 3)
+            if seg:
                 # html.unescape is a no-op without "&"; the C substring
                 # scan here skips the call for the common case
-                handle_data(_unescape(seg) if "&" in seg else seg)
+                if "&" in seg:
+                    seg = _unescape(seg)
+                if seg:  # _append_text, inline
+                    if self._pre_depth == 0 and seg.isspace():
+                        seg = "\n" if "\n" in seg else " "
+                    node = new_text(TextNode, seg)
+                    node.parent = cur
+                    contents.append(node)
+            if m is None:
+                i = j
+                if i == n:
+                    break
+            elif name is not None:  # _open(name, {}, True), inline
+                i = m.end()
+                name = name.lower()
+                node = Tag(name, {}, cur)
+                contents.append(node)
+                flags = start_flags(name)
+                if flags is None:
+                    stack.append(node)
+                    cur = node
+                    contents = node.contents
+                    continue
+                cur.watch |= flags & _WATCH_MASK
+                if flags & _CDATA:
+                    strip_tags.append(node)
+                    cdata_elem = name
+                elif flags & _BR:
+                    br_tags.append(node)
+                if not flags & _VOID:
+                    stack.append(node)
+                    cur = node
+                    contents = node.contents
+                    if flags & _PRE:
+                        self._pre_depth += 1
+                continue
+            else:
+                i = m.end()
+                end_name = end_name.lower()
+                if cur.name == end_name:  # closes the open tag (never the root)
+                    del stack[-1]
+                    parent = stack[-1]
+                    parent.watch |= cur.watch
+                    if end_name in PRESERVE_WHITESPACE_TAGS:
+                        self._pre_depth -= 1
+                    cur = parent
+                else:
+                    self.handle_endtag(end_name)
+                    cur = stack[-1]
+                contents = cur.contents
+                continue
         else:
             m = _CDATA_CLOSE[cdata_elem].search(rawdata, i)
             if m is None:
-                return  # unterminated CDATA content is dropped (stdlib)
+                break  # unterminated CDATA content is dropped (stdlib)
             j = m.start()
             if i < j:
                 handle_data(rawdata[i:j])  # no charref conversion in CDATA
-        i = j
-        if i == n:
-            break
+            i = j
         c = rawdata[i + 1 : i + 2]
         if c.isalpha() and c.isascii():  # start tag
             m = locatestart(rawdata, i)
@@ -439,7 +562,7 @@ def _fast_feed(self: "_TreeParser", rawdata: str) -> None:  # noqa: C901
             tm = tagfind(rawdata, i + 1)
             k = tm.end()
             tag = tm.group(1).lower()
-            attrs = []
+            attrs: dict = {}
             while k < endpos:
                 am = attrfind(rawdata, k)
                 if not am:
@@ -454,7 +577,9 @@ def _fast_feed(self: "_TreeParser", rawdata: str) -> None:  # noqa: C901
                     attrvalue = attrvalue[1:-1]
                 if attrvalue:
                     attrvalue = _unescape(attrvalue)
-                attrs.append((attrname.lower(), attrvalue))
+                attrname = attrname.lower()
+                if attrname not in attrs:  # first occurrence wins
+                    attrs[attrname] = attrvalue or ""
                 k = am.end()
             tail = rawdata[k:endpos].strip()
             if tail not in (">", "/>"):
@@ -462,17 +587,20 @@ def _fast_feed(self: "_TreeParser", rawdata: str) -> None:  # noqa: C901
                 i = endpos
                 continue
             if tail == "/>":
-                self.handle_startendtag(tag, attrs)
+                self._open(tag, attrs, False)
             else:
-                self.handle_starttag(tag, attrs)
+                self._open(tag, attrs, True)
                 if tag in ("script", "style"):
                     cdata_elem = tag
+            cur = stack[-1]
+            contents = cur.contents
             i = endpos
         elif c == "/":  # end tag
             gm = endendtag(rawdata, i + 1)
             if not gm:
+                # unterminated CDATA content is dropped, as above
                 if cdata_elem is not None:
-                    return  # same as unterminated CDATA above
+                    break
                 i = recover(i)
                 continue
             gtpos = gm.end()
@@ -495,6 +623,8 @@ def _fast_feed(self: "_TreeParser", rawdata: str) -> None:  # noqa: C901
                     i = pos + 1
                     continue
                 self.handle_endtag(nm.group(1).lower())
+                cur = stack[-1]
+                contents = cur.contents
                 i = find(">", nm.end()) + 1
                 continue
             elem = em.group(1).lower()
@@ -503,6 +633,8 @@ def _fast_feed(self: "_TreeParser", rawdata: str) -> None:  # noqa: C901
                 i = gtpos
                 continue
             self.handle_endtag(elem)
+            cur = stack[-1]
+            contents = cur.contents
             cdata_elem = None
             i = gtpos
         elif startswith("<!--", i):  # comment
@@ -550,6 +682,7 @@ def _fast_feed(self: "_TreeParser", rawdata: str) -> None:  # noqa: C901
             break
     if i < n and cdata_elem is None:
         handle_data(_unescape(rawdata[i:n]))
+    self._close_to(1)  # what is still open at end of input
 
 
 def parse_html_stdlib(raw: Union[bytes, str]) -> Soup:

@@ -15,9 +15,10 @@ docling_spark.operators.batch.map_docs).
 
 from __future__ import annotations
 
+import gc
 import re
 from contextlib import contextmanager
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 from typing import Optional, Union
 from urllib.parse import urljoin
 
@@ -27,7 +28,6 @@ from .dom import (
     WATCH_FORMULA,
     WATCH_IMG,
     WATCH_TABLE,
-    SkipNode,
     Soup,
     Tag,
     TextNode,
@@ -76,6 +76,33 @@ _WS_RE = re.compile(r"\s+|\n+")
 
 # sentinel for _push_hyperlink: "leave self.hyperlink as-is on exit"
 _KEEP = object()
+# _collect's frame action: pop the format tag pushed on entry
+_POP_FORMAT = object()
+
+_LIST_NAMES = ("ul", "ol")
+_LIST_CHILD_NAMES = ("li", "ul", "ol")
+
+# depth of the heading/section parent slots prefilled per document
+_MAX_LEVELS = 10
+
+
+def _sublists(li: Tag) -> list[Tag]:
+    """The ``ul``/``ol`` children of a list item; a list is a block, so
+    an item whose watch bits hold no block has none."""
+    if not li.watch & WATCH_BLOCK:
+        return []
+    return [c for c in li.contents if c.is_tag and c.name in _LIST_NAMES]
+
+
+def _link_ancestor(tag: Optional[Tag]) -> Optional[Tag]:
+    """The nearest ``<a>`` with a non-empty href at or above ``tag``
+    (reference: html_backend.py:399-404)."""
+    while tag is not None:
+        if tag.name == "a" and tag.get("href"):
+            return tag
+        tag = tag.parent
+    return None
+
 
 # reference: html_backend.py:947-967 — 19-entry unicode cleanup table
 _UNICODE_REPLACEMENTS = {
@@ -103,8 +130,11 @@ _UNICODE_TRANS = str.maketrans(_UNICODE_REPLACEMENTS)
 
 
 def clean_unicode(text: str) -> str:
-    """reference: html_backend.py:933-971 (_clean_unicode)."""
-    return text.translate(_UNICODE_TRANS)
+    """reference: html_backend.py:933-971 (_clean_unicode). Every
+    replaced character is non-ASCII, so ASCII text (an O(1) test) is
+    returned as it is instead of paying translate's per-character
+    lookups."""
+    return text if text.isascii() else text.translate(_UNICODE_TRANS)
 
 
 @dataclass
@@ -141,8 +171,8 @@ def to_single_text_element(items: list[AnnotatedText]) -> AnnotatedText:
 def simplify_text_elements(items: list[AnnotatedText]) -> list[AnnotatedText]:
     """reference: html_backend.py:122-159 — merge adjacent same-annotation
     segments; separator '' when either side is blank, else ' '."""
-    if not items:
-        return items
+    if len(items) < 2:  # nothing to merge: an empty run is dropped
+        return [items[0]] if items and items[0].text else []
     simplified: list[AnnotatedText] = []
     text = items[0].text
     hyperlink = items[0].hyperlink
@@ -184,7 +214,7 @@ def split_by_newline(items: list[AnnotatedText]) -> list[list[AnnotatedText]]:
             active.append(el)
         else:
             for text in sub_texts:
-                active.append(replace(el, text=text))
+                active.append(AnnotatedText(text, el.hyperlink, el.formatting, el.code))
                 super_list.append(active)
                 active = []
     if active:
@@ -214,19 +244,23 @@ def _get_cell_spans(cell: Tag) -> tuple[int, int]:
 def get_cell_text(item) -> str:
     """reference: html_backend.py:903-931 (get_text): concatenate child
     strings; <p> and <li> contribute a trailing space."""
+    if not item.is_tag:  # includes comments, as in reference
+        return str(item)
+    parts: list[str] = []
+    _cell_text(item, parts)
+    if item.name in ("p", "li"):
+        parts.append(" ")
+    return "".join(parts)
 
-    def rec(node) -> list[str]:
-        if isinstance(node, TextNode):  # includes comments, as in reference
-            return [str(node)]
-        if isinstance(node, Tag):
-            parts: list[str] = []
-            for child in node:
-                parts.extend(rec(child))
-            joined = "".join(parts)
-            return [joined + " " if node.name in ("p", "li") else joined]
-        return []
 
-    return "".join(rec(item))
+def _cell_text(tag: Tag, parts: list[str]) -> None:
+    for child in tag.contents:
+        if child.is_tag:
+            _cell_text(child, parts)
+            if child.name in ("p", "li"):
+                parts.append(" ")
+        else:
+            parts.append(child)
 
 
 def parse_table_data(element: Tag) -> Optional[TableDataIR]:
@@ -328,21 +362,46 @@ def parse_table_data(element: Tag) -> Optional[TableDataIR]:
 
 class HtmlExtractor:
     """One-shot HTML conversion (reference: HTMLDocumentBackend.convert,
-    html_backend.py:237-280 plus the walk/handlers it drives)."""
+    html_backend.py:237-280 plus the walk/handlers it drives).
 
-    def __init__(self, original_url: Optional[str] = None, max_levels: int = 10):
+    The walk visits the block structure recursively (``_walk`` and the
+    ``_handle_*`` handlers). Inline text under a node is collected by
+    ``_collect``: one iterative pre-order pass that pushes every
+    annotated run into one output list, carrying the format tags and
+    the hyperlink as state pushed on entry to a tag and restored on
+    exit."""
+
+    def __init__(self, original_url: Optional[str] = None):
         self.original_url = original_url
-        self.max_levels = max_levels
 
     # -- public entry -----------------------------------------------------
     def convert(self, raw: Union[bytes, str], name: str = "doc") -> Doc:
+        # The cyclic GC stays off for the call: the DOM (cyclic through
+        # its parent pointers) and the Doc are thousands of containers
+        # that all live until the call returns, so every collection
+        # their allocation would trigger scans them, promotes them and
+        # frees nothing. Everything the call allocated is still in the
+        # young generation at its end; one collection of it then frees
+        # the dropped DOM here rather than in the caller's next
+        # allocation.
+        if not gc.isenabled():
+            return self._convert(raw, name)
+        gc.disable()
+        try:
+            return self._convert(raw, name)
+        finally:
+            gc.enable()
+            gc.collect(0)
+
+    def _convert(self, raw: Union[bytes, str], name: str) -> Doc:
         soup = parse_html(raw)
         doc = Doc(name=name)
 
         self.level = 0
-        self.parents: dict[int, Optional[object]] = {i: None for i in range(self.max_levels)}
+        self.parents: dict[int, Optional[object]] = dict.fromkeys(range(_MAX_LEVELS))
         self.hyperlink: Optional[str] = None
         self.format_tags: list[str] = []
+        self._links: dict[str, str] = {}  # href -> normalized, this document
 
         # <title> -> furniture title (reference :250-259)
         title = soup.title
@@ -352,24 +411,16 @@ class HtmlExtractor:
                 text=clean_unicode(title_text), orig=title_text, content_layer=FURNITURE
             )
 
-        # strip boilerplate (reference :260-265). One fused traversal
-        # instead of the reference's three document-wide scans
-        # (script/style, hidden, br) — same node set, same order
-        # (decompose removes whole subtrees, so a br inside a stripped
-        # script can never be reached in either formulation).
-        strip: list[Tag] = []
-        brs: list[Tag] = []
-        for node in soup.descendants():
-            if isinstance(node, Tag):
-                if node.name in ("script", "style") or "hidden" in node.attrs:
-                    strip.append(node)
-                elif node.name == "br":
-                    brs.append(node)
-        for tag in strip:
+        # strip boilerplate (reference :260-265). The parser collected
+        # the reference's three document-wide scans (script/style,
+        # hidden, br) in document order, the order one fused scan would
+        # find them in; decompose removes whole subtrees, so a br inside
+        # a stripped tag is never reached in either formulation.
+        for tag in soup.strip_tags:
             tag.decompose()
 
         content = soup.body or soup
-        for br in brs:
+        for br in soup.br_tags:
             # only replace brs still attached under `content` — the
             # reference scans `soup.body or soup`, so a <br> in <head>
             # stays untouched, and a br whose ancestor was decomposed is
@@ -403,77 +454,79 @@ class HtmlExtractor:
             return []
         return [t for t in FORMAT_TAG_MAP if t in seen]
 
-    @property
-    def _formatting(self) -> Optional[Formatting]:
-        """reference: html_backend.py:379-386."""
-        if not self.format_tags:  # the overwhelmingly common case
-            return None
+    def _format_state(self) -> tuple[Optional[Formatting], bool]:
+        """reference: html_backend.py:379-386 (the formatting of the
+        current format tags) and the code flag of :420-423."""
+        ft = self.format_tags
+        if not ft:  # the overwhelmingly common case
+            return None, False
         kwargs: dict = {}
-        for t in self.format_tags:
+        for t in ft:
             kwargs.update(FORMAT_TAG_MAP[t])
-        return Formatting(**kwargs) if kwargs else None
-
-    @contextmanager
-    def _use_format(self, tags: list[str]):
-        """reference: html_backend.py:492-501."""
-        if not tags:
-            yield
-        else:
-            self.format_tags.extend(tags)
-            try:
-                yield
-            finally:
-                self.format_tags = self.format_tags[: -len(tags)]
+        fmt = Formatting(**kwargs) if kwargs else None
+        return fmt, not CODE_TAGS.isdisjoint(ft)
 
     def _push_hyperlink(self, tag: Tag):
         """reference: html_backend.py:468-490. Returns the hyperlink to
         restore on exit, or the _KEEP sentinel when the reference would
         leave the current value in place (no/empty href, or a href that
         normalizes to a falsy value — the reference assigns it and does
-        NOT restore). Plain call + try/finally at the call sites beats
-        a @contextmanager by ~2 frames per child in the hottest loop."""
+        NOT restore)."""
         this_href = tag.get("href")
         if this_href is None:
             return _KEEP
         if isinstance(this_href, str) and this_href:
             old = self.hyperlink
-            if self.original_url is not None:
-                this_href = urljoin(str(self.original_url), this_href)
-            new = normalize_hyperlink(this_href)
+            new = self._links.get(this_href)
+            if new is None:
+                href = this_href
+                if self.original_url is not None:
+                    href = urljoin(str(self.original_url), href)
+                new = self._links[this_href] = normalize_hyperlink(href)
             self.hyperlink = new
             if new:
                 return old
         return _KEEP
 
-    @contextmanager
-    def _use_hyperlink(self, tag: Tag):
-        """Contextmanager shell over _push_hyperlink for the colder
-        call sites (reference: html_backend.py:468-490)."""
-        old = self._push_hyperlink(tag)
-        try:
-            yield
-        finally:
-            if old is not _KEEP:
-                self.hyperlink = old
+    def _open_inline_group(self, n_parts: int, doc: Doc) -> bool:
+        """reference: html_backend.py:503-531 (_use_inline_group): more
+        than one run opens an inline group one level down; True when it
+        did, and ``_close_inline_group`` must follow the runs."""
+        if n_parts < 2:
+            return False
+        self.parents[self.level + 1] = doc.add_group(
+            label="inline",
+            parent=self.parents[self.level],
+            content_layer=self.content_layer,
+        )
+        self.level += 1
+        return True
 
-    @contextmanager
-    def _use_inline_group(self, parts: list[AnnotatedText], doc: Doc):
-        """reference: html_backend.py:503-531."""
-        if len(parts) > 1:
-            inline = doc.add_group(
-                label="inline",
-                parent=self.parents[self.level],
-                content_layer=self.content_layer,
-            )
-            self.parents[self.level + 1] = inline
-            self.level += 1
-            try:
-                yield
-            finally:
-                self.parents[self.level] = None
-                self.level -= 1
-        else:
-            yield
+    def _close_inline_group(self) -> None:
+        self.parents[self.level] = None
+        self.level -= 1
+
+    def _add_run(self, at: AnnotatedText, text: str, doc: Doc) -> None:
+        """One run as a code or text item under the current parent."""
+        (doc.add_code if at.code else doc.add_text)(
+            parent=self.parents[self.level],
+            text=text,
+            content_layer=self.content_layer,
+            formatting=at.formatting,
+            hyperlink=at.hyperlink,
+        )
+
+    def _add_line(self, part: list[AnnotatedText], doc: Doc) -> None:
+        """One line of runs (a ``split_by_newline`` part): its non-blank
+        runs, stripped and cleaned, in an inline group when there are
+        several."""
+        grouped = self._open_inline_group(len(part), doc)
+        for at in part:
+            seg = at.text.strip()
+            if seg:
+                self._add_run(at, clean_unicode(seg), doc)
+        if grouped:
+            self._close_inline_group()
 
     @contextmanager
     def _use_section_group(self, tag: Tag, doc: Doc, furniture: bool):
@@ -498,140 +551,144 @@ class HtmlExtractor:
                 self.content_layer = saved_layer
 
     # -- text extraction ----------------------------------------------------
-    def _extract(
+    def _extract(self, item, keep_newlines: bool = False) -> list[AnnotatedText]:
+        """reference: html_backend.py:388-466
+        (_extract_text_and_hyperlink_recursively, called with
+        find_parent_annotation as at every block handler): the annotated
+        runs under ``item``."""
+        out: list[AnnotatedText] = []
+        self._extract_under(item, _link_ancestor(item.parent), False, keep_newlines, out)
+        return out
+
+    def _extract_under(
         self,
         item,
-        ignore_list: bool = False,
-        find_parent_annotation: bool = False,
-        keep_newlines: bool = False,
-    ) -> list[AnnotatedText]:
-        """reference: html_backend.py:388-466
-        (_extract_text_and_hyperlink_recursively)."""
-        if find_parent_annotation:
-            format_tags = self._collect_parent_format_tags(item)
-            p = item.parent
-            while p is not None:
-                if p.name == "a" and p.get("href"):
-                    with self._use_format(format_tags):
-                        with self._use_hyperlink(p):
-                            # keep_newlines intentionally dropped, as in
-                            # the reference (:407-409)
-                            return self._extract(item, ignore_list)
-                p = p.parent
+        link: Optional[Tag],
+        ignore_list: bool,
+        keep_newlines: bool,
+        out: list[AnnotatedText],
+    ) -> None:
+        """``_extract`` with the parent annotation already looked up:
+        ``link`` is the nearest ``<a href>`` above ``item``, or None."""
+        if link is None:
+            self._collect(item, ignore_list, keep_newlines, out)
+            return
+        # under a link, the ancestors' format tags and the link's href
+        # apply, and keep_newlines is dropped, as in the reference
+        # (:399-409)
+        format_tags = self._collect_parent_format_tags(item)
+        ft = self.format_tags
+        ft.extend(format_tags)
+        old = self._push_hyperlink(link)
+        try:
+            self._collect(item, ignore_list, False, out)
+        finally:
+            if old is not _KEEP:
+                self.hyperlink = old
+            if format_tags:
+                del ft[-len(format_tags) :]
 
-        if isinstance(item, SkipNode):
-            return []
+    def _collect(
+        self, item, ignore_list: bool, keep_newlines: bool, out: list[AnnotatedText]
+    ) -> None:
+        """The recursion of html_backend.py:410-466 as one pre-order pass
+        with an explicit stack. Each frame is a child iterator plus what
+        to undo when it is exhausted: pop a format tag (_POP_FORMAT),
+        restore a hyperlink (its old value), or nothing (_KEEP). The
+        formatting and code flag change only on a format push or pop."""
+        if item.is_tag:
+            if ignore_list and item.name in _LIST_NAMES:
+                return
+            contents = item.contents
+            if len(contents) != 1 or type(contents[0]) is not TextNode:
+                self._collect_tree(contents, ignore_list, keep_newlines, out)
+                return
+            item = contents[0]  # <p>text</p>: the text node's run
+        elif type(item) is not TextNode:  # SkipNodes carry no text
+            return
+        # reference: html_backend.py:412-433 — one text node's run
+        text = item.strip()
+        if text or (keep_newlines and not item.strip("\n\r")):
+            fmt, code = self._format_state()
+            out.append(AnnotatedText(text or "\n", self.hyperlink, fmt, code))
 
-        if isinstance(item, TextNode):
-            text = item.strip()
-            ft = self.format_tags
-            code = bool(ft) and not CODE_TAGS.isdisjoint(ft)
-            if text:
-                return [
-                    AnnotatedText(
-                        text=text,
-                        hyperlink=self.hyperlink,
-                        formatting=self._formatting,
-                        code=code,
-                    )
-                ]
-            if keep_newlines and item.strip("\n\r") == "":
-                return [
-                    AnnotatedText(
-                        text="\n",
-                        hyperlink=self.hyperlink,
-                        formatting=self._formatting,
-                        code=code,
-                    )
-                ]
-            return []
-
-        result: list[AnnotatedText] = []
-        tag: Tag = item
-        if not ignore_list or tag.name not in ("ul", "ol"):
-            # hottest loop in the kernel: the format/hyperlink pushes
-            # are inlined (append/del and _push_hyperlink) instead of
-            # @contextmanager — same state discipline, no generator +
-            # _GeneratorContextManager per child (profiled ~7% of
-            # convert time on the crawl corpus)
-            for child in tag:
-                if isinstance(child, Tag):
-                    cname = child.name
-                    if cname in FORMAT_TAG_MAP:
-                        self.format_tags.append(cname)
-                        try:
-                            result.extend(
-                                self._extract(
-                                    child, ignore_list, keep_newlines=keep_newlines
-                                )
-                            )
-                        finally:
-                            del self.format_tags[-1]
-                        continue
-                    if cname == "a":
-                        old = self._push_hyperlink(child)
-                        try:
-                            result.extend(
-                                self._extract(
-                                    child, ignore_list, keep_newlines=keep_newlines
-                                )
-                            )
-                        finally:
-                            if old is not _KEEP:
-                                self.hyperlink = old
-                        continue
-                result.extend(
-                    self._extract(child, ignore_list, keep_newlines=keep_newlines)
-                )
-        return result
+    def _collect_tree(
+        self, contents: list, ignore_list: bool, keep_newlines: bool, out: list
+    ) -> None:
+        ft = self.format_tags
+        fmt, code = self._format_state()
+        hyperlink = self.hyperlink
+        append = out.append
+        stack = [(iter(contents), _KEEP)]
+        while stack:
+            for child in stack[-1][0]:
+                if child.is_tag:
+                    name = child.name
+                    if name in FORMAT_TAG_MAP:
+                        if child.contents:
+                            ft.append(name)
+                            fmt, code = self._format_state()
+                            stack.append((iter(child.contents), _POP_FORMAT))
+                            break
+                    elif name == "a":
+                        # pushed even when empty: a falsy href sticks
+                        undo = self._push_hyperlink(child)
+                        hyperlink = self.hyperlink
+                        stack.append((iter(child.contents), undo))
+                        break
+                    elif child.contents and not (ignore_list and name in _LIST_NAMES):
+                        stack.append((iter(child.contents), _KEEP))
+                        break
+                elif type(child) is TextNode:
+                    text = child.strip()
+                    if text:
+                        append(AnnotatedText(text, hyperlink, fmt, code))
+                    elif keep_newlines and not child.strip("\n\r"):
+                        append(AnnotatedText("\n", hyperlink, fmt, code))
+            else:
+                undo = stack.pop()[1]
+                if undo is _POP_FORMAT:
+                    del ft[-1]
+                    fmt, code = self._format_state()
+                elif undo is not _KEEP:
+                    self.hyperlink = hyperlink = undo
 
     # -- the DOM walk ---------------------------------------------------------
     def _walk(self, element: Tag, doc: Doc) -> None:
         """reference: html_backend.py:282-365 (_walk + flush_buffer)."""
         buffer: list[AnnotatedText] = []
+        # the inline children's parent annotation: they share a parent
+        link = _link_ancestor(element)
 
         def flush_buffer():
             if not buffer:
                 return
             simplified = simplify_text_elements(buffer)
-            parts = split_by_newline(simplified)
             buffer.clear()
             if not "".join(el.text for el in simplified):
                 return
-            for part in parts:
-                with self._use_inline_group(part, doc):
-                    for at in part:
-                        if at.text.strip():
-                            seg_clean = clean_unicode(at.text.strip())
-                            if at.code:
-                                doc.add_code(
-                                    parent=self.parents[self.level],
-                                    text=seg_clean,
-                                    content_layer=self.content_layer,
-                                    formatting=at.formatting,
-                                    hyperlink=at.hyperlink,
-                                )
-                            else:
-                                doc.add_text(
-                                    parent=self.parents[self.level],
-                                    text=seg_clean,
-                                    content_layer=self.content_layer,
-                                    formatting=at.formatting,
-                                    hyperlink=at.hyperlink,
-                                )
+            for part in split_by_newline(simplified):
+                self._add_line(part, doc)
 
         for node in element.contents:
-            if isinstance(node, Tag):
-                name = node.name.lower()
+            if node.is_tag:
+                name = node.name  # the parser lowercases tag names
                 if name == "img":
                     flush_buffer()
                     self._emit_image(node, doc)
                 elif name in FORMAT_TAG_MAP:
-                    with self._use_format([name]):
+                    self.format_tags.append(name)
+                    try:
                         self._walk(node, doc)
+                    finally:
+                        del self.format_tags[-1]
                 elif name == "a":
-                    with self._use_hyperlink(node):
+                    old = self._push_hyperlink(node)
+                    try:
                         self._walk(node, doc)
+                    finally:
+                        if old is not _KEEP:
+                            self.hyperlink = old
                 elif name in BLOCK_TAGS:
                     flush_buffer()
                     self._handle_block(node, doc)
@@ -639,16 +696,12 @@ class HtmlExtractor:
                     flush_buffer()
                     self._walk(node, doc)
                 else:
-                    buffer.extend(
-                        self._extract(node, find_parent_annotation=True, keep_newlines=True)
-                    )
-            elif isinstance(node, TextNode) and not isinstance(node, SkipNode):
-                if str(node).strip("\n\r") == "":
+                    self._extract_under(node, link, False, True, buffer)
+            elif type(node) is TextNode:
+                if not node.strip("\n\r"):
                     flush_buffer()
                 else:
-                    buffer.extend(
-                        self._extract(node, find_parent_annotation=True, keep_newlines=True)
-                    )
+                    self._extract_under(node, link, False, True, buffer)
 
         flush_buffer()
 
@@ -657,7 +710,7 @@ class HtmlExtractor:
         """reference: html_backend.py:584-638."""
         self.content_layer = BODY
         level = int(tag.name[1])
-        parts = self._extract(tag, find_parent_annotation=True)
+        parts = self._extract(tag)
         at = to_single_text_element(parts)
         text_clean = clean_unicode(at.text)
         if level == 1:
@@ -716,9 +769,13 @@ class HtmlExtractor:
         )
         self.parents[self.level + 1] = list_group
         self.level += 1
+        # the items' parent annotation: they share a parent
+        link = _link_ancestor(tag)
 
-        for li in tag.find_all(("li", "ul", "ol"), recursive=False):
-            if li.name in ("ul", "ol"):
+        for li in tag.contents:
+            if not li.is_tag or li.name not in _LIST_CHILD_NAMES:
+                continue
+            if li.name in _LIST_NAMES:
                 # invalid HTML tolerated as in reference (:669-672)
                 self._handle_block(li, doc)
                 continue
@@ -728,7 +785,8 @@ class HtmlExtractor:
             else:
                 marker = ""
 
-            parts = self._extract(li, ignore_list=True, find_parent_annotation=True)
+            parts: list[AnnotatedText] = []
+            self._extract_under(li, link, True, False, parts)
             min_parts = simplify_text_elements(parts)
             li_text = _WS_RE.sub(" ", "".join(el.text for el in min_parts)).strip()
 
@@ -742,27 +800,13 @@ class HtmlExtractor:
                         content_layer=self.content_layer,
                     )
                     self.level += 1
-                    with self._use_inline_group(min_parts, doc):
-                        for at in min_parts:
-                            seg = _WS_RE.sub(" ", at.text).strip()
-                            seg_clean = clean_unicode(seg)
-                            if at.code:
-                                doc.add_code(
-                                    parent=self.parents[self.level],
-                                    text=seg_clean,
-                                    content_layer=self.content_layer,
-                                    formatting=at.formatting,
-                                    hyperlink=at.hyperlink,
-                                )
-                            else:
-                                doc.add_text(
-                                    parent=self.parents[self.level],
-                                    text=seg_clean,
-                                    content_layer=self.content_layer,
-                                    formatting=at.formatting,
-                                    hyperlink=at.hyperlink,
-                                )
-                    for sublist in li(("ul", "ol"), recursive=False):
+                    grouped = self._open_inline_group(len(min_parts), doc)
+                    for at in min_parts:
+                        seg = _WS_RE.sub(" ", at.text).strip()
+                        self._add_run(at, clean_unicode(seg), doc)
+                    if grouped:
+                        self._close_inline_group()
+                    for sublist in _sublists(li):
                         self._handle_block(sublist, doc)
                     self.parents[self.level] = None
                     self.level -= 1
@@ -780,13 +824,13 @@ class HtmlExtractor:
                         formatting=at.formatting,
                         hyperlink=at.hyperlink,
                     )
-                    for sublist in li(("ul", "ol"), recursive=False):
+                    for sublist in _sublists(li):
                         self.level += 1
                         self._handle_block(sublist, doc)
                         self.parents[self.level + 1] = None
                         self.level -= 1
             else:
-                for sublist in li(("ul", "ol"), recursive=False):
+                for sublist in _sublists(li):
                     self._handle_block(sublist, doc)
 
             if li.watch & WATCH_IMG:
@@ -813,30 +857,10 @@ class HtmlExtractor:
 
         elif name in ("p", "address", "summary"):
             parts = simplify_text_elements(
-                self._extract(tag, find_parent_annotation=True)
+                self._extract(tag)
             )
             for part in split_by_newline(parts):
-                with self._use_inline_group(part, doc):
-                    for at in part:
-                        seg = at.text.strip()
-                        if seg:
-                            seg_clean = clean_unicode(seg)
-                            if at.code:
-                                doc.add_code(
-                                    parent=self.parents[self.level],
-                                    text=seg_clean,
-                                    content_layer=self.content_layer,
-                                    formatting=at.formatting,
-                                    hyperlink=at.hyperlink,
-                                )
-                            else:
-                                doc.add_text(
-                                    parent=self.parents[self.level],
-                                    text=seg_clean,
-                                    content_layer=self.content_layer,
-                                    formatting=at.formatting,
-                                    hyperlink=at.hyperlink,
-                                )
+                self._add_line(part, doc)
             if tag.watch & WATCH_IMG:
                 for img_tag in tag("img"):
                     self._emit_image(img_tag, doc)
@@ -856,17 +880,19 @@ class HtmlExtractor:
 
         elif name == "pre":
             parts = simplify_text_elements(
-                self._extract(tag, find_parent_annotation=True, keep_newlines=True)
+                self._extract(tag, keep_newlines=True)
             )
-            with self._use_inline_group(parts, doc):
-                for at in parts:
-                    doc.add_code(
-                        parent=self.parents[self.level],
-                        text=clean_unicode(at.text.strip()),
-                        content_layer=self.content_layer,
-                        formatting=at.formatting,
-                        hyperlink=at.hyperlink,
-                    )
+            grouped = self._open_inline_group(len(parts), doc)
+            for at in parts:
+                doc.add_code(
+                    parent=self.parents[self.level],
+                    text=clean_unicode(at.text.strip()),
+                    content_layer=self.content_layer,
+                    formatting=at.formatting,
+                    hyperlink=at.hyperlink,
+                )
+            if grouped:
+                self._close_inline_group()
 
         elif name == "footer":
             with self._use_section_group(tag, doc, furniture=True):
@@ -899,7 +925,7 @@ class HtmlExtractor:
         if figure is not None:
             caption_tag = figure.find("figcaption", recursive=False)
             if caption_tag is not None:
-                caption = self._extract(caption_tag, find_parent_annotation=True)
+                caption = self._extract(caption_tag)
         if not caption and img_tag.get("alt"):
             caption = [AnnotatedText(text=img_tag.get("alt"))]
 

@@ -171,64 +171,62 @@ class MarkdownSerializer:
             if n.kind in (PICTURE, TABLE) and n.caption_id >= 0
         }
 
-    def _visible(self, node: DocNode) -> bool:
-        return node.content_layer in self.layers and node.node_id not in self.caption_refs
+    def _children(self, node: Optional[DocNode]) -> list[DocNode]:
+        """The visible children of ``node`` (the body root for None)."""
+        ids = self.doc.body_children if node is None else node.children
+        if not ids:
+            return []
+        nodes = self.doc.nodes
+        layers = self.layers
+        refs = self.caption_refs
+        return [
+            c
+            for c in map(nodes.__getitem__, ids)
+            if c.content_layer in layers and c.node_id not in refs
+        ]
+
+    def _inline(self, group: DocNode) -> str:
+        """An inline group's visible runs joined by one space."""
+        return " ".join(map(_render_inline, self._children(group)))
 
     def serialize(self) -> str:
         blocks: list[str] = []
-        for child in self.doc.children_of(None):
-            if self._visible(child):
-                blocks.extend(self._ser(child, 0))
+        for child in self._children(None):
+            blocks.extend(self._ser(child, 0))
         return "\n\n".join(b for b in blocks if b)
 
     # returns a list of top-level blocks for this node (and its subtree)
     def _ser(self, node: DocNode, list_depth: int) -> list[str]:
         kind = node.kind
         doc = self.doc
+        if kind == GROUP and node.group_label == G_LIST:
+            lines = self._ser_list(node, list_depth)
+            return ["\n".join(lines)] if lines else []
+        children = self._children(node)
 
         if kind == GROUP:
-            if node.group_label == G_LIST:
-                lines = self._ser_list(node, list_depth)
-                return ["\n".join(lines)] if lines else []
             if node.group_label == G_INLINE:
-                joined = " ".join(
-                    _render_inline(c) for c in doc.children_of(node) if self._visible(c)
-                )
+                joined = " ".join(map(_render_inline, children))
                 return [joined] if joined else []
             # section / generic groups: flatten children
-            out: list[str] = []
-            for c in doc.children_of(node):
-                if self._visible(c):
-                    out.extend(self._ser(c, list_depth))
-            return out
-
-        if kind in (TITLE, SECTION_HEADER):
+            blocks = []
+        elif kind in (TITLE, SECTION_HEADER):
             # markdown has exactly 6 heading levels; deeper section
             # levels (font-size-ranked PDF hierarchies can nest past
             # 5) clamp to ###### instead of emitting invalid md
             prefix = "#" if kind == TITLE else "#" * min(node.level + 1, 6)
             head = _render_inline(node)
-            inline_children = [
-                c for c in doc.children_of(node)
-                if c.kind == GROUP and c.group_label == G_INLINE
-                and c.name == "heading-runs" and self._visible(c)
-            ]
             parts = [head] if head else []
-            for g in inline_children:
-                joined = " ".join(
-                    _render_inline(c) for c in doc.children_of(g) if self._visible(c)
-                )
-                if joined:
-                    parts.append(joined)
-            blocks = [f"{prefix} {' '.join(parts)}"]
             rest = []
-            for c in doc.children_of(node):
-                if c in inline_children:
-                    continue
-                if self._visible(c):
-                    rest.extend(self._ser(c, list_depth))
-            blocks.extend(rest)
-            return blocks
+            for c in children:
+                if c.kind == GROUP and c.group_label == G_INLINE and c.name == "heading-runs":
+                    joined = self._inline(c)
+                    if joined:
+                        parts.append(joined)
+                else:
+                    rest.append(c)
+            blocks = [f"{prefix} {' '.join(parts)}"]
+            children = rest
         elif kind == "formula":
             blocks = [f"$${node.text}$$"] if node.text else []
         elif kind in (TEXT, CAPTION, LIST_ITEM, "paragraph", "footnote"):
@@ -257,19 +255,15 @@ class MarkdownSerializer:
         else:
             blocks = []
 
-        for c in doc.children_of(node):
-            if self._visible(c):
-                blocks.extend(self._ser(c, list_depth))
+        for c in children:
+            blocks.extend(self._ser(c, list_depth))
         return blocks
 
     def _ser_list(self, group: DocNode, depth: int) -> list[str]:
-        doc = self.doc
         indent = _INDENT * depth
         lines: list[str] = []
         ordinal = 0
-        for child in doc.children_of(group):
-            if not self._visible(child):
-                continue
+        for child in self._children(group):
             if child.kind == LIST_ITEM:
                 ordinal += 1
                 if child.enumerated:
@@ -281,22 +275,15 @@ class MarkdownSerializer:
                 if head:
                     segs.append(head)
                 tail_lines: list[str] = []
-                for sub in doc.children_of(child):
-                    if not self._visible(sub):
-                        continue
+                for sub in self._children(child):
                     if sub.kind == GROUP and sub.group_label == G_INLINE:
-                        joined = " ".join(
-                            _render_inline(c)
-                            for c in doc.children_of(sub)
-                            if self._visible(c)
-                        )
+                        joined = self._inline(sub)
                         if joined:
                             segs.append(joined)
                     elif sub.kind == GROUP and sub.group_label == G_LIST:
                         tail_lines.extend(self._ser_list(sub, depth + 1))
                     else:
-                        for block in self._ser(sub, depth + 1):
-                            tail_lines.append(block)
+                        tail_lines.extend(self._ser(sub, depth + 1))
                 # keep a trailing space inside item text (pptx golden
                 # "- l1 "); rstrip only the empty-item "marker + space"
                 line = f"{indent}{marker} {' '.join(segs)}"
@@ -305,8 +292,7 @@ class MarkdownSerializer:
             elif child.kind == GROUP and child.group_label == G_LIST:
                 lines.extend(self._ser_list(child, depth + 1))
             else:
-                for block in self._ser(child, depth):
-                    lines.append(block)
+                lines.extend(self._ser(child, depth))
         return lines
 
 

@@ -173,7 +173,7 @@ def route_to_doc(row: dict, url: str, payload: bytes) -> "object | None":
         fmt = _EXT_HINTS.get(_ext_of(url), fmt)
     row["fmt"] = fmt
     if fmt in ("html", "xml"):
-        return HtmlExtractor(original_url=url).convert(payload)
+        return HtmlExtractor(original_url=url).convert(payload, name=url)
     if fmt == "xml_jats":
         from docling_spark.kernels.jats_kernel import parse_jats
 
@@ -277,7 +277,7 @@ def convert_one(
     }
 
     def kernel(url, payload):
-        from docling_spark.kernels.chunker import hierarchical_chunks
+        from docling_spark.kernels.chunker import count_hierarchical_chunks
         from docling_spark.kernels.doctags import export_to_doctags
         from docling_spark.kernels.markdown import to_markdown
         from docling_spark.kernels.textout import text_spans
@@ -303,7 +303,7 @@ def convert_one(
             "n_nodes": len(doc.nodes),
             "n_spans": len(spans),
             "spans": spans,
-            "n_chunks": len(hierarchical_chunks(doc)),
+            "n_chunks": count_hierarchical_chunks(doc),
             "doctags": export_to_doctags(doc) if want_doctags else None,
             "json": json_out,
         }

@@ -21,7 +21,9 @@ MAP_IN_PANDAS_EXEMPT = {("enrich.py", "enrich_spans"), ("multimodal.py", "synth_
 # undecodable media item is a decoded=false row
 CATCH_ALL_EXEMPT = {("multimodal.py", "extract_media_features")}
 
-DEEP = "b'<div>' * 3000 + b'deep' + b'</div>' * 3000"
+# a paragraph under 3000 divs: the walk descends one call per div to
+# reach the block (inline text alone is collected without recursion)
+DEEP = "b'<div>' * 3000 + b'<p>deep</p>' + b'</div>' * 3000"
 
 
 def test_one_document_calls_are_total_at_default_recursion_limit():
