@@ -8,7 +8,7 @@ golden fixtures ``/root/reference/tests/data/groundtruth/docling_v2/
 /root/reference/tests/test_backend_html.py:156-183 and
 tests/verify_utils.py:500-511):
 
-* body layer only by default; furniture opt-in;
+* body layer only; furniture is left out;
 * top-level blocks joined with a blank line;
 * title ``# ``, section header level N -> ``#`` x (N+1);
 * inline groups joined with a single space (producing the
@@ -160,9 +160,8 @@ def render_table(table: TableDataIR) -> str:
 
 
 class MarkdownSerializer:
-    def __init__(self, doc: Doc, layers: Optional[set] = None):
+    def __init__(self, doc: Doc):
         self.doc = doc
-        self.layers = layers or {BODY}
         # caption items referenced by pictures are rendered inside the
         # picture block, never standalone
         self.caption_refs = {
@@ -172,17 +171,17 @@ class MarkdownSerializer:
         }
 
     def _children(self, node: Optional[DocNode]) -> list[DocNode]:
-        """The visible children of ``node`` (the body root for None)."""
+        """The visible children of ``node`` (the body root for None):
+        body-layer nodes that are not a picture's or table's caption."""
         ids = self.doc.body_children if node is None else node.children
         if not ids:
             return []
         nodes = self.doc.nodes
-        layers = self.layers
         refs = self.caption_refs
         return [
             c
             for c in map(nodes.__getitem__, ids)
-            if c.content_layer in layers and c.node_id not in refs
+            if c.content_layer == BODY and c.node_id not in refs
         ]
 
     def _inline(self, group: DocNode) -> str:
@@ -296,6 +295,6 @@ class MarkdownSerializer:
         return lines
 
 
-def to_markdown(doc: Doc, include_furniture: bool = False) -> str:
-    layers = {BODY, "furniture"} if include_furniture else {BODY}
-    return MarkdownSerializer(doc, layers).serialize()
+def to_markdown(doc: Doc) -> str:
+    """The body layer as markdown; furniture-layer nodes are left out."""
+    return MarkdownSerializer(doc).serialize()

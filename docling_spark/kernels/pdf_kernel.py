@@ -40,11 +40,10 @@ to cell height, so line merging is insensitive to the approximation.
 
 from __future__ import annotations
 
-import bisect
 import re
 import zlib
 from collections.abc import Iterator
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 
 
 class PdfError(Exception):
@@ -1167,10 +1166,7 @@ def parse_pdf(data: bytes) -> list[PdfPage]:
     return list(iter_pdf_pages(data))
 
 
-# ----------------------------------------------------- P10: OCR decision
-
-BITMAP_COVERAGE_THRESHOLD = 0.75  # base_ocr_model.py:44
-BITMAP_AREA_THRESHOLD = 0.05  # pipeline_options.py:79 (OcrOptions default)
+# ----------------------------------------------------- P10: bitmap coverage
 
 
 def bitmap_coverage(page: PdfPage) -> float:
@@ -1199,99 +1195,33 @@ def bitmap_coverage(page: PdfPage) -> float:
     return min(area / (page.width * page.height), 1.0)
 
 
-def ocr_decision(page: PdfPage) -> tuple[float, str]:
-    """(coverage, decision) per the reference's get_ocr_rects gate
-    (base_ocr_model.py:95-112): dominant bitmap coverage -> full-page
-    OCR; above the area threshold -> per-rect OCR; else none. No OCR
-    engine runs in this sandbox — the *decision* is the P10 component;
-    engines (P11) remain out of scope."""
-    coverage = bitmap_coverage(page)
-    if coverage > BITMAP_COVERAGE_THRESHOLD:
-        return coverage, "full_page"
-    if coverage > BITMAP_AREA_THRESHOLD:
-        return coverage, "rects"
-    return coverage, "none"
-
-
-def merge_ocr_cells(
-    programmatic: list[TextCell],
-    ocr_cells: list[TextCell],
-    force_full_page: bool = False,
-) -> list[TextCell]:
-    """P12: combine programmatic and OCR text cells for one page
-    (base_ocr_model.py:115-171 semantics): drop every OCR cell whose
-    bbox intersects ANY programmatic cell (the reference's R-tree
-    "weak criterion", closed intervals), keep programmatic cells
-    first, surviving OCR cells after; with force_full_page the OCR
-    cells replace the programmatic ones wholesale. List position is
-    the cell index (the reference re-indexes in the same order).
-
-    Pruning is a bisect on programmatic left edges plus a running
-    max-right prefix — per-page N is small (10^2..10^3) so this stays
-    kernel-local; no Spark shuffle is involved.
-    """
-    if force_full_page:
-        return [replace(c, from_ocr=True) for c in ocr_cells]
-    if not programmatic:
-        return [replace(c, from_ocr=True) for c in ocr_cells]
-    prog = sorted(programmatic, key=lambda c: c.l)
-    lefts = [c.l for c in prog]
-    max_r = []
-    running = float("-inf")
-    for c in prog:
-        running = max(running, c.r)
-        max_r.append(running)
-    out = list(programmatic)
-    for q in ocr_cells:
-        k = bisect.bisect_right(lefts, q.r)  # candidates with l <= q.r
-        hit = False
-        if k > 0 and max_r[k - 1] >= q.l:
-            lo, hi = min(q.b, q.t), max(q.b, q.t)
-            for c in prog[:k]:
-                if c.r >= q.l and min(c.b, c.t) <= hi and max(c.b, c.t) >= lo:
-                    hit = True
-                    break
-        if not hit:
-            out.append(replace(q, from_ocr=True))
-    return out
-
-
 # ------------------------------------------------------ P5 rasterization
 
 
-def rasterize_page(
-    page: PdfPage,
-    scale: float = 1.0,
-    cropbox: tuple[float, float, float, float] | None = None,
-):
+def rasterize_page(page: PdfPage, scale: float = 1.0):
     """P5: deterministic grayscale raster of a page's geometry
-    (pypdfium2_backend.py:327-361 semantics: optional TOPLEFT
-    ``cropbox`` (l, t, r, b), output size = round(crop_w x scale) by
-    round(crop_h x scale); the reference renders at 1.5x then resizes
-    for sharpness — rasterizing straight at the target grid is the
-    same image contract). No glyph rendering exists in this sandbox,
-    so ink is the geometry itself: text-cell boxes paint 0x30,
-    bitmap-XObject rects paint 0x80, background 0xFF — exactly the
-    mask the P10 OCR decision and layout debugging need.
+    (pypdfium2_backend.py:327-361 semantics without a cropbox: output
+    size = round(width x scale) by round(height x scale); the reference
+    renders at 1.5x then resizes for sharpness — rasterizing straight
+    at the target grid is the same image contract). Glyphs are not
+    rendered, so ink is the geometry itself: text-cell boxes paint
+    0x30, bitmap-XObject rects paint 0x80 (or their decoded pixels),
+    background 0xFF.
 
     Returns (width, height, numpy uint8 array of shape (h, w)).
     """
     import numpy as np
 
-    if cropbox is None:
-        cl, ct, cr, cb = 0.0, 0.0, page.width, page.height
-    else:
-        cl, ct, cr, cb = cropbox
-    w = max(int(round((cr - cl) * scale)), 1)
-    h = max(int(round((cb - ct) * scale)), 1)
+    w = max(int(round(page.width * scale)), 1)
+    h = max(int(round(page.height * scale)), 1)
     img = np.full((h, w), 0xFF, dtype=np.uint8)
 
     def paint(l, b, r, t, value):
-        # BOTTOMLEFT rect -> TOPLEFT pixel rows relative to the crop
-        x0 = int(np.floor((l - cl) * scale))
-        x1 = int(np.ceil((r - cl) * scale))
-        y0 = int(np.floor((page.height - t - ct) * scale))
-        y1 = int(np.ceil((page.height - b - ct) * scale))
+        # BOTTOMLEFT rect -> TOPLEFT pixel rows
+        x0 = int(np.floor(l * scale))
+        x1 = int(np.ceil(r * scale))
+        y0 = int(np.floor((page.height - t) * scale))
+        y1 = int(np.ceil((page.height - b) * scale))
         x0, x1 = max(x0, 0), min(x1, w)
         y0, y1 = max(y0, 0), min(y1, h)
         if x0 < x1 and y0 < y1:
@@ -1299,10 +1229,10 @@ def rasterize_page(
 
     pixels = page.bitmap_pixels or [None] * len(page.bitmap_rects)
     for (l, b, r, t), pix in zip(page.bitmap_rects, pixels):
-        x0 = max(int(np.floor((l - cl) * scale)), 0)
-        x1 = min(int(np.ceil((r - cl) * scale)), w)
-        y0 = max(int(np.floor((page.height - t - ct) * scale)), 0)
-        y1 = min(int(np.ceil((page.height - b - ct) * scale)), h)
+        x0 = max(int(np.floor(l * scale)), 0)
+        x1 = min(int(np.ceil(r * scale)), w)
+        y0 = max(int(np.floor((page.height - t) * scale)), 0)
+        y1 = min(int(np.ceil((page.height - b) * scale)), h)
         if x0 >= x1 or y0 >= y1:
             continue
         if pix is None:

@@ -82,10 +82,6 @@ def _read_ifds(data: bytes) -> tuple[str, list[dict[int, list[int]]]]:
     return e, ifds
 
 
-def tiff_page_count(data: bytes) -> int:
-    return len(_read_ifds(data)[1])
-
-
 def _unpackbits(src: bytes, expect: int) -> bytes:
     """PackBits RLE (TIFF 6.0 §9)."""
     out = bytearray()
@@ -403,12 +399,6 @@ def decode_tiff(data: bytes, page: int = 0) -> tuple[int, int, int, bytes]:
         raise
     except (struct.error, IndexError, KeyError, ValueError, MemoryError) as e:
         raise TiffError(f"malformed tiff: {type(e).__name__}: {e}") from e
-
-
-def decode_tiff_pages(data: bytes) -> list[tuple[int, int, int, bytes]]:
-    """Every page of a multi-frame TIFF, decoded."""
-    _, ifds = _read_ifds(data)
-    return [_decode_page(data, t) for t in ifds]
 
 
 # ---------------------------------------------------------------- encoder

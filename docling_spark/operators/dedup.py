@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .similarity import _with_norm, cosine, hyperplane_lsh_bands
+from .similarity import cosine, hyperplane_lsh_bands
 
 
 def exact_dup_groups(df: DataFrame) -> DataFrame:
@@ -285,30 +285,6 @@ def simhash_near_pairs(df: DataFrame) -> DataFrame:
 # probability > 0.97 (banding analysis in similarity.hyperplane_lsh_bands).
 _EMB_N_BANDS = 4
 _EMB_BITS_PER_BAND = 8
-
-
-def embedding_near_dups(df: DataFrame, threshold: float) -> DataFrame:
-    """Cosine near-duplicates over an embedding column.
-
-    Brute-force all-pairs — correct baseline, O(n^2): the oracle twin
-    at verification scale only. The production path is
-    :func:`embedding_near_dups_lsh` (band-bucketed candidates, no
-    nested-loop join).
-    """
-    e = _with_norm(df)
-    a = e.alias("a")
-    b = e.alias("b")
-    return (
-        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .withColumn("cos", cosine("a.v", "a.norm", "b.v", "b.norm"))
-        .filter(F.col("cos") >= threshold)
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.round("cos", 4).alias("cos_sim"),
-        )
-        .orderBy("vec_a", "vec_b")
-    )
 
 
 def embedding_near_dups_lsh(df: DataFrame, threshold: float = 0.99) -> DataFrame:

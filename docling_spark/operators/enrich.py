@@ -1,5 +1,4 @@
-"""V6 enrichment driver: explode -> filter processable -> batch model
--> re-join.
+"""V6 enrichment driver: explode -> filter processable -> batch model.
 
 The reference drives enrichment models (code/formula tagger, picture
 classifier) by iterating every document item, keeping the processable
@@ -15,9 +14,7 @@ base_model.py:125-186). The Spark shape of the same driver:
       -> mapInPandas(model)                      (Arrow batch = the
                                                   reference's element
                                                   batch)
-      -> groupBy(url).collect_list(...)          (the ONE shuffle)
-      -> left join back on url                   (co-partitioned with
-                                                  the groupBy output)
+      -> (url, node_id, label, enrichment)       (one row per span)
 
 Only processable spans ever reach Python: on a crawl corpus code
 blocks are a few percent of spans, so the model stage reads a few
@@ -40,7 +37,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     IntegerType,
     StringType,
     StructField,
@@ -142,35 +138,6 @@ def enrich_spans(
             yield out
 
     return spans.mapInPandas(run, schema=ENRICHMENT_SCHEMA)
-
-
-ENRICHED_NODES_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("node_id", IntegerType()),
-            StructField("enrichment", StringType()),
-        ]
-    )
-)
-
-
-def attach_enrichments(results: DataFrame, enriched: DataFrame) -> DataFrame:
-    """Write-back: fold the enrichment relation to one array per doc
-    and left-join it onto the results. Both sides hash-partition on
-    url, so the join reuses the groupBy's exchange (no extra
-    shuffle); docs with no processable spans keep an empty array."""
-    per_doc = enriched.groupBy("url").agg(
-        F.sort_array(
-            F.collect_list(F.struct("node_id", "enrichment"))
-        ).alias("enrichments")
-    )
-    joined = results.join(per_doc, "url", "left")
-    return joined.withColumn(
-        "enrichments",
-        F.coalesce(
-            "enrichments", F.lit([]).cast(ENRICHED_NODES_SCHEMA)
-        ),
-    )
 
 
 def enrich_code_language(results: DataFrame) -> DataFrame:

@@ -266,18 +266,6 @@ def media_rollup(features: DataFrame) -> DataFrame:
 
 # -------------------------------------------------------- audio metadata
 
-AUDIO_META_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("format", StringType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("bits_per_sample", IntegerType()),
-        StructField("duration_sec", DoubleType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
-
 
 def parse_wav_header(payload: bytes) -> dict | None:
     """Real (non-stub) WAV metadata from the RIFF fmt/data chunks:
@@ -313,29 +301,6 @@ def parse_wav_header(payload: bytes) -> dict | None:
         "bits_per_sample": bits,
         "duration_sec": round(duration, 6),
     }
-
-
-def extract_audio_metadata(df: DataFrame) -> DataFrame:
-    """(media_id, payload) -> typed audio metadata rows (WAV chunks or
-    MPEG frame headers); other formats yield format='unknown' rows,
-    never errors."""
-
-    def per_doc(mid, payload):
-        payload = payload or b""
-        meta = parse_wav_header(payload) or parse_mp3_header(payload)
-        return [
-            {
-                "media_id": mid,
-                "format": meta["format"] if meta else "unknown",
-                "sample_rate": meta["sample_rate"] if meta else 0,
-                "channels": meta["channels"] if meta else 0,
-                "bits_per_sample": meta["bits_per_sample"] if meta else 0,
-                "duration_sec": meta["duration_sec"] if meta else 0.0,
-                "n_bytes": len(payload),
-            }
-        ]
-
-    return map_docs(df.select("media_id", "payload"), per_doc, AUDIO_META_SCHEMA)
 
 
 _MP3_BITRATES_V1L3 = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320]

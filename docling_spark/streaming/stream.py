@@ -25,8 +25,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from docling_spark.operators.batch import guard_zip_rereads
-
 PAGES_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -49,9 +47,9 @@ def drain(df, out: str, ckpt: str) -> bool:
     same checkpoint processes only files added since (streaming resume).
     Per-document operators run unchanged on a streaming frame (url-hash
     repartition is a stateless shuffle), so a drain-and-stop extraction
-    is ``drain(convert_any(read_pages_stream(spark, d)), out, ckpt)``,
-    a windowed rollup ``drain(windowed_event_rollup(events), out, ckpt)``
-    and a cross-batch dedup ``drain(dedup_stream(pages), out, ckpt)``."""
+    is ``drain(convert_any(read_pages_stream(spark, d)), out, ckpt)``
+    and a windowed rollup is
+    ``drain(windowed_event_rollup(events), out, ckpt)``."""
     query = (
         df.writeStream.format("parquet")
         .outputMode("append")
@@ -89,57 +87,4 @@ def windowed_event_rollup(events, window: str = "1 hour"):
             "n_events",
             "sum_value",
         )
-    )
-
-
-# ----------------------------- stateful cross-batch dedup (GroupState)
-
-
-def dedup_stream(pages_stream):
-    """Custom stateful streaming operator: emit each content fingerprint
-    the FIRST time it is seen across ALL micro-batches
-    (``applyInPandasWithState`` keyed by md5(text); state = seen flag).
-
-    A crawl re-visits urls and mirrors endlessly — batch dedup only sees
-    one drop at a time, so the 'have I ever emitted this content'
-    predicate is streaming state by nature. State is one boolean per
-    distinct fingerprint, hash-partitioned by the groupBy — the same
-    shuffle shape as batch exact dedup, held by the state store instead
-    of a shuffle file.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    keyed = pages_stream.withColumn("fp_md5", F.md5(F.col("text")))
-    out_schema = (
-        "url string, warc_ts timestamp, fp_md5 string, is_first boolean"
-    )
-
-    def emit_first(key, pdfs, state):
-        import pandas as pd
-
-        guard_zip_rereads()
-        seen = state.exists
-        rows = []
-        for pdf in pdfs:
-            for _, row in pdf.iterrows():
-                rows.append(
-                    {
-                        "url": row["url"],
-                        "warc_ts": row["warc_ts"],
-                        "fp_md5": key[0],
-                        "is_first": not seen,
-                    }
-                )
-                seen = True
-        if not state.exists:
-            state.update((True,))
-        yield pd.DataFrame(rows)
-
-    return keyed.groupBy("fp_md5").applyInPandasWithState(
-        emit_first,
-        outputStructType=out_schema,
-        stateStructType="seen boolean",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )

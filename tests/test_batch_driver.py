@@ -213,7 +213,7 @@ def test_every_python_task_guards_zip_rereads():
             for n in ast.walk(fn)
         )
     ]
-    assert len(tasks) >= 7 and unguarded == []
+    assert len(tasks) >= 6 and unguarded == []
 
 
 def test_per_document_map_in_pandas_only_in_batch_py():

@@ -151,41 +151,6 @@ def test_windowed_event_rollup_streaming_matches_batch(spark, tmp_path):
     assert len(streamed) >= len(batch) - 8  # only the tail can be open
 
 
-def test_stateful_dedup_stream_across_batches(spark, tmp_path):
-    """applyInPandasWithState: a fingerprint first seen in batch 1 is
-    marked is_first=false when the same content re-arrives in batch 2 —
-    state survives across drains via the checkpoint."""
-    from docling_spark.sources.pages import synthesize_pages
-    from docling_spark.streaming.stream import dedup_stream, drain, read_pages_stream
-
-    in_dir = str(tmp_path / "dd_in")
-    out_dir = str(tmp_path / "dd_out")
-    ckpt = str(tmp_path / "dd_ckpt")
-
-    batch1 = synthesize_pages(spark, "/root/testdata/sf0.001", n_pages=20)
-    batch1.coalesce(1).write.mode("append").parquet(in_dir)
-    assert drain(dedup_stream(read_pages_stream(spark, in_dir)), out_dir, ckpt)
-    first = spark.read.parquet(out_dir)
-    assert first.count() == 20
-    assert first.filter("is_first").count() == 20
-
-    # second drop: 10 exact re-crawls (same content, new url suffix)
-    from pyspark.sql import functions as F
-
-    dup = (
-        batch1.limit(10)
-        .withColumn("url", F.concat(F.col("url"), F.lit("?recrawl=1")))
-    )
-    dup.coalesce(1).write.mode("append").parquet(in_dir)
-    assert drain(dedup_stream(read_pages_stream(spark, in_dir)), out_dir, ckpt)
-    out = spark.read.parquet(out_dir)
-    assert out.count() == 30
-    # the re-crawled rows are flagged as duplicates
-    re_rows = out.filter(F.col("url").endswith("?recrawl=1")).collect()
-    assert len(re_rows) == 10
-    assert all(not r.is_first for r in re_rows)
-
-
 def test_streaming_convert_mixed_formats(spark, tmp_path):
     """The unified router under Structured Streaming: a crawl drop of
     mixed html/csv/pdf bytes converts with the same per-format rows as

@@ -81,10 +81,6 @@ def test_furniture_layers():
     )
     doc = convert(raw)
     assert to_markdown(doc) == "# Main Heading\n\nSome Content"
-    assert to_markdown(doc, include_furniture=True) == (
-        "Initial content with some **bold text**\n\n# Main Heading\n\nSome Content\n\n"
-        "Some Footer Content"
-    )
     layers = {n.text: n.content_layer for n in doc.nodes if n.text}
     assert layers["Some Footer Content"] == FURNITURE
     assert layers["Some Content"] == BODY

@@ -1,5 +1,5 @@
 """METS/GBS backend (B9), image->PDF adaptation (P7), and the
-bitmap-coverage OCR decision (P10)."""
+bitmap coverage behind the ``ocr_needed`` column (P10)."""
 
 from pathlib import Path
 
@@ -12,7 +12,7 @@ from docling_spark.kernels.image_kernel import (
     image_to_pdf_pages,
 )
 from docling_spark.kernels.mets_kernel import MetsError, MetsGbsDoc, parse_mets_gbs
-from docling_spark.kernels.pdf_kernel import PdfPage, bitmap_coverage, ocr_decision
+from docling_spark.kernels.pdf_kernel import PdfPage, bitmap_coverage
 from docling_spark.operators.convert import convert_one
 
 METS_FIXTURE = Path("/root/reference/tests/data/mets_gbs/32044009881525_select.tar.gz")
@@ -109,18 +109,16 @@ def test_image_garbage():
         image_frames(b"RIFF\x00\x00\x00\x00NOPE")
 
 
-# ----------------------------------------------------------- P10 decision
+# ----------------------------------------------------------- P10 coverage
 
 
-def test_ocr_decision_thresholds():
+def test_bitmap_coverage_none_partial_dominant():
     page = PdfPage(1, 100.0, 100.0)
-    assert ocr_decision(page) == (0.0, "none")
+    assert bitmap_coverage(page) == 0.0
     page.bitmap_rects.append((0, 0, 30, 30))  # 9% coverage
-    cov, dec = ocr_decision(page)
-    assert dec == "rects" and abs(cov - 0.09) < 1e-9
+    assert abs(bitmap_coverage(page) - 0.09) < 1e-9
     page.bitmap_rects.append((0, 0, 95, 95))  # dominant coverage
-    cov, dec = ocr_decision(page)
-    assert dec == "full_page" and cov > 0.9
+    assert abs(bitmap_coverage(page) - 0.9025) < 1e-9
 
 
 def test_bitmap_coverage_union_not_sum():
@@ -157,19 +155,16 @@ def test_scanned_pdf_bitmap_rect_from_content_stream():
     pages = parse_pdf(pdf)
     assert pages[0].bitmap_rects == [(50.0, 600.0, 250.0, 700.0)]
     assert pages[0].cells[0].text == "caption"
-    cov, dec = ocr_decision(pages[0])
-    assert dec == "none"  # small image, text present
+    # a small image on a text page: 200 x 100 of 612 x 792
+    assert abs(bitmap_coverage(pages[0]) - 200 * 100 / (612 * 792)) < 1e-9
 
 
-def test_wav_header_parse_and_spark_metadata(spark):
+def test_wav_header_parse():
     """B11-adjacent: real WAV header parsing (rate/channels/bits/
-    duration) + the Spark typed-metadata plumbing."""
+    duration)."""
     import struct
 
-    from docling_spark.operators.multimodal import (
-        extract_audio_metadata,
-        parse_wav_header,
-    )
+    from docling_spark.operators.multimodal import parse_wav_header
 
     def make_wav(rate=16000, channels=1, bits=16, seconds=2):
         n = rate * channels * (bits // 8) * seconds
@@ -183,15 +178,25 @@ def test_wav_header_parse_and_spark_metadata(spark):
     meta = parse_wav_header(make_wav())
     assert meta == {"format": "wav", "sample_rate": 16000, "channels": 1,
                     "bits_per_sample": 16, "duration_sec": 2.0}
+    meta = parse_wav_header(make_wav(44100, 2, 16, 1))
+    assert (meta["sample_rate"], meta["channels"], meta["duration_sec"]) == (44100, 2, 1.0)
     assert parse_wav_header(b"RIFF....WEBPnot audio") is None
 
-    rows = [(0, bytearray(make_wav())), (1, bytearray(make_wav(44100, 2, 16, 1))),
-            (2, bytearray(b"\xff\xfbmp3-needs-codec"))]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r.media_id: r for r in extract_audio_metadata(df).collect()}
-    assert out[0].duration_sec == 2.0 and out[0].sample_rate == 16000
-    assert out[1].channels == 2 and out[1].sample_rate == 44100
-    assert out[2].format == "unknown"
+
+def test_wav_through_the_router():
+    """The router's audio route: a WAV whose headers parse is an empty
+    success document; a WAV whose fmt chunk is cut short is a failure
+    row, not a silent empty success."""
+    import struct
+
+    pcm = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
+    data = b"WAVE" + b"fmt " + struct.pack("<I", len(pcm)) + pcm + b"data" + struct.pack("<I", 8) + bytes(8)
+    row = convert_one("https://media.example.com/a.wav", b"RIFF" + struct.pack("<I", len(data)) + data)
+    assert (row["fmt"], row["status"], row["error"], row["md"]) == ("audio", "success", None, "")
+
+    cut = b"WAVE" + b"fmt " + struct.pack("<I", len(pcm)) + pcm[:6]
+    row = convert_one("https://media.example.com/b.wav", b"RIFF" + struct.pack("<I", len(cut)) + cut)
+    assert (row["fmt"], row["status"], row["error"]) == ("audio", "failure", "unparseable audio container")
 
 
 @needs_reference
@@ -206,41 +211,6 @@ def test_mp3_metadata_from_real_fixture():
     assert meta["sample_rate"] == 44100
     assert 9.0 <= meta["duration_sec"] <= 11.5
     assert parse_mp3_header(b"\x00not audio at all") is None
-
-
-def test_merge_ocr_cells_drops_overlapping_ocr():
-    """P12 (base_ocr_model.py:115-171): OCR cells intersecting ANY
-    programmatic cell are dropped; survivors append after the
-    programmatic cells; force_full_page replaces them wholesale."""
-    from docling_spark.kernels.pdf_kernel import TextCell, merge_ocr_cells
-
-    prog = [
-        TextCell("alpha", 10, 700, 100, 712, 12),
-        TextCell("beta", 120, 700, 200, 712, 12),
-    ]
-    ocr = [
-        TextCell("ALPHA", 12, 702, 95, 710, 10),    # inside prog[0] -> drop
-        TextCell("edge", 100, 700, 118, 712, 10),   # touches prog[0].r (closed) -> drop
-        TextCell("below", 10, 650, 100, 662, 10),   # y-disjoint -> keep
-        TextCell("right", 220, 700, 300, 712, 10),  # x-disjoint -> keep
-    ]
-    out = merge_ocr_cells(prog, ocr)
-    assert [c.text for c in out] == ["alpha", "beta", "below", "right"]
-    assert [c.from_ocr for c in out] == [False, False, True, True]
-
-    # force_full_page: OCR wholesale, all flagged
-    out = merge_ocr_cells(prog, ocr, force_full_page=True)
-    assert [c.text for c in out] == ["ALPHA", "edge", "below", "right"]
-    assert all(c.from_ocr for c in out)
-
-    # no programmatic cells: every OCR cell survives, flagged
-    out = merge_ocr_cells([], ocr)
-    assert len(out) == 4 and all(c.from_ocr for c in out)
-
-    # order-independence of the prune: shuffled programmatic input
-    out2 = merge_ocr_cells(list(reversed(prog)), ocr)
-    assert sorted(c.text for c in out2) == sorted(c.text for c in out2)
-    assert {c.text for c in out2 if c.from_ocr} == {"below", "right"}
 
 
 @needs_reference

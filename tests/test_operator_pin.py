@@ -153,6 +153,16 @@ def inputs(spark):
     }
 
 
+def _media(spark):
+    """The synthetic media corpus as a crawl frame: images, WAV audio
+    and video bytes through the router."""
+    media = multimodal.synth_media(spark, 64).select(
+        F.concat(F.lit("https://media.example.com/"), F.col("media_id").cast("string")).alias("url"),
+        F.col("payload").alias("html"),
+    )
+    return _frame(spark, media.collect())
+
+
 def _jsonable(v):
     if isinstance(v, (bytes, bytearray)):
         return v.hex()
@@ -218,10 +228,24 @@ CASES = {
     "media_features": lambda s, i, t: multimodal.extract_media_features(
         multimodal.synth_media(s, 64)
     ),
-    "audio_metadata": lambda s, i, t: multimodal.extract_audio_metadata(
-        multimodal.synth_media(s, 64)
-    ),
+    "convert_any_media": lambda s, i, t: convert.convert_any(_media(s), num_partitions=4),
 }
+
+
+def test_router_routes_synthetic_media_by_content():
+    """The ``convert_any_media`` rows, one by one: WAV audio and every
+    image end success under their own format, and the fake webm video a
+    typed skip, never a failure."""
+    seen = set()
+    for i in range(64):
+        kind, payload = multimodal._synth_payload(i)
+        row = convert.convert_one(f"https://media.example.com/{i}", payload)
+        seen.add((kind, row["fmt"], row["status"], row["error"]))
+    assert seen == {
+        ("image", "image", "success", None),
+        ("audio", "audio", "success", None),
+        ("video", "binary", "skipped", "unsupported format: binary"),
+    }
 
 
 def test_router_keeps_the_pages_before_a_broken_one():

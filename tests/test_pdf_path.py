@@ -326,8 +326,8 @@ def test_overlap_resolution_unionfind():
 
 def test_rasterize_page_geometry():
     """P5 (pypdfium2_backend.py:327-361 contract): output size =
-    round(crop x scale); text cells paint 0x30, bitmap rects 0x80 over
-    a 0xFF background; cropbox is TOPLEFT (l, t, r, b)."""
+    round(page x scale); text cells paint 0x30, bitmap rects 0x80 over
+    a 0xFF background."""
     from docling_spark.kernels.pdf_kernel import (
         PdfPage,
         TextCell,
@@ -346,9 +346,6 @@ def test_rasterize_page_geometry():
     # scale doubles the grid
     w2, h2, img2 = rasterize_page(p, scale=2.0)
     assert (w2, h2) == (200, 400) and img2[90, 60] == 0x30
-    # TOPLEFT crop excluding the cell region
-    wc, hc, imgc = rasterize_page(p, 1.0, cropbox=(0, 0, 100, 30))
-    assert (wc, hc) == (100, 30) and (imgc == 0xFF).all()
     # PNG container is well-formed (signature, IHDR dims, IEND)
     png = encode_png_gray(img)
     assert png[:8] == b"\x89PNG\r\n\x1a\n"

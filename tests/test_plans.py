@@ -245,22 +245,31 @@ def test_near_dup_embeddings_no_nested_loop(spark):
 
 
 def test_near_dup_lsh_matches_brute_force(spark):
-    """Recall check: the LSH plan returns exactly the brute-force pair
-    set on the synthetic corpus (scaled copies hash identically in
-    every band, so recall is 1.0 by construction)."""
+    """Recall check: the LSH plan returns exactly the all-pairs cosine
+    pair set on the synthetic corpus (scaled copies hash identically in
+    every band, so recall is 1.0 by construction). The all-pairs side
+    is computed here, outside Spark."""
+    import numpy as np
+
     import __spark_entry__ as entry
     from docling_spark.operators import dedup
 
-    corpus = entry._emb_with_neardups(spark, "/root/testdata/sf0.001")
+    corpus = entry._emb_with_neardups(spark, "/root/testdata/sf0.001").collect()
+    ids = np.array([r.vec_id for r in corpus])
+    v = np.array([r.embedding for r in corpus], dtype=np.float64)
+    v /= np.linalg.norm(v, axis=1, keepdims=True)
+    cos = v @ v.T
+    a, b = np.nonzero((cos >= 0.99) & (ids[:, None] < ids[None, :]))
+    brute = {(int(ids[i]), int(ids[j])): float(cos[i, j]) for i, j in zip(a, b)}
+
     lsh = {
-        (r.vec_a, r.vec_b, r.cos_sim)
-        for r in dedup.embedding_near_dups_lsh(corpus, threshold=0.99).collect()
+        (r.vec_a, r.vec_b): r.cos_sim
+        for r in dedup.embedding_near_dups_lsh(
+            entry._emb_with_neardups(spark, "/root/testdata/sf0.001"), threshold=0.99
+        ).collect()
     }
-    brute = {
-        (r.vec_a, r.vec_b, r.cos_sim)
-        for r in dedup.embedding_near_dups(corpus, threshold=0.99).collect()
-    }
-    assert lsh == brute and len(lsh) > 0
+    assert set(lsh) == set(brute) and len(lsh) > 0
+    assert all(abs(lsh[k] - brute[k]) <= 1e-4 for k in lsh)
 
 
 def test_jaccard_pairs_caps_hub_tokens(spark):
